@@ -14,9 +14,12 @@ case class KV(key: String, value: String)
   * serialize to executors for free, so the plugin loader collapses to a
   * registry of `MRApp` instances ([[MRApps]]).
   *
-  * Engine contract (SURVEY.md §7.1): `reduce` sees a key's values in
-  * ascending sorted order — the deterministic strengthening of the
-  * reference's map-side sort (`internal/worker/worker.go:209-211`).
+  * Engine contract (SURVEY.md §7.1): `reduce` sees a key's values, each
+  * as often as `map` emitted it, in ascending Unicode code-point order
+  * ([[MRApps.codePointOrder]]; UTF-8 byte order, Go's `sort.Strings`) —
+  * not Java's UTF-16 `String` order. It is the deterministic
+  * strengthening of the reference's map-side sort
+  * (`internal/worker/worker.go:209-211`).
   */
 trait MRApp extends Serializable {
   def name: String

@@ -13,6 +13,25 @@ object MRApps {
   private[graft] def tokenize(contents: String): Seq[String] =
     contents.split("[^\\p{L}]+").toIndexedSeq.filter(_.nonEmpty)
 
+  /** Unicode code-point order: the engine's value order (UTF-8 byte order
+    * in the SQL sort), Go's `sort.Strings` in the reference and DuckDB's
+    * `list_sort` in the catalog oracles. `String`'s own ordering compares
+    * UTF-16 units and puts a supplementary-plane character (a surrogate
+    * pair, 0xD800-0xDFFF) before BMP characters from U+E000 up.
+    */
+  val codePointOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      var i = 0
+      while (i < a.length && i < b.length) {
+        val ca = a.codePointAt(i)
+        val cb = b.codePointAt(i)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+      }
+      Integer.compare(a.length - i, b.length - i)
+    }
+  }
+
   /** Word count (`example/mrapps/wc/wc.go:24-55`): emit (word, "1"),
     * reduce counts occurrences. Streaming reduce counts incrementally —
     * constant memory however hot the key.
@@ -38,14 +57,14 @@ object MRApps {
     def map(filename: String, contents: String): Seq[KV] =
       tokenize(contents).distinct.map(w => KV(w, filename))
     def reduce(key: String, values: Seq[String]): Seq[String] = {
-      val docs = values.distinct.sorted
+      val docs = values.distinct.sorted(codePointOrder)
       Seq(s"${docs.size} ${docs.mkString(",")}")
     }
 
-    /** Values arrive ascending on the secondary-sort path, so distinct is
-      * adjacent dedup — one pass, no group materialization even for a
-      * stopword's doc list (only the deduped output string is buffered,
-      * which the output format requires).
+    /** Values arrive in ascending order (the [[MRApp]] contract), so
+      * distinct is adjacent dedup — one pass, no group materialization
+      * even for a stopword's doc list (only the deduped output string is
+      * buffered, which the output format requires).
       */
     override def reduceStream(key: String, values: Iterator[String]): Iterator[String] = {
       val docs           = new StringBuilder
@@ -79,7 +98,7 @@ object MRApps {
         KV(filename, contents.codePointCount(0, contents.length).toString),
         KV(filename, "xyzzy"))
     def reduce(key: String, values: Seq[String]): Seq[String] =
-      Seq(values.sorted.mkString(" "))
+      Seq(values.sorted(codePointOrder).mkString(" "))
   }
 
   /** Count per file key (`example/mrapps/early_exit/early_exit.go:32-40`). */

@@ -1,6 +1,7 @@
 package graft.mr
 
 import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.sources.TextSources
 
 /** CLI twin of the reference's job submission
@@ -13,27 +14,25 @@ import graft.sources.TextSources
   * `<app>` is a registry name ([[MRApps.all]] — the plugin-loading
   * analogue), input is a file glob (any Hadoop scheme), output is the
   * reference's canonical `"<key> <value>"` text format
-  * (`example/mrsequential/mrsequential.go:84`), and `nreduce` maps to
-  * shuffle parallelism. A user of the reference swaps their plugin `.so`
-  * for a registry entry and keeps the same mental model; the
-  * coordinator/worker/heartbeat machinery has no equivalent here because
-  * Spark's scheduler provides it.
+  * (`example/mrsequential/mrsequential.go:84`), and `nreduce` (at least 1)
+  * is the reduce-side partition count. The session is the engine's one
+  * config ([[graft.Sessions]]) on `$SPARK_MASTER` (default `local[4]`).
+  * A user of the reference swaps their plugin `.so` for a registry entry
+  * and keeps the same mental model; the coordinator/worker/heartbeat
+  * machinery has no equivalent here because Spark's scheduler provides it.
   */
 object MRRunner {
   /** The whole submission flow minus session lifecycle: registry lookup,
-    * glob read, secondary-sort MR run, text sink. `main` wraps this in
-    * its own session; MRRunnerSpec drives it under the shared test
-    * session (an in-JVM spec cannot let `main` stop the session it
-    * shares), covering the identical code path end to end.
+    * glob read, secondary-sort MR run on `nreduce` reduce partitions, text
+    * sink. `main` wraps this in its own session; MRRunnerSpec drives it
+    * under the shared test session (an in-JVM spec cannot let `main` stop
+    * the session it shares), covering the identical code path end to end.
     */
   def run(spark: SparkSession, appName: String, input: String, outDir: String,
       nreduce: Int): Unit = {
-    val app = MRApps.all.getOrElse(
-      appName,
-      throw new IllegalArgumentException(
-        s"unknown app '$appName'; registered: ${MRApps.all.keys.toSeq.sorted.mkString(", ")}"))
+    val app  = lookup(appName, nreduce)
     val docs = TextSources.wholeFiles(spark, input)
-    val out  = MapReduceJob.runSecondarySort(spark, docs, app, nreduce)
+    val out  = MapReduceJob.runSecondarySortNative(spark, docs, app, Some(nreduce))
     TextSources.writeKV(out, outDir)
     println(s"[mrrunner] $appName over $input -> $outDir (nreduce=$nreduce)")
   }
@@ -42,18 +41,23 @@ object MRRunner {
     require(args.length >= 3, "usage: MRRunner <app> <inputGlob> <outDir> [nreduce]")
     val Array(appName, input, outDir) = args.take(3)
     val nreduce = if (args.length > 3) args(3).toInt else 4 // reference default, cmd/main.go:22
-    // fail on an unknown app BEFORE paying session startup (and so the
+    // fail on bad arguments BEFORE paying session startup (and so the
     // spec can exercise main's validation without a session to stop)
-    require(MRApps.all.contains(appName),
-      s"unknown app '$appName'; registered: ${MRApps.all.keys.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", nreduce)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    lookup(appName, nreduce)
+    val spark = Sessions
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), nreduce.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, appName, input, outDir, nreduce)
     finally spark.stop()
+  }
+
+  /** The registered app, once the arguments are known to be in bounds. */
+  private def lookup(appName: String, nreduce: Int): MRApp = {
+    require(nreduce >= 1, s"nreduce must be >= 1, got $nreduce")
+    MRApps.all.getOrElse(
+      appName,
+      throw new IllegalArgumentException(
+        s"unknown app '$appName'; registered: ${MRApps.all.keys.toSeq.sorted.mkString(", ")}"))
   }
 }

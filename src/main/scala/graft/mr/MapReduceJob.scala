@@ -1,40 +1,32 @@
 package graft.mr
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The generic MapReduce engine: the reference's whole physical pipeline
-  * (F1-F8 in SURVEY.md §2.1) as two Spark operators.
+  * (F1-F8 in SURVEY.md §2.1) on Spark's SQL engine.
   *
   *   map (flatMap, F3) → shuffle on key (F5) → per-key sorted reduce (F4+F6+F7)
   *
-  * Two execution paths with identical semantics:
+  * One execution path and its differential twin, with identical results:
   *
+  *  - [[runSecondarySortNative]]: the map output is combined per map task
+  *    (duplicate (key, value) pairs become one row with a count), shuffled
+  *    on key and sorted on (key, value) inside the SQL engine, then
+  *    reduced by a streaming adjacent-group scan — the reference's
+  *    `KVIterator` protocol (`pkg/mr/mr.go:38-89`) without materializing a
+  *    group ([[graft.plans.SortedGroupReduce]]). Right at any size: the
+  *    combine and the sort spill, and a hot key never sits on the heap.
+  *    `MRRunner` and the catalog's `mr_*` queries run it.
   *  - [[run]]: `groupByKey.flatMapGroups`, sorting each group's values in
-  *    memory. Right when groups are small (all reference apps).
-  *  - [[runSecondarySort]]: `repartitionAndSortWithinPartitions` on the
-  *    composite (key, value) with a key-only partitioner, then a streaming
-  *    adjacent-group scan — the reference's `KVIterator` protocol
-  *    (`pkg/mr/mr.go:38-89`) without materializing a group. Right when a
-  *    single key's values don't fit in memory (the 100 TB path): the sort
-  *    happens in Spark's spillable shuffle, not on the heap.
+  *    memory. Kept as the differential twin of the streaming path.
   *
-  * The map→reduce barrier, task retry, and speculative execution are
-  * Spark's DAG scheduler — the reference's coordinator
-  * (`internal/coordinator/coordinator.go`) has no analogue here by design.
+  * Both hand `reduce` a key's values in code-point order
+  * ([[MRApps.codePointOrder]]). The map→reduce barrier, task retry, and
+  * speculative execution are Spark's DAG scheduler — the reference's
+  * coordinator (`internal/coordinator/coordinator.go`) has no analogue
+  * here by design.
   */
 object MapReduceJob {
-
-  /** Partition by key only; order within partitions by (key, value) — the
-    * classic secondary-sort arrangement.
-    */
-  private class KeyPartitioner(n: Int) extends Partitioner {
-    private val hp               = new HashPartitioner(n)
-    override def numPartitions   = n
-    override def getPartition(composite: Any): Int =
-      hp.getPartition(composite.asInstanceOf[(String, String)]._1)
-  }
 
   /** In-memory-group path: sorted values per group via `flatMapGroups`. */
   def run(spark: SparkSession, docs: DataFrame, app: MRApp): DataFrame = {
@@ -44,71 +36,28 @@ object MapReduceJob {
       .flatMap { case (f, c) => app.map(f, c) }
       .groupByKey(_.key)
       .flatMapGroups { (k, it) =>
-        val vs = it.map(_.value).toVector.sorted
+        val vs = it.map(_.value).toVector.sorted(MRApps.codePointOrder)
         app.reduce(k, vs).iterator.map(v => KV(k, v))
       }
       .toDF("key", "value")
   }
 
-  /** Catalyst-native secondary-sort path: the same streaming KVIterator
-    * semantics as [[runSecondarySort]], with the shuffle and the (key,
-    * value) sort planned INSIDE the SQL engine
-    * ([[graft.plans.SortedGroupReduce]] declares the distribution +
-    * ordering requirements; EnsureRequirements inserts the Exchange and
-    * Tungsten SortExec). The reduce-side sort — the dominant cost of a
-    * MapReduce job — then runs on UnsafeRow bytes with radix prefixes and
-    * the SQL spill machinery, AQE can coalesce reduce partitions, and the
-    * whole pipeline is visible to `.explain`/SQL metrics. Differential
-    * spec pins bit-equality with the RDD path; this is the catalog path.
+  /** Catalyst-native secondary-sort path: map, then the combine, shuffle,
+    * sort and streaming reduce of [[graft.plans.SortedGroupReduce]], all
+    * visible to `.explain` and SQL metrics. `numPartitions` pins the
+    * reduce-side partition count (`nreduce`); without it AQE sizes the
+    * reduce side.
     */
   def runSecondarySortNative(
       spark: SparkSession,
       docs: DataFrame,
-      app: MRApp): DataFrame = {
+      app: MRApp,
+      numPartitions: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val kvs = docs
       .as[(String, String)]
       .flatMap { case (f, c) => app.map(f, c) }
       .toDF("key", "value")
-    graft.plans.SortedGroupReduce.reduce(kvs, app)
-  }
-
-  /** Streaming secondary-sort path: constant memory per group. */
-  def runSecondarySort(
-      spark: SparkSession,
-      docs: DataFrame,
-      app: MRApp,
-      numPartitions: Int = 32): DataFrame = {
-    import spark.implicits._
-    val kvs = docs
-      .as[(String, String)]
-      .rdd
-      .flatMap { case (f, c) => app.map(f, c) }
-      .map(kv => ((kv.key, kv.value), ()))
-      .repartitionAndSortWithinPartitions(new KeyPartitioner(numPartitions))
-    // Streaming adjacent-group scan: the reference's KVIterator protocol
-    // (`pkg/mr/mr.go:38-89`) — a sub-iterator per key group, re-armed at
-    // each key boundary, with the unconsumed tail drained so the outer
-    // scan stays aligned.
-    // local name must not be `buffered`: inside the anonymous Iterator
-    // subclasses an unqualified `buffered` resolves to Iterator's own
-    // .buffered method, silently shadowing the val.
-    val reduced = kvs.mapPartitions { (it: Iterator[((String, String), Unit)]) =>
-      val rows = it.buffered
-      new Iterator[Iterator[KV]] {
-        override def hasNext = rows.hasNext
-        override def next(): Iterator[KV] = {
-          val key = rows.head._1._1
-          val group = new Iterator[String] {
-            override def hasNext = rows.hasNext && rows.head._1._1 == key
-            override def next()  = rows.next()._1._2
-          }
-          val out = app.reduceStream(key, group).map(v => KV(key, v)).toVector
-          while (group.hasNext) group.next()
-          out.iterator
-        }
-      }.flatten
-    }
-    spark.createDataFrame(reduced.map(kv => (kv.key, kv.value))).toDF("key", "value")
+    graft.plans.SortedGroupReduce.reduce(kvs, app, numPartitions)
   }
 }

@@ -12,9 +12,10 @@ import graft.mr.{MapReduceJob, MRApps}
   * streaming secondary-sort path ([[graft.plans.SortedGroupReduce]]) —
   * the engine's F4-F7 showcase (shuffle as SQL Exchange, reduce-side sort
   * as Tungsten SortExec) — so the custom exec carries every reference app
-  * under the driver's correctness gate. The in-memory-group RDD path
-  * stays as the differential twin (`MapReduceJobSpec` pins bit-equality
-  * across all apps and both paths).
+  * under the catalog's DuckDB oracle check. No reduce-partition count is
+  * given, so AQE sizes the reduce side. `MapReduceJobSpec` pins
+  * bit-equality with the in-memory-group twin (`MapReduceJob.run`) across
+  * all apps.
   */
 object MRCompat {
   type Q = (SparkSession, String) => DataFrame

@@ -4,11 +4,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection
+  Ascending, Attribute, AttributeReference, AttributeSet, Literal, SortOrder, UnsafeProjection
 }
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{
+  ClusteredDistribution, Distribution, HashPartitioning, Partitioning
+}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,33 +21,38 @@ import graft.mr.MRApp
 
 /** Catalyst-native secondary-sort reduce: the reference's
   * shuffle→sort→streaming-KVIterator protocol (`pkg/mr/mr.go:38-89`,
-  * `internal/worker/worker.go:209-211`) as a whole-operator physical plan
-  * instead of an RDD `repartitionAndSortWithinPartitions`.
+  * `internal/worker/worker.go:209-211`) as a whole-operator physical plan.
   *
-  * The node consumes a `(key: string, value: string)` child and declares
-  *   requiredChildDistribution = ClusteredDistribution(key)
-  *   requiredChildOrdering     = (key ASC, value ASC)
-  * so EnsureRequirements plans the shuffle as a SQL Exchange and the sort
-  * as Tungsten's SortExec — radix-prefix, codegen'd comparison, full
-  * disk-spill machinery — where the RDD path sorts through the legacy
-  * shuffle sorter outside the SQL engine (no AQE partition coalescing, no
-  * SQL metrics, opaque to the plan). Execution is then the same
-  * adjacent-group scan as [[graft.mr.MapReduceJob.runSecondarySort]]:
-  * constant memory per group, a sub-iterator per key handed to the app's
-  * `reduceStream`, unconsumed tail drained at each boundary.
+  * The strategy plans, bottom up:
   *
-  * At 100 TB this is the path that matters: the reduce-side sort is the
-  * dominant cost of a MapReduce job, and Tungsten's UnsafeExternalSorter
-  * (binary comparisons on UnsafeRow bytes, radix prefixes on the key) is
-  * strictly faster and more spill-robust than JVM-object ordering in the
-  * RDD shuffle. AQE can also coalesce/split reduce partitions under this
-  * exec — impossible on the RDD path's fixed partitioner.
+  *   child (key, value)
+  *   → HashAggregate(keys = [key, value], partial_count(1))   map-side combine
+  *   → Exchange hashpartitioning(key)                          the F5 shuffle
+  *   → Sort(key ASC, value ASC)                                the F4 sort
+  *   → SortedGroupReduceExec                                   streaming reduce
+  *
+  * The exec declares `ClusteredDistribution(key)` and a (key, value)
+  * ordering; EnsureRequirements inserts the Exchange and Tungsten's
+  * SortExec (radix prefixes, disk spill). The partial aggregate is
+  * Catalyst's own, so it is codegen'd and falls back to sort-based
+  * aggregation with spill when its hash map outgrows memory. It collapses
+  * duplicate (key, value) pairs within a map task into one row with a
+  * count, and the reduce replays each value `count` times. Rows from
+  * different map tasks meet again as adjacent (key, value) runs after the
+  * sort, so the app's `reduceStream` sees exactly the values,
+  * multiplicities and order of an uncombined shuffle.
+  *
+  * `numPartitions` pins the reduce-side partition count (the reference's
+  * `nreduce`) through `ClusteredDistribution.requiredNumPartitions`; AQE
+  * then keeps the count. Left unset, the exchange takes
+  * `spark.sql.shuffle.partitions` and AQE may coalesce it.
   *
   * Same (c)-tier custom-operator pattern as [[GroupedTopK]]: LogicalPlan +
   * Strategy + UnaryExecNode, registered idempotently per session.
   */
 case class SortedGroupReduce(
     app: MRApp,
+    numPartitions: Option[Int],
     child: LogicalPlan,
     // fresh output: the reduce rewrites both columns, nothing passes
     // through. MUST be a constructor param, not a val — a val would mint
@@ -63,8 +72,10 @@ case class SortedGroupReduce(
     copy(child = c)
 }
 
+/** The reduce over a `(key, value, count)` child: the combined map output. */
 case class SortedGroupReduceExec(
     app: MRApp,
+    numPartitions: Option[Int],
     outputAttrs: Seq[Attribute],
     child: SparkPlan)
     extends UnaryExecNode {
@@ -76,13 +87,13 @@ case class SortedGroupReduceExec(
   private def valueAttr = child.output(1)
 
   /** Co-locate each key's rows — the F5 hash shuffle, planned as a SQL
-    * Exchange (AQE-coalescible).
+    * Exchange.
     */
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(keyAttr :: Nil) :: Nil
+    ClusteredDistribution(keyAttr :: Nil, requiredNumPartitions = numPartitions) :: Nil
 
-  /** The F4 map-side sort, strengthened to (key, value) for deterministic
-    * reduce input — planned as Tungsten SortExec with its spill machinery.
+  /** The F4 sort, strengthened to (key, value) for deterministic reduce
+    * input: values in UTF-8 byte order, which is code-point order.
     */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(Seq(SortOrder(keyAttr, Ascending), SortOrder(valueAttr, Ascending)))
@@ -93,12 +104,11 @@ case class SortedGroupReduceExec(
     */
   override def outputOrdering: Seq[SortOrder] =
     Seq(SortOrder(outputAttrs.head, Ascending))
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
+  override def outputPartitioning: Partitioning =
     child.outputPartitioning match {
       // the child's hash partitioning is on the child's key attribute;
       // rewrite it onto the output key, which carries the same values
-      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-          if h.expressions == Seq(keyAttr) =>
+      case h: HashPartitioning if h.expressions == Seq(keyAttr) =>
         h.copy(expressions = Seq(outputAttrs.head))
       case _ => child.outputPartitioning
     }
@@ -117,27 +127,26 @@ case class SortedGroupReduceExec(
       val buf     = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
       // sorted-run adjacent-group scan, the KVIterator protocol: the
       // operator iterator contract means each InternalRow's buffer is
-      // reused, so the group key is copied once per boundary and values
-      // are materialized to String only as the app consumes them
+      // reused, so the group key is copied once per boundary and each
+      // combined value is materialized to String once, however often
+      // it is replayed
       val rows = it.buffered
       new Iterator[Iterator[InternalRow]] {
         override def hasNext: Boolean = rows.hasNext
         override def next(): Iterator[InternalRow] = {
-          val keyCopy: UTF8String = rows.head.getUTF8String(0).copy()
-          val group = new Iterator[String] {
-            override def hasNext: Boolean =
-              rows.hasNext && rows.head.getUTF8String(0) == keyCopy
-            override def next(): String = rows.next().getUTF8String(1).toString
-          }
+          val keyCopy = rows.head.getUTF8String(0).copy()
+          val group   = new SortedGroupReduceExec.Group(rows, keyCopy)
           numGroups += 1
           val reduced =
             appLocal.reduceStream(keyCopy.toString, group).map { v =>
               numOutputRows += 1
               buf.update(0, keyCopy)
               buf.update(1, UTF8String.fromString(v))
-              outProj(buf)
+              // the projection reuses one output row: copy, or a key with
+              // several outputs would repeat its last one
+              outProj(buf).copy()
             }.toVector // materialize before draining: the app may be lazy
-          while (group.hasNext) group.next()
+          group.drain()
           reduced.iterator
         }
       }.flatten
@@ -148,10 +157,52 @@ case class SortedGroupReduceExec(
     copy(child = c)
 }
 
+object SortedGroupReduceExec {
+
+  /** One key's values from a sorted `(key, value, count)` run, each value
+    * repeated `count` times.
+    */
+  private final class Group(rows: BufferedIterator[InternalRow], key: UTF8String)
+      extends Iterator[String] {
+    private var value: String = _
+    private var left          = 0L
+
+    override def hasNext: Boolean =
+      left > 0 || (rows.hasNext && rows.head.getUTF8String(0) == key)
+    override def next(): String = {
+      if (left == 0) {
+        val r = rows.next()
+        value = r.getUTF8String(1).toString
+        left = r.getLong(2)
+      }
+      left -= 1
+      value
+    }
+
+    /** Skip what the app left unconsumed, so the outer scan stays aligned. */
+    def drain(): Unit = {
+      left = 0
+      while (rows.hasNext && rows.head.getUTF8String(0) == key) rows.next()
+    }
+  }
+}
+
 object SortedGroupReduceStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SortedGroupReduce(app, child, _) =>
-      SortedGroupReduceExec(app, plan.output, planLater(child)) :: Nil
+    case SortedGroupReduce(app, numPartitions, child, _) =>
+      val keyValue = child.output
+      val count    = Count(Literal(1)).toAggregateExpression().copy(mode = Partial)
+      val combine = HashAggregateExec(
+        requiredChildDistributionExpressions = None,
+        isStreaming = false,
+        numShufflePartitions = None,
+        groupingExpressions = keyValue,
+        aggregateExpressions = Seq(count),
+        aggregateAttributes = count.aggregateFunction.aggBufferAttributes,
+        initialInputBufferOffset = 0,
+        resultExpressions = keyValue ++ count.aggregateFunction.inputAggBufferAttributes,
+        child = planLater(child))
+      SortedGroupReduceExec(app, numPartitions, plan.output, combine) :: Nil
     case _ => Nil
   }
 }
@@ -173,16 +224,16 @@ object SortedGroupReduce {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ SortedGroupReduceStrategy
 
-  /** Plan `app`'s reduce over a `(key, value)` string pair frame. The
-    * shuffle + secondary sort are left to EnsureRequirements — the whole
-    * reduce side lives inside the SQL engine.
+  /** Plan `app`'s reduce over a `(key, value)` string pair frame, on
+    * `numPartitions` reduce partitions if given. The combine, shuffle and
+    * secondary sort are planned inside the SQL engine.
     */
-  def reduce(kvs: DataFrame, app: MRApp): DataFrame = {
+  def reduce(kvs: DataFrame, app: MRApp, numPartitions: Option[Int] = None): DataFrame = {
     val spark = kvs.sparkSession
     register(spark)
     require(kvs.schema.length == 2 &&
       kvs.schema.forall(_.dataType == StringType),
       s"SortedGroupReduce needs a (string key, string value) child, got ${kvs.schema}")
-    GraftSqlShims.ofRows(spark, SortedGroupReduce(app, kvs.queryExecution.analyzed))
+    GraftSqlShims.ofRows(spark, SortedGroupReduce(app, numPartitions, kvs.queryExecution.analyzed))
   }
 }

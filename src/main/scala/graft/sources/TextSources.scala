@@ -7,8 +7,12 @@ import org.apache.spark.sql.functions._
   * source API:
   *
   *  - F1 whole-file scan: one row per file, `(filename, contents)` — the
-  *    reference's map-task granularity (`pkg/fsutil/util.go:7-21`, one
-  *    file = one task, `internal/coordinator/coordinator.go:124-133`).
+  *    reference's map input unit (`pkg/fsutil/util.go:7-21`). The
+  *    reference runs one map task per file
+  *    (`internal/coordinator/coordinator.go:124-133`); Spark instead packs
+  *    whole files into scan tasks by size plus
+  *    `spark.sql.files.openCostInBytes`, so one task may map many small
+  *    files (`SkewIngestSpec` pins the packing).
   *  - F2 line scan: one row per `\n`-delimited line, trailing newline
   *    stripped (`pkg/mr/mr.go:19-36`).
   *  - F8 text sink: `"<key> <value>"` lines — the oracle's canonical

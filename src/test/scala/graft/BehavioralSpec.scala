@@ -73,8 +73,9 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("crash injection on the secondary-sort path: streaming reduce retries to exact output") {
-    // the RDD path (`MapReduceJob.runSecondarySort`) has its own shuffle +
-    // streaming-reduce machinery; pin its retry behavior under failure too
+    // the streaming path (`MapReduceJob.runSecondarySortNative`, the one
+    // MRRunner runs) has its own combine + shuffle + streaming-reduce
+    // machinery; pin its retry behavior under failure too
     BehavioralSpec.ssCrashes.set(0)
     val crashingWc: MRApp = new MRApp {
       val name = "ss-crashing-wc"
@@ -92,10 +93,10 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     val expected = MapReduceJob
-      .runSecondarySort(spark, docs.toDF("filename", "contents"), MRApps.WordCount, 4)
+      .runSecondarySortNative(spark, docs.toDF("filename", "contents"), MRApps.WordCount, Some(4))
       .as[(String, String)].collect().sorted.toSeq
     val got = MapReduceJob
-      .runSecondarySort(spark, docs.toDF("filename", "contents"), crashingWc, 4)
+      .runSecondarySortNative(spark, docs.toDF("filename", "contents"), crashingWc, Some(4))
       .as[(String, String)].collect().sorted.toSeq
     assert(BehavioralSpec.ssCrashes.get() >= 1, "secondary-sort crash was never injected")
     assert(got == expected, "secondary-sort output after recovery differs from clean run")
@@ -148,7 +149,8 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
     import scala.concurrent.ExecutionContext.Implicits.global
     val job = Future {
       graft.sources.TextSources.writeKV(
-        MapReduceJob.runSecondarySort(spark, docs.toDF("filename", "contents"), slowWc, 4),
+        MapReduceJob.runSecondarySortNative(
+          spark, docs.toDF("filename", "contents"), slowWc, Some(4)),
         dir)
     }
     def visible(): Map[String, String] = {

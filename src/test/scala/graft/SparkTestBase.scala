@@ -22,21 +22,23 @@ trait SparkTestBase {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
-  /** Unwrap AQE wrappers (including query-stage wrappers, which hide
-    * their subtree from `collect`) to reach the materialized
-    * GroupedTopKExec — call after an action.
+  /** `collect` through AQE's wrappers (including query-stage wrappers,
+    * which hide their subtree from `collect`) — call after an action to
+    * see the materialized plan.
     */
-  def topKExec(df: org.apache.spark.sql.DataFrame): graft.plans.GroupedTopKExec = {
-    import org.apache.spark.sql.execution.SparkPlan
+  def collectExec[T](p: org.apache.spark.sql.execution.SparkPlan)(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def find(p: SparkPlan): Option[graft.plans.GroupedTopKExec] = p match {
-      case g: graft.plans.GroupedTopKExec => Some(g)
-      case a: AdaptiveSparkPlanExec       => find(a.executedPlan)
-      case q: QueryStageExec              => find(q.plan)
-      case other => other.children.iterator.map(find).collectFirst { case Some(g) => g }
+    p match {
+      case a: AdaptiveSparkPlanExec => collectExec(a.executedPlan)(pf)
+      case q: QueryStageExec        => collectExec(q.plan)(pf)
+      case other => pf.lift(other).toSeq ++ other.children.flatMap(collectExec(_)(pf))
     }
-    find(df.queryExecution.executedPlan).get
   }
+
+  /** The materialized GroupedTopKExec — call after an action. */
+  def topKExec(df: org.apache.spark.sql.DataFrame): graft.plans.GroupedTopKExec =
+    collectExec(df.queryExecution.executedPlan) { case g: graft.plans.GroupedTopKExec => g }.head
 
   /** Set session confs for the duration of `f`, restoring prior values. */
   def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {

@@ -1,14 +1,19 @@
 package graft.mr
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import graft.SparkTestBase
 import graft.sources.TextSources
 
 /** End-to-end CLI submission flow (`play.sh`'s golden path: run the app
   * over a file glob, read the text output back, diff against an
   * independent computation) — the catalog-external validation of the
-  * whole `MRRunner` surface: registry lookup, glob input, secondary-sort
-  * execution, `"key value"` text output layout.
+  * whole `MRRunner` surface: argument bounds, registry lookup, glob input,
+  * secondary-sort execution on `nreduce` partitions, `"key value"` text
+  * output layout.
   */
 class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -26,7 +31,22 @@ class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
 
   test("wc over a text glob: output layout and content match the relational twin") {
     val (in, out) = writeFixture()
-    MRRunner.run(spark, "wc", s"$in/pg-*.txt", out, nreduce = 3)
+    // the reduce side runs nreduce partitions: the one stage that reads
+    // the shuffle (the only stage with a parent) has one task per
+    // partition, and AQE does not coalesce them
+    val reduceStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.parentIds.nonEmpty) reduceStageTasks.add(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      MRRunner.run(spark, "wc", s"$in/pg-*.txt", out, nreduce = 3)
+      eventually(timeout(Span(10, Seconds))) {
+        // last: a stage event of an earlier suite may still be queued
+        assert(reduceStageTasks.asScala.lastOption.contains(3), reduceStageTasks)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
 
     // output is the reference's canonical format: text part files of
     // "<key> <value>" lines (example/mrsequential/mrsequential.go:84)
@@ -61,5 +81,18 @@ class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains("no-such-app") && e.getMessage.contains("wc"))
     intercept[IllegalArgumentException](
       MRRunner.run(spark, "no-such-app", "in", "out", 2))
+  }
+
+  test("nreduce below 1 is rejected before any Spark work") {
+    // a missing input would fail in Spark with an AnalysisException, and
+    // main would start a session: the bound must trip first
+    for (n <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](
+        MRRunner.run(spark, "wc", "/no/such/input/*", "/no/such/out", n))
+      assert(e.getMessage.contains("nreduce") && e.getMessage.contains(n.toString), e.getMessage)
+      val m = intercept[IllegalArgumentException](
+        MRRunner.main(Array("wc", "/no/such/input/*", "/no/such/out", n.toString)))
+      assert(m.getMessage.contains("nreduce"), m.getMessage)
+    }
   }
 }

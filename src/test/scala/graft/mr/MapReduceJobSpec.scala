@@ -1,23 +1,32 @@
 package graft.mr
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
-/** Differential tests for the generic MR engine: both execution paths vs.
-  * a sequential oracle — the reference's own verification trick
-  * (`example/mrsequential/mrsequential.go:62-87`, the global sort +
+/** Differential tests for the generic MR engine: the in-memory-group path
+  * and the streaming path (AQE-sized and with a pinned reduce-partition
+  * count) vs. a sequential oracle — the reference's own verification
+  * trick (`example/mrsequential/mrsequential.go:62-87`, the global sort +
   * adjacent-group loop, ported below).
   */
 class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
+  import MapReduceJobSpec.{Concat, Echo}
+
+  private val byKeyValue: Ordering[KV] =
+    Ordering.by((kv: KV) => (kv.key, kv.value))(
+      Ordering.Tuple2(MRApps.codePointOrder, MRApps.codePointOrder))
 
   /** Port of the mrsequential loop: map all, global sort, group adjacent
-    * equal keys, reduce each group. Defines canonical output.
+    * equal keys, reduce each group. Defines canonical output; the sort is
+    * by code point, the order `MRApp` promises.
     */
   private def sequentialOracle(app: MRApp, docs: Seq[(String, String)]): Seq[KV] = {
     val inter = docs
       .flatMap { case (f, c) => app.map(f, c) }
-      .sortBy(kv => (kv.key, kv.value))
+      .sorted(byKeyValue)
     val out = Seq.newBuilder[KV]
     var i = 0
     while (i < inter.size) {
@@ -27,53 +36,100 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
       app.reduce(inter(i).key, vs).foreach(v => out += KV(inter(i).key, v))
       i = j
     }
-    out.result()
+    out.result().sorted(byKeyValue)
   }
 
+  // doc-😀 (U+1F600, a UTF-16 surrogate pair) sorts before doc-Ａ
+  // (U+FF21) in String order but after it in code-point order; both
+  // contain "cat", so the indexer's doc list for "cat" tells the orders apart
   private val docs = Seq(
     "doc-a" -> "the cat sat on the mat",
     "doc-b" -> "the dog, the dog! barked 42 times",
     "doc-c" -> "cat dog cat — encore",
-    "doc-d" -> "")
+    "doc-d" -> "",
+    "doc-😀" -> "cat naps",
+    "doc-Ａ" -> "a cat")
 
-  private def runAll(app: MRApp): (Seq[KV], Seq[KV], Seq[KV]) = {
-    val df = docs.toDF("filename", "contents")
-    def norm(out: org.apache.spark.sql.DataFrame): Seq[KV] = out
-      .as[(String, String)].collect().map(t => KV(t._1, t._2)).sortBy(k => (k.key, k.value)).toSeq
-    (norm(MapReduceJob.run(spark, df, app)),
-      norm(MapReduceJob.runSecondarySort(spark, df, app, numPartitions = 3)),
-      norm(MapReduceJob.runSecondarySortNative(spark, df, app)))
-  }
+  private def norm(out: DataFrame): Seq[KV] =
+    out.as[(String, String)].collect().map(t => KV(t._1, t._2)).toSeq.sorted(byKeyValue)
+
+  /** Every path over `df`: in-memory groups, streaming with AQE sizing,
+    * streaming on 3 pinned reduce partitions.
+    */
+  private def runAll(df: DataFrame, app: MRApp): Seq[(String, Seq[KV])] = Seq(
+    "flatMapGroups" -> norm(MapReduceJob.run(spark, df, app)),
+    "streaming" -> norm(MapReduceJob.runSecondarySortNative(spark, df, app)),
+    "streaming, nreduce=3" -> norm(MapReduceJob.runSecondarySortNative(spark, df, app, Some(3))))
 
   for (app <- MRApps.all.values) {
     test(s"${app.name}: all three paths match the sequential oracle") {
-      val expected  = sequentialOracle(app, docs).sortBy(k => (k.key, k.value))
-      val (a, b, c) = runAll(app)
-      assert(a == expected, s"flatMapGroups path diverged for ${app.name}")
-      assert(b == expected, s"secondary-sort path diverged for ${app.name}")
-      assert(c == expected, s"native secondary-sort path diverged for ${app.name}")
+      val expected = sequentialOracle(app, docs)
+      for ((path, got) <- runAll(docs.toDF("filename", "contents"), app))
+        assert(got == expected, s"$path path diverged for ${app.name}")
     }
   }
 
+  test("values reach reduce in code-point order on every path") {
+    assert(MRApps.codePointOrder.lt("doc-Ａ", "doc-😀") && "doc-😀" < "doc-Ａ")
+    assert(MRApps.codePointOrder.lt("ab", "abc") && MRApps.codePointOrder.equiv("ab", "ab"))
+    for ((path, got) <- runAll(docs.toDF("filename", "contents"), MRApps.Indexer))
+      assert(got.contains(KV("cat", "4 doc-a,doc-c,doc-Ａ,doc-😀")), s"$path: $got")
+  }
+
+  test("map-side combine keeps every value's multiplicity and order") {
+    // (a, x) repeats within p1, across p1/p2 (one map partition) and
+    // across map partitions (p3); (b, y) repeats within p3 and across
+    // partitions
+    val pairs = Seq(
+      "p1" -> "a x\na x\na 😀\nb y",
+      "p2" -> "a x\na Ａ\nb y",
+      "p3" -> "a x\nb y\nb y",
+      "p4" -> "c z")
+    val df = spark.sparkContext.parallelize(pairs, 2).toDF("filename", "contents")
+    assert(sequentialOracle(Concat, pairs) ==
+      Seq(KV("a", "x,x,x,x,Ａ,😀"), KV("b", "y,y,y,y"), KV("c", "z")))
+    // Echo also checks a key's several output rows stay distinct rows
+    for (app <- Seq(Concat, Echo); (path, got) <- runAll(df, app))
+      assert(got == sequentialOracle(app, pairs), s"$path path diverged for ${app.name}")
+
+    // the combine really ran: 11 map outputs leave the map side as 7
+    // rows, distinct (key, value) pairs per map partition (4 + 3)
+    val out = MapReduceJob.runSecondarySortNative(spark, df, Concat, Some(3))
+    out.collect()
+    val combines = collectExec(out.queryExecution.executedPlan) {
+      case h: HashAggregateExec => h
+    }
+    assert(combines.size == 1, out.queryExecution.executedPlan.toString)
+    assert(combines.head.metrics("numOutputRows").value == 7)
+  }
+
   test("native secondary-sort plans the shuffle+sort inside the SQL engine") {
-    // the point of SortedGroupReduceExec: EnsureRequirements must insert a
-    // hash Exchange on key and a Tungsten SortExec on (key, value) UNDER
-    // the custom exec — and no RDD-boundary scan in between
+    // the point of SortedGroupReduceExec: the strategy plans a partial
+    // count aggregate on (key, value) and EnsureRequirements inserts ONE
+    // hash Exchange on key above it and a Tungsten SortExec on (key,
+    // value) UNDER the custom exec — and no RDD-boundary scan in between
     val df = docs.toDF("filename", "contents")
-    val qe = MapReduceJob
-      .runSecondarySortNative(spark, df, MRApps.Indexer).queryExecution
-    // string-level audit: AQE's initialPlan (where EnsureRequirements has
-    // run) is what toString renders, but isn't reachable via collect()
-    // through the AdaptiveSparkPlanExec wrapper
-    val plan = qe.executedPlan.toString
-    assert(plan.contains("SortedGroupReduce"), plan)
-    assert("Sort \\[key#\\d+ ASC NULLS FIRST, value#\\d+ ASC NULLS FIRST"
-      .r.findFirstIn(plan).nonEmpty, s"no (key, value) SortExec:\n$plan")
-    assert(plan.contains("Exchange hashpartitioning(key"),
-      s"no SQL Exchange on key:\n$plan")
-    // and the reduce must sit DIRECTLY on the sort — no RDD boundary
-    assert("SortedGroupReduce [^\\n]*\\n\\s*\\+- Sort "
-      .r.findFirstIn(plan).nonEmpty, plan)
+    for (nreduce <- Seq(None, Some(3))) {
+      // string-level audit: AQE's initialPlan (where EnsureRequirements
+      // has run) is what toString renders, but isn't reachable via
+      // collect() through the AdaptiveSparkPlanExec wrapper
+      val plan = MapReduceJob.runSecondarySortNative(spark, df, MRApps.Indexer, nreduce)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("SortedGroupReduce"), plan)
+      assert("Exchange ".r.findAllIn(plan).size == 1, s"more than one exchange:\n$plan")
+      val parts = nreduce.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      assert(s"Exchange hashpartitioning\\(key#\\d+, $parts\\)".r.findFirstIn(plan).nonEmpty,
+        s"no SQL Exchange on key into $parts partitions:\n$plan")
+      // the combine sits directly under the exchange
+      assert(("Exchange hashpartitioning\\(key[^\\n]*\\n\\s*\\+- HashAggregate\\(" +
+        "keys=\\[key#\\d+, value#\\d+\\], functions=\\[partial_count\\(1\\)\\]")
+        .r.findFirstIn(plan).nonEmpty, s"no partial combine under the exchange:\n$plan")
+      assert("Sort \\[key#\\d+ ASC NULLS FIRST, value#\\d+ ASC NULLS FIRST"
+        .r.findFirstIn(plan).nonEmpty, s"no (key, value) SortExec:\n$plan")
+      // and the reduce must sit DIRECTLY on the sort — no RDD boundary
+      assert("SortedGroupReduce [^\\n]*\\n\\s*\\+- Sort "
+        .r.findFirstIn(plan).nonEmpty, plan)
+    }
     // regression: a column-less consumer must not let ColumnPruning
     // empty the child under the reduce (the node's references declare
     // both columns consumed through the app closure) — count() planned
@@ -107,5 +163,29 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
         .as[(String, String)].collect().map(_._2.toLong).sum
       assert(counted == total)
     }
+  }
+}
+
+object MapReduceJobSpec {
+
+  /** Each input line is one "key value" pair; reduce joins the values as
+    * it receives them, so any change in order or multiplicity changes the
+    * output.
+    */
+  object Concat extends MRApp {
+    val name = "concat"
+    def map(filename: String, contents: String): Seq[KV] =
+      contents.split("\n").toSeq.filter(_.nonEmpty).map { line =>
+        val Array(k, v) = line.split(" ", 2)
+        KV(k, v)
+      }
+    def reduce(key: String, values: Seq[String]): Seq[String] = Seq(values.mkString(","))
+  }
+
+  /** Concat's map; reduce emits every value as its own output row. */
+  object Echo extends MRApp {
+    val name = "echo"
+    def map(filename: String, contents: String): Seq[KV] = Concat.map(filename, contents)
+    def reduce(key: String, values: Seq[String]): Seq[String] = values
   }
 }
