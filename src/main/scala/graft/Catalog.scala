@@ -18,9 +18,10 @@ object Catalog {
   private val registeredDir = java.util.Collections
     .synchronizedMap(new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Register every driver table under its name for the given scale dir,
-    * the native function registry, and the top-N rewrite. Cached per
-    * (session, dir) — repeated sql() calls don't re-read parquet footers.
+  /** Register every catalog table under its name for the given scale dir
+    * and install the native extensions ([[GraftExtensions.install]]).
+    * Cached per (session, dir) — repeated sql() calls don't re-read
+    * parquet footers.
     */
   def registerViews(spark: SparkSession, dir: String): Unit =
     // synchronized on the session (same monitor as Tables.events): two
@@ -29,8 +30,7 @@ object Catalog {
     spark.synchronized {
       if (registeredDir.get(spark) != dir) {
         TableNames.foreach(n => Tables(spark, dir, n).createOrReplaceTempView(n))
-        functions.VectorFunctions.register(spark)
-        plans.GroupedTopK.registerRewrite(spark)
+        GraftExtensions.install(spark)
         registeredDir.put(spark, dir)
       }
     }

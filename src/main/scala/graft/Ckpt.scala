@@ -31,27 +31,6 @@ object Ckpt {
     */
   val ReliableKey = "spark.graft.checkpoint.reliable"
 
-  /** Session conf key: "true" → [[cached]] entries store their blocks
-    * SERIALIZED (MEMORY_AND_DISK_SER) instead of the deserialized
-    * default. Memoized generations outlive the query that built them
-    * and accumulate for the session; in a memory-constrained session
-    * the deserialized footprint can starve later queries' working
-    * memory (measured at sf1 with TWO scale factors' caches standing:
-    * text_bm25's back-to-back runs degraded 24 → 65 → 98 s, and ran a
-    * tight 30 s ±1 solo). The serialized mode caps the footprint but
-    * costs a decode on EVERY scan — measured ~10× on the hot-stream
-    * consumers (dedup_ngram 1.7 → 16.2 s, graph_common_neighbors
-    * 13.3 → 44.7 s at sf1) — so the fast deserialized layout stays the
-    * default and the knob is for sessions that would otherwise thrash.
-    * (At genuine cluster scale these intermediates become persisted
-    * tables — see the localCheckpoint note in Graph.scala — and
-    * neither RAM layout applies.) The flag is part of each entry's
-    * cache identity (like the reliable substrate), so flipping it
-    * mid-session builds fresh entries under the new layout instead of
-    * silently serving blocks stored under the other one.
-    */
-  val CachedSerKey = "spark.graft.cached.serialized"
-
   /** Session conf key: block-manager storage-used fraction above which
     * a NEW cached build first evicts least-recently-used standing
     * entries ([[maybeEvict]]). Default [[DefaultEvictFraction]].
@@ -115,15 +94,12 @@ object Ckpt {
     */
   def cached(s: org.apache.spark.sql.SparkSession, key: String)(
       build: => DataFrame): DataFrame = cache.synchronized {
-    // the storage substrate and RAM layout are part of the entry's
-    // identity: a session that flips to reliable mode must NOT be handed
-    // blocks that a local-mode build materialized (they don't survive
-    // executor loss — the exact guarantee the flip buys), and a session
-    // that flips the serialized knob must not be served deserialized
-    // blocks whose footprint the knob exists to cap
+    // the storage substrate is part of the entry's identity: a session
+    // that flips to reliable mode must NOT be handed blocks that a
+    // local-mode build materialized (they don't survive executor loss —
+    // the exact guarantee the flip buys)
     val k = (s.sparkContext.applicationId
-      + (if (confFlag(s, ReliableKey)) "#reliable" else "")
-      + (if (confFlag(s, CachedSerKey)) "#ser" else ""), key)
+      + (if (confFlag(s, ReliableKey)) "#reliable" else ""), key)
     Option(cache.get(k)) match {
       case Some(e) =>
         ticks += 1; e.tick = ticks
@@ -131,7 +107,7 @@ object Ckpt {
       case None =>
         maybeEvict(s)
         val t0 = System.nanoTime()
-        val df = materialize(build, sessionLived = true)
+        val df = materialize(build)
         log += ((key, (System.nanoTime() - t0) / 1e9))
         ticks += 1
         cache.put(k, new Entry(df, key, ticks))
@@ -215,7 +191,7 @@ object Ckpt {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  def apply(df: DataFrame): DataFrame = materialize(df, sessionLived = false)
+  def apply(df: DataFrame): DataFrame = materialize(df)
 
   /** True when the frame is already just a rename/reorder projection
     * over a checkpoint scan — re-materializing such a frame copies every
@@ -245,19 +221,14 @@ object Ckpt {
   def ensure(df: DataFrame): DataFrame =
     if (isCheapScan(df)) df else apply(df)
 
-  private def materialize(df: DataFrame, sessionLived: Boolean): DataFrame = {
-    val spark    = df.sparkSession
-    val reliable = confFlag(spark, ReliableKey)
-    val ser      = sessionLived && confFlag(spark, CachedSerKey)
-    if (reliable) {
+  private def materialize(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (confFlag(spark, ReliableKey)) {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(
           java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
       df.checkpoint(eager = true)
-    } else if (ser)
-      df.localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df.localCheckpoint(eager = true)
+    } else df.localCheckpoint(eager = true)
   }
 }

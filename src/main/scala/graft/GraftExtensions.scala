@@ -1,46 +1,74 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatDotProduct, NfcNormalize, ZOrder2}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions._
+import graft.plans.{GraftStrategy, WindowToTopKRule}
 
-/** Session extension registering the engine's native expressions so SQL
-  * users get them without touching the Scala API:
+/** Session extension for SQL users: the native functions of
+  * [[GraftExtensions.functions]], [[GraftStrategy]] and
+  * [[WindowToTopKRule]].
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *   SELECT graft_dot_f(a.embedding, b.embedding) FROM ...
   *
-  * (The Scala surface registers the same functions lazily per session via
-  * [[graft.functions.VectorFunctions.register]].)
+  * [[graft.Sessions.builder]] applies it to every session it builds.
+  * Sessions built elsewhere get the same pieces from
+  * [[GraftExtensions.install]], which the operator entry points and
+  * [[graft.SparkEntry.queries]] call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_dot_f"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "graft_dot_f"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_f requires exactly 2 arguments, got ${exprs.length}")
-        FloatDotProduct(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_nfc requires exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_zorder2"),
-      new ExpressionInfo(classOf[ZOrder2].getName, "graft_zorder2"),
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_zorder2 requires exactly 2 arguments, got ${exprs.length}")
-        ZOrder2(exprs.head, exprs(1))
-      }))
-    e.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
-    e.injectOptimizerRule(_ => graft.plans.WindowToTopKRule)
+    GraftExtensions.registrations.foreach(e.injectFunction)
+    e.injectPlannerStrategy(_ => GraftStrategy)
+    e.injectOptimizerRule(_ => WindowToTopKRule)
+  }
+}
+
+object GraftExtensions {
+
+  /** The native functions callable from SQL text, as (name, arity,
+    * builder). Scala callers build the same expressions directly through
+    * the Column helpers in `graft.functions`.
+    */
+  val functions: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot_f", 2, e => FloatDotProduct(e(0), e(1))),
+    ("graft_dot_l", 2, e => LongDotProduct(e(0), e(1))),
+    ("graft_sqdist_l", 2, e => LongSqDist(e(0), e(1))),
+    ("graft_nfc", 1, e => NfcNormalize(e(0))),
+    ("graft_zorder2", 2, e => ZOrder2(e(0), e(1))),
+    ("graft_sorted_key_sum", 3, e => SortedKeySum(e(0), e(1), e(2))),
+    ("graft_mmr_select", 1, e => MmrSelect(e(0),
+      ops.Similarity.MmrK, ops.Similarity.MmrLambda, ops.Similarity.MmrMu)))
+
+  /** [[functions]] as registry entries, each builder checking its arity. */
+  private def registrations
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    functions.map { case (name, arity, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (exprs: Seq[Expression]) => {
+          require(exprs.length == arity,
+            s"$name requires exactly $arity argument(s), got ${exprs.length}")
+          build(exprs)
+        })
+    }
+
+  /** Put [[GraftStrategy]], [[WindowToTopKRule]] and [[functions]] in
+    * place in `spark`, once. A session that already plans with
+    * [[GraftStrategy]] (built with these extensions, or installed
+    * before) is left as it is. The extension runs the rule inside the
+    * operator-optimization batch and this path after the last batch;
+    * the rule rewrites the same plans in either place.
+    */
+  def install(spark: SparkSession): Unit = spark.synchronized {
+    if (!spark.sessionState.planner.strategies.contains(GraftStrategy)) {
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GraftStrategy
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ WindowToTopKRule
+      registrations.foreach { case (id, info, build) =>
+        spark.sessionState.functionRegistry.registerFunction(id, info, build)
+      }
+    }
   }
 }

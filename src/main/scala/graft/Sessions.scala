@@ -51,6 +51,7 @@ object Sessions {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach { d =>
       new java.io.File(d).mkdirs()
       b.config("spark.local.dir", d)

@@ -15,14 +15,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Reference.wc(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first installs the native extensions, so a session built outside
+    * [[Sessions]] plans every query the same way.
+    */
   def queries: Map[String, Q] =
-    ops.Reference.queries ++ ops.Relational.queries ++ ops.Events.queries ++
+    (ops.Reference.queries ++ ops.Relational.queries ++ ops.Events.queries ++
       ops.Dedup.queries ++ ops.Similarity.queries ++ ops.TextAnalysis.queries ++
       ops.MRCompat.queries ++ multimodal.Multimodal.queries ++
       ops.TypedAgg.queries ++ ops.Skew.queries ++ ops.Pipeline.queries ++
       ops.Curation.queries ++ ops.Storage.queries ++ ops.Stats.queries ++
-      ops.Graph.queries ++ ops.Sketches.queries
+      ops.Graph.queries ++ ops.Sketches.queries).map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => { GraftExtensions.install(s); q(s, dir) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver records a weaker

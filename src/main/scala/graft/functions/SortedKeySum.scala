@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native Catalyst expression for a sorted-merge keyed sum: given a
@@ -102,19 +102,6 @@ case class SortedKeySum(first: Expression, second: Expression, third: Expression
 }
 
 object SortedKeySumFunction {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_key_sum",
-      exprs => {
-        require(exprs.length == 3,
-          s"graft_sorted_key_sum requires exactly 3 arguments, got ${exprs.length}")
-        SortedKeySum(exprs(0), exprs(1), exprs(2))
-      },
-      "scala_udf")
-
-  def sortedKeySum(spark: SparkSession, keys: Column, vals: Column, qKeys: Column): Column = {
-    register(spark)
-    call_function("graft_sorted_key_sum", keys, vals, qKeys)
-  }
+  def sortedKeySum(keys: Column, vals: Column, qKeys: Column): Column =
+    column(SortedKeySum(expression(keys), expression(vals), expression(qKeys)))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,19 +62,5 @@ object NfcNormalize {
 }
 
 object TextFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc",
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_nfc requires exactly 1 argument, got ${exprs.length}")
-        NfcNormalize(exprs.head)
-      },
-      "scala_udf")
-
-  def nfc(spark: SparkSession, s: Column): Column = {
-    register(spark)
-    call_function("graft_nfc", s)
-  }
+  def nfc(s: Column): Column = column(NfcNormalize(expression(s)))
 }

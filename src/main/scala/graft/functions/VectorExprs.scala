@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the float-vector dot product — the hot
@@ -229,47 +229,17 @@ case class LongSqDist(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Column helpers: each builds its native expression directly, so no
+  * function registry is involved (SQL text reaches the same expressions
+  * through [[graft.GraftExtensions.functions]]).
+  */
 object VectorFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_f",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_f requires exactly 2 arguments, got ${exprs.length}")
-        FloatDotProduct(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_l",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_dot_l requires exactly 2 arguments, got ${exprs.length}")
-        LongDotProduct(exprs.head, exprs(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist_l",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_sqdist_l requires exactly 2 arguments, got ${exprs.length}")
-        LongSqDist(exprs.head, exprs(1))
-      },
-      "scala_udf")
-  }
+  def dotF(a: Column, b: Column): Column =
+    column(FloatDotProduct(expression(a), expression(b)))
 
-  def dotF(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot_f", a, b)
-  }
+  def dotL(a: Column, b: Column): Column =
+    column(LongDotProduct(expression(a), expression(b)))
 
-  def dotL(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot_l", a, b)
-  }
-
-  def sqDistL(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_sqdist_l", a, b)
-  }
+  def sqDistL(a: Column, b: Column): Column =
+    column(LongSqDist(expression(a), expression(b)))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst expression for the 2-column Z-order (Morton) key —
@@ -71,19 +71,6 @@ object ZOrder2 {
 }
 
 object ZOrderFunctions {
-  /** Idempotent per-session registration; returns a Column-level handle. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder2",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_zorder2 requires exactly 2 arguments, got ${exprs.length}")
-        ZOrder2(exprs.head, exprs(1))
-      },
-      "scala_udf")
-
-  def zorder2(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_zorder2", a, b)
-  }
+  def zorder2(a: Column, b: Column): Column =
+    column(ZOrder2(expression(a), expression(b)))
 }

@@ -798,7 +798,7 @@ object Curation {
       .select(
         col("vec_id"),
         col("embedding"),
-        sqrt(VectorFunctions.dotF(s, col("embedding"), col("embedding"))).as("norm"))
+        sqrt(VectorFunctions.dotF(col("embedding"), col("embedding"))).as("norm"))
     val perVec =
       if (literal) {
         val cents: Seq[(Long, Seq[Float], Double)] = Tables
@@ -817,7 +817,7 @@ object Curation {
           .toSeq
         val scored = e.select(
           col("vec_id") +: cents.map { case (cid, v, cnorm) =>
-            (VectorFunctions.dotF(s, col("embedding"), typedLit(v)) / (col("norm") * lit(cnorm)))
+            (VectorFunctions.dotF(col("embedding"), typedLit(v)) / (col("norm") * lit(cnorm)))
               .as(s"cos_$cid")
           }: _*)
         val best = greatest(cents.map { case (cid, _, _) => col(s"cos_$cid") }: _*)
@@ -834,10 +834,10 @@ object Curation {
           .embeddings(s, dir)
           .filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-          .withColumn("cnorm", sqrt(VectorFunctions.dotF(s, col("cemb"), col("cemb"))))
+          .withColumn("cnorm", sqrt(VectorFunctions.dotF(col("cemb"), col("cemb"))))
         e.crossJoin(broadcast(cent))
           .withColumn("ccos",
-            VectorFunctions.dotF(s, col("embedding"), col("cemb")) / (col("norm") * col("cnorm")))
+            VectorFunctions.dotF(col("embedding"), col("cemb")) / (col("norm") * col("cnorm")))
           .groupBy("vec_id")
           .agg(max(struct(col("ccos").as("cos"), (-col("cid")).as("negcid"))).as("bestc"))
           .select(
@@ -1296,7 +1296,7 @@ object Curation {
         transform(col("ents"), e => e.getField("ci")).as("cis"))
     val qArrs = qterms.groupBy("q_doc").agg(array_sort(collect_list(col("t"))).as("qts"))
     val sci = graft.functions.SortedKeySumFunction
-      .sortedKeySum(s, col("dts"), col("cis"), col("qts"))
+      .sortedKeySum(col("dts"), col("cis"), col("qts"))
     // the expansion stage outputs |Q|× its input rows, so partition count
     // must follow COMPUTE, not input bytes: AQE's size-based coalescing
     // sees a few MB of doc arrays, folds the stage to ONE task, and

@@ -1162,7 +1162,7 @@ object Dedup {
     cands
       .join(e.select(col("vec_id").as("va"), col("embedding").as("ea"), col("norm").as("na")), "va")
       .join(e.select(col("vec_id").as("vb"), col("embedding").as("eb"), col("norm").as("nb")), "vb")
-      .withColumn("cos", Similarity.cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", Similarity.cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .orderBy(desc("cos"), asc("va"), asc("vb"))
       .limit(20)
       .select("va", "vb", "cos")
@@ -1528,7 +1528,7 @@ object Dedup {
     left
       .join(right, "centroid")
       .filter(col("va") < col("vb"))
-      .withColumn("cos", Similarity.cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", Similarity.cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .orderBy(desc("cos"), asc("va"), asc("vb"))
       .limit(20)
       .select("centroid", "va", "vb", "cos")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -45,16 +45,14 @@ object Similarity {
     */
   val AnnTargetBucket = 8
 
-  private[ops] def withNorm(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
+  private[ops] def withNorm(e: DataFrame): DataFrame =
     e.select(
       col("vec_id"),
       col("embedding"),
-      sqrt(VectorFunctions.dotF(s, col("embedding"), col("embedding"))).as("norm"))
-  }
+      sqrt(VectorFunctions.dotF(col("embedding"), col("embedding"))).as("norm"))
 
-  private[ops] def cosine(s: SparkSession, ea: Column, eb: Column, na: Column, nb: Column): Column =
-    VectorFunctions.dotF(s, ea, eb) / (na * nb)
+  private[ops] def cosine(ea: Column, eb: Column, na: Column, nb: Column): Column =
+    VectorFunctions.dotF(ea, eb) / (na * nb)
 
   /** Brute-force exact top-k neighbors for the first `NumQueryVecs` ids. */
   def topkBrute(s: SparkSession, dir: String): DataFrame =
@@ -73,7 +71,7 @@ object Similarity {
     val w = Window.partitionBy("va").orderBy(desc("cos"), asc("vb"))
     broadcast(q)
       .join(c, col("va") =!= col("vb"))
-      .withColumn("cos", cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
       .select("va", "vb", "cos", "rn")
@@ -142,7 +140,7 @@ object Similarity {
     // codegen'd exact long dot (r15, guide §1.2): the zip_with/aggregate
     // fold paid a lambda frame per element per (row, table, plane)
     def vote(tbl: Int, j: Int): Column =
-      VectorFunctions.dotL(s, col("xq"), typedLit(planeWeights(tbl, j)))
+      VectorFunctions.dotL(col("xq"), typedLit(planeWeights(tbl, j)))
     def bucket(tbl: Int): Column =
       (0 until planes)
         .map(j => when(vote(tbl, j) > 0, lit(1L << j)).otherwise(lit(0L)))
@@ -171,7 +169,7 @@ object Similarity {
     lshCandidates(s, dir)
       .join(broadcast(q), "va")
       .join(c, "vb")
-      .withColumn("cos", cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= TopK)
       .select("va", "vb", "cos", "rn")
@@ -281,14 +279,6 @@ object Similarity {
     // |Q|-group collect, and an explode — no materialization anywhere.
     // collect_list order is partition-dependent, but the selection is
     // argmax-based with total tiebreaks, so its output is order-invariant.
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mmr_select",
-      exprs => {
-        require(exprs.length == 1,
-          s"graft_mmr_select requires exactly 1 argument, got ${exprs.length}")
-        graft.functions.MmrSelect(exprs.head, MmrK, MmrLambda, MmrMu)
-      },
-      "scala_udf")
     val cand = bruteRanked(s, dir, MmrPool)
       .select(col("va"), col("vb"), col("cos").as("rel"))
     val e = withNorm(Tables.embeddings(s, dir))
@@ -299,7 +289,8 @@ object Similarity {
       .agg(collect_list(struct(col("vb"), col("rel"), col("eb"), col("nb"))).as("pool"))
     pool
       .select(col("va"),
-        explode(call_function("graft_mmr_select", col("pool"))).as("p"))
+        explode(GraftSqlShims.column(graft.functions.MmrSelect(
+          GraftSqlShims.expression(col("pool")), MmrK, MmrLambda, MmrMu))).as("p"))
       .select(col("va"), col("p.vb").as("vb"), col("p.pick").as("pick"),
         col("p.rel").as("rel"), col("p.score").as("score"))
   }
@@ -365,7 +356,7 @@ object Similarity {
   def tripletAudit(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir).select(
       col("vec_id"), col("embedding"), col("label"),
-      sqrt(VectorFunctions.dotF(s, col("embedding"), col("embedding"))).as("norm"))
+      sqrt(VectorFunctions.dotF(col("embedding"), col("embedding"))).as("norm"))
     val q = e
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("va"), col("embedding").as("ea"),
@@ -375,7 +366,7 @@ object Similarity {
     val scored = lshCandidates(s, dir)
       .join(broadcast(q), "va")
       .join(c, "vb")
-      .withColumn("cos", cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", cosine(col("ea"), col("eb"), col("na"), col("nb")))
     val w = Window.partitionBy("va").orderBy(desc("cos"), asc("vb"))
     def top1(side: DataFrame): DataFrame = side
       .withColumn("rn", row_number().over(w))
@@ -412,7 +403,7 @@ object Similarity {
     // label rides the norm projection — one scan, no self-join
     val e = Tables.embeddings(s, dir).select(
       col("vec_id"), col("embedding"), col("label"),
-      sqrt(VectorFunctions.dotF(s, col("embedding"), col("embedding"))).as("norm"))
+      sqrt(VectorFunctions.dotF(col("embedding"), col("embedding"))).as("norm"))
     val q = e
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("va"), col("embedding").as("ea"),
@@ -424,7 +415,7 @@ object Similarity {
       .join(broadcast(q), "va")
       .join(c, "vb")
       .filter(col("label_q") =!= col("label_n"))
-      .withColumn("cos", cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= TopK)
       .select("va", "label_q", "vb", "label_n", "cos", "rn")
@@ -491,7 +482,7 @@ object Similarity {
     broadcast(probes)
       .join(index, "cell")
       .filter(col("va") =!= col("vb"))
-      .withColumn("cos", cosine(s, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= TopK)
       .select("va", "vb", "cos", "rn")
@@ -524,7 +515,7 @@ object Similarity {
         val ranked = array_sort(
           array(cents.map { case (cid, v, cnorm) =>
             struct(
-              (VectorFunctions.dotF(s, col("embedding"), typedLit(v)) / (col("norm") * lit(cnorm)))
+              (VectorFunctions.dotF(col("embedding"), typedLit(v)) / (col("norm") * lit(cnorm)))
                 .as("cos"),
               lit(cid).as("cid"))
           }: _*),
@@ -541,10 +532,10 @@ object Similarity {
           .embeddings(s, dir)
           .filter(col("vec_id") < IvfK)
           .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-          .withColumn("cnorm", sqrt(VectorFunctions.dotF(s, col("cemb"), col("cemb"))))
+          .withColumn("cnorm", sqrt(VectorFunctions.dotF(col("cemb"), col("cemb"))))
         e.crossJoin(broadcast(cent))
           .withColumn("ccos",
-            VectorFunctions.dotF(s, col("embedding"), col("cemb")) / (col("norm") * col("cnorm")))
+            VectorFunctions.dotF(col("embedding"), col("cemb")) / (col("norm") * col("cnorm")))
           .groupBy("vec_id")
           .agg(
             first(col("embedding")).as("embedding"),
@@ -583,9 +574,9 @@ object Similarity {
     val subs  = pqSubs(s, dir)
     val cw    = pqCodebook(subs)
     val codes = pq(s, dir).select(col("vec_id"), col("subspace"), col("code"))
-    val d2q = VectorFunctions.dotF(s, col("qv"), col("qv")) -
-      lit(2.0) * VectorFunctions.dotF(s, col("qv"), col("cv")) +
-      VectorFunctions.dotF(s, col("cv"), col("cv"))
+    val d2q = VectorFunctions.dotF(col("qv"), col("qv")) -
+      lit(2.0) * VectorFunctions.dotF(col("qv"), col("cv")) +
+      VectorFunctions.dotF(col("cv"), col("cv"))
     val lut = subs
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("q_vec"), col("subspace"), col("sv").as("qv"))
@@ -637,7 +628,7 @@ object Similarity {
     cand
       .join(broadcast(qe), "q_vec")
       .join(e, "vec_id")
-      .withColumn("cos", cosine(s, col("qa"), col("embedding"), col("na"), col("norm")))
+      .withColumn("cos", cosine(col("qa"), col("embedding"), col("na"), col("norm")))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= TopK)
       .select(col("q_vec"), col("vec_id"), col("cos"), col("rn"))
@@ -676,13 +667,13 @@ object Similarity {
     }
     val xq = transform(col("embedding"), x => floor(x.cast("double") * 1000).cast("long"))
     val proj = array(wts.map(w =>
-      VectorFunctions.dotL(s, col("xq"), typedLit(w))): _*)
+      VectorFunctions.dotL(col("xq"), typedLit(w))): _*)
     val p = Tables
       .embeddings(s, dir)
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id"), xq.as("xq"))
       .select(col("vec_id"), col("xq"), proj.as("pj"))
-    val d2 = (a: Column, b: Column) => VectorFunctions.sqDistL(s, a, b)
+    val d2 = (a: Column, b: Column) => VectorFunctions.sqDistL(a, b)
     p.as("a")
       .join(p.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(
@@ -784,9 +775,9 @@ object Similarity {
   def pq(s: SparkSession, dir: String): DataFrame = {
     val subs = pqSubs(s, dir)
     val cw   = pqCodebook(subs)
-    val d2 = VectorFunctions.dotF(s, col("sv"), col("sv")) -
-      lit(2.0) * VectorFunctions.dotF(s, col("sv"), col("cv")) +
-      VectorFunctions.dotF(s, col("cv"), col("cv"))
+    val d2 = VectorFunctions.dotF(col("sv"), col("sv")) -
+      lit(2.0) * VectorFunctions.dotF(col("sv"), col("cv")) +
+      VectorFunctions.dotF(col("cv"), col("cv"))
     subs
       .join(broadcast(cw), "subspace")
       .withColumn("d2", d2)
@@ -826,9 +817,9 @@ object Similarity {
     val qs = subs
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("q_vec"), col("subspace"), col("sv").as("qv"))
-    val d2q = VectorFunctions.dotF(s, col("qv"), col("qv")) -
-      lit(2.0) * VectorFunctions.dotF(s, col("qv"), col("cv")) +
-      VectorFunctions.dotF(s, col("cv"), col("cv"))
+    val d2q = VectorFunctions.dotF(col("qv"), col("qv")) -
+      lit(2.0) * VectorFunctions.dotF(col("qv"), col("cv")) +
+      VectorFunctions.dotF(col("cv"), col("cv"))
     val lut = qs
       .join(cw, "subspace")
       .select(col("q_vec"), col("subspace"), col("code"),

@@ -238,7 +238,7 @@ object Storage {
     */
   def writeZOrdered(s: SparkSession, df: DataFrame, a: String, b: String,
       outDir: String, numFiles: Int = 4, rowGroupBytes: Long = 64L << 10): Unit = {
-    val key = graft.functions.ZOrderFunctions.zorder2(s, col(a), col(b))
+    val key = graft.functions.ZOrderFunctions.zorder2(col(a), col(b))
     df.withColumn("__z", key)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
@@ -393,7 +393,7 @@ object Storage {
           .cast("double") / 10.0), lit(255L)).cast("long").as("qa"),
       least(floor(col("l_extendedprice") / 500.0), lit(255L)).cast("long").as("qb"),
       col("l_orderkey"), col("l_linenumber"))
-    val z = graft.functions.ZOrderFunctions.zorder2(s, col("qa"), col("qb"))
+    val z = graft.functions.ZOrderFunctions.zorder2(col("qa"), col("qb"))
     val withZ = li.withColumn("z", z)
     // grid histogram: one row per occupied z cell (≤ 2^16 — bounded by
     // the quantizer, not the corpus); its global windows sit over the

@@ -574,7 +574,7 @@ object TextAnalysis {
         col("doc_id"),
         trim(regexp_replace(
           regexp_replace(
-            graft.functions.TextFunctions.nfc(s, lower(col("text"))),
+            graft.functions.TextFunctions.nfc(lower(col("text"))),
             "https?://\\S+", " "),
           "\\s+", " ")).as("norm_text"))
 

@@ -2,8 +2,7 @@ package graft.plans
 
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeReference, Descending, Expression, JoinedRow, SortOrder,
@@ -37,8 +36,8 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   *
   * The reference has no window machinery at all (SURVEY.md §2.3), so
   * this is the (c)-tier custom-operator path from the design brief:
-  * LogicalPlan + Strategy + SparkPlan, injectable via
-  * [[graft.GraftExtensions]] or `spark.experimental.extraStrategies`.
+  * LogicalPlan + SparkPlan, planned by [[GraftStrategy]], which
+  * [[graft.GraftExtensions.install]] puts in place.
   */
 case class GroupedTopK(
     groupKeys: Seq[Expression],
@@ -241,14 +240,6 @@ case class GroupedTopKExec(
   override protected def withNewChildInternal(c: SparkPlan): GroupedTopKExec = copy(child = c)
 }
 
-object GroupedTopKStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GroupedTopK(keys, order, k, rank, child) =>
-      GroupedTopKExec(keys, order, k, rank, planLater(child)) :: Nil
-    case _ => Nil
-  }
-}
-
 object GroupedTopK {
 
   /** Per-partition byte budget for the in-memory per-key heaps. When the
@@ -260,30 +251,6 @@ object GroupedTopK {
     */
   val SpillThresholdKey     = "spark.graft.topk.spillThresholdBytes"
   val SpillThresholdDefault: String = (64L * 1024 * 1024).toString
-
-  /** Idempotent registration of the planner strategy only — what the
-    * Scala `topK` API needs. The window-rewrite rule is a separate,
-    * explicit opt-in ([[registerRewrite]] / [[graft.GraftExtensions]] /
-    * [[graft.Catalog.registerViews]]) so sessions that want to exercise
-    * Spark's own window operator aren't silently rerouted.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupedTopKStrategy
-
-  /** Opt in to the transparent row_number-top-N rewrite. */
-  def registerRewrite(spark: SparkSession): Unit = {
-    register(spark)
-    if (!spark.experimental.extraOptimizations.contains(WindowToTopKRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ WindowToTopKRule
-  }
-
-  /** Remove the rewrite (the strategy is harmless to leave). */
-  def unregisterRewrite(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowToTopKRule)
 
   /** Top `k` rows per `keys` group under `order` (column name → ascending?),
     * with a 1-based rank column appended. Names become catalyst
@@ -317,7 +284,7 @@ object GroupedTopK {
         .withColumn(rankName, row_number().over(Window.orderBy(orderCols: _*)).cast("long"))
     }
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val sortOrders = order.map { case (name, asc) =>
       SortOrder(UnresolvedAttribute.quoted(name), if (asc) Ascending else Descending)
     }

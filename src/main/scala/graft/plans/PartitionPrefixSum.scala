@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeReference, Expression, JoinedRow, SortOrder, UnsafeProjection
@@ -207,14 +206,6 @@ case class PartitionPrefixSumExec(
     copy(child = c)
 }
 
-object PartitionPrefixSumStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case PartitionPrefixSum(groups, ord, sumE, pid, cum, last, child) =>
-      PartitionPrefixSumExec(groups, ord, sumE, pid, cum, last, planLater(child)) :: Nil
-    case _ => Nil
-  }
-}
-
 object PartitionPrefixSum {
   /** Tie-run buffer guard: rangeCum callers feed unique-(groups, ord)
     * histograms, so a run is one row; 16M buffered rows means a caller
@@ -222,11 +213,6 @@ object PartitionPrefixSum {
     * invisibly (r15 advice).
     */
   val MaxTieRun: Int = 16 << 20
-
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(PartitionPrefixSumStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ PartitionPrefixSumStrategy
 
   /** Append (`pidName`, `cumName`) — the partition id and the in-order
     * RANGE-frame running sum of `sumCol` within each (partition, groups)
@@ -244,7 +230,7 @@ object PartitionPrefixSum {
       lastName: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val spark = df.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def resolve(name: String): Attribute = analyzed.output
       .find(a => spark.sessionState.conf.resolver(a.name, name))

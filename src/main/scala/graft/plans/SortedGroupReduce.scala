@@ -1,18 +1,16 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, AttributeReference, AttributeSet, Literal, SortOrder, UnsafeProjection
+  Ascending, Attribute, AttributeReference, AttributeSet, SortOrder, UnsafeProjection
 }
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{
   ClusteredDistribution, Distribution, HashPartitioning, Partitioning
 }
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,7 +21,7 @@ import graft.mr.MRApp
   * shuffle→sort→streaming-KVIterator protocol (`pkg/mr/mr.go:38-89`,
   * `internal/worker/worker.go:209-211`) as a whole-operator physical plan.
   *
-  * The strategy plans, bottom up:
+  * [[GraftStrategy]] plans, bottom up:
   *
   *   child (key, value)
   *   → HashAggregate(keys = [key, value], partial_count(1))   map-side combine
@@ -48,7 +46,7 @@ import graft.mr.MRApp
   * `spark.sql.shuffle.partitions` and AQE may coalesce it.
   *
   * Same (c)-tier custom-operator pattern as [[GroupedTopK]]: LogicalPlan +
-  * Strategy + UnaryExecNode, registered idempotently per session.
+  * UnaryExecNode, planned by [[GraftStrategy]].
   */
 case class SortedGroupReduce(
     app: MRApp,
@@ -187,26 +185,6 @@ object SortedGroupReduceExec {
   }
 }
 
-object SortedGroupReduceStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SortedGroupReduce(app, numPartitions, child, _) =>
-      val keyValue = child.output
-      val count    = Count(Literal(1)).toAggregateExpression().copy(mode = Partial)
-      val combine = HashAggregateExec(
-        requiredChildDistributionExpressions = None,
-        isStreaming = false,
-        numShufflePartitions = None,
-        groupingExpressions = keyValue,
-        aggregateExpressions = Seq(count),
-        aggregateAttributes = count.aggregateFunction.aggBufferAttributes,
-        initialInputBufferOffset = 0,
-        resultExpressions = keyValue ++ count.aggregateFunction.inputAggBufferAttributes,
-        child = planLater(child))
-      SortedGroupReduceExec(app, numPartitions, plan.output, combine) :: Nil
-    case _ => Nil
-  }
-}
-
 object SortedGroupReduce {
 
   /** One (key, value) output pair, minted once per `reduce` call and then
@@ -216,21 +194,13 @@ object SortedGroupReduce {
     AttributeReference("key", StringType, nullable = false)(),
     AttributeReference("value", StringType, nullable = false)())
 
-  /** Idempotent per-session strategy registration (the [[GroupedTopK]]
-    * pattern).
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(SortedGroupReduceStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SortedGroupReduceStrategy
-
   /** Plan `app`'s reduce over a `(key, value)` string pair frame, on
     * `numPartitions` reduce partitions if given. The combine, shuffle and
     * secondary sort are planned inside the SQL engine.
     */
   def reduce(kvs: DataFrame, app: MRApp, numPartitions: Option[Int] = None): DataFrame = {
     val spark = kvs.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark)
     require(kvs.schema.length == 2 &&
       kvs.schema.forall(_.dataType == StringType),
       s"SortedGroupReduce needs a (string key, string value) child, got ${kvs.schema}")

@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, AttributeReference, Expression, IntegerLiteral, LessThan, LessThanOrEqual,
-  RowNumber, WindowExpression, WindowSpecDefinition
+  Alias, And, AttributeReference, Expression, IntegerLiteral, LessThan, LessThanOrEqual,
+  PredicateHelper, RowNumber, WindowExpression, WindowSpecDefinition
 }
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -14,14 +14,20 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
   *
   * into the sort-free [[GroupedTopK]] operator. Users keep writing the
   * standard window formulation; plans silently lose the per-partition
-  * sort. Registered through [[graft.GraftExtensions]] (optimizer rule) or
-  * [[GroupedTopK.register]] (`spark.experimental.extraOptimizations`).
+  * sort. On in every session: [[graft.GraftExtensions]] injects it and
+  * [[graft.GraftExtensions.install]] adds it to sessions built without
+  * the extension. Exclude it per session with
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowToTopKRule`.
   *
   * Deliberately strict match: exactly one window expression, a bare
   * row_number (no cast between it and the filter), and a literal bound —
-  * anything else keeps Spark's plan.
+  * anything else keeps Spark's plan. The bound may be one conjunct of the
+  * filter (the user's own, or an `isnotnull` inferred from a join above);
+  * the other conjuncts, if deterministic, stay in a filter over the
+  * top-k rows, where they saw the same ranks. So the rule fires the same
+  * way wherever it sits in the optimizer.
   */
-object WindowToTopKRule extends Rule[LogicalPlan] {
+object WindowToTopKRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private def bound(cond: Expression): Option[(AttributeReference, Int)] = cond match {
     case LessThanOrEqual(a: AttributeReference, IntegerLiteral(k)) => Some((a, k))
@@ -55,20 +61,26 @@ object WindowToTopKRule extends Rule[LogicalPlan] {
             _,
             child,
             _)) =>
-      bound(cond) match {
-        case Some((attr, k))
-            if attr.exprId == a.exprId && k >= 1 && part.nonEmpty &&
-              !part.exists(e => containsFloat(e.dataType)) =>
-          // InferWindowGroupLimit (which runs in an earlier batch) may have
-          // inserted a WindowGroupLimit below the Window; it would force
-          // the sort GroupedTopK exists to avoid — consume it.
+      val conjuncts = splitConjunctivePredicates(cond)
+      val hit = conjuncts.iterator.map(c => (c, bound(c))).collectFirst {
+        case (c, Some((attr, k))) if attr.exprId == a.exprId => (c, k)
+      }
+      hit match {
+        case Some((boundConjunct, k))
+            if k >= 1 && part.nonEmpty && !part.exists(e => containsFloat(e.dataType)) &&
+              conjuncts.forall(_.deterministic) =>
+          // InferWindowGroupLimit (when it has run before this rule) may
+          // have inserted a WindowGroupLimit below the Window; it would
+          // force the sort GroupedTopK exists to avoid — consume it.
           val realChild = child match {
             case wgl: WindowGroupLimit
                 if wgl.partitionSpec == part && wgl.orderSpec == order =>
               wgl.child
             case c => c
           }
-          GroupedTopK(part, order, k, a.toAttribute, realChild)
+          val topK = GroupedTopK(part, order, k, a.toAttribute, realChild)
+          conjuncts.filterNot(_ eq boundConjunct).reduceOption(And)
+            .fold[LogicalPlan](topK)(Filter(_, topK))
         case _ => f
       }
   }

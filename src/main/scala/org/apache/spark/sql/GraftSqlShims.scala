@@ -11,6 +11,14 @@ object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Column <-> Catalyst expression, for Column helpers that build a
+    * native expression directly instead of calling a registered function
+    * by name (`classic.ExpressionUtils` is `private[sql]`).
+    */
+  def column(e: catalyst.expressions.Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): catalyst.expressions.Expression =
+    classic.ExpressionUtils.expression(c)
+
   /** Executor-side Tungsten page size — what SortExec hands to
     * UnsafeExternalRowSorter; `MemoryManager.pageSizeBytes` is
     * `private[spark]`.

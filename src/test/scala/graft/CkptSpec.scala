@@ -69,22 +69,6 @@ class CkptSpec extends AnyFunSuite with SparkTestBase {
     assert(ckptIds(Ckpt.cached(spark, key)(spark.range(50).toDF("id"))) == ckptIds(local))
   }
 
-  test("cached entries key on the serialized-layout knob") {
-    // r13 advice: a mid-run flip of spark.graft.cached.serialized must
-    // build fresh serialized entries, not serve deserialized blocks the
-    // knob exists to cap
-    val key = "ckptspec:serk"
-    val des = Ckpt.cached(spark, key)(spark.range(40).toDF("id"))
-    withSQLConf(Ckpt.CachedSerKey -> "true") {
-      val ser = Ckpt.cached(spark, key)(spark.range(40).toDF("id"))
-      assert(ckptIds(ser) != ckptIds(des),
-        "serialized-mode lookup was served the deserialized materialization")
-      assert(!ckptRdds(ser).head.getStorageLevel.deserialized,
-        "entry built under the serialized knob is not stored serialized")
-    }
-    assert(ckptIds(Ckpt.cached(spark, key)(spark.range(40).toDF("id"))) == ckptIds(des))
-  }
-
   test("chaos: reliable checkpoints survive block loss; local blocks are gone for good") {
     // localCheckpoint truncates lineage — once its blocks are wiped
     // (the single-JVM stand-in for losing an executor), the scan is

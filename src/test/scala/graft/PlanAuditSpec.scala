@@ -485,10 +485,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // the per-query top-k must never regress to a full per-query sort —
     // one skewed q_doc would then sort O(corpus) rows in a single task.
     // Two group-limited shapes are sanctioned, both partial+final: the
-    // repo's GroupedTopK (WindowToTopKRule fires once the optimizer
-    // unwraps rn's cast("long"); active in Catalog/driver sessions and
-    // when another suite leaves the rewrite registered) and Spark's
-    // InferWindowGroupLimit pair (plain sessions).
+    // repo's GroupedTopK (WindowToTopKRule, on in every session, fires
+    // once the optimizer unwraps rn's cast("long")) and Spark's
+    // InferWindowGroupLimit pair (when the rule is excluded).
     assert(
       p.contains("GroupedTopK") || p.split("WindowGroupLimit").length - 1 == 2,
       s"text_bm25 top-k regressed to a full per-query sort:\n$p")

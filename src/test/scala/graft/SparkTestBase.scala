@@ -17,6 +17,7 @@ trait SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(s)
     s
   }
 

@@ -17,7 +17,7 @@ class NfcNormalizeSpec extends AnyFunSuite with SparkTestBase {
   private def nfcOf(values: String*): Seq[String] = {
     import spark.implicits._
     val df = values.toDF("s")
-    df.select(TextFunctions.nfc(spark, col("s")).as("n")).as[String].collect().toSeq
+    df.select(TextFunctions.nfc(col("s")).as("n")).as[String].collect().toSeq
   }
 
   test("decomposed input canonicalizes to the composed form") {
@@ -33,7 +33,7 @@ class NfcNormalizeSpec extends AnyFunSuite with SparkTestBase {
   test("nulls propagate") {
     import spark.implicits._
     val df = Seq(Some(Composed), None).toDF("s")
-    val out = df.select(TextFunctions.nfc(spark, col("s")).as("n"))
+    val out = df.select(TextFunctions.nfc(col("s")).as("n"))
       .collect().map(r => Option(r.getString(0)))
     assert(out.toSeq == Seq(Some(Composed), None))
   }
@@ -45,8 +45,8 @@ class NfcNormalizeSpec extends AnyFunSuite with SparkTestBase {
     // raw join misses (different code points) …
     assert(a.join(b, "k").count() == 0)
     // … the NFC'd join hits
-    val an = a.select(TextFunctions.nfc(spark, col("k")).as("k"))
-    val bn = b.select(TextFunctions.nfc(spark, col("k")).as("k"))
+    val an = a.select(TextFunctions.nfc(col("k")).as("k"))
+    val bn = b.select(TextFunctions.nfc(col("k")).as("k"))
     assert(an.join(bn, "k").count() == 1)
   }
 

@@ -14,7 +14,7 @@ class SortedKeySumSpec extends AnyFunSuite with SparkTestBase {
   private def run(
       keys: Seq[String], vals: Seq[Long], q: Seq[String]): Option[Long] = {
     val df = Seq((keys, vals, q)).toDF("ks", "vs", "qs")
-    df.select(SortedKeySumFunction.sortedKeySum(spark, col("ks"), col("vs"), col("qs"))
+    df.select(SortedKeySumFunction.sortedKeySum(col("ks"), col("vs"), col("qs"))
         .as("s"))
       .collect()
       .headOption
@@ -58,7 +58,7 @@ class SortedKeySumSpec extends AnyFunSuite with SparkTestBase {
   test("rejects wrong input types at analysis") {
     val df = Seq((Seq(1L), Seq(1L), Seq("a"))).toDF("ks", "vs", "qs")
     val e = intercept[Exception] {
-      df.select(SortedKeySumFunction.sortedKeySum(spark, col("ks"), col("vs"), col("qs")))
+      df.select(SortedKeySumFunction.sortedKeySum(col("ks"), col("vs"), col("qs")))
         .collect()
     }
     assert(e.getMessage.contains("graft_sorted_key_sum"))

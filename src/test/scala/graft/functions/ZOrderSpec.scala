@@ -23,7 +23,7 @@ class ZOrderSpec extends AnyFunSuite with SparkTestBase {
   test("codegen path agrees with the interpreted helper") {
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (123456L, 654321L), ((1L << 31) - 1, 42L))
     val got = rows.toDF("a", "b")
-      .select(ZOrderFunctions.zorder2(spark, col("a"), col("b")).as("z"))
+      .select(ZOrderFunctions.zorder2(col("a"), col("b")).as("z"))
       .as[Long].collect().toSeq
     assert(got == rows.map { case (a, b) => ZOrder2.interleave(a, b) })
   }

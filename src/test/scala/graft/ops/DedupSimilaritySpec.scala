@@ -414,7 +414,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"), col("norm").as("na"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"), col("norm").as("nb"))
     val exact = a.join(b, col("va") < col("vb"))
-      .withColumn("cos", Similarity.cosine(spark, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", Similarity.cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .orderBy(desc("cos"), asc("va"), asc("vb")).limit(20)
       .select("va", "vb").as[(Long, Long)].collect().toSet
     val lsh = Dedup.embedding(spark, Sf0001)
@@ -442,7 +442,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"), col("norm").as("na"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"), col("norm").as("nb"))
     val want = a.join(b, col("va") < col("vb"))
-      .withColumn("cos", Similarity.cosine(spark, col("ea"), col("eb"), col("na"), col("nb")))
+      .withColumn("cos", Similarity.cosine(col("ea"), col("eb"), col("na"), col("nb")))
       .select("va", "vb", "cos").as[(Long, Long, Double)].collect()
       .filter { case (va, vb, _) => assign(va) == assign(vb) }
       .sortBy { case (va, vb, cos) => (-cos, va, vb) }
@@ -467,7 +467,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("sim_pq_topk: ADC ranking is the true compressed-domain order, recall reported") {
-    import graft.functions.VectorFunctions.dotF
     val got = Similarity.pqTopk(spark, Sf0001)
       .as[(Long, Long, Double, Long)].collect()
     val perQ = got.groupBy(_._1)

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import graft.SparkTestBase
 import graft.ops.Relational
 
@@ -12,14 +13,19 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   test("bit-identical to the window row_number formulation") {
-    // make sure the rewrite is off so windowTopkOrders exercises Spark's
-    // real window operator (other suites may have registered it)
-    GroupedTopK.unregisterRewrite(spark)
     val fast = Relational.windowTopkFast(spark, Sf0001)
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val win = Relational.windowTopkOrders(spark, Sf0001)
-      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-    assert(fast == win)
+    // the rewrite is on in every session: exclude it so windowTopkOrders
+    // exercises Spark's real window operator
+    withSQLConf("spark.sql.optimizer.excludedRules" -> WindowToTopKRule.ruleName) {
+      val df = Relational.windowTopkOrders(spark, Sf0001)
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.collectFirst { case w: Window => w }.nonEmpty,
+        s"baseline lost Spark's Window node:\n$optimized")
+      assert(optimized.collectFirst { case g: GroupedTopK => g }.isEmpty, optimized.toString)
+      val win = df.as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
+      assert(fast == win)
+    }
   }
 
   test("physical plan shuffles on the key but never sorts") {
@@ -33,7 +39,6 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
   test("optimizer rule rewrites bare row_number+filter into GroupedTopK") {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
     val w = W.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
     val df = graft.Tables.orders(spark, Sf0001)
       .withColumn("rn", row_number().over(w))
@@ -49,10 +54,33 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want, "rewritten plan diverged from the window answer")
   }
 
+  test("optimizer rule takes the bound out of a conjunction and keeps the rest above") {
+    import org.apache.spark.sql.expressions.{Window => W}
+    import org.apache.spark.sql.functions._
+    val w = W.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
+    // o_totalprice is not a partition key, so its conjunct cannot move below the window
+    def query(extra: org.apache.spark.sql.Column) = graft.Tables.orders(spark, Sf0001)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3 && extra)
+      .select(col("o_custkey"), col("o_orderkey"), col("rn").cast("long"))
+    def hasTopK(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectFirst { case g: GroupedTopK => g }.nonEmpty
+    val df = query(col("o_totalprice") > 100000.0)
+    assert(hasTopK(df), df.queryExecution.optimizedPlan.toString)
+    val got = df.as[(Long, Long, Long)].collect().sorted.toSeq
+    withSQLConf("spark.sql.optimizer.excludedRules" -> WindowToTopKRule.ruleName) {
+      val base = query(col("o_totalprice") > 100000.0)
+      assert(base.queryExecution.optimizedPlan.collectFirst { case w: Window => w }.nonEmpty)
+      val want = base.as[(Long, Long, Long)].collect().sorted.toSeq
+      assert(got.nonEmpty && got == want, "rewritten conjunction diverged from the window answer")
+    }
+    // a nondeterministic conjunct would see different rows: keep Spark's plan
+    assert(!hasTopK(query(rand(7) < 0.5)))
+  }
+
   test("optimizer rule leaves non-matching window shapes alone") {
     import org.apache.spark.sql.expressions.{Window => W}
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
     // rank() has different tie semantics than row_number — must NOT rewrite
     val w = W.partitionBy("o_custkey").orderBy(desc("o_totalprice"))
     val df = graft.Tables.orders(spark, Sf0001)
@@ -83,16 +111,13 @@ class GroupedTopKSpec extends AnyFunSuite with SparkTestBase {
 
   test("rewrite rule leaves rn < Int.MinValue (always-false) to Spark") {
     import org.apache.spark.sql.functions._
-    GroupedTopK.registerRewrite(spark)
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy("v")
-      val df = Seq((1L, 1.0)).toDF("k", "v")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") < Int.MinValue)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("GroupedTopK"))
-      assert(df.count() == 0)
-    } finally GroupedTopK.unregisterRewrite(spark)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("k").orderBy("v")
+    val df = Seq((1L, 1.0)).toDF("k", "v")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") < Int.MinValue)
+    assert(!df.queryExecution.optimizedPlan.toString.contains("GroupedTopK"))
+    assert(df.count() == 0)
   }
 
   test("map-typed grouping keys are rejected") {
