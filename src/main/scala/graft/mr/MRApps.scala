@@ -6,12 +6,26 @@ package graft.mr
   */
 object MRApps {
 
-  /** Tokenize on non-letter runes, dropping empties — Go
+  /** Runs of letter code points — Go
     * `strings.FieldsFunc(contents, !unicode.IsLetter)`
-    * (`example/mrapps/wc/wc.go:26-29`).
+    * (`example/mrapps/wc/wc.go:26-29`) — in one scan. A letter is
+    * `Character.isLetter` of a code point (categories Lu, Ll, Lt, Lm, Lo:
+    * the same set as the regex `\p{L}`), so a surrogate pair is one
+    * character, and an unpaired surrogate splits like any non-letter.
     */
-  private[graft] def tokenize(contents: String): Seq[String] =
-    contents.split("[^\\p{L}]+").toIndexedSeq.filter(_.nonEmpty)
+  private[graft] def tokenize(contents: String): Seq[String] = {
+    val out   = Vector.newBuilder[String]
+    var start = -1
+    var i     = 0
+    while (i < contents.length) {
+      val cp = contents.codePointAt(i)
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { out += contents.substring(start, i); start = -1 }
+      i += Character.charCount(cp)
+    }
+    if (start >= 0) out += contents.substring(start)
+    out.result()
+  }
 
   /** Unicode code-point order: the engine's value order (UTF-8 byte order
     * in the SQL sort), Go's `sort.Strings` in the reference and DuckDB's

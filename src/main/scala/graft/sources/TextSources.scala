@@ -1,7 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** The reference's scan/sink surface (SURVEY.md §2.1 F1/F2/F8) on Spark's
   * source API:
@@ -9,10 +20,9 @@ import org.apache.spark.sql.functions._
   *  - F1 whole-file scan: one row per file, `(filename, contents)` — the
   *    reference's map input unit (`pkg/fsutil/util.go:7-21`). The
   *    reference runs one map task per file
-  *    (`internal/coordinator/coordinator.go:124-133`); Spark instead packs
-  *    whole files into scan tasks by size plus
-  *    `spark.sql.files.openCostInBytes`, so one task may map many small
-  *    files (`SkewIngestSpec` pins the packing).
+  *    (`internal/coordinator/coordinator.go:124-133`); here the files are
+  *    packed largest-first into one task per core, so no map task waits
+  *    on a pile of big files while the other cores idle.
   *  - F2 line scan: one row per `\n`-delimited line, trailing newline
   *    stripped (`pkg/mr/mr.go:19-36`).
   *  - F8 text sink: `"<key> <value>"` lines — the oracle's canonical
@@ -26,29 +36,97 @@ import org.apache.spark.sql.functions._
   */
 object TextSources {
 
-  /** F1: whole files as rows. `input_file_name()` yields a URL-encoded
-    * absolute URI; the reference's apps key on the path as given on the
-    * command line (the indexer uses it as the document id), so decode it
-    * and relativize against the launch directory. Per-file rows, so the
-    * typed map's codegen break is irrelevant.
+  /** F1: whole files as `(filename, contents)` rows.
+    *
+    * The driver expands the glob with the Hadoop `FileSystem` and lists
+    * what Spark's file sources list: a matched directory contributes its
+    * files, recursively, and names Spark treats as hidden (`_x`, `.x`) are
+    * skipped. Empty files get no row. A glob that matches nothing fails
+    * with a `FileNotFoundException` naming it. `filename` is the decoded
+    * path, relative to the working directory when it lies below it: the
+    * reference's apps key on the path as given on the command line (the
+    * indexer's document ids).
+    *
+    * Map work grows with a file's bytes and a file is never split, so the
+    * bytes per task set the map stage's length. The files are packed into
+    * `min(files, defaultParallelism)` tasks, largest first, each onto the
+    * task with the fewest bytes so far (Graham's LPT rule): the busiest
+    * task is within 4/3 of the best possible packing, and holds at most
+    * the mean plus one file.
+    *
+    * Each task reads its files' bytes straight into `UTF8String` rows, as
+    * the `wholetext` source does (compressed files are decompressed by
+    * their extension's codec, as there), and counts the bytes in its
+    * input metrics. The Hadoop configuration is broadcast once per read.
     */
   def wholeFiles(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
+    val conf  = GraftSqlShims.hadoopConf(spark)
+    val files = listFiles(pathGlob, conf)
+    val sc    = spark.sparkContext
+    val tasks = packLargestFirst(files, math.max(1, math.min(files.size, sc.defaultParallelism)))
+    val rdd   = new WholeFileRDD(sc, tasks, sc.broadcast(new SerializableConfiguration(conf)))
+    GraftSqlShims.internalCreateDataFrame(
+      spark, rdd, new StructType().add("filename", StringType).add("contents", StringType))
+  }
+
+  /** One input file: where to read it, the name its row carries, its size. */
+  private final case class WholeFile(path: Path, name: String, bytes: Long)
+
+  private def listFiles(pathGlob: String, conf: Configuration): Seq[WholeFile] = {
+    val glob    = new Path(pathGlob)
+    val fs      = glob.getFileSystem(conf)
+    val matched = Option(fs.globStatus(fs.makeQualified(glob))).toSeq.flatten
+    if (matched.isEmpty) throw new FileNotFoundException(s"no input files match $pathGlob")
+    def hidden(s: FileStatus) = GraftSqlShims.hiddenPathName(s.getPath.getName)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(leaves)
+      else Seq(s)
     val cwd = new java.io.File(".").getCanonicalPath + "/"
-    spark.read
-      .option("wholetext", "true")
-      .text(pathGlob)
-      .select(input_file_name().as("filename"), col("value").as("contents"))
-      .as[(String, String)]
-      .map { case (uri, contents) =>
-        val p =
-          try {
-            val path = new java.net.URI(uri).getPath
-            if (path == null) uri else path
-          } catch { case _: java.net.URISyntaxException => uri }
-        (if (p.startsWith(cwd)) p.substring(cwd.length) else p) -> contents
+    matched.filter(s => s.isDirectory || !hidden(s)).flatMap(leaves).filter(_.getLen > 0).map {
+      s =>
+        val p = s.getPath.toUri.getPath
+        WholeFile(s.getPath, if (p.startsWith(cwd)) p.substring(cwd.length) else p, s.getLen)
+    }
+  }
+
+  /** LPT: biggest file first, each to the task holding the fewest bytes
+    * (the lowest index on a tie), so a given listing always packs alike.
+    */
+  private def packLargestFirst(files: Seq[WholeFile], tasks: Int): Array[Seq[WholeFile]] = {
+    val packed = Array.fill[Seq[WholeFile]](tasks)(Vector.empty)
+    val load   = new Array[Long](tasks)
+    for (f <- files.sortBy(f => (-f.bytes, f.name))) {
+      val t = load.indices.minBy(load)
+      packed(t) :+= f
+      load(t) += f.bytes
+    }
+    packed
+  }
+
+  private final case class FilesPartition(index: Int, files: Seq[WholeFile]) extends Partition
+
+  /** One task per packed group; the listing stays on the driver. */
+  private final class WholeFileRDD(
+      sc: SparkContext,
+      @transient private val tasks: Array[Seq[WholeFile]],
+      conf: Broadcast[SerializableConfiguration])
+      extends RDD[InternalRow](sc, Nil) {
+
+    override protected def getPartitions: Array[Partition] =
+      tasks.indices.map(i => FilesPartition(i, tasks(i)): Partition).toArray
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val hadoopConf = conf.value.value
+      val codecs     = new CompressionCodecFactory(hadoopConf)
+      split.asInstanceOf[FilesPartition].files.iterator.map { f =>
+        val raw   = f.path.getFileSystem(hadoopConf).open(f.path)
+        val codec = codecs.getCodec(f.path)
+        val in    = if (codec == null) raw else codec.createInputStream(raw)
+        val bytes = try in.readAllBytes() finally in.close()
+        GraftSqlShims.incInput(context, f.bytes, 1)
+        InternalRow(UTF8String.fromString(f.name), UTF8String.fromBytes(bytes))
       }
-      .toDF("filename", "contents")
+    }
   }
 
   /** F2: lines as rows. */

@@ -11,6 +11,37 @@ object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of Catalyst rows, with no per-row conversion
+    * (`internalCreateDataFrame` is `private[sql]`).
+    */
+  def internalCreateDataFrame(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The session's Hadoop configuration, session SQL confs included — what
+    * Spark's file sources read with (`sessionState` is on the classic
+    * session only).
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Whether Spark's file listing skips a file or directory of this name
+    * (`_x`, `.x`, `x._COPYING_`); `HadoopFSUtils` is `private[spark]`.
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Count input a task read in its input metrics, as Spark's file scans
+    * do; the increments are `private[spark]`.
+    */
+  def incInput(ctx: org.apache.spark.TaskContext, bytes: Long, records: Long): Unit = {
+    val m = ctx.taskMetrics().inputMetrics
+    m.incBytesRead(bytes)
+    m.incRecordsRead(records)
+  }
+
   /** Column <-> Catalyst expression, for Column helpers that build a
     * native expression directly instead of calling a registered function
     * by name (`classic.ExpressionUtils` is `private[sql]`).

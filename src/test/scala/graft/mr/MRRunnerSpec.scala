@@ -1,6 +1,10 @@
 package graft.mr
 
 import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,6 +76,28 @@ class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
     assert(!got.contains("42") && !got.contains("dog,"))
     // the .md file was outside the glob — its tokens must be absent
     assert(!got.contains("never"))
+  }
+
+  test("a run over a glob logs no WARN or ERROR line") {
+    // the logs carry only actionable lines; a file-source read of a glob
+    // logs FileStreamSink's "Assume no metadata directory" WARN, with a
+    // FileNotFoundException stack trace, on every read
+    val (in, out) = writeFixture()
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("mrrunner-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(capture)
+    try MRRunner.run(spark, "indexer", s"$in/pg-*.txt", out, nreduce = 2)
+    finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(lines.isEmpty, lines.asScala.mkString("\n"))
   }
 
   test("main validates its arguments before any session work") {

@@ -11,19 +11,20 @@ import graft.SparkTestBase
   * the file list, so one giant file serializes the whole map phase behind
   * a straggler while N-1 workers idle on KB-sized tasks).
   *
-  * Spark's scan layer dissolves both halves of the hazard, and this spec
-  * pins each:
+  * Both scans avoid both halves of the hazard, and this spec pins each:
   *
   *  - SPLIT the giant: the line scan is splittable, so
   *    `spark.sql.files.maxPartitionBytes` cuts the 600 KB file into ~10
   *    parallel tasks — no straggler.
-  *  - PACK the tiny: file-partition packing (openCostInBytes) coalesces
-  *    the 40 KB-sized files into a handful of tasks instead of 40
-  *    scheduler round-trips (at 100 TB with millions of small objects,
-  *    per-file tasks are a scheduler/listing DoS).
+  *  - PACK the tiny: the whole-file scan (F1) puts its files into one task
+  *    per core, not one task per file (at 100 TB with millions of small
+  *    objects, per-file tasks are a scheduler/listing DoS).
   *
-  * The whole-file scan (F1) is unsplittable by definition — there the
-  * packing half still applies, and downstream balance comes from the
+  * The whole-file scan is unsplittable by definition, and its map function
+  * does work in proportion to a file's bytes, so it packs the files
+  * largest-first onto the least-loaded task (`TextSources.wholeFiles`);
+  * `openCostInBytes` does not shape it. A file bigger than a core's share
+  * still sets the map phase's floor; the reduce side is balanced by the
   * map→shuffle explode (MapReduceJob's flatMap emits per-token rows that
   * hash-shuffle regardless of which task read the big file).
   *
@@ -75,17 +76,37 @@ class SkewIngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("tiny files pack: far fewer tasks than files") {
+    // the whole-file scan runs one task per core, whatever the file-source
+    // packing confs say
     withSQLConf(
       "spark.sql.files.maxPartitionBytes" -> (128 * 1024).toString,
       "spark.sql.files.openCostInBytes"   -> (4 * 1024).toString) {
       val df = TextSources.wholeFiles(spark, s"$skewDir/small_*.txt")
       val n  = df.rdd.getNumPartitions
       // the reference schedules 40 map tasks for 40 files; packing must
-      // coalesce them into a handful (≤ ceil(40·(1.5K+4K open cost)/128K)+slack)
+      // coalesce them into a handful
       assert(n <= 8, s"40 tiny files scheduled as $n tasks — packing regressed")
       assert(df.count() == 40)
       info(s"whole-file scan: 40 files packed into $n tasks (reference: 40 tasks)")
     }
+  }
+
+  test("whole-file scan packs largest-first: no task above max(largest file, 4/3 of the mean)") {
+    // file-source packing by size + openCostInBytes put 400+200+150 KB
+    // (65% of the bytes) into one of 4 tasks; LPT gives 400/250/245/250
+    val dir = java.nio.file.Files.createTempDirectory("graft-lpt-")
+    val kb  = Seq(400, 200, 150, 100, 80, 60, 50, 40, 30, 20, 10, 5)
+    for ((k, i) <- kb.zipWithIndex)
+      java.nio.file.Files.write(dir.resolve(f"f$i%02d.txt"), Array.fill[Byte](k * 1024)('a'))
+    val perTask = TextSources.wholeFiles(spark, s"$dir/*.txt").rdd
+      .mapPartitions(it => Iterator(it.map(_.getString(1).length.toLong).sum))
+      .collect()
+    val total = kb.sum * 1024L
+    val bound = math.max(kb.max * 1024L, 4 * total / (3 * perTask.length))
+    assert(perTask.sum == total)
+    assert(perTask.max <= bound,
+      s"busiest task ${perTask.max} B > bound $bound B (bytes/task: ${perTask.mkString(",")})")
+    info(s"whole-file scan: ${perTask.length} tasks, KB/task ${perTask.map(_ / 1024).mkString(",")}")
   }
 
   test("wordcount over the skewed dir balances at the shuffle regardless of scan skew") {
