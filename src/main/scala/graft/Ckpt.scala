@@ -54,9 +54,10 @@ object Ckpt {
     new java.util.concurrent.ConcurrentHashMap[(String, String), Entry]()
   private var ticks = 0L
   private val log = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+  /** Wall seconds of the builds nested inside the build in progress. */
+  private var nestedS = 0.0
 
-  /** Per-application MEMOIZED checkpoint — the
-    * [[graft.ops.Graph.coPurchaseEdges]] discipline as a shared helper.
+  /** Per-application MEMOIZED checkpoint.
     *
     * A checkpoint scanned by the RETURNED DataFrame can never be freed
     * inside the query (the caller's action still needs its blocks), so a
@@ -106,12 +107,19 @@ object Ckpt {
         e.df
       case None =>
         maybeEvict(s)
+        // a build thunk may miss other entries: log this build's SELF
+        // time, so that summing the log counts each nested build once
+        val outerNestedS = nestedS
+        nestedS = 0.0
         val t0 = System.nanoTime()
-        val df = materialize(build)
-        log += ((key, (System.nanoTime() - t0) / 1e9))
-        ticks += 1
-        cache.put(k, new Entry(df, key, ticks))
-        df
+        def wallS = (System.nanoTime() - t0) / 1e9
+        try {
+          val df = materialize(build)
+          log += ((key, wallS - nestedS))
+          ticks += 1
+          cache.put(k, new Entry(df, key, ticks))
+          df
+        } finally nestedS = outerNestedS + wallS
     }
   }
 
@@ -136,11 +144,14 @@ object Ckpt {
     victims.size
   }
 
-  /** (user key, build wall seconds) of every cached build this session,
-    * in build order. A key appears once per MATERIALIZATION — a rebuild
-    * after [[release]]/eviction appends a new row — so [[Bench]] can
-    * report one-time cache-build cost as a first-class line instead of
-    * letting memoization silently shift it out of per-query medians.
+  /** (user key, build self seconds) of every cached build this session,
+    * in build order. A build's seconds exclude the entries its thunk
+    * built on the way, which have rows of their own, so the log sums to
+    * the wall time spent building. A key appears once per
+    * MATERIALIZATION — a rebuild after [[release]]/eviction appends a new
+    * row — so [[Bench]] can report one-time cache-build cost as a
+    * first-class line instead of letting memoization silently shift it
+    * out of per-query medians.
     */
   def buildLog: Seq[(String, Double)] = cache.synchronized(log.toList)
 

@@ -17,13 +17,11 @@ import org.apache.spark.sql.functions._
   *  - documents are NOT naive copies (10 exact copies of every doc would
   *    make the corpus one duplicate cluster and measure the pathological
   *    dedup regime): replica r of doc i splices the first half of doc i's
-  *    tokens with the second half of doc (i + 131·r mod n) — the
-  *    DedupScaleProbe recipe, kept here as the single implementation.
+  *    tokens with the second half of doc (i + 131·r mod n).
   *  - embeddings get a deterministic per-replica perturbation for the
   *    same reason.
   *
-  * Used by [[DedupScaleProbe]] (docs/embeddings only) and [[ScaleSweep]]
-  * (full catalog at sf1).
+  * Used by [[ScaleSweep]] (full catalog at sf1).
   */
 object ScaleData {
 
@@ -51,8 +49,8 @@ object ScaleData {
   private def stride(df: DataFrame, key: String): Long =
     df.agg(max(col(key))).collect()(0).getLong(0) + 1L
 
-  /** Spliced-replica documents table (the DedupScaleProbe recipe). */
-  def buildDocs(s: SparkSession, src: String, out: String, reps: Int): Unit = {
+  /** Spliced-replica documents table. */
+  private def buildDocs(s: SparkSession, src: String, out: String, reps: Int): Unit = {
     val d = Tables.documents(s, src)
     val n = d.count()
     val halves = d
@@ -77,8 +75,8 @@ object ScaleData {
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
   }
 
-  /** Perturbed-replica embeddings table (the DedupScaleProbe recipe). */
-  def buildEmbeddings(s: SparkSession, src: String, out: String, reps: Int): Unit = {
+  /** Perturbed-replica embeddings table. */
+  private def buildEmbeddings(s: SparkSession, src: String, out: String, reps: Int): Unit = {
     val e = s.read.parquet(s"$src/embeddings.parquet")
     val n = e.count()
     val repsDf = s.range(1, reps).select(col("id").as("r"))

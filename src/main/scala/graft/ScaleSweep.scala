@@ -35,8 +35,11 @@ import org.apache.spark.sql.SparkSession
   * share executor storage with a dead scale factor's entries (the
   * measured text_bm25 24→98 s degradation mode, r13 verdict item 1).
   *
+  * Each result is read in full ([[Profile.consume]]), so a timing never
+  * covers a plan that Catalyst pruned for a bare `count()`.
+  *
   * Usage: `tools/scalesweep.sh [query ...]` — no args sweeps the whole
-  * catalog.
+  * catalog; query args (say, the `dedup_*` family) time just those.
   */
 object ScaleSweep {
   val Src = "/root/testdata/sf0.1"
@@ -94,7 +97,7 @@ object ScaleSweep {
     val prof01s: Map[String, Either[String, Map[String, Int]]] =
       catalog.map { case (name, fn) =>
         name -> (try {
-          val d01 = fn(spark, Src); d01.count(); Right(joinProfile(d01))
+          val d01 = fn(spark, Src); Profile.consume(d01); Right(joinProfile(d01))
         } catch {
           case scala.util.control.NonFatal(e) =>
             val msg = String.valueOf(e.getMessage).linesIterator.take(1).mkString
@@ -123,7 +126,7 @@ object ScaleSweep {
               if (runs > 1) { System.gc(); Thread.sleep(200) }
               val t0 = System.nanoTime()
               val d1 = fn(spark, Out)
-              d1.count()
+              Profile.consume(d1)
               ((System.nanoTime() - t0) / 1e9, d1)
             }
             // median of the wall times; profile from the median run's plan

@@ -23,23 +23,13 @@ object Tables {
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
 
-  // A/B escape hatch: SPARK_GRAFT_NO_RELCACHE=1 bypasses the relation
-  // memoization entirely (fresh spark.read per call), so the cache's
-  // bench effect can be isolated without a build edit.
-  private val relCacheOff =
-    sys.env.get("SPARK_GRAFT_NO_RELCACHE").exists(_.trim == "1")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     def build: DataFrame =
       name match {
         case "events" => eventsUncached(spark, dir)
         case _        => spark.read.parquet(s"$dir/$name.parquet")
       }
-    if (relCacheOff) build
-    else
-      relCache.computeIfAbsent(
-        (System.identityHashCode(spark), dir, name),
-        _ => build)
+    relCache.computeIfAbsent((System.identityHashCode(spark), dir, name), _ => build)
   }
 
   /** `events.parquet` carries TIMESTAMP(NANOS) (see FIXTURES.md), which the

@@ -285,9 +285,9 @@ object Dedup {
     * the expansion join: cand is BYTES-small (id pairs) so AQE coalesces
     * it — down to ONE task for [[incremental]]'s delta-restricted pairs
     * at sf1 (2.6 s serialized, the only hit in the round-13 full-catalog
-    * OneTaskAudit) — but the join EXPANDS each pair by the doc's shingle
-    * count, so the stage's cost is CPU, not bytes: the same
-    * byte-blind-coalescer class as the fuzzy Levenshtein stage.
+    * one-task audit, [[graft.Profile]]) — but the join EXPANDS each pair
+    * by the doc's shingle count, so the stage's cost is CPU, not bytes:
+    * the same byte-blind-coalescer class as the fuzzy Levenshtein stage.
     */
   private def interCounts(cand: DataFrame, sh: DataFrame): DataFrame =
     // "merge" hint (r15): under the bench session's shuffled-hash-join
@@ -1030,9 +1030,13 @@ object Dedup {
     val bsz = bands.groupBy("band", "sig")
       .agg(count(lit(1)).as("m"), min("doc_id").as("rep"))
     // ONE member pass builds both outputs: the groupBy(da, db) IS the
-    // candidate distinct, and the per-pair skipped-slot mass re-aggregates
-    // to the per-doc audit — the band machinery is never traversed twice
-    val memb = fuzzyCappedCandsOf(bands, bsz)
+    // candidate distinct (da = bucket canonical, db = member), and the
+    // per-pair skipped-slot mass re-aggregates to the per-doc audit — the
+    // band machinery is never traversed twice
+    val memb = bands.join(bsz, Seq("band", "sig"))
+      .filter(col("doc_id") =!= col("rep"))
+      .groupBy(col("rep").as("da"), col("doc_id").as("db"))
+      .agg(sum(col("m") - 2).as("part"))
     val skip = memb.groupBy("db").agg(sum(col("part")).as("skipped"))
     val d    = docs.select(col("doc_id"), col("text"))
     val dist = levenshtein(col("ta"), col("tb")).cast("long")
@@ -1046,39 +1050,6 @@ object Dedup {
       .filter(col("rel") <= FuzzyMaxRel)
       .join(skip, "db")
       .select("da", "db", "dist", "rel", "skipped")
-  }
-
-  /** Capped candidate pairs (da = bucket canonical, db = member) with the
-    * member's skipped-slot mass from da's buckets: one aggregation over
-    * the member stream. Factored out so [[DedupScaleProbe]] can count
-    * candidate volume against the exact twin's [[minhashCandsOf]].
-    */
-  private def fuzzyCappedCandsOf(bands: DataFrame, bsz: DataFrame): DataFrame =
-    bands.join(bsz, Seq("band", "sig"))
-      .filter(col("doc_id") =!= col("rep"))
-      .groupBy(col("rep").as("da"), col("doc_id").as("db"))
-      .agg(sum(col("m") - 2).as("part"))
-
-  /** Probe hooks: candidate-pair streams of the capped and exact fuzzy
-    * paths over an arbitrary docs frame (counting only — no verify).
-    */
-  private[graft] def fuzzyCappedCandCount(docs: DataFrame): Long = {
-    val bands = bandSignatures(docShinglesOf(docs))
-    val bsz = bands.groupBy("band", "sig")
-      .agg(count(lit(1)).as("m"), min("doc_id").as("rep"))
-    fuzzyCappedCandsOf(bands, bsz).count()
-  }
-
-  private[graft] def minhashCandCount(docs: DataFrame): Long =
-    minhashCands(docShinglesOf(docs)).count()
-
-  private[graft] def minhashCandsPub(sh: DataFrame): DataFrame = minhashCands(sh)
-
-  private[graft] def fuzzyCappedCandsPub(sh: DataFrame): DataFrame = {
-    val bands = bandSignatures(sh)
-    val bsz = bands.groupBy("band", "sig")
-      .agg(count(lit(1)).as("m"), min("doc_id").as("rep"))
-    fuzzyCappedCandsOf(bands, bsz).select("da", "db")
   }
 
   // ---------------------------------------------------------------- simhash

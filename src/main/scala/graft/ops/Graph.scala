@@ -395,7 +395,12 @@ object Graph {
     * are unchanged downstream of the scan.
     */
   def coPurchaseCounted(s: SparkSession, dir: String): DataFrame =
-    edgeCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
+    // Seven catalog queries (communities, modularity, common-neighbors,
+    // BFS, SSSP, k-core, assortativity) all start from this edge list, so
+    // it is one memoized entry: built once per session instead of seven
+    // times, so graph queries do not each re-sample the self-join's
+    // shuffle. It is |lineitem|-bounded and held as executor blocks.
+    Ckpt.cached(s, s"graph:edges:$dir") {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"), col("l_partkey"))
       li.select(col("ok"), (col("ln") + 1).as("ln"), col("l_partkey").as("pa"))
@@ -404,22 +409,7 @@ object Graph {
         .select(least(col("pa"), col("pb")).as("da"), greatest(col("pa"), col("pb")).as("db"))
         .groupBy("da", "db")
         .agg(count(lit(1)).as("c"))
-        .transform(Ckpt.apply)
-    })
-
-  /** Seven catalog queries (communities, modularity, common-neighbors,
-    * BFS, SSSP, k-core, assortativity) all start from the SAME
-    * co-purchase edge list — a lineitem self-join + distinct. Memoizing
-    * the checkpointed result per (application, sf-dir) builds it once per
-    * session instead of seven times, which both cuts total catalog time
-    * and removes the dominant source of run-to-run bench spread (the
-    * self-join's shuffle was re-sampled by every graph query). The edge
-    * list is |lineitem|-bounded and held as executor blocks, not driver
-    * memory; correctness is untouched — every consumer sees identical
-    * rows, just behind a LogicalRDD scan.
-    */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+    }
 
   /** Catalog entry: link prediction over the part co-purchase graph. */
   def commonNeighborsCoPurchase(s: SparkSession, dir: String): DataFrame =
@@ -439,8 +429,9 @@ object Graph {
     * a hash anti-join; the cap compiles to TakeOrderedAndProject. Middle
     * degrees ≥ 2 by construction (a wedge middle has two distinct
     * neighbors), so ln(deg) never divides by zero. Adamic-Adar terms
-    * quantize onto decimal(38,9) before the sum (order-free-sum rule);
-    * the ranking never consults a double.
+    * quantize onto decimal(18,9) and cross the aggregate as their
+    * unscaled long images, summed exactly (order-free-sum rule); the
+    * ranking never consults a double.
     */
   def commonNeighbors(pairList: DataFrame): DataFrame =
     commonNeighborsSplit(pairList, CnHotDeg, CnSaltK)
@@ -715,8 +706,7 @@ object Graph {
     * the co-purchase graph.
     */
   def louvainMoveCoPurchase(s: SparkSession, dir: String): DataFrame =
-    louvainMoveOf(coPurchaseAdj(s, dir), coPurchaseLabels(s, dir),
-      Some(coPurchaseAdjCount(s, dir)))
+    louvainMoveOf(coPurchaseAdj(s, dir), coPurchaseLabels(s, dir), coPurchaseAdjCount(s, dir))
 
   /** One SYNCHRONOUS Louvain local-move round (Blondel et al. 2008) —
     * the refinement step community pipelines run after a cheap seeding
@@ -741,15 +731,8 @@ object Graph {
     * IEEE chain written identically in the oracle, and the (gain, −c)
     * struct-max mirrors ORDER BY gain DESC, c ASC.
     */
-  def louvainMove(pairList: DataFrame): DataFrame = {
-    val adj = symAdj(pairList)
-    louvainMoveOf(adj, lpaLabels(adj).transform(Ckpt.apply))
-  }
-
-  private def louvainMoveOf(adj: DataFrame, labels: DataFrame,
-      knownM2: Option[Long] = None): DataFrame = {
-    // directed edges = 2m; one scalar action (memoized on catalog paths)
-    val m2 = knownM2.getOrElse(adj.count()).toDouble
+  private def louvainMoveOf(adj: DataFrame, labels: DataFrame, adjRows: Long): DataFrame = {
+    val m2 = adjRows.toDouble // directed edges = 2m
     val own = labels.select(col("node").as("u"), col("lbl").as("own"))
     val kic = adj
       .join(labels.select(col("node").as("m"), col("lbl").as("c")), "m")
@@ -834,8 +817,8 @@ object Graph {
     * path hands in the memoized [[coPurchaseAdj]] directly (r15, guide
     * §2.4: [[bfs]] used to re-symmetrize + re-checkpoint the identical
     * adjacency the LPA family already memoizes, one |E|-block copy per
-    * invocation). Never frees its input (the caller owns it); same
-    * every-second-round checkpoint cadence as [[sssp]].
+    * invocation). Never frees its input (the caller owns it); like
+    * [[sssp]], it checkpoints only the final round's distances.
     */
   private[ops] def bfsOverAdj(adj: DataFrame, seeds: DataFrame,
       rounds: Int = BfsRounds): DataFrame = {

@@ -808,7 +808,7 @@ object Similarity {
     // |V|·M·|Q| scored pairs, so partition count must follow COMPUTE, not
     // input bytes: AQE sizes the stage by the few-MB code table and folds
     // the whole expansion + partial agg into ONE task (measured 6.8 s
-    // single-task at sf1 by OneTaskAudit — the same byte-blind-coalesce
+    // single-task at sf1 by the one-task audit — the same byte-blind-coalesce
     // class as bm25's merge-scan and dedup_incremental's pair expansion).
     // A round-robin repartition with an explicit count is the one shuffle
     // AQE may not coalesce; it moves only the |V|·M-row code table.

@@ -50,6 +50,13 @@ object GraftSqlShims {
   def expression(c: Column): catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** Block until every listener has handled every event posted so far —
+    * the only way to read a listener's counts for a finished action
+    * without racing the asynchronous bus (`listenerBus` is
+    * `private[spark]`).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Executor-side Tungsten page size — what SortExec hands to
     * UnsafeExternalRowSorter; `MemoryManager.pageSizeBytes` is
     * `private[spark]`.

@@ -93,6 +93,34 @@ class MemoizationSpec extends AnyFunSuite with SparkTestBase {
       "rebuild after release must appear in the build log")
   }
 
+  test("the build log counts a nested build once: self times sum to at most the wall") {
+    val outer = "nestedtest:outer"
+    val inner = "nestedtest:inner"
+    val t0 = System.nanoTime()
+    Ckpt.cached(spark, outer) {
+      Ckpt.cached(spark, inner) { Thread.sleep(300); spark.range(10).toDF("id") }
+        .select((org.apache.spark.sql.functions.col("id") + 1).as("id"))
+    }
+    val wallS  = (System.nanoTime() - t0) / 1e9
+    val logged = Ckpt.buildLog.filter(_._1.startsWith("nestedtest:"))
+    Ckpt.release("nestedtest:")
+    assert(logged.map(_._1) == Seq(inner, outer))
+    assert(logged.map(_._2).sum <= wallS,
+      s"logged build seconds $logged exceed the outer call's wall $wallS s")
+  }
+
+  test("co-purchase edges are one Ckpt entry: logged once, rebuilt after release") {
+    val key = s"graph:edges:$Sf0001"
+    def edgeBuilds = Ckpt.buildLog.count(_._1 == key)
+    Ckpt.release(Sf0001)
+    val b0 = edgeBuilds
+    SparkEntry.queries("graph_modularity")(spark, Sf0001).collect()
+    assert(edgeBuilds == b0 + 1, s"graph_modularity logged $key ${edgeBuilds - b0} times")
+    Ckpt.release(Sf0001)
+    SparkEntry.queries("graph_modularity")(spark, Sf0001).collect()
+    assert(edgeBuilds == b0 + 2, "release(dir) left the co-purchase edges standing")
+  }
+
   test("storage-fraction LRU eviction drops old entries, protects the MRU window") {
     // seed a throwaway namespace so the LRU tail is deterministic; the
     // newest seeds sit inside Ckpt's protection window at trigger time

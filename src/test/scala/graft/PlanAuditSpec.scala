@@ -149,8 +149,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // corpus size. Asserted on the OPTIMIZED LOGICAL plan: at this
     // all-broadcast tiny SF Spark legitimately elides the physical
     // exchange (nothing requires it under BHJ), while at sf1 — where the
-    // joins are SMJ — the pin holds (StageProbe: verify stage 32-wide;
-    // OneTaskAudit: 0/262 heavy one-task stages).
+    // joins are SMJ — the pin holds (graft.Profile: verify stage
+    // 32-wide, 0/262 heavy one-task stages).
     import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
     for (q <- Seq("dedup_fuzzy", "dedup_fuzzy_capped", "dedup_minhash", "dedup_incremental")) {
       val pins = SparkEntry.queries(q)(spark, Sf0001)

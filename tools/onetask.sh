@@ -1,23 +1,7 @@
 #!/usr/bin/env bash
-# One-task heavy-stage audit (the round-13 AQE byte-vs-CPU bug class):
-# flags any stage coalesced to ONE task that burns > threshold CPU.
+# Per-query profile and one-task heavy-stage audit (the round-13 AQE
+# byte-vs-CPU bug class): prints each query's construct/plan/exec split,
+# jobs, stages, tasks and top stages, and flags any stage coalesced to ONE
+# task that burns > threshold CPU (exit 1 if any).
 # Usage: tools/onetask.sh [sfDir] [thresholdMs] [query ...]
-set -euo pipefail
-cd "$(dirname "$0")/.."
-sbt -batch compile >/dev/null
-exec java \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xmx48g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.OneTaskAudit "${@}"
+exec "$(dirname "$0")/java.sh" 48g graft.Profile "$@"

@@ -2,22 +2,4 @@
 # Full-catalog sf1 scaling sweep (builds target/sf1 from sf0.1 on first
 # run, ~10x every table with referential integrity). Pass query names to
 # restrict. Results are pasted into SCALING.md.
-set -euo pipefail
-cd "$(dirname "$0")/.."
-sbt -batch compile >/dev/null
-exec java \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xmx48g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.ScaleSweep "$@"
+exec "$(dirname "$0")/java.sh" 48g graft.ScaleSweep "$@"

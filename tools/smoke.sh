@@ -2,22 +2,4 @@
 # Pre-commit smoke: whole catalog end-to-end at sf0.001 (~1 min).
 # Catches driver-testdata schema drift (the round-6 NTZ regression class)
 # and accidental cartesian plans before they reach the round gate.
-set -euo pipefail
-cd "$(dirname "$0")/.."
-sbt -batch compile >/dev/null
-exec java \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xmx8g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Smoke "${1:-/root/testdata/sf0.001}"
+exec "$(dirname "$0")/java.sh" 8g graft.Smoke "${1:-/root/testdata/sf0.001}"
