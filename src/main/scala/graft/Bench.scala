@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark harness (driver contract): runs the whole catalog on
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * A small warm-up (count + one broadcast-join query) runs before the
   * timed loop so first-query numbers measure the plan, not JVM/codegen
   * bootstrap. Queries run in sorted name order for run-to-run
-  * comparability.
+  * comparability. Each sample reads the result in full
+  * ([[Profile.consume]]), so no timing covers a plan Catalyst pruned for
+  * a bare `count()`.
   */
 object Bench {
   val Runs = 3
@@ -32,10 +34,6 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     try SparkEntry.queries.get("join_broadcast").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => () }
-    // storage-layout ETL (bucketed/partitioned twins) is a one-time writer
-    // cost; pay it here so bucket_join/part_prune samples time the query
-    try ops.Storage.warmup(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[bench] storage warmup failed: $e") }
 
     // a failed query reports -1 (visible sentinel) and is excluded from
     // the total — a broken catalog must not read as a fast one
@@ -47,22 +45,21 @@ object Bench {
     val catalog = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy(_._1)
+    // one sample: seconds to construct and read a result in full, None
+    // (logged) if the query failed
+    def timed(name: String, fn: (SparkSession, String) => DataFrame,
+        what: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { Profile.consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] $name $what: ${e.getMessage}"); None }
+    }
     // repeats run as whole-catalog passes (round-robin), not back-to-back:
     // a transient machine-load spike then inflates ONE run of several
     // queries — which the median rejects — instead of all Runs samples of
     // one query, which it cannot
     val samples: Seq[Seq[(String, Option[Double])]] = (1 to Runs).map { _ =>
-      catalog.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val t =
-          try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              None
-          }
-        name -> t
-      }
+      catalog.map { case (name, fn) => name -> timed(name, fn, "failed") }
     }
     // Adaptive tail re-sampling: the TOP-20 queries by 3-run median —
     // the rows a perf reader actually compares round-to-round — plus any
@@ -86,12 +83,7 @@ object Bench {
       val times = baseTimes(name)
       if (times.size < Runs ||
           (!topByMedian.contains(name) && times.max - times.min <= SpreadTarget)) None
-      else Some(name -> (1 to ExtraRuns).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name resample failed: ${e.getMessage}"); None }
-      })
+      else Some(name -> (1 to ExtraRuns).flatMap(_ => timed(name, fn, "resample failed")))
     }.toMap
     // per query: (median, spread, min). The median is the headline; min
     // is the low-noise estimator on an idle box (a loaded run can only
@@ -132,8 +124,9 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jmap(_._2, p)},"runs":$Runs,"sf":$sfNum}"""
     val resampledJson = extra.keys.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // One-time shared-cache builds (Ckpt.cached) are paid by the FIRST
-    // consumer and so excluded from per-query medians; report them as a
+    // One-time session builds (every Ckpt memo, the storage twins among
+    // them) are paid by the FIRST consumer and so excluded from
+    // per-query medians; report them as a
     // first-class metric so cross-round totals can't silently shift cost
     // into unmeasured builds (r13 verdict item 3). Keys repeat if an
     // entry was released/evicted and rebuilt — the log is per BUILD.

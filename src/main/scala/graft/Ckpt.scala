@@ -1,29 +1,29 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Materialization seam for iterative and multi-consumer intermediates
-  * (connected-components labels, pagerank edges, BPE generations, shared
-  * shingle tables).
+/** The one owner of what a session materializes and remembers, in one
+  * lifecycle:
   *
-  * Default mode is `localCheckpoint(eager = true)`: blocks live on
-  * executors only, which is the fastest way to truncate lineage at
-  * `local[32]` — but on a real cluster an executor loss destroys blocks
-  * whose lineage no longer exists, killing the job. Setting
-  * `spark.graft.checkpoint.reliable=true` switches every iterative op to
-  * reliable `checkpoint()` under the SparkContext checkpoint dir (set
-  * one on a shared filesystem for a multi-executor cluster; a local temp
-  * dir is auto-provisioned otherwise so the mode is testable on
-  * local[*]). The logical result is identical — both surface as a
-  * LogicalRDD scan — so downstream plan shapes do not change; only the
-  * storage substrate does.
-  *
-  * Reliable-mode hygiene: checkpoint files are reclaimed by Spark when
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, otherwise
-  * they live until the checkpoint dir is deleted. [[graft.ops.Dedup
-  * .freeCheckpoint]] (which unpersists superseded localCheckpoint
-  * generations mid-loop) degrades to a harmless no-op on reliable
-  * checkpoints — their RDDs hold no block-manager storage.
+  *  - materialize ([[apply]], [[ensure]], [[scoped]]): truncate lineage
+  *    with `localCheckpoint(eager = true)` — blocks on executors only,
+  *    lost with an executor — or, under
+  *    `spark.graft.checkpoint.reliable=true`, `checkpoint()` under the
+  *    SparkContext checkpoint dir (a temp dir if none is set). Both are a
+  *    LogicalRDD scan, so plans downstream do not change.
+  *  - memoize ([[cached]], [[cachedPair]], [[cachedValue]]): one map
+  *    keyed by (applicationId, `<family>:<what>:<dir>`) holds every
+  *    per-session build: checkpointed frames, and values that hold no
+  *    blocks (row counts, the storage twins' tag). Each build gets one
+  *    [[buildLog]] row with its self time.
+  *  - free ([[free]]): drop a dead checkpoint's blocks straight through
+  *    the block manager, without `RDD.unpersist`'s WARN for a locally
+  *    checkpointed RDD; reliable checkpoints hold no blocks.
+  *  - release ([[release]]): drop every memo of a data dir.
+  *  - evict: before a new frame build, drop least-recently-used frame
+  *    entries while storage use is above [[EvictFractionKey]]. Value
+  *    entries hold no blocks and are never victims.
   */
 object Ckpt {
   /** Session conf key: "true" → reliable `checkpoint()` instead of
@@ -47,8 +47,11 @@ object Ckpt {
     */
   private val ProtectMru = 12
 
+  /** A memoized build: its value and the checkpointed frames that hold
+    * its blocks (none for a value entry).
+    */
   private final class Entry(
-      val df: DataFrame, val userKey: String, var tick: Long)
+      val value: Any, val frames: Seq[DataFrame], val userKey: String, var tick: Long)
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Entry]()
@@ -57,56 +60,53 @@ object Ckpt {
   /** Wall seconds of the builds nested inside the build in progress. */
   private var nestedS = 0.0
 
-  /** Per-application MEMOIZED checkpoint.
-    *
-    * A checkpoint scanned by the RETURNED DataFrame can never be freed
-    * inside the query (the caller's action still needs its blocks), so a
-    * catalog entry that checkpoints per invocation accumulates one dead
-    * generation of executor blocks per call under the gate + bench's
-    * repeated runs (r8 advice). Keying the materialization by
-    * (applicationId, key) makes every re-invocation REUSE the first
-    * call's blocks instead: storage is bounded by one generation per
-    * query family per session, and the repeated-run bench stops
-    * re-paying (and re-sampling the noise of) the heavy shared subtree.
-    * The applicationId in the key keeps a fresh session from ever
-    * scanning a dead application's blocks.
-    *
-    * Footprint management (r13 verdict item 1 — entries used to live
-    * until the application died, which is what degraded text_bm25
-    * 24→98 s over back-to-back sf1 repeats): entries are rebuildable by
-    * construction (the thunk is re-evaluated on the next miss), so the
-    * cache may DROP them — explicitly via [[release]] (harness calls it
-    * between scale factors) or automatically via [[maybeEvict]] when
-    * block-manager storage crosses [[EvictFractionKey]]. Consumers must
-    * therefore never hold a returned frame across other queries'
-    * builds; catalog functions re-resolve through `cached` on every
-    * invocation, which is exactly that discipline.
-    *
-    * Deliberately synchronized get/put, NOT `computeIfAbsent`: cached
-    * builds nest (`Graph.coPurchaseLabels`'s thunk builds the memoized
-    * adjacency, itself a `cached` entry), and a nested
-    * `computeIfAbsent` on one ConcurrentHashMap is a recursive update —
-    * an IllegalStateException whenever the two keys land in the same
-    * bin, which they do or don't depending on the applicationId baked
-    * into the key, i.e. an intermittent per-session failure. A plain
-    * monitor is reentrant, so nested builds are always safe; the lock
-    * is coarse but builds are rare (one per query family per session)
-    * and the catalog mains are single-threaded.
+  /** Per-application MEMOIZED checkpoint. A checkpoint scanned by the
+    * RETURNED frame can never be freed inside the query, so a catalog
+    * entry that checkpointed per invocation leaked one generation of
+    * blocks per call; keyed by (applicationId, key), every re-invocation
+    * reuses the first call's blocks, and a fresh session never scans a
+    * dead application's. Entries are rebuildable from their thunk, so
+    * [[release]] and eviction may drop them: consumers must never hold a
+    * returned frame across other queries' builds, and catalog functions
+    * re-resolve through `cached` on every invocation.
     */
-  def cached(s: org.apache.spark.sql.SparkSession, key: String)(
-      build: => DataFrame): DataFrame = cache.synchronized {
-    // the storage substrate is part of the entry's identity: a session
-    // that flips to reliable mode must NOT be handed blocks that a
-    // local-mode build materialized (they don't survive executor loss —
-    // the exact guarantee the flip buys)
+  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memo(s, key, blocks = true)(materialize(build))(Seq(_))
+
+  /** [[cached]] for a build that materializes two frames itself (the BPE
+    * fit's merge table and final segmentation); both are freed together.
+    */
+  def cachedPair(s: SparkSession, key: String)(
+      build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    memo(s, key, blocks = true)(build)(p => Seq(p._1, p._2))
+
+  /** A memoized value that holds no blocks — a row count, a table tag.
+    * Logged and released like a frame entry, never evicted. Its key
+    * ignores the checkpoint substrate: a count is the same on either.
+    */
+  def cachedValue[A](s: SparkSession, key: String)(build: => A): A =
+    memo(s, key, blocks = false)(build)(_ => Nil)
+
+  /** The one memo path: a synchronized get/put, NOT `computeIfAbsent`.
+    * Builds nest (`Graph.coPurchaseLabels` builds the memoized
+    * adjacency), and a nested `computeIfAbsent` on one map throws
+    * whenever the two keys share a bin; a monitor is reentrant. The lock
+    * is coarse, but builds are rare and the catalog mains single-threaded.
+    */
+  private def memo[A](s: SparkSession, key: String, blocks: Boolean)(build: => A)(
+      frames: A => Seq[DataFrame]): A = cache.synchronized {
+    // the storage substrate is part of a frame entry's identity: a
+    // session that flips to reliable mode must NOT be handed blocks that
+    // a local-mode build materialized (they don't survive executor loss
+    // — the exact guarantee the flip buys)
     val k = (s.sparkContext.applicationId
-      + (if (confFlag(s, ReliableKey)) "#reliable" else ""), key)
+      + (if (blocks && confFlag(s, ReliableKey)) "#reliable" else ""), key)
     Option(cache.get(k)) match {
       case Some(e) =>
         ticks += 1; e.tick = ticks
-        e.df
+        e.value.asInstanceOf[A]
       case None =>
-        maybeEvict(s)
+        if (blocks) maybeEvict(s)
         // a build thunk may miss other entries: log this build's SELF
         // time, so that summing the log counts each nested build once
         val outerNestedS = nestedS
@@ -114,27 +114,23 @@ object Ckpt {
         val t0 = System.nanoTime()
         def wallS = (System.nanoTime() - t0) / 1e9
         try {
-          val df = materialize(build)
+          val v = build
           log += ((key, wallS - nestedS))
           ticks += 1
-          cache.put(k, new Entry(df, key, ticks))
-          df
+          cache.put(k, new Entry(v, frames(v), key, ticks))
+          v
         } finally nestedS = outerNestedS + wallS
     }
   }
 
-  private def confFlag(s: org.apache.spark.sql.SparkSession, key: String) =
+  private def confFlag(s: SparkSession, key: String) =
     s.conf.getOption(key).exists(_.equalsIgnoreCase("true"))
 
-  /** Unpersist and forget every memoized entry whose user key contains
-    * `substr` — keys embed their data dir (`dedup:shingles:<dir>`), so
-    * `release(dir)` drops one scale factor's whole cache, and
-    * `release("")` is the documented drop-ALL form (every key contains
-    * the empty string). Harness use:
-    * [[ScaleSweep]] calls it between the sf0.1 and sf1 phases so the
-    * sf1 numbers never share executor storage with a dead SF's caches
-    * (the measured text_bm25 degradation mode). Returns the number of
-    * entries dropped; each next use rebuilds bit-equal from its thunk.
+  /** Drop and free every memoized entry whose user key contains
+    * `substr`: keys embed their data dir, so `release(dir)` drops one
+    * scale factor's entries ([[ScaleSweep]] does between its phases) and
+    * `release("")` drops all. Returns the number dropped; each next use
+    * rebuilds bit-equal from its thunk.
     */
   def release(substr: String): Int = cache.synchronized {
     import scala.jdk.CollectionConverters._
@@ -144,40 +140,36 @@ object Ckpt {
     victims.size
   }
 
-  /** (user key, build self seconds) of every cached build this session,
-    * in build order. A build's seconds exclude the entries its thunk
-    * built on the way, which have rows of their own, so the log sums to
-    * the wall time spent building. A key appears once per
-    * MATERIALIZATION — a rebuild after [[release]]/eviction appends a new
-    * row — so [[Bench]] can report one-time cache-build cost as a
-    * first-class line instead of letting memoization silently shift it
-    * out of per-query medians.
+  /** (user key, build self seconds) of every memoized build, in build
+    * order, one row per BUILD (a rebuild after release or eviction adds
+    * one). Self seconds exclude nested builds, which have rows of their
+    * own, so the log sums to the time spent building ([[Bench]]'s
+    * `cache_builds` line).
     */
   def buildLog: Seq[(String, Double)] = cache.synchronized(log.toList)
 
   /** Fraction of block-manager storage currently used across executors. */
-  private def storageUsedFraction(s: org.apache.spark.sql.SparkSession): Double = {
+  private def storageUsedFraction(s: SparkSession): Double = {
     val st  = s.sparkContext.getExecutorMemoryStatus.values
     val max = st.iterator.map(_._1).sum
     if (max <= 0L) 0.0
     else 1.0 - st.iterator.map(_._2).sum.toDouble / max
   }
 
-  /** LRU eviction pass, run before building a NEW entry: while storage
-    * use exceeds the configured fraction, unpersist the least-recently-
-    * used entries outside the [[ProtectMru]] window. Safe by the same
-    * argument that makes entries rebuildable: an evicted entry's next
-    * consumer re-enters [[cached]], misses, and re-materializes — only a
-    * frame held ACROSS other builds could observe freed blocks, and the
-    * protection window covers every composition the catalog performs.
+  /** Before a NEW frame build: while storage use exceeds the configured
+    * fraction, drop least-recently-used frame entries outside the
+    * [[ProtectMru]] window. An evicted entry's next consumer misses and
+    * rebuilds; only a frame held ACROSS other builds could see freed
+    * blocks, and the window covers every composition in the catalog.
     */
-  private def maybeEvict(s: org.apache.spark.sql.SparkSession): Unit = {
+  private def maybeEvict(s: SparkSession): Unit = {
     import scala.jdk.CollectionConverters._
     val threshold = s.conf.getOption(EvictFractionKey)
       .flatMap(v => scala.util.Try(v.toDouble).toOption)
       .getOrElse(DefaultEvictFraction)
     if (storageUsedFraction(s) <= threshold) return
-    val lru = cache.entrySet().asScala.toList.sortBy(_.getValue.tick)
+    val lru = cache.entrySet().asScala.toList
+      .filter(_.getValue.frames.nonEmpty).sortBy(_.getValue.tick)
     val evictable = lru.dropRight(math.min(ProtectMru, lru.size))
     for (e <- evictable if storageUsedFraction(s) > threshold) {
       System.err.println(
@@ -188,34 +180,42 @@ object Ckpt {
 
   private def drop(k: (String, String), e: Entry): Unit = {
     cache.remove(k)
-    for (r <- scanRdds(e.df))
-      try r.unpersist(blocking = true)
+    for (f <- e.frames)
+      try free(f, blocking = true)
       catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** The checkpoint-scan RDDs of a materialized frame (exactly one for a
-    * [[cached]] entry). Unpersisting them frees localCheckpoint blocks;
-    * on reliable checkpoints it is a no-op (file-backed, no storage).
+  /** Free the blocks of every checkpoint scan in `df`'s plan — only a
+    * checkpoint the caller made, never a SHARED memoized scan
+    * ([[scoped]] makes that choice). Mid-loop frees do not block;
+    * [[release]] and eviction do.
     */
-  private def scanRdds(df: DataFrame) =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
+  def free(df: DataFrame, blocking: Boolean = false): Unit =
+    for (r <- df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd })
+      GraftSqlShims.unpersistRdd(r, blocking)
+
+  /** Run `body` over `df` materialized ([[ensure]]), then free the
+    * checkpoint if this call made it — never a caller's or a memo's
+    * scan. For inputs read more than once while building one
+    * materialized result.
+    */
+  def scoped[A](df: DataFrame)(body: DataFrame => A): A = {
+    val in = ensure(df)
+    try body(in) finally if (in ne df) free(in)
+  }
 
   def apply(df: DataFrame): DataFrame = materialize(df)
 
   /** True when the frame is already just a rename/reorder projection
     * over a checkpoint scan — re-materializing such a frame copies every
     * block for nothing (and, on catalog paths, leaks a per-invocation
-    * generation the returned plan pins). Callers that free their
-    * checkpoint later must gate the free on this (freeing a SHARED
-    * memoized scan would unpersist blocks other consumers still need).
+    * generation the returned plan pins).
     */
-  def isCheapScan(df: DataFrame): Boolean = {
+  private def isCheapScan(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
     def walk(p: LogicalPlan): Boolean = p match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case _: LogicalRDD => true
       case pr: Project if pr.projectList.forall {
             case _: Attribute => true
             case a: Alias     => a.child.isInstanceOf[Attribute]

@@ -112,9 +112,6 @@ object Profile {
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.local("32", logLevel = "ERROR")
 
-    try ops.Storage.warmup(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[onetask] warmup: $e") }
-
     println("query\tconstruct_s\tplan_s\texec_s\tjobs\tstages\ttasks\ttop3 id:tasks:wall_ms/run_ms")
     val rows = profile(spark, sfDir, names)
     for (r <- rows) {

@@ -75,12 +75,6 @@ object ScaleSweep {
     println(s"[sweep] sf1 rows: docs=${Tables.documents(spark, Out).count()} " +
       s"lineitem=${Tables.lineitem(spark, Out).count()} events=${Tables.events(spark, Out).count()}")
 
-    // storage-layout ETL is a one-time writer cost at both scales
-    try ops.Storage.warmup(spark, Src)
-    catch { case e: Throwable => System.err.println(s"[sweep] warmup sf0.1: $e") }
-    try ops.Storage.warmup(spark, Out)
-    catch { case e: Throwable => System.err.println(s"[sweep] warmup sf1: $e") }
-
     val only = if (args.nonEmpty) Some(args.toSet) else None
     val catalog = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }

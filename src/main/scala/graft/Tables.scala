@@ -83,8 +83,9 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 
-  /** Memoized row count of the embeddings table, per (application, dir) —
-    * the scaling input for occupancy-constant LSH / cluster geometry
+  /** Memoized row count of the embeddings table, the [[Ckpt]] value
+    * entry `tables:emb-count:<dir>` — the scaling input for
+    * occupancy-constant LSH / cluster geometry
     * ([[graft.ops.Similarity.planesFor]],
     * [[graft.ops.Curation.centroidsFor]]). A columnless parquet count is
     * answered from footer row-group metadata, so this is cheap even at
@@ -92,10 +93,5 @@ object Tables {
     * per geometry-deriving query.
     */
   def embeddingsCount(spark: SparkSession, dir: String): Long =
-    embCountCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => java.lang.Long.valueOf(embeddings(spark, dir).count()))
-
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+    Ckpt.cachedValue(spark, s"tables:emb-count:$dir")(embeddings(spark, dir).count())
 }

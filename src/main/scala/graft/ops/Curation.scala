@@ -1003,7 +1003,7 @@ object Curation {
       .union(cov.filter(col("dim_i") =!= col("dim_j"))
         .select(col("dim_j").as("i"), col("dim_i").as("j"), col("cov").as("c")))
       .transform(Ckpt.apply)
-    Dedup.freeCheckpoint(cov)
+    Ckpt.free(cov)
     val d = fullM.select(col("i")).distinct().count()
     def matVec(v: DataFrame): DataFrame = fullM
       .join(v.select(col("i").as("j"), col("x")), "j")
@@ -1020,7 +1020,7 @@ object Curation {
       val next = y.crossJoin(broadcast(nrm))
         .select(col("i"), (col("y") / col("nrm")).as("x"))
         .transform(Ckpt.apply)
-      Dedup.freeCheckpoint(v)
+      Ckpt.free(v)
       v = next
     }
     val lam = matVec(v).join(v, "i")
@@ -1390,6 +1390,31 @@ object Curation {
     * needed.
     */
   def rrfFusion(s: SparkSession, dir: String): DataFrame = {
+    val (lex, sem) = rrfLists(s, dir)
+    // r16 (guide §2.4): the two k-bounded lists fuse through ONE union +
+    // grouped conditional-max — the same rows the old full-outer join on
+    // (q, d) produced (each list is rank-unique per (q, d), so max over
+    // the tag-padded union IS the outer join's coalesce pattern), for one
+    // exchange instead of two join-side exchanges and a merge.
+    // CurationSpec pins one row per (q, d) in each list.
+    val tagged = lex
+      .select(col("q"), col("d"), col("lex_rn"), lit(null).cast("long").as("sem_rn"))
+      .unionByName(sem.select(col("q"), col("d"),
+        lit(null).cast("long").as("lex_rn"), col("sem_rn")))
+    val fused = tagged
+      .groupBy("q", "d")
+      .agg(max(col("lex_rn")).as("lex_rn"), max(col("sem_rn")).as("sem_rn"))
+      .select(col("q"), col("d"), col("lex_rn"), col("sem_rn"),
+        (coalesce(lit(1.0) / (lit(RrfC) + col("lex_rn")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(RrfC) + col("sem_rn")), lit(0.0))).as("rrf"))
+    graft.plans.GroupedTopK
+      .topK(fused, Seq("q"), Seq("rrf" -> false, "d" -> true), Similarity.TopK)
+  }
+
+  /** The two ranked lists [[rrfFusion]] fuses: lexical (q, d, lex_rn)
+    * and semantic (q, d, sem_rn), each at most k rows per query.
+    */
+  private[ops] def rrfLists(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     // A cheap projection over the session-memoized [[tfAllShared]] (the
     // old per-invocation localCheckpoint leaked one (doc, term)
     // generation per call AND re-tokenized the corpus; source is
@@ -1429,23 +1454,7 @@ object Curation {
       .select(col("q"), col("doc_id").as("d"), col("lex_rn"))
     val sem = Similarity.topkBrute(s, dir)
       .select(col("va").as("q"), col("vb").as("d"), col("rn").as("sem_rn"))
-    // r16 (guide §2.4): the two k-bounded lists fuse through ONE union +
-    // grouped conditional-max — the same rows the old full-outer join on
-    // (q, d) produced (each list is rank-unique per (q, d), so max over
-    // the tag-padded union IS the outer join's coalesce pattern), for one
-    // exchange instead of two join-side exchanges and a merge.
-    val tagged = lex
-      .select(col("q"), col("d"), col("lex_rn"), lit(null).cast("long").as("sem_rn"))
-      .unionByName(sem.select(col("q"), col("d"),
-        lit(null).cast("long").as("lex_rn"), col("sem_rn")))
-    val fused = tagged
-      .groupBy("q", "d")
-      .agg(max(col("lex_rn")).as("lex_rn"), max(col("sem_rn")).as("sem_rn"))
-      .select(col("q"), col("d"), col("lex_rn"), col("sem_rn"),
-        (coalesce(lit(1.0) / (lit(RrfC) + col("lex_rn")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfC) + col("sem_rn")), lit(0.0))).as("rrf"))
-    graft.plans.GroupedTopK
-      .topK(fused, Seq("q"), Seq("rrf" -> false, "d" -> true), Similarity.TopK)
+    (lex, sem)
   }
 
   /** Sample size for [[sampleWeighted]]. */

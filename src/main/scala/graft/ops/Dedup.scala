@@ -1167,16 +1167,6 @@ object Dedup {
     Ckpt.cached(s, s"dedup:clusters:$dir")(
       connectedComponents(minhashShared(s, dir).select(col("da"), col("db"))))
 
-  /** The RDD a `localCheckpoint(true)` Dataset actually persisted: the
-    * one inside its LogicalRDD leaf. (`queryExecution.toRdd` is a freshly
-    * derived execution RDD with storage level NONE — unpersisting that is
-    * a no-op.)
-    */
-  private[ops] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(_.unpersist(false))
-
   /** One round of min-label propagation: every node takes the minimum of
     * its own label and its neighbors' labels. Exposed so PlanAuditSpec
     * can pin the join shape (the full [[connectedComponents]] executes
@@ -1195,16 +1185,13 @@ object Dedup {
     * (doc_id, cluster_id, is_canonical) for every node in any pair.
     */
   def connectedComponents(pairList: DataFrame): DataFrame = {
-    val prsRaw = pairList.toDF("da", "db")
-    val owned  = !Ckpt.isCheapScan(prsRaw) // see Graph.commonNeighbors
-    val prs    = if (owned) Ckpt(prsRaw) else prsRaw
-    val edges = prs
-      .union(prs.select(col("db").as("da"), col("da").as("db")))
-      .toDF("src", "dst")
-      .transform(Ckpt.apply)
-    // edges is materialized; the pair snapshot is dead — but never free
-    // a SHARED memoized scan (the catalog path passes minhashShared)
-    if (owned) freeCheckpoint(prs)
+    // the pair snapshot is dead once edges is materialized; the catalog
+    // path passes the SHARED minhashShared scan, which scoped never frees
+    val edges = Ckpt.scoped(pairList.toDF("da", "db")) { prs =>
+      prs.union(prs.select(col("db").as("da"), col("da").as("db")))
+        .toDF("src", "dst")
+        .transform(Ckpt.apply)
+    }
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .transform(Ckpt.apply)
@@ -1224,12 +1211,12 @@ object Dedup {
       converged = nextSum == prevSum
       // the superseded generation's checkpoint blocks are dead weight —
       // release them so the loop holds at most two label generations
-      freeCheckpoint(labels)
+      Ckpt.free(labels)
       labels = next
       prevSum = nextSum
       rounds += 1
     }
-    freeCheckpoint(edges) // the result depends only on the final labels
+    Ckpt.free(edges) // the result depends only on the final labels
     // a silent non-converged return would emit WRONG cluster ids (and
     // diverge from the oracle's full fixpoint) — fail loudly instead;
     // near-dup components are shallow, so 50 rounds means data pathology

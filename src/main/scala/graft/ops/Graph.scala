@@ -45,9 +45,14 @@ object Graph {
     * (the memoized snapshot — the MinHash pipeline is the dominant cost
     * and five graph/pipeline consumers need identical pairs).
     */
-  def pagerankNearDup(s: SparkSession, dir: String): DataFrame =
-    prLoop(ndEdgesDeg(s, dir), ndNodeCount(s, dir), PrIterations, PrDamping)
+  def pagerankNearDup(s: SparkSession, dir: String): DataFrame = {
+    val edgesDeg = ndEdgesDeg(s, dir)
+    // counted per call, as [[pagerank]] does: graph_pagerank is its one
+    // consumer, so a memo could only ever hit on a repeated run
+    val n = edgesDeg.select("src").distinct().count()
+    prLoop(edgesDeg, n, PrIterations, PrDamping)
       .select(col("node").as("doc_id"), col("rank"))
+  }
 
   /** Memoized near-dup edges-with-degree table — the identical build
     * [[pagerank]] and [[ppr]] each ran (and checkpointed) privately per
@@ -55,25 +60,18 @@ object Graph {
     * snapshot, attach out-degrees, one generation of blocks per session.
     */
   private def ndEdgesDeg(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:nd-edgesdeg:$dir") {
-      val prs = Dedup.minhashShared(s, dir).select(col("da"), col("db"))
-      val edges = prs
-        .union(prs.select(col("db").as("da"), col("da").as("db")))
-        .toDF("src", "dst")
-      edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    }
+    Ckpt.cached(s, s"graph:nd-edgesdeg:$dir")(
+      withDegrees(Dedup.minhashShared(s, dir).select(col("da"), col("db"))))
 
-  /** Memoized node count of the near-dup graph (one action per session —
-    * it used to run as a per-invocation `distinct().count()` in both
-    * rank loops).
+  /** (src, dst, deg): both directions of each pair (da, db), with src's
+    * out-degree — the edge table of both rank loops.
     */
-  private def ndNodeCount(s: SparkSession, dir: String): Long =
-    ndCountCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => java.lang.Long.valueOf(
-        ndEdgesDeg(s, dir).select("src").distinct().count())).longValue()
-
-  private val ndCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+  private def withDegrees(prs: DataFrame): DataFrame = {
+    val edges = prs
+      .union(prs.select(col("db").as("da"), col("da").as("db")))
+      .toDF("src", "dst")
+    edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src")
+  }
 
   /** The PageRank rounds over a materialized edges-with-degree table.
     * No per-round checkpoints (r15): `ranks` appears exactly ONCE per
@@ -108,21 +106,13 @@ object Graph {
     */
   def pagerank(pairList: DataFrame,
       iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame = {
-    val prsRaw = pairList.toDF("da", "db")
-    val owned  = !Ckpt.isCheapScan(prsRaw) // see commonNeighbors
-    val prs    = if (owned) Ckpt(prsRaw) else prsRaw
-    val edges = prs
-      .union(prs.select(col("db").as("da"), col("da").as("db")))
-      .toDF("src", "dst")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").transform(Ckpt.apply)
-    if (owned) Dedup.freeCheckpoint(prs) // edgesDeg is materialized; the pair snapshot is dead
+    val edgesDeg = Ckpt.scoped(pairList.toDF("da", "db"))(withDegrees(_).transform(Ckpt.apply))
     val n = edgesDeg.select("src").distinct().count()
     // materialize the final ranks so the edge-sized generation can be
     // freed before returning (fixture path; the catalog path scans the
     // session-memoized table instead and returns a lazy plan)
     val ranks = prLoop(edgesDeg, n, iterations, damping).transform(Ckpt.apply)
-    Dedup.freeCheckpoint(edgesDeg)
+    Ckpt.free(edgesDeg)
     ranks.select(col("node").as("doc_id"), col("rank"))
   }
 
@@ -144,17 +134,22 @@ object Graph {
     * table it derives from.
     */
   private def ndRestart(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:nd-restart:$dir") {
-      val nodes = ndEdgesDeg(s, dir).select("src").distinct()
-      val seeds = nodes
-        .orderBy(graft.functions.TextHash.hash60(col("src").cast("string")), col("src"))
-        .limit(PprSeeds)
-        .select(col("src").as("node"), lit(1).as("is_seed"))
-      nodes.select(col("src").as("node"))
-        .join(broadcast(seeds), Seq("node"), "left")
-        .select(col("node"),
-          when(col("is_seed").isNotNull, lit(1.0 / PprSeeds)).otherwise(lit(0.0)).as("s"))
-    }
+    Ckpt.cached(s, s"graph:nd-restart:$dir")(restartMass(ndEdgesDeg(s, dir)))
+
+  /** (node, s) for every node of an edges-with-degree table: restart
+    * mass 1/[[PprSeeds]] on the seed nodes, 0 elsewhere.
+    */
+  private def restartMass(edgesDeg: DataFrame): DataFrame = {
+    val nodes = edgesDeg.select("src").distinct()
+    val seeds = nodes
+      .orderBy(graft.functions.TextHash.hash60(col("src").cast("string")), col("src"))
+      .limit(PprSeeds)
+      .select(col("src").as("node"), lit(1).as("is_seed"))
+    nodes.select(col("src").as("node"))
+      .join(broadcast(seeds), Seq("node"), "left")
+      .select(col("node"),
+        when(col("is_seed").isNotNull, lit(1.0 / PprSeeds)).otherwise(lit(0.0)).as("s"))
+  }
 
   /** Personalized PageRank — the seed-anchored variant of [[pagerank]]
     * that powers graph-based data SELECTION rather than inspection:
@@ -190,30 +185,13 @@ object Graph {
     */
   def ppr(pairList: DataFrame,
       iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame = {
-    val prsRaw = pairList.toDF("da", "db")
-    val owned  = !Ckpt.isCheapScan(prsRaw) // see commonNeighbors
-    val prs    = if (owned) Ckpt(prsRaw) else prsRaw
-    val edges = prs
-      .union(prs.select(col("db").as("da"), col("da").as("db")))
-      .toDF("src", "dst")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").transform(Ckpt.apply)
-    if (owned) Dedup.freeCheckpoint(prs)
-    val nodes = edgesDeg.select("src").distinct()
-    val seeds = nodes
-      .orderBy(graft.functions.TextHash.hash60(col("src").cast("string")), col("src"))
-      .limit(PprSeeds)
-      .select(col("src").as("node"), lit(1).as("is_seed"))
-    val sv = nodes.select(col("src").as("node"))
-      .join(broadcast(seeds), Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed").isNotNull, lit(1.0 / PprSeeds)).otherwise(lit(0.0)).as("s"))
-      .transform(Ckpt.apply)
+    val edgesDeg = Ckpt.scoped(pairList.toDF("da", "db"))(withDegrees(_).transform(Ckpt.apply))
+    val sv       = restartMass(edgesDeg).transform(Ckpt.apply)
     // materialize the final ranks so both input generations can be freed
     // (fixture path; the catalog path scans session-memoized tables)
     val ranks = pprLoop(edgesDeg, sv, iterations, damping).transform(Ckpt.apply)
-    Dedup.freeCheckpoint(edgesDeg)
-    Dedup.freeCheckpoint(sv)
+    Ckpt.free(edgesDeg)
+    Ckpt.free(sv)
     ranks.select(col("node").as("doc_id"), col("rank"))
   }
 
@@ -252,7 +230,7 @@ object Graph {
     */
   def trianglesNearDup(s: SparkSession, dir: String): DataFrame =
     // a cheap projection over the memoized minhash checkpoint — the
-    // [[triangles]] isCheapScan fast path scans those blocks directly
+    // [[triangles]] ensure fast path scans those blocks directly
     // instead of re-materializing a second session-lived copy
     triangles(Dedup.minhashShared(s, dir).select(col("da"), col("db")))
 
@@ -270,7 +248,7 @@ object Graph {
     * The pair list is localCheckpoint'ed once: it feeds three scans, and
     * recomputing the MinHash pipeline per scan would triple the dominant
     * cost — UNLESS it is already a cheap projection over a materialized
-    * checkpoint ([[graft.Ckpt.isCheapScan]]), in which case the three
+    * checkpoint ([[graft.Ckpt.ensure]]), in which case the three
     * scans read those blocks directly and a second session-lived copy
     * would be pure waste (r13 advice: the old `cacheKey` path
     * re-materialized the whole memoized minhash table).
@@ -559,16 +537,13 @@ object Graph {
         .sortWithinPartitions("m")
     }
 
-  /** Memoized row count of [[coPurchaseAdj]] (= directed edge count 2m)
-    * — modularity, louvain_move and kcore each ran it as a per-invocation
+  /** Memoized row count of [[coPurchaseAdj]] (= directed edge count 2m),
+    * the [[graft.Ckpt]] value entry `graph:adj-count:<dir>` —
+    * modularity, louvain_move and kcore each ran it as a per-invocation
     * scalar action over the same immutable memoized blocks (r15).
     */
   private def coPurchaseAdjCount(s: SparkSession, dir: String): Long =
-    adjCountCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => java.lang.Long.valueOf(coPurchaseAdj(s, dir).count())).longValue()
-
-  private val adjCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+    Ckpt.cachedValue(s, s"graph:adj-count:$dir")(coPurchaseAdj(s, dir).count())
 
   /** Memoized LPA label assignment of the co-purchase graph: feeds
     * communities, modularity, AND louvain_move — one 3-round LPA per
@@ -606,7 +581,7 @@ object Graph {
     // consumer (observed: 20 exchanges, zero reuse). With the checkpoint
     // the rounds run exactly once, mirroring modularity()'s discipline.
     val labels = lpaLabels(adj).transform(Ckpt.apply)
-    Dedup.freeCheckpoint(adj) // labels are materialized; the adjacency is dead
+    Ckpt.free(adj) // labels are materialized; the adjacency is dead
     communitiesOf(labels)
   }
 
@@ -620,15 +595,10 @@ object Graph {
   /** Checkpointed symmetrized adjacency (u, m) from an ordered pair list —
     * the shared first step of every co-purchase iteration.
     */
-  private def symAdj(pairList: DataFrame): DataFrame = {
-    val pl    = pairList.toDF("da", "db")
-    val owned = !Ckpt.isCheapScan(pl) // see commonNeighbors
-    val p     = if (owned) Ckpt(pl) else pl
-    val adj = p.union(p.select(col("db"), col("da"))).toDF("u", "m")
-      .transform(Ckpt.apply)
-    if (owned) Dedup.freeCheckpoint(p)
-    adj
-  }
+  private def symAdj(pairList: DataFrame): DataFrame =
+    Ckpt.scoped(pairList.toDF("da", "db")) { p =>
+      p.union(p.select(col("db"), col("da"))).toDF("u", "m").transform(Ckpt.apply)
+    }
 
   /** The LPA rounds of [[communities]], exposed so [[modularity]] can
     * score the same label assignment without re-stating the loop.
@@ -803,13 +773,13 @@ object Graph {
     * (old, neighbor+1) — is one |reached|-row equi-join plus one
     * partial-aggregated shuffle per round, the PageRank cost model with
     * min instead of a weighted sum. Distances are integers, so oracle
-    * parity needs no quantization; superseded generations release their
-    * checkpoint blocks (two live generations max).
+    * parity needs no quantization; only the final round's distances are
+    * checkpointed.
     */
   def bfs(pairList: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
     val adj = symAdj(pairList)
     val res = bfsOverAdj(adj, seeds, rounds)
-    Dedup.freeCheckpoint(adj)
+    Ckpt.free(adj)
     res
   }
 
@@ -825,22 +795,14 @@ object Graph {
     var dist = adj.select(col("u")).distinct()
       .join(seeds.toDF("u"), Seq("u"), "left_semi")
       .select(col("u").as("node"), lit(0L).as("dist"))
-    var lastCkpt: Option[DataFrame] = None
-    for (r <- 1 to rounds) {
-      var next = dist.select(col("node").as("m"), col("dist"))
+    for (_ <- 1 to rounds)
+      dist = dist.select(col("node").as("m"), col("dist"))
         .join(adj, "m")
         .select(col("u").as("node"), (col("dist") + 1).as("dist"))
         .union(dist.select(col("node"), col("dist")))
         .groupBy("node")
         .agg(min(col("dist")).as("dist"))
-      if (r == rounds) {
-        next = Ckpt(next)
-        lastCkpt.foreach(Dedup.freeCheckpoint)
-        lastCkpt = Some(next)
-      }
-      dist = next
-    }
-    dist.select(col("node").as("p_partkey"), col("dist"))
+    Ckpt(dist).select(col("node").as("p_partkey"), col("dist"))
   }
 
   /** Relaxation rounds for [[sssp]] (unrolled in the oracle). */
@@ -888,42 +850,27 @@ object Graph {
     * [[SsspRounds]]-edge paths, deterministically in both engines. All
     * arithmetic is long-integer: no float path sums, no quantization.
     */
-  def sssp(wadj: DataFrame, seeds: DataFrame, rounds: Int = SsspRounds): DataFrame = {
-    // ensure (not apply): the catalog path hands in the MEMOIZED weighted
-    // adjacency — already a checkpoint scan — and re-materializing it
-    // copied |E| blocks per invocation; fixture callers' raw plans still
-    // materialize. Never free a shared memoized scan (owned discipline).
-    val owned = !Ckpt.isCheapScan(wadj)
-    val adj   = Ckpt.ensure(wadj)
-    // Checkpoint cadence (r15, guide §1.2/§2.4): `dist` appears twice per
-    // round (relax ∪ carry), so an uncheckpointed loop doubles the
-    // logical subtree per round — but one round of doubling is fine, and
-    // AQE's runtime stage cache dedupes the duplicated shuffles. Cutting
-    // the cadence to every SECOND round halves the eager materialization
-    // actions (6 jobs + |V|-row block copies per query at sf0.1) while
-    // capping the logical blowup at 4 copies of a checkpoint scan.
-    // Values are untouched: checkpointing is semantically the identity.
-    var dist = adj.select(col("u")).distinct()
-      .join(seeds.toDF("u"), Seq("u"), "left_semi")
-      .select(col("u").as("node"), lit(0L).as("dist"))
-    var lastCkpt: Option[DataFrame] = None
-    for (r <- 1 to rounds) {
-      var next = dist.select(col("node").as("m"), col("dist"))
-        .join(adj, "m")
-        .select(col("u").as("node"), (col("dist") + col("w")).as("dist"))
-        .union(dist.select(col("node"), col("dist")))
-        .groupBy("node")
-        .agg(min(col("dist")).as("dist"))
-      if (r == rounds) {
-        next = Ckpt(next)
-        lastCkpt.foreach(Dedup.freeCheckpoint) // superseded generation
-        lastCkpt = Some(next)
-      }
-      dist = next
+  def sssp(wadj: DataFrame, seeds: DataFrame, rounds: Int = SsspRounds): DataFrame =
+    // scoped: the catalog path hands in the MEMOIZED weighted adjacency —
+    // already a checkpoint scan, neither copied nor freed here; fixture
+    // callers' raw plans are materialized and freed
+    Ckpt.scoped(wadj) { adj =>
+      // Only the final round's distances are checkpointed: `dist` appears
+      // twice per round (relax ∪ carry), so the logical plan doubles per
+      // round, and AQE's runtime stage cache dedupes the duplicated
+      // shuffles at the fixed round count.
+      var dist = adj.select(col("u")).distinct()
+        .join(seeds.toDF("u"), Seq("u"), "left_semi")
+        .select(col("u").as("node"), lit(0L).as("dist"))
+      for (_ <- 1 to rounds)
+        dist = dist.select(col("node").as("m"), col("dist"))
+          .join(adj, "m")
+          .select(col("u").as("node"), (col("dist") + col("w")).as("dist"))
+          .union(dist.select(col("node"), col("dist")))
+          .groupBy("node")
+          .agg(min(col("dist")).as("dist"))
+      Ckpt(dist).select(col("node").as("p_partkey"), col("dist"))
     }
-    if (owned) Dedup.freeCheckpoint(adj)
-    dist.select(col("node").as("p_partkey"), col("dist"))
-  }
 
   /** Core order and fixed peel-round count for [[kcore]] (unrolled in
     * the oracle). The fixture graphs reach the peeling fixpoint well
@@ -959,14 +906,9 @@ object Graph {
     * no quantization needed for oracle parity.
     */
   def kcore(pairList: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame = {
-    val pl    = pairList.toDF("da", "db")
-    val owned = !Ckpt.isCheapScan(pl) // see commonNeighbors
-    val p     = if (owned) Ckpt(pl) else pl
-    val adj = p.union(p.select(col("db"), col("da"))).toDF("u", "m")
-      .transform(Ckpt.apply)
-    if (owned) Dedup.freeCheckpoint(p) // never free a SHARED memoized scan
+    val adj = symAdj(pairList)
     val res = kcoreOverAdj(adj, k, rounds)
-    Dedup.freeCheckpoint(adj)
+    Ckpt.free(adj)
     res
   }
 
@@ -1000,7 +942,7 @@ object Graph {
       val nextCount = next.count()
       converged = nextCount == edgeCount
       edgeCount = nextCount
-      if (adjOwned) Dedup.freeCheckpoint(adj)
+      if (adjOwned) Ckpt.free(adj)
       adj = next
       adjOwned = true
       r += 1
@@ -1011,7 +953,7 @@ object Graph {
     val res = adj.groupBy("u").agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("p_partkey"), col("core_deg"))
       .transform(Ckpt.apply)
-    if (adjOwned) Dedup.freeCheckpoint(adj)
+    if (adjOwned) Ckpt.free(adj)
     res
   }
 

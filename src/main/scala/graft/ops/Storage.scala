@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Ckpt, Tables}
 
 /** Storage-layout operators: the two write-side techniques that pay for
   * themselves at 100 TB.
@@ -22,18 +21,16 @@ import graft.Tables
   *    only queryable interactively because of this directory-level
   *    pruning.
   *
-  * The derived tables are materialized at most once per (session, sf-dir)
-  * into the session warehouse (`spark-warehouse/`, a local stand-in for
-  * the lake); results are identical to querying the raw parquet, which is
-  * exactly what the DuckDB oracle does.
+  * The derived tables are materialized on first use, at most once per
+  * (application, sf-dir), into the session warehouse (`spark-warehouse/`,
+  * a local stand-in for the lake); results are identical to querying the
+  * raw parquet, which is exactly what the DuckDB oracle does.
   */
 object Storage {
   type Q = (SparkSession, String) => DataFrame
 
   val Buckets    = 8
   val PruneMonth = "1995-03"
-
-  private val built = new ConcurrentHashMap[String, Boolean]()
 
   /** Scratch dirs handed out by [[scratchDir]], removed best-effort at
     * JVM exit so repeated bench passes don't accumulate tmp copies.
@@ -88,10 +85,6 @@ object Storage {
   private def tag(dir: String): String =
     dir.replaceAll(".*/", "").replaceAll("[^A-Za-z0-9]", "_")
 
-  /** Idempotently materialize the bucketed/partitioned twins for `dir`.
-    * computeIfAbsent both de-dupes across the catalog's repeated calls
-    * (Bench runs every query 3x) and serializes concurrent first calls.
-    */
   /** Drop `table` and its warehouse directory. The warehouse outlives the
     * in-memory catalog across JVM runs, and saveAsTable refuses to create
     * a "new" managed table over a leftover location
@@ -104,9 +97,17 @@ object Storage {
     if (fs.exists(wh)) fs.delete(wh, true)
   }
 
-  private def ensure(s: SparkSession, dir: String): String = {
-    val t = tag(dir)
-    built.computeIfAbsent(s"${System.identityHashCode(s)}:$dir", { _ =>
+  /** Idempotently materialize the bucketed/partitioned twins for `dir`
+    * and return their table tag: the [[graft.Ckpt]] value entry
+    * `storage:twins:<dir>`, built on the first `bucket_join` or
+    * `part_prune` of an application and then reused (Bench runs every
+    * query 3x). Ckpt's lock serializes concurrent first calls; its build
+    * log shows the ETL's cost; `Ckpt.release(dir)` forgets the entry, so
+    * the next use rewrites the twins.
+    */
+  private def ensure(s: SparkSession, dir: String): String =
+    Ckpt.cachedValue(s, s"storage:twins:$dir") {
+      val t = tag(dir)
       Seq(s"graft_li_bkt_$t", s"graft_ord_bkt_$t", s"graft_ord_month_$t")
         .foreach(reset(s, _))
       Tables.lineitem(s, dir)
@@ -122,16 +123,13 @@ object Storage {
         .write.mode("overwrite")
         .partitionBy("o_month")
         .saveAsTable(s"graft_ord_month_$t")
-      true
-    })
-    t
-  }
+      t
+    }
 
-  /** Benchmark warm-up hook: materialize the derived tables up front so a
-    * timed `bucket_join`/`part_prune` measures the query, not the one-time
-    * ETL (which on a real lake is the writer's cost, not the reader's).
+  /** Build the derived tables now instead of on first use — for a
+    * harness that keeps the one-time ETL out of its timed queries.
     */
-  def warmup(s: SparkSession, dir: String): Unit = { ensure(s, dir); () }
+  def warmup(s: SparkSession, dir: String): Unit = ensure(s, dir)
 
   /** Revenue by order status through the co-located join. The merge hint
     * keeps the plan a sort-merge join (broadcast would also avoid the

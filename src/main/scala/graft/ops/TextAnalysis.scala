@@ -699,25 +699,20 @@ object TextAnalysis {
   def bpeTrain(s: SparkSession, dir: String): DataFrame =
     bpeFitShared(s, dir)._1
 
-  /** Memoized BPE fit per (application, sf-dir): text_bpe_train and
-    * text_bpe_apply consume the SAME [[BpeRounds]]-round training loop
-    * (~2 eager checkpoint actions per round), and each used to re-run it
-    * privately per invocation (r15, guide §2.4 — the
-    * [[graft.ops.Graph.coPurchaseEdges]] pair-cache discipline; both
-    * frames are Heaps-bounded word tables, held as executor blocks, and
-    * neither side is freed because both consumers stay live for the
-    * session).
+  /** Memoized BPE fit per (application, sf-dir), one [[graft.Ckpt]]
+    * entry `text:bpe:<dir>`: text_bpe_train and text_bpe_apply consume
+    * the SAME [[BpeRounds]]-round training loop (~2 eager checkpoint
+    * actions per round), and each used to re-run it privately per
+    * invocation (r15, guide §2.4). Both frames are Heaps-bounded word
+    * tables held as executor blocks; they stay for the session and are
+    * freed together by `Ckpt.release` or eviction.
     */
   private def bpeFitShared(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => bpeFit(toks(s, dir)))
-
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame)]()
+    Ckpt.cachedPair(s, s"text:bpe:$dir")(bpeFit(toks(s, dir)))
 
   def bpeTrainOf(tokens: DataFrame): DataFrame = {
     val (merges, seg) = bpeFit(tokens)
-    Dedup.freeCheckpoint(seg)
+    Ckpt.free(seg)
     merges
   }
 
@@ -753,7 +748,7 @@ object TextAnalysis {
           "replace(s, concat(l_sym, chr(31), r_sym), concat(l_sym, r_sym))").as("s"),
           col("c"))
         .transform(Ckpt.apply)
-      Dedup.freeCheckpoint(words)
+      Ckpt.free(words)
       words = next
     }
     val merges = bests.result().reduce(_ union _)

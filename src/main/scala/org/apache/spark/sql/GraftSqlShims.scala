@@ -57,6 +57,14 @@ object GraftSqlShims {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
+  /** Remove an RDD's blocks from the block manager, as `RDD.unpersist`
+    * does but without its WARN for a locally checkpointed RDD, whose
+    * blocks are all it has (`SparkContext.unpersistRDD` is
+    * `private[spark]`).
+    */
+  def unpersistRdd(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+
   /** Executor-side Tungsten page size — what SortExec hands to
     * UnsafeExternalRowSorter; `MemoryManager.pageSizeBytes` is
     * `private[spark]`.

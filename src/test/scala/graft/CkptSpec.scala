@@ -69,6 +69,20 @@ class CkptSpec extends AnyFunSuite with SparkTestBase {
     assert(ckptIds(Ckpt.cached(spark, key)(spark.range(50).toDF("id"))) == ckptIds(local))
   }
 
+  test("freeing checkpoints logs no WARN: superseded generations and a release") {
+    import spark.implicits._
+    // RDD.unpersist warns on every locally checkpointed RDD that its
+    // lineage cannot be recomputed; freeing a dead generation is the
+    // point, so the free path must say nothing
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L)).toDF("da", "db")
+    val lines = warnings {
+      assert(ops.Graph.pagerank(pairs).count() == 6L)
+      Ckpt.cached(spark, "warntest:entry")(pairs).count()
+      assert(Ckpt.release("warntest:") == 1)
+    }
+    assert(lines.isEmpty, lines.mkString("\n"))
+  }
+
   test("chaos: reliable checkpoints survive block loss; local blocks are gone for good") {
     // localCheckpoint truncates lineage — once its blocks are wiped
     // (the single-JVM stand-in for losing an executor), the scan is

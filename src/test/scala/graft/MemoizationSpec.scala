@@ -20,6 +20,9 @@ class MemoizationSpec extends AnyFunSuite with SparkTestBase {
   private def scanIds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
 
+  /** Rows `key` has in the build log. */
+  private def builds(key: String): Int = Ckpt.buildLog.count(_._1 == key)
+
   test("repeated catalog invocations scan one materialization, not fresh builds") {
     for (q <- Seq("dedup_minhash", "dedup_ngram", "dedup_containment",
                   "dedup_clusters", "pipeline_clean_corpus")) {
@@ -77,7 +80,7 @@ class MemoizationSpec extends AnyFunSuite with SparkTestBase {
     val before = ops.TextAnalysis.qualityShared(spark, Sf0001)
     val rows   = before.collect().toSet
     val ids    = scanIds(before)
-    val buildsBefore = Ckpt.buildLog.count(_._1 == s"text:quality:$Sf0001")
+    val buildsBefore = builds(s"text:quality:$Sf0001")
     assert(Ckpt.release(Sf0001) > 0, "release found no entries for the test dir")
     // blocks are gone: the released checkpoints no longer sit in the
     // block manager's persistent-RDD registry
@@ -89,7 +92,7 @@ class MemoizationSpec extends AnyFunSuite with SparkTestBase {
     val after = ops.TextAnalysis.qualityShared(spark, Sf0001)
     assert(scanIds(after) != ids, "release did not force a rebuild")
     assert(after.collect().toSet == rows, "rebuilt entry differs from the released one")
-    assert(Ckpt.buildLog.count(_._1 == s"text:quality:$Sf0001") == buildsBefore + 1,
+    assert(builds(s"text:quality:$Sf0001") == buildsBefore + 1,
       "rebuild after release must appear in the build log")
   }
 
@@ -111,14 +114,56 @@ class MemoizationSpec extends AnyFunSuite with SparkTestBase {
 
   test("co-purchase edges are one Ckpt entry: logged once, rebuilt after release") {
     val key = s"graph:edges:$Sf0001"
-    def edgeBuilds = Ckpt.buildLog.count(_._1 == key)
     Ckpt.release(Sf0001)
-    val b0 = edgeBuilds
+    val b0 = builds(key)
     SparkEntry.queries("graph_modularity")(spark, Sf0001).collect()
-    assert(edgeBuilds == b0 + 1, s"graph_modularity logged $key ${edgeBuilds - b0} times")
+    assert(builds(key) == b0 + 1, s"graph_modularity logged $key ${builds(key) - b0} times")
     Ckpt.release(Sf0001)
     SparkEntry.queries("graph_modularity")(spark, Sf0001).collect()
-    assert(edgeBuilds == b0 + 2, "release(dir) left the co-purchase edges standing")
+    assert(builds(key) == b0 + 2, "release(dir) left the co-purchase edges standing")
+  }
+
+  test("the BPE fit is one Ckpt entry: logged once, freed by release, rebuilt bit-equal") {
+    val key = s"text:bpe:$Sf0001"
+    Ckpt.release(Sf0001)
+    val b0    = builds(key)
+    val train = SparkEntry.queries("text_bpe_train")(spark, Sf0001)
+    assert(builds(key) == b0 + 1, s"text_bpe_train logged $key ${builds(key) - b0} times")
+    val apply = SparkEntry.queries("text_bpe_apply")(spark, Sf0001)
+    val rows  = apply.collect().toSet
+    assert(builds(key) == b0 + 1, "text_bpe_apply refit the BPE merges text_bpe_train built")
+    // both frames of the fit (and every other entry for the dir) leave
+    // the block manager on release
+    val ids = scanIds(train) ++ scanIds(apply)
+    Ckpt.release(Sf0001)
+    val stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    assert(ids.intersect(stored).isEmpty,
+      s"released BPE fit still holds blocks: ${ids.intersect(stored)}")
+    val again = SparkEntry.queries("text_bpe_apply")(spark, Sf0001).collect().toSet
+    assert(builds(key) == b0 + 2, "the next text_bpe_apply after release did not refit")
+    assert(again == rows, "refit text_bpe_apply differs from the released fit's rows")
+  }
+
+  test("the co-purchase adjacency count is one Ckpt entry: logged once, dropped by release") {
+    val key = s"graph:adj-count:$Sf0001"
+    Ckpt.release(Sf0001)
+    val b0 = builds(key)
+    SparkEntry.queries("graph_modularity")(spark, Sf0001).collect()
+    assert(builds(key) == b0 + 1, s"graph_modularity logged $key ${builds(key) - b0} times")
+    SparkEntry.queries("graph_kcore")(spark, Sf0001).collect()
+    assert(builds(key) == b0 + 1, "graph_kcore recounted the memoized adjacency")
+    Ckpt.release(Sf0001)
+    SparkEntry.queries("graph_kcore")(spark, Sf0001).collect()
+    assert(builds(key) == b0 + 2, "release(dir) left the adjacency count standing")
+  }
+
+  test("the storage twins are one Ckpt entry, built on first use by bucket_join or part_prune") {
+    val key = s"storage:twins:$Sf0001"
+    Ckpt.release(key)
+    val b0 = builds(key)
+    SparkEntry.queries("bucket_join")(spark, Sf0001).collect()
+    SparkEntry.queries("part_prune")(spark, Sf0001).collect()
+    assert(builds(key) == b0 + 1, s"bucket_join + part_prune logged $key ${builds(key) - b0} times")
   }
 
   test("storage-fraction LRU eviction drops old entries, protects the MRU window") {

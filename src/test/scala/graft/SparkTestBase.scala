@@ -41,6 +41,26 @@ trait SparkTestBase {
   def topKExec(df: org.apache.spark.sql.DataFrame): graft.plans.GroupedTopKExec =
     collectExec(df.queryExecution.executedPlan) { case g: graft.plans.GroupedTopKExec => g }.head
 
+  /** The WARN-and-above log lines emitted while `f` runs. */
+  def warnings(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines   = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("graft-test-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try f
+    finally { root.removeAppender(capture); capture.stop() }
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
   /** Set session confs for the duration of `f`, restoring prior values. */
   def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
     val prior = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

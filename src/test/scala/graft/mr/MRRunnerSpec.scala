@@ -1,10 +1,6 @@
 package graft.mr
 
 import scala.jdk.CollectionConverters._
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.LogEvent
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,21 +79,8 @@ class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
     // logs FileStreamSink's "Assume no metadata directory" WARN, with a
     // FileNotFoundException stack trace, on every read
     val (in, out) = writeFixture()
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val capture = new AbstractAppender("mrrunner-capture", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN))
-          lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    capture.start()
-    val root = LogManager.getRootLogger.asInstanceOf[org.apache.logging.log4j.core.Logger]
-    root.addAppender(capture)
-    try MRRunner.run(spark, "indexer", s"$in/pg-*.txt", out, nreduce = 2)
-    finally {
-      root.removeAppender(capture)
-      capture.stop()
-    }
-    assert(lines.isEmpty, lines.asScala.mkString("\n"))
+    val lines = warnings(MRRunner.run(spark, "indexer", s"$in/pg-*.txt", out, nreduce = 2))
+    assert(lines.isEmpty, lines.mkString("\n"))
   }
 
   test("main validates its arguments before any session work") {

@@ -443,6 +443,18 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       s"fused output != driver recompute (${got.length} vs ${want.size} rows)")
   }
 
+  test("sim_rrf_fusion: each fused list has one row per (q, d) on sf0.001") {
+    // the union + grouped max fusion equals the outer join on (q, d) only
+    // while neither list repeats a pair; a repeat would collapse silently
+    val (lex, sem) = Curation.rrfLists(spark, Sf0001)
+    for ((name, list) <- Seq("lex" -> lex, "sem" -> sem)) {
+      val rows = list.select("q", "d").as[(Long, Long)].collect()
+      assert(rows.nonEmpty, s"$name list is empty")
+      val dups = rows.groupBy(identity).collect { case (k, v) if v.length > 1 => k }
+      assert(dups.isEmpty, s"$name list repeats (q, d): ${dups.take(5).mkString(", ")}")
+    }
+  }
+
   test("curate_t_closeness: 0 on a mirror group, hand-computed drift, leak l-diversity misses") {
     import java.sql.Timestamp
     def ev(h: Int, t: String) = (new Timestamp(h * 3600000L), t, 1.0)
