@@ -26,7 +26,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // session config (AQE, shuffled-hash preference, UTC, locale pin,
-    // SPARK_GRAFT_LOCAL_DIR / SPARK_GRAFT_CONF) lives in graft.Sessions —
+    // SPARK_GRAFT_CONF) lives in graft.Sessions —
     // one builder for Bench/Verify/Explain/probes so verified plans and
     // committed plan dumps match what the bench times (r15 verdict item 3)
     val spark = Sessions.local(cpus)

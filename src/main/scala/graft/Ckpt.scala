@@ -242,4 +242,35 @@ object Ckpt {
       df.checkpoint(eager = true)
     } else df.localCheckpoint(eager = true)
   }
+
+  /** Number of memoized entries, for specs. */
+  private[graft] def entries: Int = cache.size()
+
+  /** One input frame of a memoized pipeline and the memo decision for
+    * the stages built over it — the only thing a catalog entry and a
+    * library call of the same pipeline do differently. With a memo key
+    * (a catalog entry passes its family and data dir), [[stage]] is
+    * [[cached]] under `<family>:<what>:<dir>`: built once per session,
+    * logged, released with the dir. Without one (the `*Of(frame)`
+    * library forms), [[stage]] materializes each stage once for this
+    * handle: nothing enters the memo map or [[buildLog]], and the blocks
+    * are the caller's, freeable once the handle and its frames are dropped.
+    */
+  final class Stages private (val in: DataFrame, memo: Option[(String, String)]) {
+    private val own = scala.collection.mutable.HashMap[String, DataFrame]()
+
+    def stage(what: String)(build: => DataFrame): DataFrame = memo match {
+      case Some((family, dir)) => cached(in.sparkSession, s"$family:$what:$dir")(build)
+      case None => own.getOrElse(what, { val df = apply(build); own(what) = df; df })
+    }
+  }
+
+  object Stages {
+    /** Catalog form: stages memoized per session, keyed by `dir`. */
+    def apply(in: DataFrame, family: String, dir: String): Stages =
+      new Stages(in, Some((family, dir)))
+
+    /** Library form: each stage materialized once for this handle only. */
+    def apply(in: DataFrame): Stages = new Stages(in, None)
+  }
 }

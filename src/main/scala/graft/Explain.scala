@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-inspection utility: prints the formatted physical plan of the
   * named catalog queries (all of them with no args). Used to audit that
@@ -13,6 +13,9 @@ import org.apache.spark.sql.SparkSession
   * post-execution adaptive plan — the only place AQE's runtime stage
   * reuse (ReusedQueryStage / shared shuffle stages) is visible; the
   * static formatted plan always shows repeated subtrees un-reused.
+  *
+  * Ids that vary between JVM runs are renumbered per plan
+  * ([[stableIds]]), so two dumps of one commit diff empty.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -25,11 +28,31 @@ object Explain {
     names.foreach { n =>
       println(s"===== $n")
       val df = SparkEntry.queries(n)(spark, sfDir)
-      if (exec) {
-        df.count()
-        println(df.queryExecution.executedPlan.toString)
-      } else df.explain("formatted")
+      val plan =
+        if (exec) { df.count(); df.queryExecution.executedPlan.toString }
+        else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      println(stableIds(plan))
     }
     spark.stop()
   }
+
+  /** Renumber, within one plan and in order of first appearance, the ids
+    * that change between JVM runs of the same code, so two dumps of the
+    * same plans diff empty: expression ids (`doc_id#12L`), higher-order
+    * function variables (`lambda x_46`, a JVM-wide counter, so they also
+    * shift when an earlier query builds one more or fewer), exchange
+    * `plan_id=`s, RDD ids (`RDD[45]`), lambda class names and identity
+    * hashes of captured objects (`$$Lambda$661/0x7f…@27a99b1e`), and the
+    * random suffix of [[graft.ops.Storage]]'s temp dirs.
+    */
+  private def stableIds(plan: String): String =
+    Volatile.foldLeft(plan) { (text, re) =>
+      val ids = scala.collection.mutable.HashMap[String, Int]()
+      re.replaceAllIn(text, m => ids.getOrElseUpdate(m.matched, ids.size).toString)
+    }
+
+  private val Volatile = Seq(
+    "(?<=#)\\d+", "(?<=lambda [a-z]{1,8}_)\\d+", "(?<=plan_id=)\\d+", "(?<=RDD\\[)\\d+(?=\\])",
+    "(?<=\\$Lambda\\$)\\d+/0x\\p{XDigit}+", "(?<=@)\\p{XDigit}{1,8}\\b",
+    "(?<=/graft-[a-z]{1,8}-)\\d+").map(_.r)
 }

@@ -29,11 +29,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Env knobs (honored by every main so A/Bs and the driver's
   * lower-core scaling run see identical engines):
-  *   - `SPARK_GRAFT_LOCAL_DIR` — scratch dir for shuffle files and
-  *     spilled localCheckpoint blocks (round-13 checkpoint-I/O probe).
   *   - `SPARK_GRAFT_CONF="k=v;k=v"` — ad-hoc session-conf overrides for
-  *     config A/Bs (guide §1: measure before adopting). The driver
-  *     leaves it unset; adopted winners move into the defaults above.
+  *     config A/Bs, e.g. `spark.local.dir=<dir>` for the shuffle and
+  *     checkpoint scratch. Unset by default; a setting measured to win
+  *     moves into the defaults above.
   */
 object Sessions {
   /** Shared builder: `master` and the shuffle-partition count vary by
@@ -52,10 +51,6 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach { d =>
-      new java.io.File(d).mkdirs()
-      b.config("spark.local.dir", d)
-    }
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -44,6 +44,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // names the query that any following log line comes from
+      System.err.println(s"[verify] $name")
       // dump and summary fail INDEPENDENTLY: a summary-side error must
       // not record a successfully-dumped query as failed (the dump is
       // what the driver's own gate reads)

@@ -260,7 +260,7 @@ object Curation {
     * union, so the order is total).
     */
   def kmvOverlap(s: SparkSession, dir: String): DataFrame =
-    kmvOverlapOf(withToks(s, dir), cacheKey = Some(s"curate:kmv:$dir"))
+    kmvOverlapOn(Ckpt.Stages(withToks(s, dir), "curate", dir))
 
   /** Vocabulary depth for [[jsDivergence]] — the top-K global tokens the
     * per-source distributions restrict to (total order: count desc,
@@ -323,31 +323,30 @@ object Curation {
   }
 
   /** The k-row-per-source bottom-k sketch shared by [[kmvOverlapOf]] and
-    * [[kmvSetAlgOf]] — the ONLY corpus-sized computation either makes.
+    * [[kmvSetAlgOf]] — the ONLY corpus-sized computation either makes —
+    * as the `kmv` stage of a tokenized-documents handle
+    * ([[graft.Ckpt.Stages]]): BOTH catalog entries share one memoized
+    * sketch per session (the returned frames scan it lazily, so
+    * per-invocation checkpoints could never be freed and accumulated
+    * under repeated catalog runs; the sketch is
+    * k-per-source bounded, so one generation is tiny), and a library
+    * `*Of(toks)` call materializes it once for that call.
     */
-  /** `cacheKey` (catalog path): BOTH kmv queries share one memoized
-    * sketch per application ([[graft.Ckpt.cached]]) — the returned
-    * frames scan it lazily, so per-invocation checkpoints could never
-    * be freed and accumulated under repeated gate/bench runs (r8
-    * advice). The sketch is k-per-source bounded, so one cached
-    * generation is tiny. Spec callers pass None.
-    */
-  private def kmvSketch(
-      toks: DataFrame, cacheKey: Option[String]): DataFrame = {
-    val sh = toks
+  private def kmvSketch(h: Ckpt.Stages): DataFrame = h.stage("kmv") {
+    val sh = h.in
       .select(col("source"), explode(TextHash.shingles(col("toks"), 3)).as("shs"))
       .select(col("source"), TextHash.hash60(col("shs")).as("sh"))
       .distinct()
     val wSrc = Window.partitionBy("source").orderBy("sh")
-    val sk = sh.withColumn("rn", row_number().over(wSrc))
+    sh.withColumn("rn", row_number().over(wSrc))
       .filter(col("rn") <= KmvK)
       .select("source", "sh")
-    cacheKey.fold(Ckpt(sk))(k => Ckpt.cached(toks.sparkSession, k)(sk))
   }
 
-  private[ops] def kmvOverlapOf(
-      toks: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    val sk = kmvSketch(toks, cacheKey)
+  private[ops] def kmvOverlapOf(toks: DataFrame): DataFrame = kmvOverlapOn(Ckpt.Stages(toks))
+
+  private def kmvOverlapOn(h: Ckpt.Stages): DataFrame = {
+    val sk = kmvSketch(h)
     val srcs = sk.select("source").distinct()
     val pairs = srcs.select(col("source").as("source_a"))
       .crossJoin(srcs.select(col("source").as("source_b")))
@@ -388,7 +387,7 @@ object Curation {
 
   /** Catalog entry: KMV set-algebra cardinalities across sources. */
   def kmvSetAlg(s: SparkSession, dir: String): DataFrame =
-    kmvSetAlgOf(withToks(s, dir), cacheKey = Some(s"curate:kmv:$dir"))
+    kmvSetAlgOn(Ckpt.Stages(withToks(s, dir), "curate", dir))
 
   /** Set-ALGEBRA estimates from the same bottom-k sketches as
     * [[kmvOverlapOf]] — the planner's numbers rather than the analyst's
@@ -411,9 +410,10 @@ object Curation {
     * Scale shape: identical to [[kmvOverlapOf]] — everything after the
     * one sketch build is bounded by source_count·k rows.
     */
-  private[ops] def kmvSetAlgOf(
-      toks: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    val sk = kmvSketch(toks, cacheKey)
+  private[ops] def kmvSetAlgOf(toks: DataFrame): DataFrame = kmvSetAlgOn(Ckpt.Stages(toks))
+
+  private def kmvSetAlgOn(h: Ckpt.Stages): DataFrame = {
+    val sk = kmvSketch(h)
     val sstats = sk.groupBy("source")
       .agg(count(lit(1)).as("cnt"), max("sh").as("maxh"))
     val srcs = sstats.select("source")

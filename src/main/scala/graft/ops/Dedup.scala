@@ -132,43 +132,42 @@ object Dedup {
   // .cache() (which pays a serialize-and-store pass and pins executor
   // storage memory for the rest of the session).
 
+  /** The dedup stages over one documents frame ([[Ckpt.Stages]]): a
+    * catalog entry memoizes each under `dedup:<what>:<dir>`, a library
+    * `*Of(docs)` call materializes each once for that call. Both run the
+    * same assembly below; only the memo decision differs.
+    */
+  private def memo(s: SparkSession, dir: String): Ckpt.Stages =
+    Ckpt.Stages(Tables.documents(s, dir), "dedup", dir)
+
   /** Distinct (doc, shingle-hash) pairs: shingles are hashed to 60-bit
     * longs BEFORE the distinct, so every downstream shuffle/join moves
     * 8-byte keys instead of ~30-char strings. The DuckDB oracle applies
     * the same hash pre-distinct, so the (astronomically unlikely, ~2^-61
     * per pair) hash collisions are mirrored exactly.
     *
-    * Memoized per application ([[graft.Ckpt.cached]] — the
-    * coPurchaseEdges discipline): EIGHT catalog queries (ngram,
-    * containment ×2, fuzzy ×2, minhash, incremental, and everything
-    * downstream of minhash) start from this identical tokenize + hash +
-    * distinct over the corpus, and each used to build and checkpoint its
-    * own generation — at sf1 that is ~8 rebuilds of a 10⁸-row table per
+    * The `shingles` stage: EIGHT catalog queries (ngram, containment ×2,
+    * fuzzy ×2, minhash, incremental, and everything downstream of
+    * minhash) start from this identical tokenize + hash + distinct over
+    * the corpus, and each used to build and checkpoint its own
+    * generation — at sf1 that is ~8 rebuilds of a 10⁸-row table per
     * catalog pass, and the per-query checkpoints were never freeable
-    * (the returned frames scan them lazily). One generation per session
-    * now serves them all; consumers' AUDITED plans are unchanged (they
-    * already scanned a checkpoint's LogicalRDD — only the builder
-    * moved), and spec fixtures keep the uncached [[docShinglesOf]].
+    * (the returned frames scan them lazily). One memoized generation per
+    * session now serves them all.
     */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:shingles:$dir")(shinglesBuild(s, dir))
+    shingles(memo(s, dir))
 
-  /** The exact thunk [[docShingles]] materializes — split out so
-    * [[buildPlansForAudit]] hands the lint the REAL executed tree.
-    */
-  private def shinglesBuild(s: SparkSession, dir: String): DataFrame =
-    docShinglesOf(Tables.documents(s, dir))
+  private def shingles(h: Ckpt.Stages): DataFrame =
+    h.stage("shingles")(docShinglesOf(h.in))
 
-  /** Memoized LSH band-signature table of the corpus — shared by
-    * minhash, incremental, fuzzy, and fuzzyCapped (same rationale as
-    * [[docShingles]]: the 36-lane MinHash aggregation is identical in
+  /** LSH band-signature stage — shared by minhash, incremental, fuzzy,
+    * and fuzzyCapped (the 36-lane MinHash aggregation is identical in
     * all four and was rebuilt per query).
     */
-  private def bandsShared(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:bands:$dir")(bandsBuild(s, dir))
+  private def bands(h: Ckpt.Stages): DataFrame = h.stage("bands")(bandsBuild(h))
 
-  private def bandsBuild(s: SparkSession, dir: String): DataFrame =
-    bandSignatures(docShingles(s, dir))
+  private def bandsBuild(h: Ckpt.Stages): DataFrame = bandSignatures(shingles(h))
 
   def docShinglesOf(docs: DataFrame): DataFrame =
     docs
@@ -204,8 +203,8 @@ object Dedup {
     verifyJaccardSized(pairs,
       shingleSets.groupBy("doc_id").agg(count(lit(1)).as("n")))
 
-  /** [[verifyJaccard]] over an already-built size table (catalog callers
-    * pass the memoized [[shingleSizes]]; fixture callers derive it).
+  /** [[verifyJaccard]] over an already-built size table (the
+    * [[shingleSizes]] stage).
     */
   private def verifyJaccardSized(pairs: DataFrame, sizes: DataFrame): DataFrame =
     pairs
@@ -215,27 +214,26 @@ object Dedup {
       .filter(col("jaccard") >= JaccardThreshold)
       .select("da", "db", "jaccard")
 
-  /** Memoized per-shingle stats of the corpus table: document frequency
-    * and the min-doc representative. Feeds the df-capped blocking of
-    * ngram/containment AND containmentCapped's canonical election — three
-    * queries re-ran the identical full-stream aggregation.
+  /** Per-shingle stats stage: document frequency and the min-doc
+    * representative. Feeds the df-capped blocking of ngram/containment
+    * AND containmentCapped's canonical election — three queries re-ran
+    * the identical full-stream aggregation.
     */
-  private def shingleDf(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:shdf:$dir")(shingleDfBuild(s, dir))
+  private def shingleDf(h: Ckpt.Stages): DataFrame = h.stage("shdf")(shingleDfBuild(h))
 
-  private def shingleDfBuild(s: SparkSession, dir: String): DataFrame =
-    docShingles(s, dir).groupBy("sh")
+  private def shingleDfBuild(h: Ckpt.Stages): DataFrame =
+    shingles(h).groupBy("sh")
       .agg(count(lit(1)).as("df"), min("doc_id").as("rep"))
 
-  /** Memoized per-doc shingle-set sizes — every exact-verify consumer
+  /** Per-doc shingle-set sizes stage — every exact-verify consumer
     * (minhash, incremental, ngram, containment ×2) needs the identical
     * doc-bounded table.
     */
-  private def shingleSizes(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:shsizes:$dir")(shingleSizesBuild(s, dir))
+  private def shingleSizes(h: Ckpt.Stages): DataFrame =
+    h.stage("shsizes")(shingleSizesBuild(h))
 
-  private def shingleSizesBuild(s: SparkSession, dir: String): DataFrame =
-    docShingles(s, dir).groupBy("doc_id").agg(count(lit(1)).as("n"))
+  private def shingleSizesBuild(h: Ckpt.Stages): DataFrame =
+    shingles(h).groupBy("doc_id").agg(count(lit(1)).as("n"))
 
   /** Document-frequency cap for exact-shingle blocking ([[ngram]],
     * [[containment]]). Candidate pairs are generated only from shingles
@@ -302,6 +300,44 @@ object Dedup {
       .groupBy("da", "db")
       .agg(count(lit(1)).as("i"))
 
+  /** The viable-independent blocking stages of [[cappedCounts]]: the
+    * hot (df > cap) shingle stream, per-doc hot counts, per-doc sizes,
+    * and the rare-pair shared counts — identical across ngram and both
+    * containment variants, so each is one stage, built once per session
+    * on the catalog path.
+    */
+  private final case class CappedBlocks(
+      hot: DataFrame, hotN: DataFrame, sizes: DataFrame, iRare: DataFrame)
+
+  private def cappedBlocks(h: Ckpt.Stages): CappedBlocks =
+    CappedBlocks(
+      hot(h),
+      h.stage("hotn")(hotNBuild(h)),
+      shingleSizes(h),
+      h.stage("irare")(iRareBuild(h)))
+
+  private def hot(h: Ckpt.Stages): DataFrame = h.stage("hot")(hotBuild(h))
+
+  private def hotBuild(h: Ckpt.Stages): DataFrame =
+    shingles(h).join(
+      shingleDf(h).filter(col("df") > DfCap).select("sh"),
+      Seq("sh"), "left_semi")
+
+  private def hotNBuild(h: Ckpt.Stages): DataFrame =
+    hot(h).groupBy("doc_id").agg(count(lit(1)).as("hn"))
+
+  private def iRareBuild(h: Ckpt.Stages): DataFrame = {
+    val rare = shingles(h).join(
+      shingleDf(h).filter(col("df") <= DfCap).select("sh"),
+      Seq("sh"), "left_semi")
+    rare
+      .select(col("doc_id").as("da"), col("sh"))
+      .join(rare.select(col("doc_id").as("db"), col("sh")), "sh")
+      .filter(col("da") < col("db"))
+      .groupBy("da", "db")
+      .agg(count(lit(1)).as("i_rare"))
+  }
+
   /** Fused df-capped blocking + exact intersection count for the
     * exact-shingle family — semantically identical to
     * `interCounts(dfCappedCands(sh), sh)` but one full recount cheaper:
@@ -313,67 +349,7 @@ object Dedup {
     * doc contains, not its whole shingle set. `i = i_rare + i_hot` is
     * the exact |A∩B|, split by the df boundary.
     */
-  /** The viable-independent intermediates of [[interCountsCapped]]: the
-    * hot (df > cap) shingle stream, per-doc hot counts, per-doc sizes,
-    * and the rare-pair shared counts — identical across ngram and both
-    * containment variants, so the catalog path memoizes each
-    * ([[cappedBlocks]]) while fixtures derive them inline
-    * ([[cappedBlocksOf]]).
-    */
-  private[ops] final case class CappedBlocks(
-      hot: DataFrame, hotN: DataFrame, sizes: DataFrame, iRare: DataFrame)
-
-  private def rarePairCounts(rare: DataFrame): DataFrame =
-    rare
-      .select(col("doc_id").as("da"), col("sh"))
-      .join(rare.select(col("doc_id").as("db"), col("sh")), "sh")
-      .filter(col("da") < col("db"))
-      .groupBy("da", "db")
-      .agg(count(lit(1)).as("i_rare"))
-
-  private def cappedBlocksOf(sh: DataFrame): CappedBlocks = {
-    val withDf = sh.join(sh.groupBy("sh").agg(count(lit(1)).as("df")), "sh")
-    val rare   = withDf.filter(col("df") <= DfCap).select("doc_id", "sh")
-    val hot    = withDf.filter(col("df") > DfCap).select("doc_id", "sh")
-    CappedBlocks(
-      hot,
-      hot.groupBy("doc_id").agg(count(lit(1)).as("hn")),
-      sh.groupBy("doc_id").agg(count(lit(1)).as("n")),
-      rarePairCounts(rare))
-  }
-
-  /** Catalog-path [[CappedBlocks]]: every piece is memoized per
-    * application, keyed off the shared [[docShingles]] / [[shingleDf]]
-    * checkpoints, so ngram + containment + containmentCapped build the
-    * blocking machinery once per session instead of three times.
-    */
-  private def cappedBlocks(s: SparkSession, dir: String): CappedBlocks =
-    CappedBlocks(
-      Ckpt.cached(s, s"dedup:hot:$dir")(hotBuild(s, dir)),
-      Ckpt.cached(s, s"dedup:hotn:$dir")(hotNBuild(s, dir)),
-      shingleSizes(s, dir),
-      Ckpt.cached(s, s"dedup:irare:$dir")(iRareBuild(s, dir)))
-
-  private def hotBuild(s: SparkSession, dir: String): DataFrame =
-    docShingles(s, dir).join(
-      shingleDf(s, dir).filter(col("df") > DfCap).select("sh"),
-      Seq("sh"), "left_semi")
-
-  private def hotNBuild(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:hot:$dir")(hotBuild(s, dir))
-      .groupBy("doc_id").agg(count(lit(1)).as("hn"))
-
-  private def iRareBuild(s: SparkSession, dir: String): DataFrame =
-    rarePairCounts(docShingles(s, dir).join(
-      shingleDf(s, dir).filter(col("df") <= DfCap).select("sh"),
-      Seq("sh"), "left_semi"))
-
-  private def interCountsCapped(
-      sh: DataFrame,
-      viable: (Column, Column, Column) => Column): DataFrame =
-    interCountsCappedFrom(cappedBlocksOf(sh), viable)
-
-  private def interCountsCappedFrom(
+  private def cappedCounts(
       b: CappedBlocks,
       viable: (Column, Column, Column) => Column): DataFrame = {
     val CappedBlocks(hot, hotN, sizes, iRare) = b
@@ -547,20 +523,12 @@ object Dedup {
   private val ngramViable = (iub: Column, na: Column, nb: Column) =>
     iub.cast("double") / (na + nb - iub) >= JaccardThreshold
 
-  def ngram(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardSized(
-      interCountsCappedFrom(cappedBlocks(s, dir), ngramViable),
-      shingleSizes(s, dir))
+  def ngram(s: SparkSession, dir: String): DataFrame = ngramOn(memo(s, dir))
 
-  def ngramOf(docs: DataFrame): DataFrame = {
-    // the shingle table feeds seven subtrees (df counts, both pair-join
-    // sides, both hot-remainder sides, sizes); materialize the
-    // tokenize+hash+distinct ONCE — exchange reuse does not cover every
-    // branch here (measured: the 10× probe dropped ~4× with the
-    // checkpoint), same tradeoff as dedup_clusters' edge materialization
-    val sh = docShinglesOf(docs).transform(Ckpt.apply)
-    verifyJaccard(interCountsCapped(sh, ngramViable), sh)
-  }
+  def ngramOf(docs: DataFrame): DataFrame = ngramOn(Ckpt.Stages(docs))
+
+  private def ngramOn(h: Ckpt.Stages): DataFrame =
+    verifyJaccardSized(cappedCounts(cappedBlocks(h), ngramViable), shingleSizes(h))
 
   /** Minimum directional containment for [[containment]]. */
   val ContainMin = 0.8
@@ -583,24 +551,17 @@ object Dedup {
     iub.cast("double") / na.cast("double") >= ContainMin ||
       iub.cast("double") / nb.cast("double") >= ContainMin
 
-  def containment(s: SparkSession, dir: String): DataFrame = {
-    val b = cappedBlocks(s, dir)
-    containmentFinish(interCountsCappedFrom(b, containViable), b.sizes)
-  }
+  def containment(s: SparkSession, dir: String): DataFrame = containmentOn(memo(s, dir))
 
-  def containmentOf(docs: DataFrame): DataFrame = {
-    val sh = docShinglesOf(docs).transform(Ckpt.apply) // see ngramOf
-    containmentFinish(
-      interCountsCapped(sh, containViable),
-      sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
-  }
+  def containmentOf(docs: DataFrame): DataFrame = containmentOn(Ckpt.Stages(docs))
 
-  private def containmentFinish(ic: DataFrame, sizes: DataFrame): DataFrame = {
+  private def containmentOn(h: Ckpt.Stages): DataFrame = {
+    val b  = cappedBlocks(h)
     val ca = col("i").cast("double") / col("na").cast("double")
     val cb = col("i").cast("double") / col("nb").cast("double")
-    ic
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+    cappedCounts(b, containViable)
+      .join(b.sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
+      .join(b.sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
       .select(col("da"), col("db"), ca.as("contain_a"), cb.as("contain_b"))
       .filter(col("contain_a") >= ContainMin || col("contain_b") >= ContainMin)
   }
@@ -622,28 +583,16 @@ object Dedup {
     * either directional containment ≥ [[ContainMin]].
     */
   def containmentCapped(s: SparkSession, dir: String): DataFrame =
-    containmentCappedCore(
-      docShingles(s, dir),
-      shingleDf(s, dir).filter(col("df") <= DfCap)
-        .select(col("sh"), col("df").as("m"), col("rep")),
-      cappedBlocks(s, dir))
+    containmentCappedOn(memo(s, dir))
 
-  def containmentCappedOf(docs: DataFrame): DataFrame = {
-    // sh feeds the df/rep aggregate, the member join and the capped
-    // blocks — materialize the tokenize+hash+distinct once (the ngramOf
-    // tradeoff)
-    val sh = docShinglesOf(docs).transform(Ckpt.apply)
-    containmentCappedCore(
-      sh,
-      sh.groupBy("sh")
-        .agg(count(lit(1)).as("m"), min("doc_id").as("rep"))
-        .filter(col("m") <= DfCap),
-      cappedBlocksOf(sh))
-  }
+  def containmentCappedOf(docs: DataFrame): DataFrame =
+    containmentCappedOn(Ckpt.Stages(docs))
 
-  private def containmentCappedCore(
-      sh: DataFrame, rsz: DataFrame, b: CappedBlocks): DataFrame = {
-    val CappedBlocks(hot, hotN, sizes, iRare) = b
+  private def containmentCappedOn(h: Ckpt.Stages): DataFrame = {
+    val sh  = shingles(h)
+    val rsz = shingleDf(h).filter(col("df") <= DfCap)
+      .select(col("sh"), col("df").as("m"), col("rep"))
+    val CappedBlocks(hot, hotN, sizes, iRare) = cappedBlocks(h)
     // one member pass: groupBy(da, db) is the candidate distinct, and the
     // per-pair skipped mass re-aggregates to the per-doc audit (the
     // fuzzyCapped discipline)
@@ -661,7 +610,7 @@ object Dedup {
     // candidate shares its electing rare shingle (da = rep carries it by
     // definition of rep, db is the member row), so the pair is PRESENT
     // in iRare and the inner join loses nothing. The iub screen before
-    // the hot join is the interCountsCappedFrom argument verbatim:
+    // the hot join is the cappedCounts argument verbatim:
     // i ≤ i_rare + min(hotA, hotB), division by positive sizes is
     // monotone, so a pair failing the screen can never pass the final
     // containment filter.
@@ -753,17 +702,10 @@ object Dedup {
     * (band, sig), so the pair space is bounded by genuine collisions.
     */
   /** Banded-signature candidate pairs (da < db, distinct) from the
-    * shingle table — the blocking stage shared by [[minhash]] (exact
-    * Jaccard verify) and [[fuzzy]] (edit-distance verify).
+    * [[bands]] stage — the blocking shared by [[minhash]] (exact Jaccard
+    * verify) and [[fuzzy]] (edit-distance verify).
     */
-  private def minhashCands(sh: DataFrame): DataFrame =
-    minhashCandsFromBands(bandSignatures(sh))
-
-  /** The banded candidate self-join, factored over an already-built
-    * signature table so catalog callers can feed the memoized
-    * [[bandsShared]] while fixtures derive bands inline.
-    */
-  private def minhashCandsFromBands(bands: DataFrame): DataFrame =
+  private def bandPairs(bands: DataFrame): DataFrame =
     bands
       .select(col("doc_id").as("da"), col("band"), col("sig"))
       .join(bands.select(col("doc_id").as("db"), col("band"), col("sig")), Seq("band", "sig"))
@@ -772,7 +714,7 @@ object Dedup {
       .distinct()
 
   /** Per-doc LSH band signatures (doc_id, band, sig) — the blocking key
-    * table behind [[minhashCands]] and the delta-restricted join of
+    * table behind [[bandPairs]] and the delta-restricted join of
     * [[incremental]].
     */
   private def bandSignatures(sh: DataFrame): DataFrame = {
@@ -794,10 +736,10 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  def minhash(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardSized(
-      interCounts(minhashCandsFromBands(bandsShared(s, dir)), docShingles(s, dir)),
-      shingleSizes(s, dir))
+  def minhash(s: SparkSession, dir: String): DataFrame = minhashOn(memo(s, dir))
+
+  private def minhashOn(h: Ckpt.Stages): DataFrame =
+    verifyJaccardSized(interCounts(bandPairs(bands(h)), shingles(h)), shingleSizes(h))
 
   /** Memoized verified near-dup pair list — [[minhash]]'s full output,
     * materialized once per application. SEVEN consumers re-ran the whole
@@ -808,13 +750,15 @@ object Dedup {
     * its plan remains auditable (PlanAuditSpec pins the verify
     * repartition and the no-cartesian rule on it).
     */
-  private[graft] def minhashShared(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"dedup:minhash:$dir")(minhash(s, dir))
+  private[graft] def minhashShared(s: SparkSession, dir: String): DataFrame = {
+    val h = memo(s, dir)
+    h.stage("minhash")(minhashOn(h))
+  }
 
   /** RAW (un-materialized) trees of the session-cached builds, for the
     * plan-shape audit: the builds execute eagerly at first use, so the
     * per-query lints never see their joins inside any catalog plan.
-    * Each entry is the IDENTICAL expression its `Ckpt.cached` site
+    * Each entry is the IDENTICAL expression its catalog stage
     * materializes — the same `*Build` function is handed to both (r13
     * advice: an earlier version re-derived stand-in trees from raw
     * parquet, so the no-cartesian fence audited plans that never ran;
@@ -824,16 +768,19 @@ object Dedup {
     * what the first catalog consumer does.
     */
   private[graft] def buildPlansForAudit(
-      s: SparkSession, dir: String): Map[String, DataFrame] = Map(
-    "shingles"   -> shinglesBuild(s, dir),
-    "shingle_df" -> shingleDfBuild(s, dir),
-    "shsizes"    -> shingleSizesBuild(s, dir),
-    "bands"      -> bandsBuild(s, dir),
-    "hot"        -> hotBuild(s, dir),
-    "hotn"       -> hotNBuild(s, dir),
-    "irare"      -> iRareBuild(s, dir),
-    // minhashShared's thunk IS the public minhash() pipeline
-    "minhash"    -> minhash(s, dir))
+      s: SparkSession, dir: String): Map[String, DataFrame] = {
+    val h = memo(s, dir)
+    Map(
+      "shingles"   -> docShinglesOf(h.in),
+      "shingle_df" -> shingleDfBuild(h),
+      "shsizes"    -> shingleSizesBuild(h),
+      "bands"      -> bandsBuild(h),
+      "hot"        -> hotBuild(h),
+      "hotn"       -> hotNBuild(h),
+      "irare"      -> iRareBuild(h),
+      // minhashShared's thunk IS the public minhash() pipeline
+      "minhash"    -> minhashOn(h))
+  }
 
   /** Delta split for [[incremental]]: documents with doc_id ≡ 0 (mod 4)
     * play the incoming batch; the rest are the already-deduplicated
@@ -858,20 +805,21 @@ object Dedup {
     */
   def incremental(s: SparkSession, dir: String): DataFrame = {
     val isDelta = (c: Column) => c % DeltaMod === 0
-    val sh    = docShingles(s, dir) // memoized checkpoint; consumed by the verify's 3 subtrees
-    val bands = bandsShared(s, dir)
-    val cand = bands
+    val h     = memo(s, dir)
+    val sh    = shingles(h) // consumed by the verify's 3 subtrees
+    val bs    = bands(h)
+    val cand = bs
       .filter(isDelta(col("doc_id")))
       .select(col("doc_id").as("da"), col("band"), col("sig"))
-      .join(bands.select(col("doc_id").as("db"), col("band"), col("sig")), Seq("band", "sig"))
+      .join(bs.select(col("doc_id").as("db"), col("band"), col("sig")), Seq("band", "sig"))
       .filter(col("db") =!= col("da"))
       .filter(!isDelta(col("db")) || col("db") < col("da"))
       .select("da", "db")
       .distinct()
-    val matches = verifyJaccardSized(interCounts(cand, sh), shingleSizes(s, dir))
+    val matches = verifyJaccardSized(interCounts(cand, sh), shingleSizes(h))
       .groupBy(col("da").as("doc_id"))
       .agg(min("db").as("mp"))
-    Tables.documents(s, dir)
+    h.in
       .filter(isDelta(col("doc_id")))
       .select("doc_id")
       .join(matches, Seq("doc_id"), "left")
@@ -948,17 +896,15 @@ object Dedup {
     * reach millions of members; use [[fuzzyCapped]] there — it verifies
     * member↔canonical only, linear in m, and audits what it skipped.
     */
-  def fuzzy(s: SparkSession, dir: String): DataFrame =
-    fuzzyCore(Tables.documents(s, dir), minhashCandsFromBands(bandsShared(s, dir)))
+  def fuzzy(s: SparkSession, dir: String): DataFrame = fuzzyOn(memo(s, dir))
 
-  def fuzzyOf(docs: DataFrame): DataFrame =
-    fuzzyCore(docs, minhashCands(docShinglesOf(docs)))
+  def fuzzyOf(docs: DataFrame): DataFrame = fuzzyOn(Ckpt.Stages(docs))
 
-  private def fuzzyCore(docs: DataFrame, cands: DataFrame): DataFrame = {
-    val d    = docs.select(col("doc_id"), col("text"))
+  private def fuzzyOn(h: Ckpt.Stages): DataFrame = {
+    val d    = h.in.select(col("doc_id"), col("text"))
     val dist = levenshtein(col("ta"), col("tb")).cast("long")
     val rel  = dist.cast("double") / greatest(length(col("ta")), length(col("tb"))).cast("double")
-    cands
+    bandPairs(bands(h))
       .join(d.select(col("doc_id").as("da"), col("text").as("ta")), "da")
       .transform(spreadVerify(_))
       .join(d.select(col("doc_id").as("db"), col("text").as("tb")), "db")
@@ -1018,27 +964,26 @@ object Dedup {
     * rows passing rel ≤ [[FuzzyMaxRel]] — the same verify rule as
     * [[fuzzy]].
     */
-  def fuzzyCapped(s: SparkSession, dir: String): DataFrame =
-    fuzzyCappedCore(Tables.documents(s, dir), bandsShared(s, dir))
+  def fuzzyCapped(s: SparkSession, dir: String): DataFrame = fuzzyCappedOn(memo(s, dir))
 
-  def fuzzyCappedOf(docs: DataFrame): DataFrame =
-    fuzzyCappedCore(docs, bandSignatures(docShinglesOf(docs)))
+  def fuzzyCappedOf(docs: DataFrame): DataFrame = fuzzyCappedOn(Ckpt.Stages(docs))
 
-  private def fuzzyCappedCore(docs: DataFrame, bands: DataFrame): DataFrame = {
+  private def fuzzyCappedOn(h: Ckpt.Stages): DataFrame = {
     // per-bucket size + canonical; bands feeds the aggregate and the
     // member join with the identical (band, sig) shuffle → ReusedExchange
-    val bsz = bands.groupBy("band", "sig")
+    val bs  = bands(h)
+    val bsz = bs.groupBy("band", "sig")
       .agg(count(lit(1)).as("m"), min("doc_id").as("rep"))
     // ONE member pass builds both outputs: the groupBy(da, db) IS the
     // candidate distinct (da = bucket canonical, db = member), and the
     // per-pair skipped-slot mass re-aggregates to the per-doc audit — the
     // band machinery is never traversed twice
-    val memb = bands.join(bsz, Seq("band", "sig"))
+    val memb = bs.join(bsz, Seq("band", "sig"))
       .filter(col("doc_id") =!= col("rep"))
       .groupBy(col("rep").as("da"), col("doc_id").as("db"))
       .agg(sum(col("m") - 2).as("part"))
     val skip = memb.groupBy("db").agg(sum(col("part")).as("skipped"))
-    val d    = docs.select(col("doc_id"), col("text"))
+    val d    = h.in.select(col("doc_id"), col("text"))
     val dist = levenshtein(col("ta"), col("tb")).cast("long")
     val rel  = dist.cast("double") / greatest(length(col("ta")), length(col("tb"))).cast("double")
     memb

@@ -250,8 +250,7 @@ object Graph {
     * cost — UNLESS it is already a cheap projection over a materialized
     * checkpoint ([[graft.Ckpt.ensure]]), in which case the three
     * scans read those blocks directly and a second session-lived copy
-    * would be pure waste (r13 advice: the old `cacheKey` path
-    * re-materialized the whole memoized minhash table).
+    * would be pure waste (a copy of the whole memoized minhash table).
     */
   def triangles(pairList: DataFrame): DataFrame = {
     val pl = pairList.toDF("da", "db")

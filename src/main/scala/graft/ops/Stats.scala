@@ -784,10 +784,13 @@ object Stats {
     val cells = ev.groupBy("event_type", "h").agg(count(lit(1)).as("o"))
     val rows  = cells.groupBy("event_type").agg(sum(col("o")).as("rt"))
     val cols  = cells.groupBy("h").agg(sum(col("o")).as("ct"))
+    // set sizes, not count_distinct: two distinct aggregates plan an
+    // Expand whose grouping order follows a per-JVM hash, so the plan
+    // text drifted between runs; the grid is ≤ types × 24 rows
     val tot = cells.agg(
       sum(col("o")).as("n"),
-      count_distinct(col("event_type")).as("nr"),
-      count_distinct(col("h")).as("nc"))
+      size(collect_set(col("event_type"))).cast("long").as("nr"),
+      size(collect_set(col("h"))).cast("long").as("nc"))
     val e    = col("rt").cast("double") * col("ct").cast("double") / col("n").cast("double")
     val term = (col("o").cast("double") - e) * (col("o").cast("double") - e) / e
     rows

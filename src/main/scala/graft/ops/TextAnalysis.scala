@@ -267,23 +267,22 @@ object TextAnalysis {
     * decimal(38,6) before any aggregate, the [[unigramLm]] rule.
     */
   def bigramKn(s: SparkSession, dir: String): DataFrame =
-    bigramKnOf(Tables.documents(s, dir), cacheKey = Some(s"text:kn-bg:$dir"))
+    bigramKnOn(Ckpt.Stages(Tables.documents(s, dir), "text", dir))
 
-  /** `cacheKey` (catalog path): memoize the bigram checkpoint per
-    * application via [[graft.Ckpt.cached]] — the returned frame scans it
-    * lazily, so a per-invocation checkpoint can never be freed and
-    * accumulates under repeated gate/bench runs (r8 advice). Spec
-    * callers pass None and keep a private per-call snapshot.
+  private[ops] def bigramKnOf(docs: DataFrame): DataFrame = bigramKnOn(Ckpt.Stages(docs))
+
+  /** The bigram stream is the `kn-bg` stage ([[graft.Ckpt.Stages]]): the
+    * catalog entry memoizes it per session — the returned frame scans it
+    * lazily, so a per-invocation checkpoint could never be freed and
+    * accumulated under repeated catalog runs — and
+    * [[bigramKnOf]] materializes it once for that call.
     */
-  private[ops] def bigramKnOf(
-      docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    def raw = docs
+  private def bigramKnOn(h: Ckpt.Stages): DataFrame = {
+    val bg = h.stage("kn-bg")(h.in
       .select(col("doc_id"), filter(Tokenize.tokenCol(col("text")), _ =!= "").as("toks"))
       .select(col("doc_id"), explode(TextHash.shingles(col("toks"), 2)).as("b"))
       .withColumn("w1", substring_index(col("b"), " ", 1))
-      .withColumn("w2", substring_index(col("b"), " ", -1))
-    val bg = cacheKey.fold(graft.Ckpt(raw))(k =>
-      graft.Ckpt.cached(docs.sparkSession, k)(raw))
+      .withColumn("w2", substring_index(col("b"), " ", -1)))
     val c2    = bg.groupBy("b").agg(count(lit(1)).as("c2"))
     val left  = bg.groupBy(col("w1").as("w1k"))
       .agg(count(lit(1)).as("c1"), countDistinct(col("b")).as("nfol"))
@@ -449,18 +448,15 @@ object TextAnalysis {
     * StrictMath/libm last-ulp hazard), bigram string as total tiebreak.
     */
   def llrTop(s: SparkSession, dir: String): DataFrame =
-    llrTopOf(Tables.documents(s, dir), cacheKey = Some(s"text:llr-bg:$dir"))
+    llrTopOn(Ckpt.Stages(Tables.documents(s, dir), "text", dir))
 
-  /** `cacheKey`: see [[bigramKnOf]] — per-application memoized bigram
-    * checkpoint on the catalog path, private snapshot for specs.
-    */
-  private[ops] def llrTopOf(
-      docs: DataFrame, cacheKey: Option[String] = None): DataFrame = {
-    def raw = docs
+  private[ops] def llrTopOf(docs: DataFrame): DataFrame = llrTopOn(Ckpt.Stages(docs))
+
+  /** The bigram stream is the `llr-bg` stage — see [[bigramKnOn]]. */
+  private def llrTopOn(h: Ckpt.Stages): DataFrame = {
+    val bg = h.stage("llr-bg")(h.in
       .select(filter(Tokenize.tokenCol(col("text")), _ =!= "").as("toks"))
-      .select(explode(TextHash.shingles(col("toks"), 2)).as("b"))
-    val bg = cacheKey.fold(graft.Ckpt(raw))(k =>
-      graft.Ckpt.cached(docs.sparkSession, k)(raw))
+      .select(explode(TextHash.shingles(col("toks"), 2)).as("b")))
     val c12 = bg.groupBy("b").agg(count(lit(1)).as("c12"))
       .filter(col("c12") >= LlrMinCount)
     val first  = bg.groupBy(substring_index(col("b"), " ", 1).as("w1"))
