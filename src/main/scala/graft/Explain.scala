@@ -15,7 +15,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * static formatted plan always shows repeated subtrees un-reused.
   *
   * Ids that vary between JVM runs are renumbered per plan
-  * ([[stableIds]]), so two dumps of one commit diff empty.
+  * ([[stableIds]]), and the working directory in file paths (the storage
+  * twins' `InMemoryFileIndex [file:<cwd>/spark-warehouse/…]`) is printed
+  * as `<cwd>`, so two dumps of one commit diff empty wherever they run.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -25,13 +27,15 @@ object Explain {
     // shared engine config; default to the bench's core count so dumped
     // plans are the shapes the bench times (r15 verdict item 3)
     val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
+    // the storage twins live under the session's relative `spark-warehouse`
+    val cwdUri = s"file:${System.getProperty("user.dir")}/"
     names.foreach { n =>
       println(s"===== $n")
       val df = SparkEntry.queries(n)(spark, sfDir)
       val plan =
         if (exec) { df.count(); df.queryExecution.executedPlan.toString }
         else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      println(stableIds(plan))
+      println(stableIds(plan).replace(cwdUri, "file:<cwd>/"))
     }
     spark.stop()
   }

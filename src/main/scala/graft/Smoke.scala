@@ -100,8 +100,7 @@ object Smoke {
     // inherits; the audit joins above it are equi-joins on (va, vb)
     "sim_ndcg_audit",
     // sim_mmr: the candidate pool is the sanctioned |Q|-row brute
-    // broadcast; every greedy round above it is equi-joined over the
-    // |Q|*pool-bounded checkpointed tables
+    // broadcast; the one pool join above it is an equi-join on vb
     "sim_mmr",
     // text_vocab_coverage: the 1-row corpus-total broadcast against the
     // three 1-row top-N aggregates — never the corpus or the vocab

@@ -15,18 +15,23 @@ import graft.sources.TextSources
   * analogue), input is a file glob (any Hadoop scheme), output is the
   * reference's canonical `"<key> <value>"` text format
   * (`example/mrsequential/mrsequential.go:84`), and `nreduce` (at least 1)
-  * is the reduce-side partition count. The session is the engine's one
-  * config ([[graft.Sessions]]) on `$SPARK_MASTER` (default `local[4]`).
+  * is the reduce-side partition count. Each reduce task writes its
+  * partition's lines straight into `<outDir>/part-NNNNN`, as the
+  * reference's `mr-out-N` ([[TextSources.writeKV]]); the files appear,
+  * with `_SUCCESS`, only once the whole job has succeeded. The session
+  * is the engine's one config ([[graft.Sessions]]) on `$SPARK_MASTER`
+  * (default `local[4]`).
   * A user of the reference swaps their plugin `.so` for a registry entry
   * and keeps the same mental model; the coordinator/worker/heartbeat
   * machinery has no equivalent here because Spark's scheduler provides it.
   */
 object MRRunner {
   /** The whole submission flow minus session lifecycle: registry lookup,
-    * glob read, secondary-sort MR run on `nreduce` reduce partitions, text
-    * sink. `main` wraps this in its own session; MRRunnerSpec drives it
-    * under the shared test session (an in-JVM spec cannot let `main` stop
-    * the session it shares), covering the identical code path end to end.
+    * glob read, secondary-sort MR run on `nreduce` reduce partitions, each
+    * partition's lines written by its reduce task. `main` wraps this in
+    * its own session; MRRunnerSpec drives it under the shared test session
+    * (an in-JVM spec cannot let `main` stop the session it shares),
+    * covering the identical code path end to end.
     */
   def run(spark: SparkSession, appName: String, input: String, outDir: String,
       nreduce: Int): Unit = {

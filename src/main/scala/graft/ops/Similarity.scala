@@ -274,8 +274,10 @@ object Similarity {
     // over tables of a few hundred rows — collapses into ONE
     // [[graft.functions.MmrSelect]] expression over each query's
     // collected pool (see that scaladoc for the term-by-term bit-parity
-    // argument). Shape: the brute pool ranking, one broadcast join
-    // attaching (embedding, norm) to the |Q|·pool candidate rows, a
+    // argument). Shape: the brute pool ranking, one join attaching
+    // (embedding, norm) to the |Q|·pool candidate rows (no broadcast
+    // hint: the candidates grow with |Q|, and AQE broadcasts the small
+    // side on its own once it has measured it), a
     // |Q|-group collect, and an explode — no materialization anywhere.
     // collect_list order is partition-dependent, but the selection is
     // argmax-based with total tiebreaks, so its output is order-invariant.
@@ -284,7 +286,7 @@ object Similarity {
     val e = withNorm(Tables.embeddings(s, dir))
     val pool = e
       .select(col("vec_id").as("vb"), col("embedding").as("eb"), col("norm").as("nb"))
-      .join(broadcast(cand), "vb")
+      .join(cand, "vb")
       .groupBy("va")
       .agg(collect_list(struct(col("vb"), col("rel"), col("eb"), col("nb"))).as("pool"))
     pool

@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.FileNotFoundException
+import java.io.{BufferedOutputStream, FileNotFoundException, IOException}
+import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
@@ -9,13 +10,13 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** The reference's scan/sink surface (SURVEY.md §2.1 F1/F2/F8) on Spark's
-  * source API:
+/** The reference's scan/sink surface (SURVEY.md §2.1 F1/F8):
   *
   *  - F1 whole-file scan: one row per file, `(filename, contents)` — the
   *    reference's map input unit (`pkg/fsutil/util.go:7-21`). The
@@ -23,14 +24,13 @@ import org.apache.spark.util.SerializableConfiguration
   *    (`internal/coordinator/coordinator.go:124-133`); here the files are
   *    packed largest-first into one task per core, so no map task waits
   *    on a pile of big files while the other cores idle.
-  *  - F2 line scan: one row per `\n`-delimited line, trailing newline
-  *    stripped (`pkg/mr/mr.go:19-36`).
   *  - F8 text sink: `"<key> <value>"` lines — the oracle's canonical
-  *    output format (`example/mrsequential/mrsequential.go:84`). Spark's
-  *    commit protocol replaces the reference's create-then-append
-  *    (`internal/worker/worker.go:301-313`, which is also where its
-  *    read-only-append bug lived, SURVEY.md §2.4.5).
+  *    output format (`example/mrsequential/mrsequential.go:84`), each
+  *    reduce partition's file written by its task ([[writeKV]]; the
+  *    reference's file create, `internal/worker/worker.go:301-313`, is
+  *    also where its read-only-append bug lived, SURVEY.md §2.4.5).
   *
+  * The reference's F2 line scan is Spark's own `spark.read.text`.
   * Any Hadoop-supported scheme works in the path (the analogue of the
   * reference's `FsClient` URL-scheme registry, `pkg/fsutil/fsclient.go`).
   */
@@ -129,26 +129,89 @@ object TextSources {
     }
   }
 
-  /** F2: lines as rows. */
-  def lines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).select(col("value").as("line"))
-
-  /** F8: write a (key, value) frame in the reference's output format.
-    * Null values map to the empty string — the reference's data model has
-    * no nulls ("" is its only missing representation, SURVEY.md §1.1), and
-    * a bare `concat_ws` would drop the separator, producing a line
-    * `readKV` cannot parse.
+  /** F8: write a (key, value) frame in the reference's output format, one
+    * `"<key> <value>"` line per row. Null keys and values map to the empty
+    * string — the reference's data model has no nulls ("" is its only
+    * missing representation, SURVEY.md §1.1) — so every line keeps its
+    * separator.
+    *
+    * As the reference's reduce worker creates its partition's file and
+    * writes its lines into it (`internal/worker/worker.go:286`,
+    * `:301-313`), each task writes its partition's rows straight into one
+    * file: `part-NNNNN`, `NNNNN` the partition index, created even when the
+    * partition is empty. The commit is whole-job, like Hadoop's v1 file
+    * committer: a task writes to an attempt-unique file under a job temp
+    * directory in `path` and renames it to its part name there; only after
+    * every task has succeeded does the driver replace any previous output
+    * with the parts, then write `_SUCCESS` and delete the temp directory.
+    * A reader of `path` sees the old output or the whole new one, never a
+    * torn file. A failed job deletes its temp directory and leaves none of
+    * its own files in `path`.
+    *
+    * The job runs under one SQL execution, so listeners and the SQL UI see
+    * the write. The Hadoop configuration is broadcast once per write, and
+    * each task counts the bytes and lines it wrote in its output metrics.
     */
-  def writeKV(df: DataFrame, path: String): Unit =
-    df.select(concat_ws(" ", coalesce(col("key"), lit("")), coalesce(col("value"), lit("")))
-        .as("value"))
-      .write
-      .mode("overwrite")
-      .text(path)
+  def writeKV(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    val conf  = GraftSqlShims.hadoopConf(spark)
+    val dest  = new Path(path)
+    val fs    = dest.getFileSystem(conf)
+    val out   = fs.makeQualified(dest)
+    val temp  = new Path(out, s"_temporary-${UUID.randomUUID()}")
+    val tempName = temp.toString
+    val qe = df.select(col("key").cast(StringType), col("value").cast(StringType)).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("writeKV")) {
+      try {
+        if (!fs.mkdirs(temp)) throw new IOException(s"could not create $temp")
+        val rows  = qe.toRdd
+        val hconf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+        spark.sparkContext.runJob(rows,
+          (ctx: TaskContext, it: Iterator[InternalRow]) => writePart(ctx, it, tempName, hconf))
+        fs.listStatus(out).map(_.getPath).filter(_.getName != temp.getName)
+          .foreach(fs.delete(_, true))
+        for (i <- 0 until rows.getNumPartitions) {
+          val part = partName(i)
+          if (!fs.rename(new Path(temp, part), new Path(out, part)))
+            throw new IOException(s"could not move $part of $temp into $out")
+        }
+        fs.create(new Path(out, "_SUCCESS")).close()
+      } finally fs.delete(temp, true)
+    }
+  }
 
-  /** Read the F8 format back: split at the first space. */
-  def readKV(spark: SparkSession, path: String): DataFrame =
-    lines(spark, path).select(
-      regexp_extract(col("line"), "^(\\S*) (.*)$", 1).as("key"),
-      regexp_extract(col("line"), "^(\\S*) (.*)$", 2).as("value"))
+  private def partName(partition: Int): String = f"part-$partition%05d"
+
+  /** One task's partition, written to an attempt-unique file under the job
+    * temp directory, then renamed to its part name there. The file is
+    * created without its parents, so a task that outlives its failed job
+    * cannot bring the deleted temp directory back.
+    */
+  private def writePart(ctx: TaskContext, rows: Iterator[InternalRow], temp: String,
+      conf: Broadcast[SerializableConfiguration]): Unit = {
+    val dir     = new Path(temp)
+    val fs      = dir.getFileSystem(conf.value.value)
+    val attempt = new Path(dir, s".${partName(ctx.partitionId())}-${ctx.taskAttemptId()}")
+    val out     = new BufferedOutputStream(
+      fs.createNonRecursive(attempt, false, 65536, fs.getDefaultReplication(attempt),
+        fs.getDefaultBlockSize(attempt), null), 65536)
+    var bytes, lines = 0L
+    try {
+      def put(s: UTF8String): Unit = if (s != null) { s.writeTo(out); bytes += s.numBytes() }
+      rows.foreach { r =>
+        put(r.getUTF8String(0))
+        out.write(' ')
+        put(r.getUTF8String(1))
+        out.write('\n')
+        bytes += 2
+        lines += 1
+      }
+    } finally out.close()
+    val part = new Path(dir, partName(ctx.partitionId()))
+    // a retried attempt replaces what an earlier one committed: both wrote
+    // the same rows, and nothing reads the temp directory until the job ends
+    fs.delete(part, false)
+    if (!fs.rename(attempt, part)) throw new IOException(s"could not commit $attempt as $part")
+    GraftSqlShims.incOutput(ctx, bytes, lines)
+  }
 }

@@ -42,6 +42,15 @@ object GraftSqlShims {
     m.incRecordsRead(records)
   }
 
+  /** Count output a task wrote in its output metrics, as Spark's file
+    * writers do; the setters are `private[spark]`.
+    */
+  def incOutput(ctx: org.apache.spark.TaskContext, bytes: Long, records: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + records)
+  }
+
   /** Column <-> Catalyst expression, for Column helpers that build a
     * native expression directly instead of calling a registered function
     * by name (`classic.ExpressionUtils` is `private[sql]`).

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 import graft.mr.{MapReduceJob, MRApps, KV, MRApp}
@@ -127,9 +128,9 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
     // the snapshot to `cmp` equal to the final output: anything a reader
     // can see is already final. The Spark twin: a concurrent reader polls
     // the sink directory THROUGHOUT a slow-reduce job; every committed
-    // part file it ever observes must carry its final bytes (the v1
-    // FileOutputCommitter renames task output into place only at job
-    // commit — a mid-job reader sees either nothing or the finished
+    // part file it ever observes must carry its final bytes (writeKV
+    // moves the tasks' part files into place only after the whole job has
+    // succeeded — a mid-job reader sees either nothing or the finished
     // result, never a torn file).
     val slowWc: MRApp = new MRApp {
       val name = "early-exit-wc"
@@ -186,6 +187,69 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
     assert(got == Seq("f1 1", "f2 1", "f3 1", "f4 1"))
   }
 
+  /** Every entry under `dir`, hidden ones included. */
+  private def entries(dir: java.io.File): Seq[String] =
+    Option(dir.list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  /** Each part file's lines under `dir`, sorted, by file name. */
+  private def parts(dir: java.io.File): Map[String, Seq[String]] =
+    dir.listFiles().filter(f => f.isFile && f.getName.startsWith("part-")).map { f =>
+      f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq.sorted
+    }.toMap
+
+  test("writeKV after a permanently failing reduce leaves nothing in the sink") {
+    // the reduce throws on one key in every attempt; the other partitions'
+    // tasks succeed, and their output must not be visible either
+    val failing: MRApp = new MRApp {
+      val name = "always-failing-wc"
+      def map(filename: String, contents: String): Seq[KV] =
+        MRApps.WordCount.map(filename, contents)
+      def reduce(key: String, values: Seq[String]): Seq[String] = {
+        if (key == "cherry") throw new RuntimeException("injected permanent reduce failure")
+        MRApps.WordCount.reduce(key, values)
+      }
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-kv-fail").toFile
+    intercept[Exception] {
+      graft.sources.TextSources.writeKV(
+        MapReduceJob.runSecondarySortNative(
+          spark, docs.toDF("filename", "contents"), failing, Some(4)),
+        out.getAbsolutePath)
+    }
+    assert(entries(out).isEmpty, s"failed job left: ${entries(out).mkString(", ")}")
+  }
+
+  test("writeKV after a reduce task crashes once yields one file per partition") {
+    BehavioralSpec.writeCrashes.set(0)
+    val crashingWc: MRApp = new MRApp {
+      val name = "write-crashing-wc"
+      def map(filename: String, contents: String): Seq[KV] =
+        MRApps.WordCount.map(filename, contents)
+      def reduce(key: String, values: Seq[String]): Seq[String] = {
+        val tc = TaskContext.get()
+        if (tc != null && tc.attemptNumber() == 0 &&
+          BehavioralSpec.writeCrashes.getAndIncrement() == 0) {
+          throw new RuntimeException("injected reduce crash during the write")
+        }
+        MRApps.WordCount.reduce(key, values)
+      }
+    }
+    def write(app: MRApp): java.io.File = {
+      val out = java.nio.file.Files.createTempDirectory("graft-kv-retry").toFile
+      graft.sources.TextSources.writeKV(
+        MapReduceJob.runSecondarySortNative(spark, docs.toDF("filename", "contents"), app, Some(4)),
+        out.getAbsolutePath)
+      out
+    }
+    val clean = parts(write(MRApps.WordCount))
+    val out   = write(crashingWc)
+    assert(BehavioralSpec.writeCrashes.get() >= 1, "write-side crash was never injected")
+    val visible = entries(out).filterNot(_.startsWith("."))
+    assert(visible == Seq("_SUCCESS", "part-00000", "part-00001", "part-00002", "part-00003"),
+      visible)
+    assert(parts(out) == clean, "output after the retried write differs from the clean run")
+  }
+
   test("map tasks run in parallel (mtiming analogue)") {
     BehavioralSpec.concurrent.set(0)
     BehavioralSpec.maxConcurrent.set(0)
@@ -225,6 +289,7 @@ object BehavioralSpec {
   val crashes        = new AtomicInteger(0)
   val reduceCrashes  = new AtomicInteger(0)
   val ssCrashes      = new AtomicInteger(0)
+  val writeCrashes   = new AtomicInteger(0)
   val concurrent     = new AtomicInteger(0)
   val maxConcurrent  = new AtomicInteger(0)
   val mapInvocations = new AtomicInteger(0)

@@ -6,7 +6,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 import graft.SparkTestBase
-import graft.sources.TextSources
+import graft.sources.TextReads
 
 /** End-to-end CLI submission flow (`play.sh`'s golden path: run the app
   * over a file glob, read the text output back, diff against an
@@ -54,7 +54,7 @@ class MRRunnerSpec extends AnyFunSuite with SparkTestBase {
       .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
     assert(partFiles.nonEmpty, s"no part files under $out")
 
-    val got = TextSources.readKV(spark, out)
+    val got = TextReads.readKV(spark, out)
       .as[(String, String)].collect().map { case (k, v) => k -> v.toLong }.toMap
 
     // relational twin: same tokenizer, same count, straight DataFrame agg

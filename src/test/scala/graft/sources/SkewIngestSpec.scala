@@ -58,7 +58,7 @@ class SkewIngestSpec extends AnyFunSuite with SparkTestBase {
     withSQLConf(
       "spark.sql.files.maxPartitionBytes" -> (64 * 1024).toString,
       "spark.sql.files.openCostInBytes"   -> (4 * 1024).toString) {
-      val df = TextSources.lines(spark, s"$skewDir/*.txt")
+      val df = TextReads.lines(spark, s"$skewDir/*.txt")
       val perPartition = df.rdd
         .mapPartitions(it => Iterator(it.map(_.getString(0).length + 1L).sum))
         .collect()

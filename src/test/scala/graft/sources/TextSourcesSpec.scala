@@ -114,7 +114,7 @@ class TextSourcesSpec extends AnyFunSuite with SparkTestBase {
     val sink = Files.createTempDirectory("graft-nullkv").toString + "/kv"
     TextSources.writeKV(
       Seq(("k1", Option("v1")), ("k2", None)).toDF("key", "value"), sink)
-    val back = TextSources.readKV(spark, sink)
+    val back = TextReads.readKV(spark, sink)
       .as[(String, String)].collect().sortBy(_._1).toSeq
     assert(back == Seq("k1" -> "v1", "k2" -> ""), back.toString)
   }
@@ -122,7 +122,7 @@ class TextSourcesSpec extends AnyFunSuite with SparkTestBase {
   test("line scan strips trailing newline, one row per line") {
     val dir = Files.createTempDirectory("graft-lines").toString
     Files.writeString(java.nio.file.Paths.get(dir, "x.txt"), "l1\nl2\n\nl4\n")
-    val lines = TextSources.lines(spark, dir).as[String].collect().sorted.toSeq
+    val lines = TextReads.lines(spark, dir).as[String].collect().sorted.toSeq
     assert(lines == Seq("", "l1", "l2", "l4"))
   }
 
@@ -135,7 +135,7 @@ class TextSourcesSpec extends AnyFunSuite with SparkTestBase {
     val sink = Files.createTempDirectory("graft-out").toString + "/wc"
     TextSources.writeKV(out, sink)
 
-    val back = TextSources.readKV(spark, sink)
+    val back = TextReads.readKV(spark, sink)
       .as[(String, String)].collect().sortBy(identity).toSeq
     val direct = out.as[(String, String)].collect().sortBy(identity).toSeq
     assert(back == direct, "sink round-trip changed the data")

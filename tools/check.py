@@ -1,8 +1,11 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the same parquet tables and diff against the Spark results that
-graft.Verify dumped. Usage: check.py <sfDir> <verifyOutDir>"""
-import json, sys, glob, os
+graft.Verify dumped. Usage: check.py <sfDir> <verifyOutDir>
+
+Each OK line ends with the oracle's DuckDB seconds; the output ends with the
+five slowest oracles."""
+import json, sys, glob, os, time
 import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
@@ -13,6 +16,7 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 ok = fail = 0
+secs = {}
 for name in sorted(oracle):
     d = f"{outdir}/{name}"
     if not os.path.isdir(d):
@@ -21,7 +25,9 @@ for name in sorted(oracle):
     try:
         spark_df = con.execute(
             f"SELECT * FROM read_parquet({files!r})").fetchdf()
+        t = time.perf_counter()
         duck_df = con.execute(oracle[name]).fetchdf()
+        secs[name] = time.perf_counter() - t
     except Exception as e:
         print(f"FAIL {name}: {e}"); fail += 1; continue
     sc, dc = sorted(spark_df.columns), sorted(duck_df.columns)
@@ -32,7 +38,7 @@ for name in sorted(oracle):
     if len(s) != len(dd):
         print(f"FAIL {name}: rows spark={len(s)} duck={len(dd)}"); fail += 1; continue
     if s.equals(dd):
-        print(f"OK   {name} ({len(s)} rows)"); ok += 1
+        print(f"OK   {name} ({len(s)} rows) {secs[name]:.2f} s"); ok += 1
     else:
         diff = (s != dd) & ~(s.isna() & dd.isna())
         bad = diff.any(axis=1)
@@ -47,4 +53,6 @@ for name in sorted(oracle):
         print("duck :", dd[bad].head(3).to_dict("records"))
         fail += 1
 print(f"\n{ok} ok, {fail} fail")
+slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+print("slowest oracles: " + ", ".join(f"{n} {t:.2f} s" for n, t in slowest))
 sys.exit(1 if fail else 0)
