@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark harness (driver contract): runs the whole catalog on
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -12,12 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * load. Round-2's single-shot numbers swung 6-7x on untouched queries,
   * which made every per-query delta unactionable.
   *
-  * A small warm-up (count + one broadcast-join query) runs before the
-  * timed loop so first-query numbers measure the plan, not JVM/codegen
-  * bootstrap. Queries run in sorted name order for run-to-run
-  * comparability. Each sample reads the result in full
-  * ([[Profile.consume]]), so no timing covers a plan Catalyst pruned for
-  * a bare `count()`.
+  * A small warm-up (one aggregate and one broadcast-join query) runs
+  * before the timed loop so first-query numbers measure the plan, not
+  * JVM/codegen bootstrap. Queries run in sorted name order for
+  * run-to-run comparability. Each sample is one [[Profile]] row: the
+  * query constructed, planned and read in full ([[Profile.consume]]), so
+  * no timing covers a plan Catalyst pruned for a bare `count()`; the
+  * `layers` map of BENCH_FULL.json carries the median sample's row.
+  *
+  * Usage: `Bench [query ...]`. Query names restrict the run (a local
+  * iteration aid) and leave BENCH_FULL.json alone; none runs the whole
+  * catalog.
   */
 object Bench {
   val Runs = 3
@@ -25,6 +30,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names = Profile.select(args.toSeq)
     // session config (AQE, shuffled-hash preference, UTC, locale pin,
     // SPARK_GRAFT_CONF) lives in graft.Sessions —
     // one builder for Bench/Verify/Explain/probes so verified plans and
@@ -32,59 +38,44 @@ object Bench {
     val spark = Sessions.local(cpus)
 
     spark.range(1000000).selectExpr("sum(id)").collect()
-    try SparkEntry.queries.get("join_broadcast").foreach(_(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    Profile.profile(spark, sfDir, Seq("join_broadcast"))
 
     // a failed query reports -1 (visible sentinel) and is excluded from
-    // the total — a broken catalog must not read as a fast one
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration aid);
-    // unset or empty = full catalog, which is what the driver runs (a
-    // set-but-empty var must not print a 0-second "full" total).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
-    val catalog = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(_._1)
-    // one sample: seconds to construct and read a result in full, None
-    // (logged) if the query failed
-    def timed(name: String, fn: (SparkSession, String) => DataFrame,
-        what: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      try { Profile.consume(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] $name $what: ${e.getMessage}"); None }
+    // the total — a broken catalog must not read as a fast one. A failed
+    // sample is logged and dropped; Profile captures NonFatal only, so an
+    // OOM/VM error kills the bench loudly instead (r8 advice).
+    def samples(rows: Seq[Profile.Row], what: String): Seq[Profile.Row] = {
+      for (r <- rows; msg <- r.error) System.err.println(s"[bench] ${r.name} $what: $msg")
+      rows.filter(_.error.isEmpty)
     }
     // repeats run as whole-catalog passes (round-robin), not back-to-back:
     // a transient machine-load spike then inflates ONE run of several
     // queries — which the median rejects — instead of all Runs samples of
     // one query, which it cannot
-    val samples: Seq[Seq[(String, Option[Double])]] = (1 to Runs).map { _ =>
-      catalog.map { case (name, fn) => name -> timed(name, fn, "failed") }
-    }
+    val base = (1 to Runs).flatMap(_ => samples(Profile.profile(spark, sfDir, names), "failed"))
     // Adaptive tail re-sampling: the TOP-20 queries by 3-run median —
     // the rows a perf reader actually compares round-to-round — plus any
     // query whose spread exceeds SpreadTarget get ExtraRuns more samples
     // (5 total) before the median is taken. A transient load spike then
     // has to corrupt 3 of 5 samples instead of 2 of 3 to move a headline
-    // number. Bounded cost: ~20 extra query runs. NonFatal only — an
-    // OOM/VM error must kill the bench loudly, not vanish as a dropped
-    // sample (r8 advice).
+    // number. Bounded cost: ~20 extra query runs.
     val SpreadTarget = 2.0
     val ExtraRuns    = 2
     val TopResample  = 20
-    def baseTimes(name: String): Seq[Double] =
-      samples.flatMap(_.collectFirst { case (`name`, Some(t)) => t })
-    val topByMedian: Set[String] = catalog
-      .map { case (n, _) => n -> baseTimes(n) }
+    def baseTimes(name: String): Seq[Double] = base.filter(_.name == name).map(_.wallS)
+    val topByMedian: Set[String] = names
+      .map(n => n -> baseTimes(n))
       .filter(_._2.size >= Runs)
       .sortBy { case (_, ts) => -ts.sorted.apply(ts.size / 2) }
       .take(TopResample).map(_._1).toSet
-    val extra: Map[String, Seq[Double]] = catalog.flatMap { case (name, fn) =>
+    val resampled = names.filter { name =>
       val times = baseTimes(name)
-      if (times.size < Runs ||
-          (!topByMedian.contains(name) && times.max - times.min <= SpreadTarget)) None
-      else Some(name -> (1 to ExtraRuns).flatMap(_ => timed(name, fn, "resample failed")))
-    }.toMap
+      times.size >= Runs && (topByMedian.contains(name) || times.max - times.min > SpreadTarget)
+    }
+    val extra =
+      if (resampled.isEmpty) Nil
+      else samples(Profile.profile(spark, sfDir, resampled.flatMap(Seq.fill(ExtraRuns)(_))),
+        "resample failed")
     // per query: (median, spread, min). The median is the headline; min
     // is the low-noise estimator on an idle box (a loaded run can only
     // inflate a sample, never deflate it), reported in BENCH_FULL.json so
@@ -93,13 +84,13 @@ object Bench {
     // samples can only widen a raw max-min, which would punish exactly
     // the queries we resample to stabilize — the trimmed range is the
     // noise band around the median the reader should compare against.
-    val results: Seq[(String, Double, Double, Double)] = catalog.map { case (name, _) =>
-      val times = baseTimes(name) ++ extra.getOrElse(name, Nil)
-      if (times.size < Runs) (name, -1.0, -1.0, -1.0)
-      else {
-        val sorted  = times.sorted
-        val trimmed = if (sorted.size >= 5) sorted.tail.init else sorted
-        (name, sorted(sorted.size / 2), trimmed.last - trimmed.head, sorted.head)
+    val sampled = names.map(n => n -> (base ++ extra).filter(_.name == n).sortBy(_.wallS))
+    val median: Map[String, Profile.Row] =
+      sampled.collect { case (n, rs) if rs.size >= Runs => n -> rs(rs.size / 2) }.toMap
+    val results: Seq[(String, Double, Double, Double)] = sampled.map { case (name, rs) =>
+      median.get(name).fold((name, -1.0, -1.0, -1.0)) { m =>
+        val trimmed = if (rs.size >= 5) rs.tail.init else rs
+        (name, m.wallS, trimmed.last.wallS - trimmed.head.wallS, rs.head.wallS)
       }
     }
     // The driver stores only the LAST ~2000 chars of stdout and parses the
@@ -122,8 +113,12 @@ object Bench {
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
     def line(p: Double => String): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jmap(_._2, p)},"runs":$Runs,"sf":$sfNum}"""
-    val resampledJson = extra.keys.toSeq.sorted
+    val resampledJson = resampled.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val layersJson = names.flatMap(median.get)
+      .map(m => s""""${m.name}":{"construct_s":${m.constructS},"plan_s":${m.planS},""" +
+        s""""exec_s":${m.execS},"jobs":${m.jobs},"stages":${m.stages.size},"tasks":${m.tasks}}""")
+      .mkString("{", ",", "}")
     // One-time session builds (every Ckpt memo, the storage twins among
     // them) are paid by the FIRST consumer and so excluded from
     // per-query medians; report them as a
@@ -139,13 +134,13 @@ object Bench {
       s"""{"metric":"cache_builds","value":${fmt(builds.map(_._2).sum)},"unit":"sec","count":${builds.size},"top":$top}"""
     }
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(_._2, _.toString)},"runs":$Runs,"spread":${jmap(_._3, _.toString)},"min":${jmap(_._4, _.toString)},"resampled":$resampledJson,"cache_builds":$buildsFull,"sf":"$sfDir"}"""
-    // a SPARK_GRAFT_ONLY-restricted run must not clobber the committed
-    // full-catalog artifact with a one-query subset
-    if (only.isEmpty)
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(_._2, _.toString)},"runs":$Runs,"spread":${jmap(_._3, _.toString)},"min":${jmap(_._4, _.toString)},"resampled":$resampledJson,"layers":$layersJson,"cache_builds":$buildsFull,"sf":"$sfDir"}"""
+    // a run restricted to named queries must not clobber the committed
+    // full-catalog artifact with a subset
+    if (args.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         (full + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
     // Degrade precision rather than overflow the driver's tail window; as a
     // last resort keep only the SLOWEST queries (the ones a perf reader
     // needs) and say how many sub-threshold ones were dropped — the total

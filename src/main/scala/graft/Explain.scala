@@ -9,10 +9,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: runMain graft.Explain [sfDir] [query ...]
   *
-  * SPARK_GRAFT_EXEC=1 additionally EXECUTES each query and prints the
-  * post-execution adaptive plan — the only place AQE's runtime stage
-  * reuse (ReusedQueryStage / shared shuffle stages) is visible; the
-  * static formatted plan always shows repeated subtrees un-reused.
+  * SPARK_GRAFT_EXEC=1 instead reads each query in full through
+  * [[Profile.profile]] and prints the plan that ran (`isFinalPlan=true`)
+  * — the only place AQE's runtime stage reuse (ReusedQueryStage / shared
+  * shuffle stages) is visible; the static formatted plan always shows
+  * repeated subtrees un-reused. It exits 1 if a query failed.
   *
   * Ids that vary between JVM runs are renumbered per plan
   * ([[stableIds]]), and the working directory in file paths (the storage
@@ -22,22 +23,26 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val names = args.drop(1).toSeq
     val exec  = sys.env.get("SPARK_GRAFT_EXEC").contains("1")
     // shared engine config; default to the bench's core count so dumped
     // plans are the shapes the bench times (r15 verdict item 3)
     val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
     // the storage twins live under the session's relative `spark-warehouse`
     val cwdUri = s"file:${System.getProperty("user.dir")}/"
-    names.foreach { n =>
-      println(s"===== $n")
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan =
-        if (exec) { df.count(); df.queryExecution.executedPlan.toString }
-        else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      println(stableIds(plan).replace(cwdUri, "file:<cwd>/"))
-    }
+    def show(n: String, plan: String): Unit =
+      println(s"===== $n\n" + stableIds(plan).replace(cwdUri, "file:<cwd>/"))
+    val failed =
+      if (exec) Profile.profile(spark, sfDir, names,
+        (n, df) => show(n, df.queryExecution.executedPlan.toString)).filter(_.error.isDefined)
+      else {
+        Profile.select(names).foreach(n => show(n, SparkEntry.queries(n)(spark, sfDir)
+          .queryExecution.explainString(ExplainMode.fromString("formatted"))))
+        Nil
+      }
+    for (r <- failed) System.err.println(s"[explain] ${r.name} FAILED: ${r.error.get}")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** Renumber, within one plan and in order of first appearance, the ids

@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Per-query catalog profiler and the one-task heavy-stage audit.
   *
@@ -35,12 +36,15 @@ object Profile {
   final case class Stage(id: Int, tasks: Int, wallMs: Long, runMs: Long)
 
   /** One profiled query; `stages` are every stage it completed, catalog
-    * construction's `Ckpt` builds included.
+    * construction's `Ckpt` builds included, and `count` the rows it
+    * returned (-1 if it failed).
     */
   final case class Row(
       name: String, constructS: Double, planS: Double, execS: Double,
-      jobs: Int, stages: Seq[Stage], error: Option[String]) {
+      jobs: Int, stages: Seq[Stage], count: Long, error: Option[String]) {
     def tasks: Int = stages.map(_.tasks).sum
+
+    def wallS: Double = constructS + planS + execS
 
     /** 1-task stages whose executor run time exceeds `thresholdMs`,
       * heaviest first.
@@ -63,44 +67,62 @@ object Profile {
     }
   }
 
-  /** Read every row and column of a result, as a user reading it does.
-    * A `count()` would let Catalyst prune columns and, for the dedup
-    * verdict queries, the whole match pipeline behind their
-    * row-preserving left join.
+  /** Read every row and column of a result, as a user reading it does,
+    * and return the row count. A `count()` would let Catalyst prune
+    * columns and, for the dedup verdict queries, the whole match pipeline
+    * behind their row-preserving left join. The frame's own execution
+    * runs, so its `executedPlan` is then the plan that ran.
     */
-  def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+  def consume(df: DataFrame): Long = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("consume"))(qe.toRdd.count())
+  }
 
-  /** Profile `names` in order on one listener. Each query's events are
-    * drained from the listener bus before the next query starts, so no
-    * stage is dropped or credited to a neighbour.
+  /** The queries `names` selects: the whole catalog in name order when it
+    * is empty. An unknown name is refused before anything runs.
     */
-  def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Row] = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
+  def select(names: Seq[String]): Seq[String] = {
+    val catalog = SparkEntry.queries.keySet
+    val unknown = names.filterNot(catalog)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val sc = spark.sparkContext
-    val l  = new Listener
+    if (names.isEmpty) catalog.toSeq.sorted else names
+  }
+
+  /** Profile the queries `names` selects, in order, on one listener, each
+    * read in full ([[consume]]) and then shown to `look`; an exception from
+    * either fails the query's row. Each query's events are drained from
+    * the listener bus before the next query starts, so no stage is
+    * dropped or credited to a neighbour.
+    */
+  def profile(spark: SparkSession, sfDir: String, names: Seq[String],
+      look: (String, DataFrame) => Unit = (_, _) => ()): Seq[Row] = {
+    val run = select(names)
+    val sc  = spark.sparkContext
+    val l   = new Listener
     sc.addSparkListener(l)
-    try names.map { name =>
+    try run.map { name =>
       GraftSqlShims.drainListeners(sc)
       l.jobs.set(0)
       l.stages.clear()
       // phase end times; a phase that threw keeps 0 and reports 0 s
       val t = Array(System.nanoTime(), 0L, 0L, 0L)
+      var count = -1L
       val error =
         try {
           val df = SparkEntry.queries(name)(spark, sfDir)
           t(1) = System.nanoTime()
           df.queryExecution.executedPlan
           t(2) = System.nanoTime()
-          consume(df)
+          count = consume(df)
           t(3) = System.nanoTime()
+          look(name, df)
           None
         } catch {
           case NonFatal(e) => Some(String.valueOf(e.getMessage).linesIterator.take(1).mkString)
         }
       GraftSqlShims.drainListeners(sc)
       def secs(i: Int) = if (t(i) == 0L) 0.0 else (t(i) - t(i - 1)) / 1e9
-      Row(name, secs(1), secs(2), secs(3), l.jobs.get, l.stages.asScala.toSeq, error)
+      Row(name, secs(1), secs(2), secs(3), l.jobs.get, l.stages.asScala.toSeq, count, error)
     }
     finally sc.removeSparkListener(l)
   }
@@ -108,12 +130,10 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir       = args.headOption.getOrElse("target/sf1")
     val thresholdMs = args.lift(1).map(_.toLong).getOrElse(2000L)
-    val names       =
-      if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.local("32", logLevel = "ERROR")
 
     println("query\tconstruct_s\tplan_s\texec_s\tjobs\tstages\ttasks\ttop3 id:tasks:wall_ms/run_ms")
-    val rows = profile(spark, sfDir, names)
+    val rows = profile(spark, sfDir, args.drop(2).toSeq)
     for (r <- rows) {
       val top = r.stages.sortBy(-_.wallMs).take(3)
         .map(st => s"${st.id}:${st.tasks}:${st.wallMs}/${st.runMs}").mkString(" ")

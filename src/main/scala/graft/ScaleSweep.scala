@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Full-catalog sf1 sweep (round-12 verdict item 2): run every catalog
   * query once at ~sf1 (a 10× replica of sf0.1 built by [[ScaleData]],
@@ -8,11 +8,13 @@ import org.apache.spark.sql.SparkSession
   *
   *   - wall seconds at sf1 (single pass, after a catalog-wide warm-up
   *     query — this is a scaling probe, not the 3-run bench), and
-  *   - the JOIN-NODE PROFILE of the as-run (AQE-final) plan at sf0.1 vs
-  *     sf1: counts of BroadcastHashJoin / SortMergeJoin / ShuffledHashJoin
-  *     / BroadcastNestedLoop / Cartesian. A profile difference is exactly
-  *     the "AQE plan flip" the verdict asks to see at 10× — usually a
-  *     broadcast→shuffle flip when a build side outgrows the threshold.
+  *   - the JOIN-NODE PROFILE of the planner's static choice (AQE's
+  *     initial plan, not the as-run plan it re-optimizes on measured
+  *     sizes) at sf0.1 vs sf1: counts of BroadcastHashJoin / SortMergeJoin
+  *     / ShuffledHashJoin / BroadcastNestedLoop / Cartesian. A profile
+  *     difference is a static plan flip at 10× — usually a
+  *     broadcast→shuffle flip when a build side's estimate outgrows the
+  *     threshold.
   *
   * Prints one line per query plus a summary: total, slowest-10, and the
   * flip list. Results are pasted into SCALING.md.
@@ -35,8 +37,10 @@ import org.apache.spark.sql.SparkSession
   * share executor storage with a dead scale factor's entries (the
   * measured text_bm25 24→98 s degradation mode, r13 verdict item 1).
   *
-  * Each result is read in full ([[Profile.consume]]), so a timing never
-  * covers a plan that Catalyst pruned for a bare `count()`.
+  * Both phases run through [[Profile.profile]]: each result is read in
+  * full ([[Profile.consume]]), so a timing never covers a plan that
+  * Catalyst pruned for a bare `count()`, and a query's sf1 seconds are
+  * its construct + plan + exec seconds.
   *
   * Usage: `tools/scalesweep.sh [query ...]` — no args sweeps the whole
   * catalog; query args (say, the `dedup_*` family) time just those.
@@ -50,10 +54,14 @@ object ScaleSweep {
     "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
     "BroadcastNestedLoopJoin", "CartesianProduct")
 
-  /** Join-node profile of the final (post-AQE) physical plan. */
+  /** Join-node profile of the static plan, every adaptive node read at
+    * its initial plan: [[ProfileFile]] was recorded from frames whose own
+    * plan never ran, so it pins the planner's choice, not AQE's.
+    */
   private def joinProfile(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    val names = Smoke.finalPlanNodes(df.queryExecution.executedPlan)
-      .map(_.getClass.getSimpleName)
+    val static = df.queryExecution.executedPlan
+      .transformDownWithSubqueries { case a: AdaptiveSparkPlanExec => a.initialPlan }
+    val names = Smoke.finalPlanNodes(static).map(_.getClass.getSimpleName)
     JoinNodes.map(j => j -> names.count(_.startsWith(j))).filter(_._2 > 0).toMap
   }
 
@@ -75,71 +83,50 @@ object ScaleSweep {
     println(s"[sweep] sf1 rows: docs=${Tables.documents(spark, Out).count()} " +
       s"lineitem=${Tables.lineitem(spark, Out).count()} events=${Tables.events(spark, Out).count()}")
 
-    val only = if (args.nonEmpty) Some(args.toSet) else None
-    val catalog = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(_._1)
-
     case class Row(name: String, sec1: Double, p01: Map[String, Int], p1: Map[String, Int],
                    err: Option[String]) {
       def flipped: Boolean = err.isEmpty && p01 != p1
     }
-    val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(1)
+    val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(1).max(1)
     // PHASE A: sf0.1 reference pass over the whole catalog — baseline
     // join profiles plus the JVM/codegen warm-up for the sf1 phase (JIT
     // state is process-global, so the warm-up survives the phase split).
-    val prof01s: Map[String, Either[String, Map[String, Int]]] =
-      catalog.map { case (name, fn) =>
-        name -> (try {
-          val d01 = fn(spark, Src); Profile.consume(d01); Right(joinProfile(d01))
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            val msg = String.valueOf(e.getMessage).linesIterator.take(1).mkString
-            println(s"[sweep] $name FAILED at sf0.1: $msg")
-            Left(msg)
-        })
-      }.toMap
+    val prof01 = scala.collection.mutable.Map[String, Map[String, Int]]()
+    val rows01 = Profile.profile(spark, Src, args.toSeq, (n, df) => prof01(n) = joinProfile(df))
+    for (r <- rows01; msg <- r.error) println(s"[sweep] ${r.name} FAILED at sf0.1: $msg")
     // Drop the sf0.1 memoized caches before timing sf1: with TWO scale
     // factors' entries standing, later sf1 queries measured accumulating
     // storage pressure instead of the query (text_bm25 24→98 s — r13
     // verdict item 1). Entries rebuild from their thunks on next use.
     println(s"[sweep] released ${Ckpt.release(Src)} sf0.1 cache entries before the sf1 phase")
     // PHASE B: timed sf1 pass.
-    val rows = catalog.map { case (name, fn) =>
-      prof01s(name) match {
-        case Left(err) => Row(name, -1, Map.empty, Map.empty, Some(err))
-        case Right(prof01) =>
-          try {
-            val samples = (1 to runs).map { _ =>
-              // between repeats, give the ContextCleaner a GC to reclaim
-              // the previous run's broadcasts/shuffles: in a long session
-              // with standing memoized caches, full GCs are rare and
-              // cleanup lags, so back-to-back repeats of a broadcast-heavy
-              // query otherwise measure accumulating heap pressure, not
-              // the query — the medians must isolate the query's own cost
-              if (runs > 1) { System.gc(); Thread.sleep(200) }
-              val t0 = System.nanoTime()
-              val d1 = fn(spark, Out)
-              Profile.consume(d1)
-              ((System.nanoTime() - t0) / 1e9, d1)
-            }
-            // median of the wall times; profile from the median run's plan
-            val (sec, d1) = samples.sortBy(_._1).apply((runs - 1) / 2)
-            val prof1 = joinProfile(d1)
-            val r = Row(name, sec, prof01, prof1, None)
-            val spread = if (runs > 1)
-              f"  [min ${samples.map(_._1).min}%.2f max ${samples.map(_._1).max}%.2f n=$runs]"
-            else ""
-            println(f"[sweep] $name%-24s ${r.sec1}%7.2f s  sf0.1[${fmtProfile(prof01)}]  sf1[${fmtProfile(prof1)}]" +
-              (if (r.flipped) "  FLIP" else "") + spread)
-            r
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              val r = Row(name, -1, Map.empty, Map.empty,
-                Some(String.valueOf(e.getMessage).linesIterator.take(1).mkString))
-              println(s"[sweep] $name FAILED: ${r.err.get}")
-              r
-          }
+    val rows = rows01.map { r01 =>
+      val name = r01.name
+      // each repeat's join profile; after a repeat, give the
+      // ContextCleaner a GC to reclaim its broadcasts/shuffles: in a long
+      // session with standing memoized caches, full GCs are rare and
+      // cleanup lags, so back-to-back repeats of a broadcast-heavy query
+      // otherwise measure accumulating heap pressure, not the query — the
+      // medians must isolate the query's own cost
+      val profs = Seq.newBuilder[Map[String, Int]]
+      val samples = if (r01.error.isDefined) Nil else
+        Profile.profile(spark, Out, Seq.fill(runs)(name), (_, df) => {
+          profs += joinProfile(df)
+          if (runs > 1) { System.gc(); Thread.sleep(200) }
+        })
+      (r01 +: samples).flatMap(_.error).headOption match {
+        case Some(err) =>
+          if (samples.nonEmpty) println(s"[sweep] $name FAILED: $err")
+          Row(name, -1, Map.empty, Map.empty, Some(err))
+        case None =>
+          // median of the wall times; profile from the median run's plan
+          val times = samples.map(_.wallS)
+          val (sec, prof1) = times.zip(profs.result()).sortBy(_._1).apply((runs - 1) / 2)
+          val r = Row(name, sec, prof01(name), prof1, None)
+          val spread = if (runs > 1) f"  [min ${times.min}%.2f max ${times.max}%.2f n=$runs]" else ""
+          println(f"[sweep] $name%-24s ${r.sec1}%7.2f s  sf0.1[${fmtProfile(r.p01)}]  sf1[${fmtProfile(prof1)}]" +
+            (if (r.flipped) "  FLIP" else "") + spread)
+          r
       }
     }
 
@@ -156,7 +143,7 @@ object ScaleSweep {
 
     // ---- committed plan-profile pin (full sweeps only) ----------------
     var drift = 0
-    val fullSweep = only.isEmpty
+    val fullSweep = args.isEmpty
     if (fullSweep && sys.env.get("SPARK_GRAFT_WRITE_PROFILE").contains("1")) {
       val lines = ok.sortBy(_.name).map(r =>
         s"${r.name}\t${fmtProfile(r.p01)}\t${fmtProfile(r.p1)}")

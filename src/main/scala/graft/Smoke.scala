@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan}
 import org.apache.spark.sql.types._
 
-/** Pre-commit smoke gate: run EVERY catalog query end-to-end (`.count()`)
-  * on a small SF dir and exit non-zero if any fails to analyze or execute.
+/** Pre-commit smoke gate: run EVERY catalog query end-to-end on a small
+  * SF dir, each result read in full through [[Profile.profile]], and exit
+  * non-zero if any fails to analyze or execute.
   *
   * Exists because of the round-6 postmortem: the driver regenerated
   * `events.parquet` with a different physical timestamp type and 12
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types._
   * schema-drift/analysis regression across the whole catalog, so it can
   * run before every commit (`tools/smoke.sh`).
   *
-  * Also audits each executed plan for unsanctioned nested-loop joins
+  * Also audits each as-run plan for unsanctioned nested-loop joins
   * (same allowlist discipline as PlanAuditSpec's full-catalog sweep, kept
   * intentionally independent of the test classpath so it runs from a
   * plain `java -cp`): a new query that accidentally plans a cartesian
@@ -155,8 +156,7 @@ object Smoke {
   val GlobalWindowAllowed: Set[String] = Set(
     // EMPTY by design: every unpartitioned window in the current catalog
     // sits over an aggregate / limit / local scan in the same traversable
-    // plan, so the structural rule sanctions them all (verified with
-    // SPARK_GRAFT_AUDIT_ALL=1 — zero allowlisted hits). The rangeCum
+    // plan, so the structural rule sanctions them all. The rangeCum
     // family's per-slice offset windows ride a pid-grouped aggregate;
     // seq_pack's lane scan rides the TokenBudget-bounded selection
     // aggregate; the smoothing/audit queries window over grid aggregates.
@@ -164,11 +164,14 @@ object Smoke {
   )
 
   /** Collect every node of the FINAL physical plan, descending through
-    * AQE wrappers and query-stage boundaries (after execution,
-    * AdaptiveSparkPlanExec.executedPlan is the as-run plan). Wrapper
-    * recursion and subquery recursion are independent — a subquery
-    * hanging directly off an AQE wrapper node is still collected
-    * (round-12 advice: the old mutually-exclusive match arms skipped it).
+    * AQE wrappers and query-stage boundaries. An adaptive plan is the
+    * as-run plan only once the frame's own QueryExecution has run
+    * ([[Profile.consume]]); a frame executed through another action
+    * (`count()`, a write) ran a separate execution, and its own stays at
+    * the initial plan. Wrapper recursion and subquery recursion are
+    * independent — a subquery hanging directly off an AQE wrapper node is
+    * still collected (round-12 advice: the old mutually-exclusive match
+    * arms skipped it).
     */
   def finalPlanNodes(p: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -248,9 +251,10 @@ object Smoke {
       // a filter on PartitionPrefixSum's cell-last marker keeps exactly
       // one row per (partition, groups) cell — bounded by cluster width ×
       // grid size, the same argument as the groupBy(pid, groups) subtotal
-      // aggregate it replaced (r16 rangeCum), under the same grid-key rule
+      // aggregate it replaced (r16 rangeCum), under the same grid-key rule.
+      // In an as-run plan a codegen InputAdapter sits between the two.
       case f: org.apache.spark.sql.execution.FilterExec =>
-        f.child match {
+        (f.child match { case i: InputAdapter => i.child; case c => c }) match {
           case p: graft.plans.PartitionPrefixSumExec
               if p.lastAttr.exists(a =>
                 f.condition.references ==
@@ -306,10 +310,10 @@ object Smoke {
     * exchanges/unary nodes between them) to the true input subtree.
     */
   private def collectInputUnbounded(n: SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
     n match {
       case a: AdaptiveSparkPlanExec              => collectInputUnbounded(a.executedPlan)
       case q: QueryStageExec                     => collectInputUnbounded(q.plan)
@@ -317,6 +321,9 @@ object Smoke {
       case a: BaseAggregateExec if hasCollect(a) => collectInputUnbounded(a.child)
       case e: Exchange                           => collectInputUnbounded(e.child)
       case p: ProjectExec                        => collectInputUnbounded(p.child)
+      // an as-run plan's shuffle reads and codegen wrappers
+      case w @ (_: AQEShuffleReadExec | _: WholeStageCodegenExec | _: InputAdapter) =>
+        collectInputUnbounded(w.children.head)
       case other                                 => !bounded(other)
     }
   }
@@ -341,46 +348,31 @@ object Smoke {
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Sessions.local(cpus, logLevel = "ERROR")
 
-    val nlAllowed = Smoke.NestedLoopAllowed
-
+    // each query's first failed audit, read off the plan that ran
+    val violation = scala.collection.mutable.Map[String, String]()
+    def audit(name: String, df: DataFrame): Unit = {
+      val plan       = df.queryExecution.executedPlan
+      val nestedLoop = Seq("CartesianProduct", "BroadcastNestedLoopJoin").exists(plan.toString.contains)
+      // the round-7-11 bug class: a result column whose type the DuckDB
+      // hash-compare canonicalizes differently (DECIMAL/FLOAT)
+      outputTypeViolation(df.schema).map(v => s"SMOKE OUTPUT-TYPE: $name — $v")
+        .orElse(unboundedGlobalWindow(plan).filterNot(_ => GlobalWindowAllowed(name))
+          .map(w => s"SMOKE GLOBAL-WINDOW: $name — $w"))
+        .orElse(Option.when(nestedLoop && !NestedLoopAllowed(name))(s"SMOKE NESTED-LOOP: $name"))
+        .foreach(violation(name) = _)
+    }
     var bad = 0
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try {
-        val df = fn(spark, sfDir)
-        val n  = df.count()
-        val p  = df.queryExecution.executedPlan.toString
-        val typeViolation = outputTypeViolation(df.schema)
-        // SPARK_GRAFT_AUDIT_ALL=1: report (don't fail) what the
-        // allowlist absorbs, so stale entries are visible
-        val auditAll = sys.env.get("SPARK_GRAFT_AUDIT_ALL").contains("1")
-        if (auditAll && GlobalWindowAllowed(name))
-          unboundedGlobalWindow(df.queryExecution.executedPlan)
-            .foreach(w => println(s"smoke allowlisted global-window: $name — $w"))
-        val globalWindow =
-          if (GlobalWindowAllowed(name)) None
-          else unboundedGlobalWindow(df.queryExecution.executedPlan)
-        if (typeViolation.isDefined) {
-          // the round-7-11 bug class: a result column whose type the
-          // DuckDB hash-compare canonicalizes differently (DECIMAL/FLOAT)
-          println(s"SMOKE OUTPUT-TYPE: $name — ${typeViolation.get}")
+    for (r <- Profile.profile(spark, sfDir, Nil, audit)) {
+      r.error.map(e => s"SMOKE FAIL: ${r.name} — $e").orElse(violation.get(r.name)) match {
+        case Some(msg) =>
+          println(msg)
           bad += 1
-        } else if (globalWindow.isDefined) {
-          println(s"SMOKE GLOBAL-WINDOW: $name — ${globalWindow.get}")
-          bad += 1
-        } else if (!nlAllowed(name) &&
-            (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))) {
-          println(s"SMOKE NESTED-LOOP: $name")
-          bad += 1
-        } else if (n == 0) {
+        case None if r.count == 0 =>
           // informational only: several queries are legitimately empty at
           // sf0.001 (selective TPC-H filters on ~6k lineitem rows); the
           // driver's DuckDB gate compares exact row counts at sf0.01
-          println(s"smoke empty (ok at tiny SF): $name")
-        }
-      } catch {
-        case e: Throwable =>
-          println(s"SMOKE FAIL: $name — ${String.valueOf(e.getMessage).linesIterator.take(1).mkString}")
-          bad += 1
+          println(s"smoke empty (ok at tiny SF): ${r.name}")
+        case None =>
       }
     }
     if (SparkEntry.oracleSql.keySet != SparkEntry.queries.keySet) {

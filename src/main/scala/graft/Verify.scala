@@ -1,21 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Usage: `Verify <sfDir> <outDir> [query ...]`. Query names restrict
+    * the dump (a local iteration aid); none dumps the whole catalog in
+    * name order. */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir, _*) = args
+    val names = Profile.select(args.toSeq.drop(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared engine config (r15 verdict item 3): the oracle gate now runs
     // the SAME session defaults the bench times (AQE + SHJ preference),
     // so correctness exercises the benched plan shapes
     val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=a,b,c restricts the dump (local iteration aid, same
-    // contract as Bench); the driver leaves it unset -> full catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
     // Engine-side evidence of record (r14: the driver's CORRECTNESS
     // artifact arrived empty, leaving the round without any correctness
     // record). For every dump also compute (rows, schema, order- and
@@ -41,26 +41,25 @@ object Verify {
         if (agg.isNullAt(1)) "0" else agg.getDecimal(1).toBigInteger.toString,
         schema)
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val catalog = SparkEntry.queries
+    for (name <- names) {
       // names the query that any following log line comes from
       System.err.println(s"[verify] $name")
       // dump and summary fail INDEPENDENTLY: a summary-side error must
       // not record a successfully-dumped query as failed (the dump is
       // what the driver's own gate reads)
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        catalog(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         summary(name) =
           try {
             val (rows, h, schema) = contentHash(s"$outDir/$name")
             s"""{"rows":$rows,"hash":"$h","schema":"$schema"}"""
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             System.err.println(s"[verify] $name summary failed: ${e.getMessage}")
             s"""{"summary_error":true}"""
           }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         summary(name) = s"""{"error":true}"""
       }

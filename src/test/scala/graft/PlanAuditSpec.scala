@@ -364,7 +364,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val w = org.apache.spark.sql.expressions.Window.orderBy("l_orderkey")
     val df = Tables.lineitem(spark, Sf0001)
       .withColumn("rn", row_number().over(w))
-    df.count()
+    Profile.consume(df)
     assert(Smoke.unboundedGlobalWindow(df.queryExecution.executedPlan).isDefined,
       s"audit missed a global window over a fact table:\n${df.queryExecution.executedPlan}")
     // ...and the same window over a bounded (aggregated) input passes
@@ -372,7 +372,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("n")))
-    ok.count()
+    Profile.consume(ok)
     assert(Smoke.unboundedGlobalWindow(ok.queryExecution.executedPlan).isEmpty)
   }
 
@@ -385,7 +385,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val idGrouped = Tables.documents(spark, Sf0001)
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
       .withColumn("rn", row_number().over(gw))
-    idGrouped.count()
+    Profile.consume(idGrouped)
     assert(Smoke.unboundedGlobalWindow(idGrouped.queryExecution.executedPlan).isDefined,
       "audit missed a global window over an id-grouped (corpus-sized) aggregate")
     // a bounding aggregate on the SMALL side of a join does not bound the
@@ -397,7 +397,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .join(dim, "l_returnflag")
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("l_orderkey")))
-    factJoin.count()
+    Profile.consume(factJoin)
     assert(Smoke.unboundedGlobalWindow(factJoin.queryExecution.executedPlan).isDefined,
       "audit missed a global window over a fact.join(aggregated_dim) input")
     // ...while a semi join against the fact keeps its bounded LEFT side
@@ -406,7 +406,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .join(Tables.lineitem(spark, Sf0001), Seq("l_returnflag"), "left_semi")
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("n")))
-    semi.count()
+    Profile.consume(semi)
     assert(Smoke.unboundedGlobalWindow(semi.queryExecution.executedPlan).isEmpty,
       "semi join against a bounded left side is output-bounded and must pass")
   }
@@ -423,7 +423,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .select(col("lang"), explode(col("toks")).as("tok"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("tok")))
-    reInflated.count()
+    Profile.consume(reInflated)
     assert(Smoke.unboundedGlobalWindow(reInflated.queryExecution.executedPlan).isDefined,
       "audit missed a global window over an explode of a collected corpus array")
     // ...while exploding a collect whose INPUT was itself bounded stays
@@ -434,7 +434,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .select(explode(col("ns")).as("n"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("n")))
-    boundedCollect.count()
+    Profile.consume(boundedCollect)
     assert(Smoke.unboundedGlobalWindow(boundedCollect.queryExecution.executedPlan).isEmpty,
       "explode of a collect over a bounded (grid-aggregated) input must pass")
   }
@@ -446,9 +446,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // silently flipping to a BROADCAST of the corpus-sized side — at
     // 100 TB that is an executor-OOM, not a perf regression. The
     // grid side broadcasting would be fine; the LogicalRDD side must not.
+    // This pins the planner's STATIC choice, so the frame is not run: AQE
+    // broadcasts only a side it has measured under the threshold (at
+    // sf0.001 the as-run plan broadcasts the tiny checkpoint scan).
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val df = SparkEntry.queries("curate_pareto")(spark, Sf0001)
-    df.count()
     val nodes = Smoke.finalPlanNodes(df.queryExecution.executedPlan)
     val smj = nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec])
     assert(smj >= 1, "curate_pareto lost its pinned sort-merge join shape")
@@ -473,7 +475,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if !Smoke.GlobalWindowAllowed(name)) {
       val df = fn(spark, Sf0001)
-      df.count() // finalize AQE so the audited plan is the as-run plan
+      Profile.consume(df) // finalize AQE so the audited plan is the as-run plan
       Smoke.unboundedGlobalWindow(df.queryExecution.executedPlan).foreach { w =>
         fail(s"$name plans an unpartitioned window over an unbounded input: $w")
       }

@@ -22,6 +22,17 @@ class ProfileSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.forall(_.flagged(Long.MaxValue).isEmpty))
   }
 
+  test("consume reads every row through the frame's own plan, which ends final") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val df = SparkEntry.queries("join_broadcast")(spark, Sf0001)
+    val n  = Profile.consume(df)
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan, s"plan not final after consume:\n$a")
+      case p                        => fail(s"not an adaptive plan:\n$p")
+    }
+    assert(n == df.count() && n > 0)
+  }
+
   test("an unknown query name is refused before anything runs") {
     intercept[IllegalArgumentException](Profile.profile(spark, Sf0001, Seq("no_such_query")))
   }

@@ -2,7 +2,8 @@
 """sf1 oracle gate (r13 verdict item 4; hardened r15): the driver's DuckDB
 value gate tops out at sf0.1, so sf1 evidence was engine-only. This runs the
 same compare as check.py over the ScaleData-built sf1 replica for whatever
-subset graft.Verify dumped (SPARK_GRAFT_ONLY) — directory-style parquet, so
+subset graft.Verify dumped (query names after its two arguments) —
+directory-style parquet, so
 views glob part files. Names in oracle_sql.json without a dumped output dir
 are SKIPPED (subset mode), not failed.
 
