@@ -16,14 +16,13 @@ import org.apache.spark.sql.types._
   * schema-drift/analysis regression across the whole catalog, so it can
   * run before every commit (`tools/smoke.sh`).
   *
-  * Also audits each as-run plan for unsanctioned nested-loop joins
-  * (same allowlist discipline as PlanAuditSpec's full-catalog sweep, kept
-  * intentionally independent of the test classpath so it runs from a
-  * plain `java -cp`): a new query that accidentally plans a cartesian
-  * product fails the smoke, not the 100×-bigger bench.
+  * Also audits each as-run plan ([[audit]], which PlanAuditSpec's
+  * full-catalog sweep runs too; it lives here, off the test classpath,
+  * so it runs from a plain `java -cp`) for unsanctioned nested-loop
+  * joins: a new query that accidentally plans a cartesian product fails
+  * the smoke, not the 100×-bigger bench.
   *
-  * Round 12 adds two more per-query audits, both mirrored in
-  * PlanAuditSpec:
+  * Round 12 added the two other per-query audits:
   *  - output-type lint ([[outputTypeViolation]]): no DECIMAL/FLOAT result
   *    columns — the hash-compare class of bug that cost rounds 7-11
   *    (content_sig) is structurally impossible for new queries;
@@ -343,6 +342,22 @@ object Smoke {
     }
   }
 
+  /** The per-query plan audit: the first of the three audits that `name`
+    * fails on `df`'s executed plan, as one line, or None. Read it after
+    * [[Profile.consume]], so the plan audited is the plan that ran. Both
+    * this smoke gate and PlanAuditSpec's full-catalog sweep run it.
+    */
+  def audit(name: String, df: DataFrame): Option[String] = {
+    val plan       = df.queryExecution.executedPlan
+    val nestedLoop = Seq("CartesianProduct", "BroadcastNestedLoopJoin").exists(plan.toString.contains)
+    // the round-7-11 bug class: a result column whose type the DuckDB
+    // hash-compare canonicalizes differently (DECIMAL/FLOAT)
+    outputTypeViolation(df.schema).map(v => s"SMOKE OUTPUT-TYPE: $name — $v")
+      .orElse(unboundedGlobalWindow(plan).filterNot(_ => GlobalWindowAllowed(name))
+        .map(w => s"SMOKE GLOBAL-WINDOW: $name — $w"))
+      .orElse(Option.when(nestedLoop && !NestedLoopAllowed(name))(s"SMOKE NESTED-LOOP: $name"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
@@ -350,19 +365,9 @@ object Smoke {
 
     // each query's first failed audit, read off the plan that ran
     val violation = scala.collection.mutable.Map[String, String]()
-    def audit(name: String, df: DataFrame): Unit = {
-      val plan       = df.queryExecution.executedPlan
-      val nestedLoop = Seq("CartesianProduct", "BroadcastNestedLoopJoin").exists(plan.toString.contains)
-      // the round-7-11 bug class: a result column whose type the DuckDB
-      // hash-compare canonicalizes differently (DECIMAL/FLOAT)
-      outputTypeViolation(df.schema).map(v => s"SMOKE OUTPUT-TYPE: $name — $v")
-        .orElse(unboundedGlobalWindow(plan).filterNot(_ => GlobalWindowAllowed(name))
-          .map(w => s"SMOKE GLOBAL-WINDOW: $name — $w"))
-        .orElse(Option.when(nestedLoop && !NestedLoopAllowed(name))(s"SMOKE NESTED-LOOP: $name"))
-        .foreach(violation(name) = _)
-    }
     var bad = 0
-    for (r <- Profile.profile(spark, sfDir, Nil, audit)) {
+    for (r <- Profile.profile(spark, sfDir, Nil,
+        (name, df) => audit(name, df).foreach(violation(name) = _))) {
       r.error.map(e => s"SMOKE FAIL: ${r.name} — $e").orElse(violation.get(r.name)) match {
         case Some(msg) =>
           println(msg)

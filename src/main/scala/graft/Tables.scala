@@ -18,10 +18,11 @@ object Tables {
   // is a logical plan: per-query conf (AQE, shuffle partitions, ANSI)
   // still applies at execution, so this changes no results — the
   // driver's tables never change within a session by contract
-  // (TESTDATA.md: read-only). Keyed by session identity so test suites
-  // with private sessions don't share plans across stopped contexts.
+  // (TESTDATA.md: read-only). Keyed by the session itself (reference
+  // equality), so no two live sessions share a relation; a miss drops
+  // the relations of sessions whose context has stopped.
   private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     def build: DataFrame =
@@ -29,7 +30,11 @@ object Tables {
         case "events" => eventsUncached(spark, dir)
         case _        => spark.read.parquet(s"$dir/$name.parquet")
       }
-    relCache.computeIfAbsent((System.identityHashCode(spark), dir, name), _ => build)
+    val key = (spark, dir, name)
+    Option(relCache.get(key)).getOrElse {
+      relCache.keySet.removeIf(_._1.sparkContext.isStopped)
+      relCache.computeIfAbsent(key, _ => build)
+    }
   }
 
   /** `events.parquet` carries TIMESTAMP(NANOS) (see FIXTURES.md), which the
@@ -45,9 +50,9 @@ object Tables {
   private def eventsUncached(spark: SparkSession, dir: String): DataFrame = spark.synchronized {
     // The flag matters only while spark.read resolves the parquet schema
     // (eager, inside this block); synchronize the toggle window on the
-    // session so concurrent plan construction (parallel suites, streaming
-    // + batch) can't interleave a set/restore pair and read the wrong
-    // schema or clobber another thread's restore.
+    // session so concurrent plan construction (parallel suites) can't
+    // interleave a set/restore pair and read the wrong schema or clobber
+    // another thread's restore.
     val prev = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try {

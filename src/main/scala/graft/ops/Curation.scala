@@ -1042,7 +1042,9 @@ object Curation {
   val PackDocsPerLane = 128
   val PackCapacity    = 512
 
-  /** Lane count for an `n`-document corpus (same formula as the oracle). */
+  /** Lane count for an `n`-document corpus (same formula as the oracle):
+    * the expected lane bound `CurationSpec`'s seq_pack tests check.
+    */
   def packLanes(n: Long): Long = (n + PackDocsPerLane - 1) / PackDocsPerLane
 
   /** Sequence packing: assign every document to a training shard of
@@ -2262,13 +2264,15 @@ object Curation {
     "embed_covariance" ->
       s"""WITH $duckCovCtes
          SELECT dim_i, dim_j, n, cov FROM cov""",
+    // each round's y$k carries its own norm (a window sum over the exact
+    // decimal squares), so v$k reads y$k once: DuckDB 1.0 inlines a CTE
+    // at every reference, and a second reference doubled the work per round
     "embed_pca" -> {
       val iters = (1 to PcaIterations).map { k =>
-        s"""y$k AS (SELECT f.i, CAST(sum(CAST(f.c * v.x AS DECIMAL(38,12))) AS DOUBLE) AS y
-             FROM full_m f JOIN v${k - 1} v ON v.i = f.j GROUP BY 1),
-           n$k AS (SELECT sqrt(CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE)) AS nrm
-             FROM y$k),
-           v$k AS (SELECT i, y / nrm AS x FROM y$k, n$k)"""
+        s"""y$k AS (SELECT i, y, sqrt(CAST(sum(CAST(y * y AS DECIMAL(38,12))) OVER () AS DOUBLE)) AS nrm
+             FROM (SELECT f.i, CAST(sum(CAST(f.c * v.x AS DECIMAL(38,12))) AS DOUBLE) AS y
+                   FROM full_m f JOIN v${k - 1} v ON v.i = f.j GROUP BY 1)),
+           v$k AS (SELECT i, y / nrm AS x FROM y$k)"""
       }.mkString(",\n")
       s"""WITH $duckCovCtes,
          full_m AS (SELECT dim_i AS i, dim_j AS j, cov AS c FROM cov

@@ -197,14 +197,7 @@ object Dedup {
        ON a.doc_id = c.doc_id AND c.i = a.i + 2"""
 
   /** Exact Jaccard on candidate pairs: |A∩B| via the pair table, sizes via
-    * a shingle-count side table.
-    */
-  private def verifyJaccard(pairs: DataFrame, shingleSets: DataFrame): DataFrame =
-    verifyJaccardSized(pairs,
-      shingleSets.groupBy("doc_id").agg(count(lit(1)).as("n")))
-
-  /** [[verifyJaccard]] over an already-built size table (the
-    * [[shingleSizes]] stage).
+    * the [[shingleSizes]] stage.
     */
   private def verifyJaccardSized(pairs: DataFrame, sizes: DataFrame): DataFrame =
     pairs
@@ -517,7 +510,7 @@ object Dedup {
     * Jaccard is exact.
     */
   /** Screen predicate shared by ngram's blocking and its exact final
-    * filter: same expression shape as verifyJaccard's threshold, applied
+    * filter: same expression shape as verifyJaccardSized's threshold, applied
     * to the intersection upper bound.
     */
   private val ngramViable = (iub: Column, na: Column, nb: Column) =>
@@ -660,8 +653,19 @@ object Dedup {
     snapshotDiffOf(Tables.documents(s, dir))
 
   def snapshotDiffOf(docs: DataFrame): DataFrame = {
-    val v1 = diffBase(docs).withColumnRenamed("digest", "d1")
-    val v2 = diffNext(docs).withColumnRenamed("digest", "d2")
+    val v1 = docs.select(col("doc_id"), md5(col("text")).as("digest"))
+      .withColumnRenamed("digest", "d1")
+    // version 2: exact-dedup survivors with digit runs masked
+    val keep = docs
+      .select(col("doc_id"), md5(col("text")).as("digest"))
+      .groupBy("digest")
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id")
+    val v2 = docs
+      .join(keep, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        md5(regexp_replace(col("text"), "[0-9]+", "<ID>")).as("digest"))
+      .withColumnRenamed("digest", "d2")
     v1.join(v2, Seq("doc_id"), "full_outer")
       .select(
         col("doc_id"),
@@ -669,29 +673,6 @@ object Dedup {
           .when(col("d1") =!= col("d2"), "changed")
           .otherwise("unchanged")
           .as("status"))
-  }
-
-  /** The "version 1" side of [[snapshotDiff]]: every document's content
-    * digest. Factored out so the streaming twin
-    * ([[graft.streaming.CorpusStream.corpusDiff]]) feeds the identical
-    * records.
-    */
-  private[graft] def diffBase(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), md5(col("text")).as("digest"))
-
-  /** The "version 2" side of [[snapshotDiff]]: exact-dedup survivors with
-    * digit runs masked (the corpus after the dedup + PII-scrub passes).
-    */
-  private[graft] def diffNext(docs: DataFrame): DataFrame = {
-    val keep = docs
-      .select(col("doc_id"), md5(col("text")).as("digest"))
-      .groupBy("digest")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    docs
-      .join(keep, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        md5(regexp_replace(col("text"), "[0-9]+", "<ID>")).as("digest"))
   }
 
   // ---------------------------------------------------------------- minhash
@@ -765,7 +746,8 @@ object Dedup {
     * the executed builds are left_semi joins over memoized LogicalRDD
     * scans with different stats). Evaluating an entry here materializes
     * its memoized INPUTS (they are `cached` lookups), which is exactly
-    * what the first catalog consumer does.
+    * what the first catalog consumer does. Its one caller is
+    * `MemoizationSpec` ("cached builds keep lint-clean plans").
     */
   private[graft] def buildPlansForAudit(
       s: SparkSession, dir: String): Map[String, DataFrame] = {
@@ -821,57 +803,6 @@ object Dedup {
       .agg(min("db").as("mp"))
     h.in
       .filter(isDelta(col("doc_id")))
-      .select("doc_id")
-      .join(matches, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("mp").isNotNull.as("is_dup"),
-        coalesce(col("mp"), lit(-1L)).as("match_id"))
-  }
-
-  /** Persist a corpus' dedup index — band signatures AND shingle hashes —
-    * as parquet, bucketed-ready for [[incrementalAgainst]]. This is the
-    * production deployment of [[incremental]]: the snapshot's index is
-    * built ONCE (or maintained additively — both tables are append-only
-    * under corpus growth), and each arriving batch pays only its own
-    * signatures plus the delta-restricted join; the snapshot corpus is
-    * never rescanned (pinned in `DedupSimilaritySpec`, which also pins
-    * verdict equality with the recomputing [[incremental]]).
-    */
-  def writeDedupIndex(docs: DataFrame, outDir: String): Unit = {
-    val sh = docShinglesOf(docs).transform(Ckpt.apply)
-    sh.write.mode("overwrite").parquet(s"$outDir/shingles.parquet")
-    bandSignatures(sh).write.mode("overwrite").parquet(s"$outDir/bands.parquet")
-  }
-
-  /** Dedup an arriving batch against a persisted snapshot index: verdicts
-    * are bit-equal to [[incremental]] run over snapshot ∪ delta whenever
-    * (snapshot, delta) is that query's arithmetic split, but the snapshot
-    * side is READ, not recomputed — the per-batch plan scans the delta
-    * docs plus two index tables, and the only joins are the delta-bands ⋈
-    * index-bands candidate join and the intersection recount. Delta docs
-    * also dedup against each other (keep-first by doc_id), exactly the
-    * [[incremental]] rule.
-    */
-  def incrementalAgainst(s: SparkSession, deltaDocs: DataFrame, indexDir: String): DataFrame = {
-    val dsh    = docShinglesOf(deltaDocs).transform(Ckpt.apply)
-    val dBands = bandSignatures(dsh)
-    val sBands = s.read.parquet(s"$indexDir/bands.parquet")
-    val ssh    = s.read.parquet(s"$indexDir/shingles.parquet")
-    val dL     = dBands.select(col("doc_id").as("da"), col("band"), col("sig"))
-    val candSnap = dL
-      .join(sBands.select(col("doc_id").as("db"), col("band"), col("sig")), Seq("band", "sig"))
-    val candDelta = dL
-      .join(dBands.select(col("doc_id").as("db"), col("band"), col("sig")), Seq("band", "sig"))
-      .filter(col("db") < col("da"))
-    val cand  = candSnap.select("da", "db")
-      .unionByName(candDelta.select("da", "db"))
-      .distinct()
-    val allSh = ssh.unionByName(dsh)
-    val matches = verifyJaccard(interCounts(cand, allSh), allSh)
-      .groupBy(col("da").as("doc_id"))
-      .agg(min("db").as("mp"))
-    deltaDocs
       .select("doc_id")
       .join(matches, Seq("doc_id"), "left")
       .select(

@@ -7,8 +7,7 @@ import graft.Tables
 
 /** Event-stream analytics over the `events` table: time bucketing,
   * sessionization, as-of matching, JSON extraction, pivot-style
-  * conditional aggregation. The batch formulations here are the same
-  * logical plans the streaming layer (graft.streaming) runs incrementally.
+  * conditional aggregation.
   *
   * All time arithmetic is done in epoch microseconds (long) — exact, and
   * identical on both sides of the DuckDB oracle regardless of timestamp
@@ -43,10 +42,9 @@ object Events {
     * overlapping-window twin of [[hourly]], via Spark's native `window()`
     * time TVF (each event fans out to the 4 windows covering it; the
     * aggregation is still one partial-aggregated shuffle keyed on
-    * (window, type), and the same expression runs unchanged as a
-    * watermarked streaming aggregation). Epoch-aligned window boundaries
-    * are mirrored in the oracle by integer floor arithmetic on epoch
-    * microseconds — no timezone or alignment ambiguity.
+    * (window, type)). Epoch-aligned window boundaries are mirrored in
+    * the oracle by integer floor arithmetic on epoch microseconds — no
+    * timezone or alignment ambiguity.
     */
   def slidingHourly(s: SparkSession, dir: String): DataFrame =
     Tables
@@ -428,9 +426,7 @@ object Events {
 
   /** Sessionization through Spark's NATIVE `session_window` aggregation —
     * the same 30-minute-gap semantics as [[sessionize]]'s hand-rolled
-    * gaps-and-islands, expressed as a single groupBy. This is the form
-    * that transfers unchanged to Structured Streaming (watermark + merging
-    * session state); batch and stream share one logical plan. Boundary
+    * gaps-and-islands, expressed as a single groupBy. Boundary
     * semantics: a session spans `[first_ts, last_ts + gap)`, so an event
     * exactly `gap` after its predecessor opens a NEW session (the oracle
     * flags `>=`, where [[sessionize]] uses `>`).
@@ -858,24 +854,14 @@ object Events {
     * divisions of NON-NEGATIVE micro differences, where truncation and
     * floor agree.
     */
-  private[graft] def survivalKmOf(events: DataFrame): DataFrame =
-    survivalKmFromLifetimes(
-      events
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(
-          min(expr("unix_micros(ts)")).as("f"),
-          max(expr("unix_micros(ts)")).as("l")),
-      events.agg(max(expr("unix_micros(ts)")).as("g")))
-
-  /** The KM computation over an already-aggregated per-(type, user)
-    * lifetime table — the seam the streaming twin
-    * ([[graft.streaming.EventStream.lifetimes]]) plugs its stateful
-    * first/last aggregation into.
-    */
-  private[graft] def survivalKmFromLifetimes(
-      lifetimes: DataFrame, gmax: DataFrame): DataFrame = {
+  private[graft] def survivalKmOf(events: DataFrame): DataFrame = {
+    val lifetimes = events
+      .groupBy(col("event_type"), col("user_id"))
+      .agg(
+        min(expr("unix_micros(ts)")).as("f"),
+        max(expr("unix_micros(ts)")).as("l"))
     val per = lifetimes
-      .crossJoin(broadcast(gmax))
+      .crossJoin(broadcast(events.agg(max(expr("unix_micros(ts)")).as("g"))))
       .select(
         col("event_type"),
         expr("(l - f) div 3600000000").as("t"),

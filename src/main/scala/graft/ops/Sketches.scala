@@ -116,7 +116,9 @@ object Sketches {
   }
 
   /** Fixture entry point: heavy hitters of the documents token stream
-    * (same tokenization as `wc` — the exact comparison target).
+    * (same tokenization as `wc` — the exact comparison target). Its one
+    * caller is `SketchSpec` ("sketched heavy hitters reproduce the exact
+    * top-k on the fixture").
     */
   def docTokenHeavyHitters(s: SparkSession, dir: String, k: Int): DataFrame = {
     import s.implicits._

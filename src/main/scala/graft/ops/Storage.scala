@@ -246,28 +246,6 @@ object Storage {
       .parquet(outDir)
   }
 
-  /** Bloom-filtered layout — the pruning technique for the case the
-    * other two can't touch: POINT lookups on a high-cardinality column
-    * whose values are scattered (id in an append-ordered log, digest in
-    * a dedup index). Sorting ([[writeSorted]]) would buy min/max pruning
-    * but costs a global shuffle per maintained column; a bloom filter is
-    * per-row-group metadata the writer computes for free in one pass,
-    * and an equality predicate then skips every row group whose filter
-    * rules the value out — no layout change, composable with any
-    * partitioning, multiple columns at once. `ndv` sizes the filter
-    * (parquet allocates bits for the expected distinct count; undersizing
-    * raises the false-positive rate, which costs extra reads, never
-    * wrong answers). StorageSpec demonstrates the skip empirically
-    * against an identical copy without the filter.
-    */
-  def writeBloomFiltered(df: DataFrame, column: String, ndv: Long,
-      outDir: String, rowGroupBytes: Long = 64L << 10): Unit =
-    df.write.mode("overwrite")
-      .option(s"parquet.bloom.filter.enabled#$column", "true")
-      .option(s"parquet.bloom.filter.expected.ndv#$column", ndv.toString)
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(outDir)
-
   /** Catalog entry: the documents table written out as JSONL (the corpus
     * interchange sink), read back under its explicit schema, and reduced
     * to a per-(lang, source) integrity summary — row counts, char sums,
@@ -428,16 +406,13 @@ object Storage {
           col("max_b") < zLoB || col("min_b") > zHiB).as("prunable"))
   }
 
-  /** The per-(lang, source) integrity summary shared by the batch
-    * round-trip and its streaming-ingestion twin
-    * ([[graft.streaming.CorpusStream.ingestProfile]]): counts, char
-    * sums, and an order-free content signature (exact decimal sum of
-    * per-doc hashes, folded mod 2^61-1 to a BIGINT -- beyond-int64
-    * DECIMAL outputs canonicalize differently across engines at the
-    * hash-compare layer even when every value matches, and a 61-bit
-    * prime keeps the signature sensitive to any single-term change).
-    * Works unchanged as a streaming aggregation -- every term is an
-    * incremental commutative sum.
+  /** The per-(lang, source) integrity summary shared by the round-trip
+    * entries: counts, char sums, and an order-free content signature
+    * (exact decimal sum of per-doc hashes, folded mod 2^61-1 to a
+    * BIGINT -- beyond-int64 DECIMAL outputs canonicalize differently
+    * across engines at the hash-compare layer even when every value
+    * matches, and a 61-bit prime keeps the signature sensitive to any
+    * single-term change).
     */
   def corpusSummary(docs: DataFrame): DataFrame =
     docs.groupBy("lang", "source")

@@ -288,11 +288,37 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(hints.size == 1, s"expected only the corpus-total broadcast hint, got ${hints.size}")
   }
 
+  /** One pass over the catalog through Profile.profile, each result read
+    * in full and its as-run plan checked by Smoke.audit, the same audit
+    * the pre-commit smoke gate runs, so the two can never drift apart.
+    * The three tests below share this pass and each asserts its own
+    * violation class; every query error fails all three. Smoke.audit
+    * reports a query's first violation only, so a query breaking two
+    * checks fails the test of the one audit reports first.
+    */
+  private lazy val catalogAudit: (Seq[String], Seq[String]) = {
+    val violations = scala.collection.mutable.Buffer[String]()
+    val rows = Profile.profile(spark, Sf0001, Nil,
+      (name, df) => violations ++= Smoke.audit(name, df))
+    assert(rows.size == SparkEntry.queries.size)
+    (rows.flatMap(r => r.error.map(e => s"${r.name} FAILED: $e")), violations.toSeq)
+  }
+
+  private def assertNoAuditViolation(tag: String): Unit = {
+    val (errors, violations) = catalogAudit
+    val bad = errors ++ violations.filter(_.startsWith(s"SMOKE $tag:"))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("full catalog: no unexpected nested-loop or cartesian plans") {
-    // the only sanctioned nested-loop plans: cross_join (the operator
-    // itself), sim_topk's |Q|-row broadcast against the candidate stream,
-    // and the 1-row scalar broadcasts (scalar_subquery, text_unigram_lm's
-    // corpus total, text_pmi's bigram total, seq_pack's lane count,
+    // Reads the as-run plan, not the static one: AQE re-plans a join
+    // only as a shuffle or broadcast hash join, never as a nested loop,
+    // so an as-run nested loop was in the static plan too (AQE can still
+    // drop a join whose side ran empty).
+    // The sanctioned nested-loop plans: cross_join (the operator itself),
+    // sim_topk's |Q|-row broadcast against the candidate stream, and the
+    // 1-row scalar broadcasts (scalar_subquery, text_unigram_lm's corpus
+    // total, text_pmi's bigram total, seq_pack's lane count,
     // q11_important's revenue threshold, corpus_mixture's weight total,
     // text_ppl_buckets' corpus total, curate_dsir's corpus/target totals,
     // text_bm25's 1-row corpus stats — each build side is an aggregate's
@@ -302,9 +328,6 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // of four boundary values broadcast onto the customers; orders_abc's
     // single-group rangeCum joins its per-slice offset table — bounded
     // by partition count — without an equi key).
-    // dedup_clusters executes eagerly (checkpointed loop), leaving only a
-    // result scan here — its per-round join shape is audited directly in
-    // the next test.
     // Per-query boundedness arguments, in the order of Smoke's set:
     // graph_pagerank/dedup_clusters/text_bpe_train are eager
     // checkpointed loops (only a result scan plans here; per-round join
@@ -320,30 +343,24 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // source_overlap_kmv's pair grid crosses two source-count-bounded
     // k-row sketch lists; the rest
     // are 1-row scalar broadcasts or the cross-join operator itself.
-    // The set lives in Smoke.NestedLoopAllowed so the pre-commit smoke
-    // gate and this sweep can never drift apart.
-    val allowed = Smoke.NestedLoopAllowed
-    for ((name, _) <- SparkEntry.queries.toSeq.sortBy(_._1) if !allowed(name)) {
-      val p = plan(name)
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-        s"$name plans a nested-loop/cartesian join:\n$p")
-    }
+    assertNoAuditViolation("NESTED-LOOP")
   }
-
 
   test("full catalog: every result schema is driver-safe (no DECIMAL/FLOAT output columns)") {
     // the round-7-11 bug class, fenced: content_sig's DECIMAL(38,0)
     // output hashed differently in Spark and DuckDB for five rounds even
     // though every value matched. Internal decimal/float math stays
-    // unconstrained — only the RESULT schema is linted. Shared logic
-    // with the pre-commit smoke gate (Smoke.outputTypeViolation) so the
-    // two sweeps can't drift.
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val df = fn(spark, Sf0001)
-      Smoke.outputTypeViolation(df.schema).foreach { v =>
-        fail(s"$name has a driver-unsafe output column: $v (schema ${df.schema.simpleString})")
-      }
-    }
+    // unconstrained — only the RESULT schema is linted.
+    assertNoAuditViolation("OUTPUT-TYPE")
+  }
+
+  test("full catalog: no unpartitioned window over an unbounded input") {
+    // an empty partitionSpec plans as AllTuples = ONE task; over a fact
+    // table that is the single-task-sort scale-killer. Bounded inputs
+    // (aggregate / limit / local scan beneath) are sanctioned
+    // structurally; everything else needs a boundedness argument in
+    // Smoke.GlobalWindowAllowed (same discipline as the nested-loop set).
+    assertNoAuditViolation("GLOBAL-WINDOW")
   }
 
   test("the two smoke audits actually fire on their target bug classes") {
@@ -463,22 +480,6 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         _.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec])
       assert(!scansCkpt,
         s"curate_pareto broadcasts a checkpoint-scan (corpus-sized) build side:\n$b")
-    }
-  }
-
-  test("full catalog: no unpartitioned window over an unbounded input") {
-    // an empty partitionSpec plans as AllTuples = ONE task; over a fact
-    // table that is the single-task-sort scale-killer. Bounded inputs
-    // (aggregate / limit / local scan beneath) are sanctioned
-    // structurally; everything else needs a boundedness argument in
-    // Smoke.GlobalWindowAllowed (same discipline as the nested-loop set).
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if !Smoke.GlobalWindowAllowed(name)) {
-      val df = fn(spark, Sf0001)
-      Profile.consume(df) // finalize AQE so the audited plan is the as-run plan
-      Smoke.unboundedGlobalWindow(df.queryExecution.executedPlan).foreach { w =>
-        fail(s"$name plans an unpartitioned window over an unbounded input: $w")
-      }
     }
   }
 

@@ -37,4 +37,13 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
       .head().getLong(0)
     assert(subMs > 0, "all timestamps ms-aligned: nanosecond normalization lost precision")
   }
+
+  test("relations are cached per session, never shared across sessions") {
+    val shared = Tables(spark, Sf0001, "region")
+    val other  = spark.newSession()
+    val rel    = Tables(other, Sf0001, "region")
+    assert(rel.sparkSession eq other)
+    assert(!(rel eq shared), "the shared session's relation was reused for a new session")
+    assert(Tables(other, Sf0001, "region") eq rel, "a session's relation is not memoized")
+  }
 }

@@ -227,28 +227,6 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       "every delta doc appears exactly once")
   }
 
-  test("persisted-index incremental dedup: verdicts equal the recomputing query, snapshot never rescanned") {
-    val m    = Dedup.DeltaMod
-    val docs = graft.Tables.documents(spark, Sf0001)
-    val dir  = java.nio.file.Files.createTempDirectory("graft-dedupidx").toString
-    Dedup.writeDedupIndex(docs.filter(col("doc_id") % m =!= 0), dir)
-    // the delta arrives as an in-memory batch, so the ONLY parquet in the
-    // per-batch plan is the index — the snapshot corpus is never rescanned
-    val delta = docs.filter(col("doc_id") % m === 0)
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq
-      .toDF("doc_id", "text")
-    val batch = Dedup.incrementalAgainst(spark, delta, dir)
-    val got = batch.as[(Long, Boolean, Long)].collect().sortBy(_._1).toSeq
-    val want = Dedup.incremental(spark, Sf0001)
-      .as[(Long, Boolean, Long)].collect().sortBy(_._1).toSeq
-    assert(got == want, "persisted-index verdicts diverged from the recomputing query")
-    val plan = batch.queryExecution.executedPlan.toString
-    assert(plan.contains("bands.parquet") && plan.contains("shingles.parquet"),
-      "per-batch plan should read the persisted index")
-    assert(!plan.contains("documents.parquet"),
-      "per-batch plan must not rescan the snapshot corpus")
-  }
-
   test("simhash signatures are deterministic and 60-bit") {
     val pairs = Dedup.simhashSignatures(spark, Sf0001)
     val s1 = pairs.as[(Long, Long)].collect().sortBy(_._1).toSeq

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** Properties of the round-5 profiling operators that the row-level
   * oracle can't state: cross-query consistency (OLS vs correlation),
@@ -1312,5 +1312,14 @@ class ProfilingOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(att == viaJoin, s"window=$att join=$viaJoin")
     assert(att.values.sum ==
       ev.filter(col("event_type") === "purchase").count())
+  }
+
+  test("sessionize invariants: events partition exactly into sessions") {
+    val total = Tables.events(spark, Sf0001).count()
+    val sessions = graft.ops.Events.sessionize(spark, Sf0001)
+      .select("n_events", "start_us", "end_us")
+      .as[(Long, Long, Long)].collect()
+    assert(sessions.map(_._1).sum == total, "session sizes must sum to the event count")
+    assert(sessions.forall { case (_, s, e) => s <= e }, "session start must not exceed end")
   }
 }

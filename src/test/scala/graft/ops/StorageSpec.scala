@@ -146,51 +146,6 @@ class StorageSpec extends AnyFunSuite with SparkTestBase {
       s"sorted layout read $readSorted of $total rows — row-group pruning not effective")
   }
 
-  test("bloom-filtered layout skips row groups on point lookups a random layout reads fully") {
-    val base     = Files.createTempDirectory("graft-bloom")
-    val bloomDir = base.resolve("bloom").toString
-    val plainDir = base.resolve("plain").toString
-    // high-cardinality unique ids in round-robin (scattered) order: every
-    // row group spans nearly the full id range, so min/max stats are
-    // useless for a point lookup on either copy
-    // 8 scattered files (one ~125-row row group each): the id lives in
-    // exactly one of them
-    val ev = Tables.events(spark, Sf0001).select("event_id", "value").repartition(8)
-    Storage.writeBloomFiltered(ev, "event_id", ndv = 1200L, outDir = bloomDir)
-    ev.write.mode("overwrite")
-      .option("parquet.block.size", (64L << 10).toString).parquet(plainDir)
-
-    def rowsReadFor(dir: String, id: Long): (Long, Long) = {
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      val df      = spark.read.parquet(dir).filter(col("event_id") === lit(id))
-      val matched = df.collect().length.toLong
-      def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec        => scans(q.plan)
-        case f: FileSourceScanExec    => Seq(f)
-        case other                    => other.children.flatMap(scans)
-      }
-      val read = scans(df.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum
-      (matched, read)
-    }
-
-    val total = ev.count()
-    // a mid-range id: every row group's [min,max] straddles it, so
-    // min/max stats alone cannot skip anything on either copy — the
-    // bloom filter is the only thing that can
-    val ids    = ev.select("event_id").as[Long].collect().sorted
-    val someId = ids(ids.length / 2)
-    val (matchedB, readBloom) = rowsReadFor(bloomDir, someId)
-    val (matchedP, readPlain) = rowsReadFor(plainDir, someId)
-    assert(matchedB == 1L && matchedP == 1L)
-    // no bloom filter + scattered order: every row group survives
-    assert(readPlain == total, s"expected full read on the plain copy, got $readPlain of $total")
-    // bloom filter: row groups that provably lack the id are skipped
-    assert(readBloom <= total / 4,
-      s"bloom layout read $readBloom of $total rows — row-group skip not effective")
-  }
-
   test("orc round trip preserves the corpus summary bit-for-bit") {
     val direct = Storage.corpusSummary(graft.Tables.documents(spark, Sf0001))
       .as[(String, String, Long, Long, java.math.BigDecimal)].collect().sortBy(r => (r._1, r._2))

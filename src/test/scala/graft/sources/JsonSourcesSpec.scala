@@ -29,29 +29,6 @@ class JsonSourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(back == rows.sortBy(_._1))
   }
 
-  test("streaming jsonl ingestion converges to the batch summary") {
-    // the production landing-directory path: documents written as a
-    // multi-file JSONL drop, picked up one file per micro-batch, folded
-    // into the same integrity summary the batch round-trip computes
-    val docs = graft.Tables.documents(spark, Sf0001)
-    val dir  = java.nio.file.Files.createTempDirectory("graft-jsonl-stream-").toString
-    JsonSources.writeJsonl(docs.repartition(4), dir)
-    val src = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", "1") // force several micro-batches
-      .json(dir)
-    val q = graft.streaming.CorpusStream.ingestProfile(src)
-      .writeStream.format("memory").queryName("ingest_profile")
-      .outputMode("complete").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getString(1))
-    val got  = spark.table("ingest_profile").collect().map(r => key(r) -> r.toSeq.drop(2)).toMap
-    val want = graft.ops.Storage.corpusSummary(docs).collect().map(r => key(r) -> r.toSeq.drop(2)).toMap
-    assert(got == want)
-    assert(got.nonEmpty)
-  }
-
   test("jsonl files are one-object-per-line and the write is re-runnable") {
     val df  = Seq((1L, "two\nlines"), (2L, "one line")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-spec-").toString
