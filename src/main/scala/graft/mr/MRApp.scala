@@ -26,7 +26,7 @@ trait MRApp extends Serializable {
   def map(filename: String, contents: String): Seq[KV]
   def reduce(key: String, values: Seq[String]): Seq[String]
 
-  /** Streaming form used by the secondary-sort path — mirrors the
+  /** The form the engine calls ([[MapReduceJob.run]]) — mirrors the
     * reference's `ReduceFunc(valueIter Iterator) (Iterator, error)`
     * (`pkg/mr/mr.go:98`). Default materializes; apps whose aggregation is
     * incremental (e.g. counting) override for constant-memory groups.

@@ -26,20 +26,26 @@ import graft.sources.TextSources
   * machinery has no equivalent here because Spark's scheduler provides it.
   */
 object MRRunner {
-  /** The whole submission flow minus session lifecycle: registry lookup,
-    * glob read, secondary-sort MR run on `nreduce` reduce partitions, each
-    * partition's lines written by its reduce task. `main` wraps this in
+  /** The whole submission flow minus session lifecycle, for a registered
+    * app: registry lookup, then the [[MRApp]] form. `main` wraps this in
     * its own session; MRRunnerSpec drives it under the shared test session
     * (an in-JVM spec cannot let `main` stop the session it shares),
     * covering the identical code path end to end.
     */
   def run(spark: SparkSession, appName: String, input: String, outDir: String,
+      nreduce: Int): Unit =
+    run(spark, lookup(appName), input, outDir, nreduce)
+
+  /** Glob read, the MR run on `nreduce` reduce partitions, each
+    * partition's lines written by its reduce task. `BehavioralSpec`'s
+    * `play.sh` probes submit their instrumented apps through it.
+    */
+  def run(spark: SparkSession, app: MRApp, input: String, outDir: String,
       nreduce: Int): Unit = {
-    val app  = lookup(appName, nreduce)
+    requireNreduce(nreduce)
     val docs = TextSources.wholeFiles(spark, input)
-    val out  = MapReduceJob.runSecondarySortNative(spark, docs, app, Some(nreduce))
-    TextSources.writeKV(out, outDir)
-    println(s"[mrrunner] $appName over $input -> $outDir (nreduce=$nreduce)")
+    TextSources.writeKV(MapReduceJob.run(spark, docs, app, Some(nreduce)), outDir)
+    println(s"[mrrunner] ${app.name} over $input -> $outDir (nreduce=$nreduce)")
   }
 
   def main(args: Array[String]): Unit = {
@@ -48,21 +54,23 @@ object MRRunner {
     val nreduce = if (args.length > 3) args(3).toInt else 4 // reference default, cmd/main.go:22
     // fail on bad arguments BEFORE paying session startup (and so the
     // spec can exercise main's validation without a session to stop)
-    lookup(appName, nreduce)
+    requireNreduce(nreduce)
+    val app = lookup(appName)
     val spark = Sessions
       .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), nreduce.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, appName, input, outDir, nreduce)
+    try run(spark, app, input, outDir, nreduce)
     finally spark.stop()
   }
 
-  /** The registered app, once the arguments are known to be in bounds. */
-  private def lookup(appName: String, nreduce: Int): MRApp = {
+  private def requireNreduce(nreduce: Int): Unit =
     require(nreduce >= 1, s"nreduce must be >= 1, got $nreduce")
+
+  /** The registered app named `appName`. */
+  private def lookup(appName: String): MRApp =
     MRApps.all.getOrElse(
       appName,
       throw new IllegalArgumentException(
         s"unknown app '$appName'; registered: ${MRApps.all.keys.toSeq.sorted.mkString(", ")}"))
-  }
 }

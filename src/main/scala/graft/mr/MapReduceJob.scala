@@ -7,20 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   map (flatMap, F3) → shuffle on key (F5) → per-key sorted reduce (F4+F6+F7)
   *
-  * One execution path and its differential twin, with identical results:
+  * One execution path: the map output is combined per map task (duplicate
+  * (key, value) pairs become one row with a count), shuffled on key and
+  * sorted on (key, value) inside the SQL engine, then reduced by a
+  * streaming adjacent-group scan — the reference's `KVIterator` protocol
+  * (`pkg/mr/mr.go:38-89`) without materializing a group
+  * ([[graft.plans.SortedGroupReduce]]). Right at any size: the combine and
+  * the sort spill, and a hot key never sits on the heap. `MRRunner` and
+  * the catalog's `mr_*` queries run it.
   *
-  *  - [[runSecondarySortNative]]: the map output is combined per map task
-  *    (duplicate (key, value) pairs become one row with a count), shuffled
-  *    on key and sorted on (key, value) inside the SQL engine, then
-  *    reduced by a streaming adjacent-group scan — the reference's
-  *    `KVIterator` protocol (`pkg/mr/mr.go:38-89`) without materializing a
-  *    group ([[graft.plans.SortedGroupReduce]]). Right at any size: the
-  *    combine and the sort spill, and a hot key never sits on the heap.
-  *    `MRRunner` and the catalog's `mr_*` queries run it.
-  *  - [[run]]: `groupByKey.flatMapGroups`, sorting each group's values in
-  *    memory. Kept as the differential twin of the streaming path.
-  *
-  * Both hand `reduce` a key's values in code-point order
+  * `reduce` sees a key's values in code-point order
   * ([[MRApps.codePointOrder]]). The map→reduce barrier, task retry, and
   * speculative execution are Spark's DAG scheduler — the reference's
   * coordinator (`internal/coordinator/coordinator.go`) has no analogue
@@ -28,27 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MapReduceJob {
 
-  /** In-memory-group path: sorted values per group via `flatMapGroups`. */
-  def run(spark: SparkSession, docs: DataFrame, app: MRApp): DataFrame = {
-    import spark.implicits._
-    docs
-      .as[(String, String)]
-      .flatMap { case (f, c) => app.map(f, c) }
-      .groupByKey(_.key)
-      .flatMapGroups { (k, it) =>
-        val vs = it.map(_.value).toVector.sorted(MRApps.codePointOrder)
-        app.reduce(k, vs).iterator.map(v => KV(k, v))
-      }
-      .toDF("key", "value")
-  }
-
-  /** Catalyst-native secondary-sort path: map, then the combine, shuffle,
-    * sort and streaming reduce of [[graft.plans.SortedGroupReduce]], all
-    * visible to `.explain` and SQL metrics. `numPartitions` pins the
-    * reduce-side partition count (`nreduce`); without it AQE sizes the
-    * reduce side.
+  /** Map, then the combine, shuffle, sort and streaming reduce of
+    * [[graft.plans.SortedGroupReduce]], all visible to `.explain` and SQL
+    * metrics. `numPartitions` pins the reduce-side partition count
+    * (`nreduce`); without it AQE sizes the reduce side.
     */
-  def runSecondarySortNative(
+  def run(
       spark: SparkSession,
       docs: DataFrame,
       app: MRApp,

@@ -6,16 +6,14 @@ import graft.Tables
 import graft.mr.{MapReduceJob, MRApps}
 
 /** The generic MapReduce surface exercised as catalog queries: reference
-  * apps run through [[graft.mr.MapReduceJob]] over `documents` (doc_id
+  * apps run through [[graft.mr.MapReduceJob.run]] over `documents` (doc_id
   * standing in for filename, text for contents — FIXTURES.md §3), verified
-  * against relational DuckDB oracles. All three take the Catalyst-native
-  * streaming secondary-sort path ([[graft.plans.SortedGroupReduce]]) —
-  * the engine's F4-F7 showcase (shuffle as SQL Exchange, reduce-side sort
-  * as Tungsten SortExec) — so the custom exec carries every reference app
-  * under the catalog's DuckDB oracle check. No reduce-partition count is
-  * given, so AQE sizes the reduce side. `MapReduceJobSpec` pins
-  * bit-equality with the in-memory-group twin (`MapReduceJob.run`) across
-  * all apps.
+  * against relational DuckDB oracles. The engine's one path
+  * ([[graft.plans.SortedGroupReduce]]: shuffle as SQL Exchange, reduce-side
+  * sort as Tungsten SortExec) carries every reference app under the
+  * catalog's DuckDB oracle check. No reduce-partition count is given, so
+  * AQE sizes the reduce side. `MapReduceJobSpec` pins the same path against
+  * the sequential oracle (`MrSequential`) across all apps.
   */
 object MRCompat {
   type Q = (SparkSession, String) => DataFrame
@@ -26,13 +24,13 @@ object MRCompat {
       .select(col("doc_id").cast("string").as("filename"), col("text").as("contents"))
 
   def mrWc(s: SparkSession, dir: String): DataFrame =
-    MapReduceJob.runSecondarySortNative(s, docs(s, dir), MRApps.WordCount)
+    MapReduceJob.run(s, docs(s, dir), MRApps.WordCount)
 
   def mrIndexer(s: SparkSession, dir: String): DataFrame =
-    MapReduceJob.runSecondarySortNative(s, docs(s, dir), MRApps.Indexer)
+    MapReduceJob.run(s, docs(s, dir), MRApps.Indexer)
 
   def mrMetadata(s: SparkSession, dir: String): DataFrame =
-    MapReduceJob.runSecondarySortNative(s, docs(s, dir), MRApps.Metadata)
+    MapReduceJob.run(s, docs(s, dir), MRApps.Metadata)
 
   val queries: Map[String, Q] = Map(
     "mr_wc"       -> (mrWc _),

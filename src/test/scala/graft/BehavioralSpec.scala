@@ -1,125 +1,100 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
+import scala.util.hashing.MurmurHash3
 import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
-import graft.mr.{MapReduceJob, MRApps, KV, MRApp}
+import graft.mr.{KV, MRApp, MRApps, MRRunner}
+import graft.sources.MrSequential
 
-/** Behavioral parity with the reference's probe tests (`play.sh`):
-  * crash recovery (crash.so, play.sh:268-315), parallel execution
-  * (mtiming/rtiming, play.sh:131-183), and exactly-once effects
-  * (jobcount, play.sh:185-208) — re-expressed against Spark's task-retry
-  * and scheduling machinery.
+/** Behavioral parity with the reference's seven `play.sh` tests, each run
+  * as `play.sh` runs it: `MRRunner` over a file glob (whole-file scan, the
+  * engine's one path on `nreduce` reduce partitions, `writeKV`), then the
+  * part files' sorted lines compared with the sequential oracle
+  * ([[MrSequential]]). The input is a seeded corpus the size of the
+  * reference's Gutenberg files. The probes are the wc and indexer golden
+  * runs, map and reduce parallelism (mtiming/rtiming, play.sh:131-183),
+  * exactly-once map calls (jobcount, play.sh:185-208), output that is
+  * final when visible (early_exit, play.sh:210-265) and crash recovery
+  * (crash.so, play.sh:268-315) — re-expressed against Spark's
+  * task-retry and scheduling machinery.
   */
 class BehavioralSpec extends AnyFunSuite with SparkTestBase {
-  import spark.implicits._
+  import BehavioralSpec._
 
-  private val docs = Seq(
-    "f1" -> "apple banana apple",
-    "f2" -> "banana cherry",
-    "f3" -> "cherry apple date",
-    "f4" -> "date egg fig")
+  /** The corpus files as the whole-file scan names them (absolute paths:
+    * the temp directory is outside the working directory).
+    */
+  private lazy val corpus: Seq[(String, String)] = {
+    val dir = writeCorpus()
+    new java.io.File(dir).listFiles().toSeq.sortBy(_.getName).map(f =>
+      f.getAbsolutePath -> new String(Files.readAllBytes(f.toPath), UTF_8))
+  }
+  private def glob: String = new java.io.File(corpus.head._1).getParent + "/*.txt"
+
+  /** `app` through MRRunner over the corpus on `nreduce` reduce
+    * partitions; the output directory.
+    */
+  private def play(app: MRApp, nreduce: Int): String = {
+    val out = Files.createTempDirectory("graft-play-").resolve("out").toString
+    MRRunner.run(spark, app, glob, out, nreduce)
+    out
+  }
+
+  /** Every entry under `dir`, hidden ones included. */
+  private def entries(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  test("wc over a Gutenberg-sized corpus matches the sequential oracle (wc golden run)") {
+    assert(corpus.map(_._2.length).sum > 3000000, "corpus smaller than the reference's")
+    assert(MrSequential.outputLines(play(MRApps.WordCount, 3)) ==
+      MrSequential(MRApps.WordCount, corpus))
+  }
+
+  test("indexer over a Gutenberg-sized corpus matches the sequential oracle (indexer golden run)") {
+    assert(MrSequential.outputLines(play(MRApps.Indexer, 3)) ==
+      MrSequential(MRApps.Indexer, corpus))
+  }
+
+  test("map tasks run in parallel (mtiming analogue)") {
+    inFlight.set(0)
+    maxInFlight.set(0)
+    val out = play(Probe(MRApps.FileCount, overlapMaps), 2)
+    assert(maxInFlight.get() >= 2, s"max concurrency ${maxInFlight.get()} — maps did not overlap")
+    assert(MrSequential.outputLines(out) == MrSequential(MRApps.FileCount, corpus))
+  }
+
+  test("reduce tasks run in parallel (rtiming analogue)") {
+    inFlight.set(0)
+    maxInFlight.set(0)
+    val out = play(Probe(Letters, overlapReduces), 4)
+    assert(maxInFlight.get() >= 2,
+      s"max concurrency ${maxInFlight.get()} — reduces did not overlap")
+    assert(MrSequential.outputLines(out) == MrSequential(Letters, corpus))
+  }
+
+  test("exactly-once effects absent failures (jobcount analogue)") {
+    mapCalls.set(0)
+    val out = play(Probe(MRApps.FileCount, countMaps), 3)
+    assert(mapCalls.get() == corpus.size,
+      s"map ran ${mapCalls.get()} times for ${corpus.size} inputs")
+    assert(MrSequential.outputLines(out) == MrSequential(MRApps.FileCount, corpus))
+  }
 
   test("crash injection: first task attempt dies, job still yields exact output") {
-    BehavioralSpec.crashes.set(0)
-    val crashingWc: MRApp = new MRApp {
-      val name = "crashing-wc"
-      def map(filename: String, contents: String): Seq[KV] = {
-        val tc = TaskContext.get()
-        if (tc != null && tc.attemptNumber() == 0 && tc.partitionId() == 0 &&
-          BehavioralSpec.crashes.getAndIncrement() == 0) {
-          throw new RuntimeException("injected crash (crash.go analogue)")
-        }
-        MRApps.WordCount.map(filename, contents)
-      }
-      def reduce(key: String, values: Seq[String]): Seq[String] =
-        MRApps.WordCount.reduce(key, values)
-    }
-    val expected = MapReduceJob
-      .run(spark, docs.toDF("filename", "contents"), MRApps.WordCount)
-      .as[(String, String)].collect().sorted.toSeq
-    val got = MapReduceJob
-      .run(spark, docs.toDF("filename", "contents").repartition(4), crashingWc)
-      .as[(String, String)].collect().sorted.toSeq
-    assert(BehavioralSpec.crashes.get() >= 1, "crash was never injected")
-    assert(got == expected, "output after recovery differs from clean run")
-  }
-
-  test("crash injection in reduce: first attempt dies, job still yields exact output") {
-    // crash.go injects failure inside BOTH Map and Reduce
-    // (`example/mrapps/crash/crash.go:38,50`); this is the reduce-side half
-    BehavioralSpec.reduceCrashes.set(0)
-    val crashingWc: MRApp = new MRApp {
-      val name = "reduce-crashing-wc"
-      def map(filename: String, contents: String): Seq[KV] =
-        MRApps.WordCount.map(filename, contents)
-      def reduce(key: String, values: Seq[String]): Seq[String] = {
-        val tc = TaskContext.get()
-        if (tc != null && tc.attemptNumber() == 0 &&
-          BehavioralSpec.reduceCrashes.getAndIncrement() == 0) {
-          throw new RuntimeException("injected reduce crash (crash.go:50 analogue)")
-        }
-        MRApps.WordCount.reduce(key, values)
-      }
-    }
-    val expected = MapReduceJob
-      .run(spark, docs.toDF("filename", "contents"), MRApps.WordCount)
-      .as[(String, String)].collect().sorted.toSeq
-    val got = MapReduceJob
-      .run(spark, docs.toDF("filename", "contents").repartition(4), crashingWc)
-      .as[(String, String)].collect().sorted.toSeq
-    assert(BehavioralSpec.reduceCrashes.get() >= 1, "reduce crash was never injected")
-    assert(got == expected, "output after reduce-side recovery differs from clean run")
-  }
-
-  test("crash injection on the secondary-sort path: streaming reduce retries to exact output") {
-    // the streaming path (`MapReduceJob.runSecondarySortNative`, the one
-    // MRRunner runs) has its own combine + shuffle + streaming-reduce
-    // machinery; pin its retry behavior under failure too
-    BehavioralSpec.ssCrashes.set(0)
-    val crashingWc: MRApp = new MRApp {
-      val name = "ss-crashing-wc"
-      def map(filename: String, contents: String): Seq[KV] =
-        MRApps.WordCount.map(filename, contents)
-      def reduce(key: String, values: Seq[String]): Seq[String] =
-        MRApps.WordCount.reduce(key, values)
-      override def reduceStream(key: String, values: Iterator[String]): Iterator[String] = {
-        val tc = TaskContext.get()
-        if (tc != null && tc.attemptNumber() == 0 &&
-          BehavioralSpec.ssCrashes.getAndIncrement() == 0) {
-          throw new RuntimeException("injected streaming-reduce crash")
-        }
-        MRApps.WordCount.reduceStream(key, values)
-      }
-    }
-    val expected = MapReduceJob
-      .runSecondarySortNative(spark, docs.toDF("filename", "contents"), MRApps.WordCount, Some(4))
-      .as[(String, String)].collect().sorted.toSeq
-    val got = MapReduceJob
-      .runSecondarySortNative(spark, docs.toDF("filename", "contents"), crashingWc, Some(4))
-      .as[(String, String)].collect().sorted.toSeq
-    assert(BehavioralSpec.ssCrashes.get() >= 1, "secondary-sort crash was never injected")
-    assert(got == expected, "secondary-sort output after recovery differs from clean run")
-  }
-
-  test("no partial committed output after a failing job (early_exit analogue)") {
-    // play.sh:210-265 asserts no output is visible before it is final; the
-    // Spark analogue is commit-protocol atomicity — a job whose final-stage
-    // task fails permanently must leave zero committed files
-    val out = java.nio.file.Files.createTempDirectory("graft-atomicity").toFile
-    out.delete()
-    val failing = spark.range(100).toDF("id")
-      .repartition(4)
-      .filter((_: org.apache.spark.sql.Row) =>
-        throw new RuntimeException("injected permanent failure before commit"))
-    intercept[Exception] {
-      failing.write.mode("overwrite").parquet(out.getAbsolutePath)
-    }
-    val committed = Option(out.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") || f.getName == "_SUCCESS")
-    assert(committed.isEmpty,
-      s"failed job left committed output: ${committed.map(_.getName).mkString(", ")}")
+    // crash.go:23-35 at its rate, in map and reduce: a seeded third of the
+    // calls throw in a task's first attempt, another third sleep; the
+    // golden output is the sequential run of nocrash (metadata)
+    mapCrashes.set(0)
+    reduceCrashes.set(0)
+    val out = play(Probe(MRApps.Metadata, crash), 4)
+    info(s"crashes: ${mapCrashes.get()} in map, ${reduceCrashes.get()} in reduce")
+    assert(mapCrashes.get() >= 1 && reduceCrashes.get() >= 1,
+      s"crashes: ${mapCrashes.get()} in map, ${reduceCrashes.get()} in reduce")
+    assert(MrSequential.outputLines(out) == MrSequential(MRApps.Metadata, corpus),
+      "output after recovery differs from the sequential oracle")
   }
 
   test("slow-reduce atomicity: output visible mid-job is complete-or-absent (early_exit probe)") {
@@ -132,35 +107,16 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
     // moves the tasks' part files into place only after the whole job has
     // succeeded — a mid-job reader sees either nothing or the finished
     // result, never a torn file).
-    val slowWc: MRApp = new MRApp {
-      val name = "early-exit-wc"
-      // mirror early_exit.go:21-25: one KV per file
-      def map(filename: String, contents: String): Seq[KV] = Seq(KV(filename, "1"))
-      // mirror early_exit.go:32-40: sleep on a key subset, count values
-      def reduce(key: String, values: Seq[String]): Seq[String] = {
-        if (key.contains("f1") || key.contains("f3")) Thread.sleep(1500)
-        Seq(values.size.toString)
-      }
-    }
-    val out = java.nio.file.Files.createTempDirectory("graft-early-exit").toFile
-    out.delete()
-    val dir = out.getAbsolutePath
+    val out = Files.createTempDirectory("graft-early-exit").resolve("out")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val job = Future {
-      graft.sources.TextSources.writeKV(
-        MapReduceJob.runSecondarySortNative(
-          spark, docs.toDF("filename", "contents"), slowWc, Some(4)),
-        dir)
-    }
+    val job = Future(MRRunner.run(spark, Probe(MRApps.FileCount, slowReduces), glob,
+      out.toString, 4))
     def visible(): Map[String, String] = {
-      val files = Option(out.listFiles()).getOrElse(Array.empty)
+      val files = Option(out.toFile.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.startsWith("part-"))
-      files.map { f =>
-        f.getName -> new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      }.toMap
+      files.map(f => f.getName -> new String(Files.readAllBytes(f.toPath), UTF_8)).toMap
     }
     // poll while the job runs — the 1.5 s reduce sleeps guarantee many
     // mid-job observations
@@ -182,115 +138,148 @@ class BehavioralSpec extends AnyFunSuite with SparkTestBase {
           s"poll $i saw non-final content in $name")
       }
     }
-    // and the final output itself is the exact word count
-    val got = finalOut.values.flatMap(_.split("\n")).filter(_.nonEmpty).toSeq.sorted
-    assert(got == Seq("f1 1", "f2 1", "f3 1", "f4 1"))
+    // and the final output itself is the exact per-file count
+    assert(MrSequential.outputLines(out.toString) == MrSequential(MRApps.FileCount, corpus))
   }
-
-  /** Every entry under `dir`, hidden ones included. */
-  private def entries(dir: java.io.File): Seq[String] =
-    Option(dir.list()).map(_.toSeq.sorted).getOrElse(Nil)
-
-  /** Each part file's lines under `dir`, sorted, by file name. */
-  private def parts(dir: java.io.File): Map[String, Seq[String]] =
-    dir.listFiles().filter(f => f.isFile && f.getName.startsWith("part-")).map { f =>
-      f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq.sorted
-    }.toMap
 
   test("writeKV after a permanently failing reduce leaves nothing in the sink") {
     // the reduce throws on one key in every attempt; the other partitions'
     // tasks succeed, and their output must not be visible either
-    val failing: MRApp = new MRApp {
-      val name = "always-failing-wc"
-      def map(filename: String, contents: String): Seq[KV] =
-        MRApps.WordCount.map(filename, contents)
-      def reduce(key: String, values: Seq[String]): Seq[String] = {
-        if (key == "cherry") throw new RuntimeException("injected permanent reduce failure")
-        MRApps.WordCount.reduce(key, values)
-      }
-    }
-    val out = java.nio.file.Files.createTempDirectory("graft-kv-fail").toFile
+    val out = Files.createTempDirectory("graft-kv-fail").toString
     intercept[Exception] {
-      graft.sources.TextSources.writeKV(
-        MapReduceJob.runSecondarySortNative(
-          spark, docs.toDF("filename", "contents"), failing, Some(4)),
-        out.getAbsolutePath)
+      MRRunner.run(spark, Probe(MRApps.FileCount, failOneReduce), glob, out, 4)
     }
     assert(entries(out).isEmpty, s"failed job left: ${entries(out).mkString(", ")}")
   }
 
   test("writeKV after a reduce task crashes once yields one file per partition") {
-    BehavioralSpec.writeCrashes.set(0)
-    val crashingWc: MRApp = new MRApp {
-      val name = "write-crashing-wc"
-      def map(filename: String, contents: String): Seq[KV] =
-        MRApps.WordCount.map(filename, contents)
-      def reduce(key: String, values: Seq[String]): Seq[String] = {
-        val tc = TaskContext.get()
-        if (tc != null && tc.attemptNumber() == 0 &&
-          BehavioralSpec.writeCrashes.getAndIncrement() == 0) {
-          throw new RuntimeException("injected reduce crash during the write")
-        }
-        MRApps.WordCount.reduce(key, values)
-      }
-    }
-    def write(app: MRApp): java.io.File = {
-      val out = java.nio.file.Files.createTempDirectory("graft-kv-retry").toFile
-      graft.sources.TextSources.writeKV(
-        MapReduceJob.runSecondarySortNative(spark, docs.toDF("filename", "contents"), app, Some(4)),
-        out.getAbsolutePath)
-      out
-    }
-    val clean = parts(write(MRApps.WordCount))
-    val out   = write(crashingWc)
-    assert(BehavioralSpec.writeCrashes.get() >= 1, "write-side crash was never injected")
+    firstReduceCrashes.set(0)
+    val out = play(Probe(MRApps.FileCount, crashFirstReduce), 4)
+    assert(firstReduceCrashes.get() >= 1, "write-side crash was never injected")
     val visible = entries(out).filterNot(_.startsWith("."))
     assert(visible == Seq("_SUCCESS", "part-00000", "part-00001", "part-00002", "part-00003"),
       visible)
-    assert(parts(out) == clean, "output after the retried write differs from the clean run")
-  }
-
-  test("map tasks run in parallel (mtiming analogue)") {
-    BehavioralSpec.concurrent.set(0)
-    BehavioralSpec.maxConcurrent.set(0)
-    spark.sparkContext
-      .parallelize(1 to 8, 8)
-      .map { i =>
-        val cur = BehavioralSpec.concurrent.incrementAndGet()
-        BehavioralSpec.maxConcurrent.updateAndGet(m => math.max(m, cur))
-        Thread.sleep(150)
-        BehavioralSpec.concurrent.decrementAndGet()
-        i
-      }
-      .count()
-    assert(BehavioralSpec.maxConcurrent.get() >= 2,
-      s"max concurrency ${BehavioralSpec.maxConcurrent.get()} — tasks did not overlap")
-  }
-
-  test("exactly-once effects absent failures (jobcount analogue)") {
-    BehavioralSpec.mapInvocations.set(0)
-    val countingWc: MRApp = new MRApp {
-      val name = "counting-wc"
-      def map(filename: String, contents: String): Seq[KV] = {
-        BehavioralSpec.mapInvocations.incrementAndGet()
-        MRApps.WordCount.map(filename, contents)
-      }
-      def reduce(key: String, values: Seq[String]): Seq[String] =
-        MRApps.WordCount.reduce(key, values)
-    }
-    MapReduceJob.run(spark, docs.toDF("filename", "contents"), countingWc).count()
-    assert(BehavioralSpec.mapInvocations.get() == docs.size,
-      s"map ran ${BehavioralSpec.mapInvocations.get()} times for ${docs.size} inputs")
+    assert(MrSequential.outputLines(out) == MrSequential(MRApps.FileCount, corpus),
+      "output after the retried write differs from the sequential oracle")
   }
 }
 
-/** Static state shared with executor threads (same JVM in local mode). */
+/** The probes' apps and hooks. Counters are static: executor threads share
+  * the JVM in local mode.
+  */
 object BehavioralSpec {
-  val crashes        = new AtomicInteger(0)
-  val reduceCrashes  = new AtomicInteger(0)
-  val ssCrashes      = new AtomicInteger(0)
-  val writeCrashes   = new AtomicInteger(0)
-  val concurrent     = new AtomicInteger(0)
-  val maxConcurrent  = new AtomicInteger(0)
-  val mapInvocations = new AtomicInteger(0)
+  val inFlight           = new AtomicInteger(0)
+  val maxInFlight        = new AtomicInteger(0)
+  val mapCalls           = new AtomicInteger(0)
+  val mapCrashes         = new AtomicInteger(0)
+  val reduceCrashes      = new AtomicInteger(0)
+  val firstReduceCrashes = new AtomicInteger(0)
+
+  /** `app` with `hook(phase, name)` called before each map (phase "map",
+    * the file name) and each reduce (phase "reduce", the key): the
+    * reference's probe apps are its plain apps plus such a side effect.
+    */
+  final case class Probe(app: MRApp, hook: (String, String) => Unit) extends MRApp {
+    def name: String = s"${app.name}-probe"
+    def map(filename: String, contents: String): Seq[KV] = {
+      hook("map", filename)
+      app.map(filename, contents)
+    }
+    def reduce(key: String, values: Seq[String]): Seq[String] = {
+      hook("reduce", key)
+      app.reduce(key, values)
+    }
+    override def reduceStream(key: String, values: Iterator[String]): Iterator[String] = {
+      hook("reduce", key)
+      app.reduceStream(key, values)
+    }
+  }
+
+  /** rtiming.go's map (`:65-79`): ten fixed keys per file, so the reduce
+    * side has keys for several partitions; reduce counts the values.
+    */
+  object Letters extends MRApp {
+    val name = "letters"
+    def map(filename: String, contents: String): Seq[KV] =
+      ('a' to 'j').map(c => KV(c.toString, "1"))
+    def reduce(key: String, values: Seq[String]): Seq[String] = Seq(values.size.toString)
+  }
+
+  /** Hold a call for `ms`, counting the calls held at once. */
+  private def overlap(ms: Long): Unit = {
+    maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+    try Thread.sleep(ms) finally inFlight.decrementAndGet()
+  }
+
+  private def base(name: String): String = new java.io.File(name).getName
+
+  val overlapMaps: (String, String) => Unit = (phase, _) => if (phase == "map") overlap(150)
+  val overlapReduces: (String, String) => Unit = (phase, _) => if (phase == "reduce") overlap(150)
+  val countMaps: (String, String) => Unit =
+    (phase, _) => if (phase == "map") mapCalls.incrementAndGet()
+
+  /** early_exit.go:32-40: the reduces of two files' keys sleep. */
+  val slowReduces: (String, String) => Unit = (phase, key) =>
+    if (phase == "reduce" && Set("pg-1.txt", "pg-3.txt")(base(key))) Thread.sleep(1500)
+
+  val failOneReduce: (String, String) => Unit = (phase, key) =>
+    if (phase == "reduce" && base(key) == "pg-2.txt")
+      throw new RuntimeException("injected permanent reduce failure")
+
+  val crashFirstReduce: (String, String) => Unit = (phase, _) =>
+    if (phase == "reduce" && TaskContext.get().attemptNumber() == 0 &&
+      firstReduceCrashes.getAndIncrement() == 0)
+      throw new RuntimeException("injected reduce crash during the write")
+
+  /** crash.go:23-35 (`maybeCrash`) with a seeded hash of the phase and the
+    * file's base name in place of its random draw: below 330 of 1000 the
+    * call throws, below 660 it sleeps up to 100 ms (crash.go's 10 s scaled
+    * down 100 times). A call throws only in its task's first attempt, so
+    * no task fails twice under the test session's two attempts.
+    */
+  val crash: (String, String) => Unit = (phase, name) => {
+    val draw = Math.floorMod(MurmurHash3.stringHash(s"$phase:${base(name)}", 6824), 1000000)
+    if (draw % 1000 < 330) {
+      if (TaskContext.get().attemptNumber() == 0) {
+        (if (phase == "map") mapCrashes else reduceCrashes).incrementAndGet()
+        throw new RuntimeException(s"injected $phase crash (crash.go analogue)")
+      }
+    } else if (draw % 1000 < 660) Thread.sleep(draw / 1000 % 100)
+  }
+
+  /** Writes a seeded corpus the size of the reference's Gutenberg input
+    * (`pg-*.txt`, ~3.3 MB in 8 files) into a fresh temp directory and
+    * returns it: Zipf(s = 1) draws over a 20,000-word vocabulary of
+    * letter runs (about one word in sixteen holds a non-ASCII letter),
+    * separated mostly by spaces, sometimes by newlines, punctuation or a
+    * number, which the tokenizer drops. File `pg-i.txt` holds i + 1
+    * shares of the bytes, so the largest file is 8 times the smallest.
+    */
+  def writeCorpus(): String = {
+    val dir     = Files.createTempDirectory("graft-corpus-")
+    val rnd     = new scala.util.Random(6824)
+    def letter(): Char =
+      if (rnd.nextInt(100) == 0) "éöß"(rnd.nextInt(3)) else ('a' + rnd.nextInt(26)).toChar
+    val vocab   = Iterator.continually(Seq.fill(2 + rnd.nextInt(9))(letter()).mkString)
+      .distinct.take(20000).toVector
+    val cdf     = vocab.indices.map(i => 1.0 / (i + 1)).scanLeft(0.0)(_ + _).tail.toArray
+    def word(): String = {
+      val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble() * cdf.last)
+      vocab(math.min(if (i >= 0) i else -i - 1, vocab.size - 1))
+    }
+    def sep(): String = rnd.nextInt(100) match {
+      case n if n < 85 => " "
+      case n if n < 92 => "\n"
+      case n if n < 96 => ", "
+      case n if n < 99 => ". "
+      case _           => " 42 "
+    }
+    for (i <- 0 until 8) {
+      val target = 3300000L * (i + 1) / 36
+      val sb     = new java.lang.StringBuilder
+      while (sb.length < target) sb.append(word()).append(sep())
+      Files.write(dir.resolve(s"pg-$i.txt"), sb.toString.getBytes(UTF_8))
+    }
+    dir.toString
+  }
 }

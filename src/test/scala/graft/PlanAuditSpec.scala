@@ -114,9 +114,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   test("all three MR apps reduce through the Catalyst-native secondary-sort exec") {
     // the catalog path must plan shuffle + (key, value) sort inside the
     // SQL engine under SortedGroupReduceExec, visible to AQE and SQL
-    // metrics. All reference apps ride the custom exec (round-12: mr_wc
-    // and mr_metadata joined mr_indexer); the in-memory-group path stays
-    // as the differential twin in MapReduceJobSpec.
+    // metrics. All reference apps ride the custom exec, the engine's one
+    // path.
     for (q <- Seq("mr_wc", "mr_indexer", "mr_metadata")) {
       val p = plan(q)
       assert(p.contains("SortedGroupReduce"), s"$q:\n$p")

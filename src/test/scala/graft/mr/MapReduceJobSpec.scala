@@ -4,40 +4,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
+import graft.sources.MrSequential
 
-/** Differential tests for the generic MR engine: the in-memory-group path
-  * and the streaming path (AQE-sized and with a pinned reduce-partition
-  * count) vs. a sequential oracle — the reference's own verification
-  * trick (`example/mrsequential/mrsequential.go:62-87`, the global sort +
-  * adjacent-group loop, ported below).
+/** The generic MR engine's one path, AQE-sized and on a pinned
+  * reduce-partition count, against the sequential oracle
+  * ([[graft.sources.MrSequential]], the port of
+  * `example/mrsequential/mrsequential.go:62-87`) — the reference's own
+  * verification trick.
   */
 class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
   import MapReduceJobSpec.{Concat, Echo}
-
-  private val byKeyValue: Ordering[KV] =
-    Ordering.by((kv: KV) => (kv.key, kv.value))(
-      Ordering.Tuple2(MRApps.codePointOrder, MRApps.codePointOrder))
-
-  /** Port of the mrsequential loop: map all, global sort, group adjacent
-    * equal keys, reduce each group. Defines canonical output; the sort is
-    * by code point, the order `MRApp` promises.
-    */
-  private def sequentialOracle(app: MRApp, docs: Seq[(String, String)]): Seq[KV] = {
-    val inter = docs
-      .flatMap { case (f, c) => app.map(f, c) }
-      .sorted(byKeyValue)
-    val out = Seq.newBuilder[KV]
-    var i = 0
-    while (i < inter.size) {
-      var j = i
-      while (j < inter.size && inter(j).key == inter(i).key) j += 1
-      val vs = inter.slice(i, j).map(_.value)
-      app.reduce(inter(i).key, vs).foreach(v => out += KV(inter(i).key, v))
-      i = j
-    }
-    out.result().sorted(byKeyValue)
-  }
 
   // doc-😀 (U+1F600, a UTF-16 surrogate pair) sorts before doc-Ａ
   // (U+FF21) in String order but after it in code-point order; both
@@ -50,30 +27,27 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
     "doc-😀" -> "cat naps",
     "doc-Ａ" -> "a cat")
 
-  private def norm(out: DataFrame): Seq[KV] =
-    out.as[(String, String)].collect().map(t => KV(t._1, t._2)).toSeq.sorted(byKeyValue)
+  private def lines(out: DataFrame): Seq[String] =
+    out.as[(String, String)].collect().map { case (k, v) => s"$k $v" }.toSeq.sorted
 
-  /** Every path over `df`: in-memory groups, streaming with AQE sizing,
-    * streaming on 3 pinned reduce partitions.
-    */
-  private def runAll(df: DataFrame, app: MRApp): Seq[(String, Seq[KV])] = Seq(
-    "flatMapGroups" -> norm(MapReduceJob.run(spark, df, app)),
-    "streaming" -> norm(MapReduceJob.runSecondarySortNative(spark, df, app)),
-    "streaming, nreduce=3" -> norm(MapReduceJob.runSecondarySortNative(spark, df, app, Some(3))))
+  /** The one path over `df`: AQE-sized, and on 3 pinned reduce partitions. */
+  private def runAll(df: DataFrame, app: MRApp): Seq[(String, Seq[String])] = Seq(
+    "AQE-sized" -> lines(MapReduceJob.run(spark, df, app)),
+    "nreduce=3" -> lines(MapReduceJob.run(spark, df, app, Some(3))))
 
   for (app <- MRApps.all.values) {
-    test(s"${app.name}: all three paths match the sequential oracle") {
-      val expected = sequentialOracle(app, docs)
-      for ((path, got) <- runAll(docs.toDF("filename", "contents"), app))
-        assert(got == expected, s"$path path diverged for ${app.name}")
+    test(s"${app.name}: AQE-sized and nreduce=3 runs match the sequential oracle") {
+      val expected = MrSequential(app, docs)
+      for ((sizing, got) <- runAll(docs.toDF("filename", "contents"), app))
+        assert(got == expected, s"$sizing run diverged for ${app.name}")
     }
   }
 
   test("values reach reduce in code-point order on every path") {
     assert(MRApps.codePointOrder.lt("doc-Ａ", "doc-😀") && "doc-😀" < "doc-Ａ")
     assert(MRApps.codePointOrder.lt("ab", "abc") && MRApps.codePointOrder.equiv("ab", "ab"))
-    for ((path, got) <- runAll(docs.toDF("filename", "contents"), MRApps.Indexer))
-      assert(got.contains(KV("cat", "4 doc-a,doc-c,doc-Ａ,doc-😀")), s"$path: $got")
+    for ((sizing, got) <- runAll(docs.toDF("filename", "contents"), MRApps.Indexer))
+      assert(got.contains("cat 4 doc-a,doc-c,doc-Ａ,doc-😀"), s"$sizing: $got")
   }
 
   test("map-side combine keeps every value's multiplicity and order") {
@@ -86,15 +60,14 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
       "p3" -> "a x\nb y\nb y",
       "p4" -> "c z")
     val df = spark.sparkContext.parallelize(pairs, 2).toDF("filename", "contents")
-    assert(sequentialOracle(Concat, pairs) ==
-      Seq(KV("a", "x,x,x,x,Ａ,😀"), KV("b", "y,y,y,y"), KV("c", "z")))
+    assert(MrSequential(Concat, pairs) == Seq("a x,x,x,x,Ａ,😀", "b y,y,y,y", "c z"))
     // Echo also checks a key's several output rows stay distinct rows
-    for (app <- Seq(Concat, Echo); (path, got) <- runAll(df, app))
-      assert(got == sequentialOracle(app, pairs), s"$path path diverged for ${app.name}")
+    for (app <- Seq(Concat, Echo); (sizing, got) <- runAll(df, app))
+      assert(got == MrSequential(app, pairs), s"$sizing run diverged for ${app.name}")
 
     // the combine really ran: 11 map outputs leave the map side as 7
     // rows, distinct (key, value) pairs per map partition (4 + 3)
-    val out = MapReduceJob.runSecondarySortNative(spark, df, Concat, Some(3))
+    val out = MapReduceJob.run(spark, df, Concat, Some(3))
     out.collect()
     val combines = collectExec(out.queryExecution.executedPlan) {
       case h: HashAggregateExec => h
@@ -113,7 +86,7 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
       // string-level audit: AQE's initialPlan (where EnsureRequirements
       // has run) is what toString renders, but isn't reachable via
       // collect() through the AdaptiveSparkPlanExec wrapper
-      val plan = MapReduceJob.runSecondarySortNative(spark, df, MRApps.Indexer, nreduce)
+      val plan = MapReduceJob.run(spark, df, MRApps.Indexer, nreduce)
         .queryExecution.executedPlan.toString
       assert(plan.contains("SortedGroupReduce"), plan)
       assert("Exchange ".r.findAllIn(plan).size == 1, s"more than one exchange:\n$plan")
@@ -134,7 +107,7 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
     // empty the child under the reduce (the node's references declare
     // both columns consumed through the app closure) — count() planned
     // an empty Project below the exec and keyAttr had nothing to bind to
-    assert(MapReduceJob.runSecondarySortNative(spark, df, MRApps.Indexer)
+    assert(MapReduceJob.run(spark, df, MRApps.Indexer)
       .count() > 0)
   }
 
@@ -144,12 +117,8 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
     val files = dir.listFiles().filter(_.getName.endsWith(".txt")).sortBy(_.getName).take(3)
     val gdocs = files.toSeq.map(f =>
       f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    val df  = gdocs.toDF("filename", "contents")
-    val got = MapReduceJob.run(spark, df, MRApps.WordCount)
-      .as[(String, String)].collect().sortBy(identity).toSeq
-    val expected = sequentialOracle(MRApps.WordCount, gdocs)
-      .map(kv => (kv.key, kv.value)).sortBy(identity)
-    assert(got == expected)
+    val got = lines(MapReduceJob.run(spark, gdocs.toDF("filename", "contents"), MRApps.WordCount))
+    assert(got == MrSequential(MRApps.WordCount, gdocs))
   }
 
   test("property: wc counts sum to token count (seeded random corpora)") {

@@ -58,7 +58,7 @@ class SkewIngestSpec extends AnyFunSuite with SparkTestBase {
     withSQLConf(
       "spark.sql.files.maxPartitionBytes" -> (64 * 1024).toString,
       "spark.sql.files.openCostInBytes"   -> (4 * 1024).toString) {
-      val df = TextReads.lines(spark, s"$skewDir/*.txt")
+      val df = TextReads.lines(spark, skewDir)
       val perPartition = df.rdd
         .mapPartitions(it => Iterator(it.map(_.getString(0).length + 1L).sum))
         .collect()
@@ -118,8 +118,7 @@ class SkewIngestSpec extends AnyFunSuite with SparkTestBase {
     // reduce output into one partition, hiding the spread under test).
     withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val docs = TextSources.wholeFiles(spark, s"$skewDir/*.txt")
-      val out  = graft.mr.MapReduceJob.runSecondarySortNative(
-        spark, docs, graft.mr.MRApps.WordCount)
+      val out  = graft.mr.MapReduceJob.run(spark, docs, graft.mr.MRApps.WordCount)
       val reduceRows = out.rdd
         .mapPartitions(it => Iterator(it.size.toLong)).collect().filter(_ > 0)
       assert(reduceRows.length > 1,
