@@ -29,13 +29,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val names = Profile.select(args.toSeq)
     // session config (AQE, shuffled-hash preference, UTC, locale pin,
     // SPARK_GRAFT_CONF) lives in graft.Sessions —
     // one builder for Bench/Verify/Explain/probes so verified plans and
     // committed plan dumps match what the bench times (r15 verdict item 3)
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(Sessions.envCpus())
 
     spark.range(1000000).selectExpr("sum(id)").collect()
     Profile.profile(spark, sfDir, Seq("join_broadcast"))

@@ -88,8 +88,8 @@ object Ckpt {
     memo(s, key, blocks = false)(build)(_ => Nil)
 
   /** The one memo path: a synchronized get/put, NOT `computeIfAbsent`.
-    * Builds nest (`Graph.coPurchaseLabels` builds the memoized
-    * adjacency), and a nested `computeIfAbsent` on one map throws
+    * Builds nest (the graph `lpa` stage builds the memoized `adj`
+    * stage), and a nested `computeIfAbsent` on one map throws
     * whenever the two keys share a bin; a monitor is reentrant. The lock
     * is coarse, but builds are rare and the catalog mains single-threaded.
     */
@@ -250,19 +250,30 @@ object Ckpt {
     * the stages built over it — the only thing a catalog entry and a
     * library call of the same pipeline do differently. With a memo key
     * (a catalog entry passes its family and data dir), [[stage]] is
-    * [[cached]] under `<family>:<what>:<dir>`: built once per session,
-    * logged, released with the dir. Without one (the `*Of(frame)`
-    * library forms), [[stage]] materializes each stage once for this
-    * handle: nothing enters the memo map or [[buildLog]], and the blocks
-    * are the caller's, freeable once the handle and its frames are dropped.
+    * [[cached]] and [[value]] is [[cachedValue]] under
+    * `<family>:<what>:<dir>`: built once per session, logged, released
+    * with the dir. Without one (the `*Of(frame)` library forms and the
+    * graph pair-list forms), each stage is materialized and each value
+    * computed once for this handle: nothing enters the memo map or
+    * [[buildLog]], and the blocks are the caller's, freeable once the
+    * handle and its frames are dropped.
     */
   final class Stages private (val in: DataFrame, memo: Option[(String, String)]) {
-    private val own = scala.collection.mutable.HashMap[String, DataFrame]()
+    private val own = scala.collection.mutable.HashMap[String, Any]()
 
     def stage(what: String)(build: => DataFrame): DataFrame = memo match {
       case Some((family, dir)) => cached(in.sparkSession, s"$family:$what:$dir")(build)
-      case None => own.getOrElse(what, { val df = apply(build); own(what) = df; df })
+      case None => once(what)(apply(build))
     }
+
+    /** A stage that is a value holding no blocks (a row count). */
+    def value[A](what: String)(build: => A): A = memo match {
+      case Some((family, dir)) => cachedValue(in.sparkSession, s"$family:$what:$dir")(build)
+      case None => once(what)(build)
+    }
+
+    private def once[A](what: String)(build: => A): A =
+      own.getOrElse(what, { val v = build; own(what) = v; v }).asInstanceOf[A]
   }
 
   object Stages {

@@ -25,8 +25,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
     val exec  = sys.env.get("SPARK_GRAFT_EXEC").contains("1")
-    // shared engine config; default to the bench's core count so dumped
-    // plans are the shapes the bench times (r15 verdict item 3)
+    // shared engine config and core count (r15 verdict item 3), so
+    // dumped plans are the shapes the other mains run
     val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
     // the storage twins live under the session's relative `spark-warehouse`
     val cwdUri = s"file:${System.getProperty("user.dir")}/"

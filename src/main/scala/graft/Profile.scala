@@ -19,9 +19,9 @@ import org.apache.spark.sql.execution.SQLExecution
   * that still burns serious CPU is the round-13 bug class: the byte-size
   * coalescer is blind to expensive expressions (the fuzzy Levenshtein
   * verify ran 9.5e9 DP cells on one thread at sf1, SCALING.md round 13).
-  * Such a stage under local[32] is a serialization cliff that widens with
-  * the corpus, so every 1-task stage whose executor run time is above the
-  * threshold is flagged. Final 1-row aggregations and collect-limit
+  * Such a stage on a many-core session is a serialization cliff that
+  * widens with the corpus, so every 1-task stage whose executor run time
+  * is above the threshold is flagged. Final 1-row aggregations and collect-limit
   * stages stay under a 2 s threshold by construction.
   *
   * Usage: `Profile <sfDir> [thresholdMs] [query ...]` (`tools/onetask.sh`
@@ -130,7 +130,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir       = args.headOption.getOrElse("target/sf1")
     val thresholdMs = args.lift(1).map(_.toLong).getOrElse(2000L)
-    val spark = Sessions.local("32", logLevel = "ERROR")
+    val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
 
     println("query\tconstruct_s\tplan_s\texec_s\tjobs\tstages\ttasks\ttop3 id:tasks:wall_ms/run_ms")
     val rows = profile(spark, sfDir, args.drop(2).toSeq)

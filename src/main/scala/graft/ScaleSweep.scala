@@ -77,7 +77,7 @@ object ScaleSweep {
   def main(args: Array[String]): Unit = {
     // shared engine config (r15 verdict item 3): sweep profiles are
     // recorded under the same session defaults the bench times
-    val spark = Sessions.local("32", logLevel = "ERROR")
+    val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
 
     ScaleData.buildAll(spark, Src, Out)
     println(s"[sweep] sf1 rows: docs=${Tables.documents(spark, Out).count()} " +

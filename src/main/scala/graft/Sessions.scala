@@ -36,7 +36,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   /** Shared builder: `master` and the shuffle-partition count vary by
-    * main (Bench/Verify take cores from `$SPARK_GRAFT_CPUS`); everything
+    * main (every main takes its cores from [[envCpus]]); everything
     * else is the committed engine config.
     */
   def builder(master: String, partitions: String): SparkSession.Builder = {
@@ -60,7 +60,7 @@ object Sessions {
   }
 
   /** `local[cpus]` session with `cpus` shuffle partitions — the shape
-    * every catalog main uses (`cpus` normally from `$SPARK_GRAFT_CPUS`).
+    * every catalog main uses (`cpus` from [[envCpus]]).
     */
   def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
@@ -68,7 +68,9 @@ object Sessions {
     spark
   }
 
-  /** Cores for probe mains that default to the full box. */
-  def envCpus(default: String = "32"): String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
+  /** Cores for every main: `$SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors.
+    */
+  def envCpus(): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 }

@@ -360,8 +360,7 @@ object Smoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.local(cpus, logLevel = "ERROR")
+    val spark = Sessions.local(Sessions.envCpus(), logLevel = "ERROR")
 
     // each query's first failed audit, read off the plan that ran
     val violation = scala.collection.mutable.Map[String, String]()

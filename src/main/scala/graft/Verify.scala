@@ -1,5 +1,6 @@
 package graft
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,11 +11,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, _*) = args
     val names = Profile.select(args.toSeq.drop(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared engine config (r15 verdict item 3): the oracle gate now runs
     // the SAME session defaults the bench times (AQE + SHJ preference),
     // so correctness exercises the benched plan shapes
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(Sessions.envCpus())
     new java.io.File(outDir).mkdirs()
     // Engine-side evidence of record (r14: the driver's CORRECTNESS
     // artifact arrived empty, leaving the round without any correctness
@@ -23,7 +23,7 @@ object Verify {
     // outDir/verify_summary.json — self-contained proof the catalog ran
     // and what it produced, comparable round-to-round even if the
     // driver-side DuckDB compare is lost.
-    val summary = scala.collection.mutable.LinkedHashMap[String, String]()
+    val summary = scala.collection.mutable.LinkedHashMap[String, Map[String, Any]]()
     def contentHash(path: String): (Long, String, String) = {
       import org.apache.spark.sql.functions._
       val df     = spark.read.parquet(path)
@@ -54,39 +54,32 @@ object Verify {
         summary(name) =
           try {
             val (rows, h, schema) = contentHash(s"$outDir/$name")
-            s"""{"rows":$rows,"hash":"$h","schema":"$schema"}"""
+            Map("rows" -> rows, "hash" -> h, "schema" -> schema)
           } catch { case NonFatal(e) =>
             System.err.println(s"[verify] $name summary failed: ${e.getMessage}")
-            s"""{"summary_error":true}"""
+            Map("summary_error" -> true)
           }
       } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        summary(name) = s"""{"error":true}"""
+        summary(name) = Map("error" -> true)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val sumJson = summary
-      .map { case (k, v) => s"${q(k)}: $v" }.mkString("{\n", ",\n", "\n}\n")
-    Files.writeString(Paths.get(s"$outDir/verify_summary.json"), sumJson)
-    val nFail = summary.valuesIterator.count(_.contains("\"error\""))
-    val nSum  = summary.valuesIterator.count(_.contains("\"hash\""))
+    writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
+    writeJson(s"$outDir/verify_summary.json", summary)
+    val nFail = summary.valuesIterator.count(_.contains("error"))
+    val nSum  = summary.valuesIterator.count(_.contains("hash"))
     println(s"[verify] ${summary.size - nFail}/${summary.size} queries dumped " +
       s"($nSum with content summaries, $nFail failed); " +
       s"summary at $outDir/verify_summary.json")
     spark.stop()
   }
+
+  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Writes Scala maps, sequences, strings and numbers to `path` as JSON,
+    * escaping every quote, backslash and control character a catalog's
+    * oracle SQL may hold.
+    */
+  private[graft] def writeJson(path: String, value: Any): Unit =
+    Json.writerWithDefaultPrettyPrinter().writeValue(new java.io.File(path), value)
 }

@@ -83,10 +83,8 @@ case class AudioWindow(
     probe_byte: Long)
 
 /** Multimodal processing plumbing: binary columns, a typed `Dataset[T]`
-  * surface, and partition-batched iteration (`mapPartitions` +
-  * `grouped(batchSize)`, the Scala analogue of an Arrow-batched
-  * `mapInPandas` decode: the decoder sees fixed-size batches, exactly
-  * how a vectorized codec or an inference runtime wants its input).
+  * surface, and per-row header decoders run scan-side as typed `map`s
+  * (`flatMap` where one payload emits several rows).
   *
   * The decode step is a REAL container-format parse for images — PNG
   * IHDR and JPEG SOF header scans over the raw bytes — with a
@@ -101,7 +99,20 @@ case class AudioWindow(
   */
 object Multimodal extends Serializable {
 
-  val DefaultBatchSize = 64
+  /** The byte readers every header decoder shares: unsigned byte,
+    * big/little-endian u16/u32 at an offset, and an ASCII tag match.
+    */
+  private final class Bytes(p: Array[Byte]) {
+    def u8(i: Int): Int    = p(i) & 0xff
+    def be16(i: Int): Long = ((u8(i) << 8) | u8(i + 1)).toLong
+    def be32(i: Int): Long =
+      (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3).toLong
+    def le16(i: Int): Long = (u8(i) | (u8(i + 1) << 8)).toLong
+    def le32(i: Int): Long =
+      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    def ascii(off: Int, s: String): Boolean =
+      s.indices.forall(i => p(off + i) == s.charAt(i).toByte)
+  }
 
   private val PngSignature =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -128,10 +139,7 @@ object Multimodal extends Serializable {
     * oracles, and the gate fails loudly if that ever stops holding.
     */
   def decode(payload: Array[Byte]): (String, Long, Long) = {
-    def u8(i: Int): Int   = payload(i) & 0xff
-    def be16(i: Int): Long = ((u8(i) << 8) | u8(i + 1)).toLong
-    def be32(i: Int): Long =
-      (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3).toLong
+    val b = new Bytes(payload); import b._
     val isPng = payload.length >= 24 &&
       payload.take(8).sameElements(PngSignature) &&
       payload(12) == 'I' && payload(13) == 'H' && payload(14) == 'D' && payload(15) == 'R'
@@ -157,7 +165,6 @@ object Multimodal extends Serializable {
         payload(5) == 'a') {
       // GIF87a/89a: logical-screen width/height are LITTLE-endian u16s
       // at bytes 6–9 (GIF89a spec §18) — the one LE image header here
-      def le16(i: Int): Long = (u8(i) | (u8(i + 1) << 8)).toLong
       ("gif", le16(6), le16(8))
     } else {
       val n = payload.length.toLong
@@ -165,31 +172,22 @@ object Multimodal extends Serializable {
     }
   }
 
-  /** Batched header decode over a typed media dataset — the shared first
+  /** Header decode over a typed media dataset — the shared first
     * stage of [[extractFeatures]] and [[resizePlan]]. Payload rides
     * along (scan-side only; nothing downstream shuffles it).
     */
-  def decodeRecords(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[MediaDecoded] = {
+  def decodeRecords(records: Dataset[MediaRecord]): Dataset[MediaDecoded] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // one decoder invocation per batch — the real-codec seam
-        batch.map { r =>
-          val (fmt, w, h) = decode(r.payload)
-          MediaDecoded(r.doc_id, r.media_type, r.payload, fmt, w, h)
-        }
-      }
+    records.map { r =>
+      val (fmt, w, h) = decode(r.payload)
+      MediaDecoded(r.doc_id, r.media_type, r.payload, fmt, w, h)
     }
   }
 
-  /** Batched feature extraction over a typed media dataset. */
-  def extractFeatures(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[MediaFeatures] = {
+  /** Feature extraction over a typed media dataset. */
+  def extractFeatures(records: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
     import records.sparkSession.implicits._
-    decodeRecords(records, batchSize).map { d =>
+    decodeRecords(records).map { d =>
       val first = if (d.payload.isEmpty) 0L else d.payload(0) & 0xffL
       MediaFeatures(d.doc_id, d.media_type, d.payload.length.toLong, first, d.format, d.width, d.height)
     }
@@ -225,18 +223,14 @@ object Multimodal extends Serializable {
     * SQL could not.
     */
   def decodeWav(p: Array[Byte]): Option[(Long, Long, Long, Long)] = {
-    def u8(i: Int)         = p(i) & 0xff
-    def ascii(off: Int, s: String) = s.indices.forall(i => p(off + i) == s.charAt(i).toByte)
-    def le16(i: Int): Long = (u8(i) | (u8(i + 1) << 8)).toLong
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    val b = new Bytes(p); import b._
     if (p.length >= 44 && ascii(0, "RIFF") && ascii(8, "WAVE") &&
         ascii(12, "fmt ") && le32(16) == 16 && ascii(36, "data"))
       Some((le16(22), le32(24), le16(34), le32(40)))
     else None
   }
 
-  /** Batched audio container probe — the audio sibling of the PNG/JPEG
+  /** Audio container probe — the audio sibling of the PNG/JPEG
     * header decode: WAV payloads yield their real channel/rate/width
     * fields and the data-chunk byte count; opaque payloads get the
     * deterministic raw-audio fallback (rate/channels derived from the
@@ -247,23 +241,17 @@ object Multimodal extends Serializable {
     * convention. Payloads never leave the scan: only the eight narrow
     * probe columns flow downstream.
     */
-  def probeAudio(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[AudioProbe] = {
+  def probeAudio(records: Dataset[MediaRecord]): Dataset[AudioProbe] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val n = r.payload.length.toLong
-          val (fmt, ch, sr, bits, db) = decodeWav(r.payload) match {
-            case Some((ch, sr, bits, db)) => ("wav", ch, sr, bits, db)
-            case None => ("rawaudio", 1L + n % 2, 8000L + (n % 8) * 1000L, 16L, n)
-          }
-          val denom = sr * ch * bits
-          val dur   = if (denom == 0) 0L else db * 8000L / denom
-          AudioProbe(r.doc_id, r.media_type, fmt, ch, sr, bits, db, dur)
-        }
+    records.map { r =>
+      val n = r.payload.length.toLong
+      val (fmt, ch, sr, bits, db) = decodeWav(r.payload) match {
+        case Some((ch, sr, bits, db)) => ("wav", ch, sr, bits, db)
+        case None => ("rawaudio", 1L + n % 2, 8000L + (n % 8) * 1000L, 16L, n)
       }
+      val denom = sr * ch * bits
+      val dur   = if (denom == 0) 0L else db * 8000L / denom
+      AudioProbe(r.doc_id, r.media_type, fmt, ch, sr, bits, db, dur)
     }
   }
 
@@ -299,7 +287,7 @@ object Multimodal extends Serializable {
     * [[decodeWav]].
     */
   def decodeMp3(p: Array[Byte]): Option[(Long, Long, Long)] = {
-    def u8(i: Int) = p(i) & 0xff
+    val b = new Bytes(p); import b._
     if (p.length >= 4 && u8(0) == 0xff && (u8(1) & 0xe0) == 0xe0 &&
         ((u8(1) >> 3) & 3) == 3 && ((u8(1) >> 1) & 3) == 1) {
       val bi = (u8(2) >> 4) & 0xf
@@ -310,31 +298,25 @@ object Multimodal extends Serializable {
     } else None
   }
 
-  /** Batched MP3 probe — bitrate/rate/padding from the frame header,
+  /** MP3 probe — bitrate/rate/padding from the frame header,
     * then the pure-integer frame plan: `frame_bytes = 144000·br/sr +
     * pad` (the Layer III slot formula), whole frames in the payload,
     * and the duration from 1152 samples per frame. Integer division
     * throughout, so both engines agree exactly; payloads never leave
     * the scan — only the narrow probe columns flow downstream.
     */
-  def probeMp3(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[Mp3Probe] = {
+  def probeMp3(records: Dataset[MediaRecord]): Dataset[Mp3Probe] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val n = r.payload.length.toLong
-          val (fmt, br, sr, pad) = decodeMp3(r.payload) match {
-            case Some((br, sr, pad)) => ("mp3", br, sr, pad)
-            case None => ("rawmpeg", Mp3FallbackBitrate, Mp3FallbackRate, 0L)
-          }
-          val fb     = 144000L * br / sr + pad
-          val frames = if (fb == 0) 0L else n / fb
-          val dur    = frames * 1152L * 1000L / sr
-          Mp3Probe(r.doc_id, r.media_type, fmt, br, sr, pad, fb, frames, dur)
-        }
+    records.map { r =>
+      val n = r.payload.length.toLong
+      val (fmt, br, sr, pad) = decodeMp3(r.payload) match {
+        case Some((br, sr, pad)) => ("mp3", br, sr, pad)
+        case None => ("rawmpeg", Mp3FallbackBitrate, Mp3FallbackRate, 0L)
       }
+      val fb     = 144000L * br / sr + pad
+      val frames = if (fb == 0) 0L else n / fb
+      val dur    = frames * 1152L * 1000L / sr
+      Mp3Probe(r.doc_id, r.media_type, fmt, br, sr, pad, fb, frames, dur)
     }
   }
 
@@ -362,10 +344,7 @@ object Multimodal extends Serializable {
     * [[decodeWav]]/[[decodeMp4]].
     */
   def decodeFlac(p: Array[Byte]): Option[(Long, Long, Long, Long)] = {
-    def u8(i: Int)                 = p(i) & 0xff
-    def ascii(off: Int, s: String) = s.indices.forall(i => p(off + i) == s.charAt(i).toByte)
-    def be32(i: Int): Long =
-      (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3).toLong
+    val b = new Bytes(p); import b._
     if (p.length >= 42 && ascii(0, "fLaC") && (u8(4) & 0x7f) == 0 &&
         ((u8(5) << 16) | (u8(6) << 8) | u8(7)) == 34) {
       val sr = ((u8(18).toLong << 12) | (u8(19).toLong << 4) | (u8(20) >> 4).toLong)
@@ -376,27 +355,21 @@ object Multimodal extends Serializable {
     } else None
   }
 
-  /** Batched FLAC probe — bit-packed STREAMINFO fields, then the pure
+  /** FLAC probe — bit-packed STREAMINFO fields, then the pure
     * integer duration `total_samples · 1000 / sample_rate` ms, bit-equal
     * across engines. Opaque payloads take the deterministic raw fallback
     * (rate/channels from the byte length, samples = bytes) so fixture
     * rows stay oracle-checkable; payloads never leave the scan.
     */
-  def probeFlac(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[FlacProbe] = {
+  def probeFlac(records: Dataset[MediaRecord]): Dataset[FlacProbe] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val n = r.payload.length.toLong
-          val (fmt, sr, ch, bp, ts) = decodeFlac(r.payload) match {
-            case Some((sr, ch, bp, ts)) => ("flac", sr, ch, bp, ts)
-            case None => ("rawflac", 16000L + (n % 8) * 1000L, 1L + n % 2, FlacFallbackBits, n)
-          }
-          FlacProbe(r.doc_id, r.media_type, fmt, sr, ch, bp, ts, ts * 1000L / sr)
-        }
+    records.map { r =>
+      val n = r.payload.length.toLong
+      val (fmt, sr, ch, bp, ts) = decodeFlac(r.payload) match {
+        case Some((sr, ch, bp, ts)) => ("flac", sr, ch, bp, ts)
+        case None => ("rawflac", 16000L + (n % 8) * 1000L, 1L + n % 2, FlacFallbackBits, n)
       }
+      FlacProbe(r.doc_id, r.media_type, fmt, sr, ch, bp, ts, ts * 1000L / sr)
     }
   }
 
@@ -429,10 +402,7 @@ object Multimodal extends Serializable {
     * identical check, so even a collision could not diverge the gate.
     */
   def decodeMp4(p: Array[Byte]): Option[(String, Long, Long)] = {
-    def u8(i: Int)                 = p(i) & 0xff
-    def ascii(off: Int, s: String) = s.indices.forall(i => p(off + i) == s.charAt(i).toByte)
-    def be32(i: Int): Long =
-      (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3).toLong
+    val b = new Bytes(p); import b._
     if (p.length < 8 || !ascii(4, "ftyp")) None
     else {
       val s0 = be32(0)
@@ -444,7 +414,7 @@ object Multimodal extends Serializable {
     }
   }
 
-  /** Batched video container probe — the ISO-BMFF sibling of the WAV
+  /** Video container probe — the ISO-BMFF sibling of the WAV
     * probe: canonical MP4 payloads yield their real major brand and
     * movie-header timescale/duration; opaque payloads get the
     * deterministic raw-video fallback (timescale derived from the byte
@@ -454,22 +424,16 @@ object Multimodal extends Serializable {
     * zero-timescale (corrupt) header probes as 0 ms. Payloads never
     * leave the scan: only the seven narrow probe columns flow on.
     */
-  def probeVideo(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[VideoProbe] = {
+  def probeVideo(records: Dataset[MediaRecord]): Dataset[VideoProbe] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val n = r.payload.length.toLong
-          val (fmt, brand, ts, du) = decodeMp4(r.payload) match {
-            case Some((b, ts, du)) => ("mp4", b, ts, du)
-            case None              => ("rawvideo", "none", 1000L + (n % 4) * 500L, n)
-          }
-          val ms = if (ts == 0) 0L else du * 1000L / ts
-          VideoProbe(r.doc_id, r.media_type, fmt, brand, ts, du, ms)
-        }
+    records.map { r =>
+      val n = r.payload.length.toLong
+      val (fmt, brand, ts, du) = decodeMp4(r.payload) match {
+        case Some((b, ts, du)) => ("mp4", b, ts, du)
+        case None              => ("rawvideo", "none", 1000L + (n % 4) * 500L, n)
       }
+      val ms = if (ts == 0) 0L else du * 1000L / ts
+      VideoProbe(r.doc_id, r.media_type, fmt, brand, ts, du, ms)
     }
   }
 
@@ -489,30 +453,24 @@ object Multimodal extends Serializable {
     * probe byte (a real front end reads the frame; the byte keeps the
     * fixture oracle-checkable — the same honest seam as
     * [[frameSample]]). WAV frames start after the 44-byte header; raw
-    * audio at 0. Everything happens inside the one batched
-    * mapPartitions, so the payload never leaves the scan — only the
-    * five narrow window columns flow on.
+    * audio at 0. Everything happens inside the one typed flatMap, so
+    * the payload never leaves the scan — only the five narrow window
+    * columns flow on.
     */
-  def probeAudioWindows(
-      records: Dataset[MediaRecord],
-      batchSize: Int = DefaultBatchSize): Dataset[AudioWindow] = {
+  def probeAudioWindows(records: Dataset[MediaRecord]): Dataset[AudioWindow] = {
     import records.sparkSession.implicits._
-    records.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { r =>
-          val n = r.payload.length.toLong
-          val (fmt, ch, sr, bits, db, off) = decodeWav(r.payload) match {
-            case Some((ch, sr, bits, db)) => ("wav", ch, sr, bits, db, 44L)
-            case None => ("rawaudio", 1L + n % 2, 8000L + (n % 8) * 1000L, 16L, n, 0L)
-          }
-          val bpw  = sr * ch * bits / 400L
-          val nWin = if (bpw <= 0) 0L else db / bpw
-          (0L until nWin).map { w =>
-            val idx = off + w * bpw
-            val pb  = if (idx < n) r.payload(idx.toInt) & 0xffL else 0L
-            AudioWindow(r.doc_id, fmt, w, idx, pb)
-          }
-        }
+    records.flatMap { r =>
+      val n = r.payload.length.toLong
+      val (fmt, ch, sr, bits, db, off) = decodeWav(r.payload) match {
+        case Some((ch, sr, bits, db)) => ("wav", ch, sr, bits, db, 44L)
+        case None => ("rawaudio", 1L + n % 2, 8000L + (n % 8) * 1000L, 16L, n, 0L)
+      }
+      val bpw  = sr * ch * bits / 400L
+      val nWin = if (bpw <= 0) 0L else db / bpw
+      (0L until nWin).map { w =>
+        val idx = off + w * bpw
+        val pb  = if (idx < n) r.payload(idx.toInt) & 0xffL else 0L
+        AudioWindow(r.doc_id, fmt, w, idx, pb)
       }
     }
   }
@@ -563,7 +521,7 @@ object Multimodal extends Serializable {
     * output is a 1-D nearest-neighbor byte resample of the payload (one
     * strided probe per output column, summed to a checksum the oracle
     * can replay). A real deployment swaps the probe lambda for a pixel
-    * kernel; the plan shape — batched decode, then scan-side projection
+    * kernel; the plan shape — typed decode, then scan-side projection
     * + generate, payload never shuffled, only narrow columns flow on —
     * is the real thing. Zero-dimension payloads (undecodable JPEGs, the
     * raw geometry's `n % 640 == 0` wrap) are filtered like undecodable

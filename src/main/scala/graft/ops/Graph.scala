@@ -18,13 +18,22 @@ import graft.Tables
   * curation; re-using the iteration over the similarity graph gives the
   * same machinery a corpus-internal signal.
   *
+  * One body per algorithm: `pagerank`, `ppr`, `communities`,
+  * `modularity`, `bfs` and `kcore` each run over a [[graft.Ckpt.Stages]]
+  * handle of an ordered pair list (da, db). The catalog entry passes
+  * `Stages(pairs, "graph", dir)`, so every shared stage (the
+  * edges-with-degree table, the restart mass, the symmetrized adjacency,
+  * its row count, the LPA labels) is the session memo
+  * `graph:<what>:<dir>`; the pair-list form passes `Stages(pairList)`,
+  * which materializes each stage once for that call and leaves nothing
+  * in the memo.
+  *
   * Scale shape: the classic Spark PageRank loop — edges (with out-degree
-  * attached) are materialized ONCE behind a `localCheckpoint`, then each
-  * of the fixed [[PrIterations]] rounds is one equi-join (ranks against
-  * edge sources) plus one partial-aggregated shuffle onto destination
-  * nodes. Superseded rank generations release their checkpoint blocks, so
-  * the loop holds at most two generations regardless of iteration count —
-  * the same discipline as the connected-components loop.
+  * attached) are materialized ONCE, then each of the fixed
+  * [[PrIterations]] rounds is one equi-join (ranks against edge sources)
+  * plus one partial-aggregated shuffle onto destination nodes. No round
+  * is checkpointed: the ranks appear once per round, so the lineage is a
+  * linear chain of 2·iterations shuffles in one job.
   *
   * Determinism (oracle parity): per-edge contributions `rank/deg`
   * quantize onto the decimal(38,12) grid BEFORE the destination sum (the
@@ -41,27 +50,22 @@ object Graph {
   val PrIterations = 5
   val PrDamping    = 0.85
 
-  /** Catalog entry: PageRank over the MinHash-verified near-dup pairs
-    * (the memoized snapshot — the MinHash pipeline is the dominant cost
-    * and five graph/pipeline consumers need identical pairs).
+  /** Stages over the memoized MinHash-verified near-dup pairs — the
+    * MinHash pipeline is the dominant cost and five graph/pipeline
+    * consumers need identical pairs.
     */
-  def pagerankNearDup(s: SparkSession, dir: String): DataFrame = {
-    val edgesDeg = ndEdgesDeg(s, dir)
-    // counted per call, as [[pagerank]] does: graph_pagerank is its one
-    // consumer, so a memo could only ever hit on a repeated run
-    val n = edgesDeg.select("src").distinct().count()
-    prLoop(edgesDeg, n, PrIterations, PrDamping)
-      .select(col("node").as("doc_id"), col("rank"))
-  }
+  private def nearDup(s: SparkSession, dir: String): Ckpt.Stages =
+    Ckpt.Stages(Dedup.minhashShared(s, dir).select(col("da"), col("db")), "graph", dir)
 
-  /** Memoized near-dup edges-with-degree table — the identical build
-    * [[pagerank]] and [[ppr]] each ran (and checkpointed) privately per
-    * invocation (r15, guide §2.4): symmetrize the memoized minhash pair
-    * snapshot, attach out-degrees, one generation of blocks per session.
+  /** Catalog entry: PageRank over the near-dup graph. */
+  def pagerankNearDup(s: SparkSession, dir: String): DataFrame =
+    pagerankOn(nearDup(s, dir), PrIterations, PrDamping)
+
+  /** The edges-with-degree stage `nd-edgesdeg` that both rank loops
+    * scan: symmetrize the pair list, attach out-degrees.
     */
-  private def ndEdgesDeg(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:nd-edgesdeg:$dir")(
-      withDegrees(Dedup.minhashShared(s, dir).select(col("da"), col("db"))))
+  private def edgesDeg(h: Ckpt.Stages): DataFrame =
+    h.stage("nd-edgesdeg")(withDegrees(h.in))
 
   /** (src, dst, deg): both directions of each pair (da, db), with src's
     * out-degree — the edge table of both rank loops.
@@ -105,15 +109,15 @@ object Graph {
     * iteration count. Returns (doc_id, rank) for every node in any pair.
     */
   def pagerank(pairList: DataFrame,
-      iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame = {
-    val edgesDeg = Ckpt.scoped(pairList.toDF("da", "db"))(withDegrees(_).transform(Ckpt.apply))
-    val n = edgesDeg.select("src").distinct().count()
-    // materialize the final ranks so the edge-sized generation can be
-    // freed before returning (fixture path; the catalog path scans the
-    // session-memoized table instead and returns a lazy plan)
-    val ranks = prLoop(edgesDeg, n, iterations, damping).transform(Ckpt.apply)
-    Ckpt.free(edgesDeg)
-    ranks.select(col("node").as("doc_id"), col("rank"))
+      iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame =
+    pagerankOn(Ckpt.Stages(pairList.toDF("da", "db")), iterations, damping)
+
+  private def pagerankOn(h: Ckpt.Stages, iterations: Int, damping: Double): DataFrame = {
+    val ed = edgesDeg(h)
+    // counted per call: graph_pagerank is the one consumer, so a memo
+    // could only ever hit on a repeated run
+    val n = ed.select("src").distinct().count()
+    prLoop(ed, n, iterations, damping).select(col("node").as("doc_id"), col("rank"))
   }
 
   /** Seed-set size for [[ppr]]: the [[PprSeeds]] nodes with the
@@ -121,26 +125,16 @@ object Graph {
     */
   val PprSeeds = 8
 
-  /** Catalog entry: personalized PageRank over the near-dup graph (the
-    * memoized pair snapshot, as in [[pagerankNearDup]]).
-    */
+  /** Catalog entry: personalized PageRank over the near-dup graph. */
   def pprNearDup(s: SparkSession, dir: String): DataFrame =
-    pprLoop(ndEdgesDeg(s, dir), ndRestart(s, dir), PrIterations, PrDamping)
-      .select(col("node").as("doc_id"), col("rank"))
+    pprOn(nearDup(s, dir), PrIterations, PrDamping)
 
-  /** Memoized per-node restart-mass table for [[pprNearDup]] (node, s):
-    * the seed top-k + left-join it used to rebuild and checkpoint per
-    * invocation now lives one generation per session, like the edge
-    * table it derives from.
+  /** The restart-mass stage `nd-restart` (node, s), derived from the
+    * edges-with-degree stage: mass 1/[[PprSeeds]] on the seed nodes, 0
+    * elsewhere.
     */
-  private def ndRestart(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:nd-restart:$dir")(restartMass(ndEdgesDeg(s, dir)))
-
-  /** (node, s) for every node of an edges-with-degree table: restart
-    * mass 1/[[PprSeeds]] on the seed nodes, 0 elsewhere.
-    */
-  private def restartMass(edgesDeg: DataFrame): DataFrame = {
-    val nodes = edgesDeg.select("src").distinct()
+  private def restartMass(h: Ckpt.Stages): DataFrame = h.stage("nd-restart") {
+    val nodes = edgesDeg(h).select("src").distinct()
     val seeds = nodes
       .orderBy(graft.functions.TextHash.hash60(col("src").cast("string")), col("src"))
       .limit(PprSeeds)
@@ -164,11 +158,10 @@ object Graph {
     * (hash, node) — a PRF stand-in for the uploaded whitelist that is
     * nonempty on any graph and reproducible in the oracle. Its selection
     * is a top-k over the node list (TakeOrderedAndProject, no global
-    * sort); the per-node restart column rides the SAME checkpointed
-    * table the rank join already produces, so personalization adds zero
-    * extra shuffles per round versus [[pagerank]] — one equi-join plus
-    * one partial-aggregated destination sum, two checkpoint generations
-    * max.
+    * sort); the per-node restart column is one more materialized stage
+    * beside the edge table, so personalization adds only the restart
+    * join per round versus [[pagerank]] — one equi-join plus one
+    * partial-aggregated destination sum, and no round is checkpointed.
     *
     * Determinism: [[pagerank]]'s decimal(38,12) CAST is tie-hazardous
     * here — the 1/8 seed mass is dyadic, so iteration values (seed /
@@ -184,16 +177,12 @@ object Graph {
     * are interpolated into the oracle as full-precision double literals.
     */
   def ppr(pairList: DataFrame,
-      iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame = {
-    val edgesDeg = Ckpt.scoped(pairList.toDF("da", "db"))(withDegrees(_).transform(Ckpt.apply))
-    val sv       = restartMass(edgesDeg).transform(Ckpt.apply)
-    // materialize the final ranks so both input generations can be freed
-    // (fixture path; the catalog path scans session-memoized tables)
-    val ranks = pprLoop(edgesDeg, sv, iterations, damping).transform(Ckpt.apply)
-    Ckpt.free(edgesDeg)
-    Ckpt.free(sv)
-    ranks.select(col("node").as("doc_id"), col("rank"))
-  }
+      iterations: Int = PrIterations, damping: Double = PrDamping): DataFrame =
+    pprOn(Ckpt.Stages(pairList.toDF("da", "db")), iterations, damping)
+
+  private def pprOn(h: Ckpt.Stages, iterations: Int, damping: Double): DataFrame =
+    pprLoop(edgesDeg(h), restartMass(h), iterations, damping)
+      .select(col("node").as("doc_id"), col("rank"))
 
   /** The PPR rounds over materialized edges-with-degree and restart-mass
     * tables. No per-round checkpoints, same rationale as [[prLoop]]
@@ -287,8 +276,10 @@ object Graph {
     * quantization needed; deg < 2 nodes get cc = 0 (no neighbor pair
     * to close), mirroring the oracle's CASE.
     */
-  def clusteringCoeffCoPurchase(s: SparkSession, dir: String): DataFrame =
-    clusteringCoeffOf(coPurchaseEdges(s, dir).toDF("da", "db"), coPurchaseAdj(s, dir))
+  def clusteringCoeffCoPurchase(s: SparkSession, dir: String): DataFrame = {
+    val h = coPurchase(s, dir)
+    clusteringCoeffOf(h.in.toDF("da", "db"), adjacency(h))
+  }
 
   /** The cc computation over a materialized ordered pair list + its
     * symmetrized adjacency (spec callers pass small fixtures).
@@ -511,49 +502,44 @@ object Graph {
   /** Fixed LPA iteration count (unrolled in the oracle). */
   val LpaIterations = 3
 
-  /** Memoized symmetrized adjacency of the co-purchase graph — shared by
-    * the three LPA-family catalog entries. Built over the already-
-    * checkpointed [[coPurchaseEdges]], so the union's double scan reads
-    * materialized blocks; memoized itself ([[graft.Ckpt.cached]]) so
-    * repeated gate/bench invocations reuse one generation of executor
-    * blocks instead of checkpointing a fresh adjacency per call (r8
-    * advice: the per-invocation checkpoints were never freeable — the
-    * returned DataFrames scan them lazily).
-    */
-  private def coPurchaseAdj(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:adj:$dir") {
-      val p = coPurchaseEdges(s, dir).toDF("da", "db")
-      // r16 (guide §2.4 — remove shuffles outright): materialize the
-      // adjacency hash-partitioned AND sorted on m, the key every
-      // iterative consumer joins on (LPA rounds, bfs/kcore peels,
-      // louvain's k_ic). localCheckpoint preserves outputPartitioning
-      // and outputOrdering through the LogicalRDD scan, so each of those
-      // joins skips BOTH the |2E|-row exchange and its sort, per round,
-      // per query — only the (tiny) frontier/label side still shuffles.
-      // Row content is unchanged; placement is not semantics.
-      p.union(p.select(col("db"), col("da"))).toDF("u", "m")
-        .repartition(col("m"))
-        .sortWithinPartitions("m")
-    }
+  /** Stages over the memoized co-purchase pair list [[coPurchaseEdges]]. */
+  private def coPurchase(s: SparkSession, dir: String): Ckpt.Stages =
+    Ckpt.Stages(coPurchaseEdges(s, dir), "graph", dir)
 
-  /** Memoized row count of [[coPurchaseAdj]] (= directed edge count 2m),
-    * the [[graft.Ckpt]] value entry `graph:adj-count:<dir>` —
-    * modularity, louvain_move and kcore each ran it as a per-invocation
-    * scalar action over the same immutable memoized blocks (r15).
+  /** The symmetrized adjacency stage `adj` (u, m) — the shared first
+    * step of every co-purchase iteration, built over the stage input so
+    * the union's double scan reads materialized blocks.
     */
-  private def coPurchaseAdjCount(s: SparkSession, dir: String): Long =
-    Ckpt.cachedValue(s, s"graph:adj-count:$dir")(coPurchaseAdj(s, dir).count())
+  private def adjacency(h: Ckpt.Stages): DataFrame = h.stage("adj") {
+    val p = h.in
+    // r16 (guide §2.4 — remove shuffles outright): materialize the
+    // adjacency hash-partitioned AND sorted on m, the key every
+    // iterative consumer joins on (LPA rounds, bfs/kcore peels,
+    // louvain's k_ic). localCheckpoint preserves outputPartitioning
+    // and outputOrdering through the LogicalRDD scan, so each of those
+    // joins skips BOTH the |2E|-row exchange and its sort, per round,
+    // per query — only the (tiny) frontier/label side still shuffles.
+    // Row content is unchanged; placement is not semantics.
+    p.union(p.select(col("db"), col("da"))).toDF("u", "m")
+      .repartition(col("m"))
+      .sortWithinPartitions("m")
+  }
 
-  /** Memoized LPA label assignment of the co-purchase graph: feeds
-    * communities, modularity, AND louvain_move — one 3-round LPA per
-    * session instead of one per catalog invocation.
+  /** Row count of the [[adjacency]] (= directed edge count 2m), the
+    * value stage `adj-count`: modularity, louvain_move and kcore each
+    * need it, and it is one scalar action over immutable blocks.
     */
-  private def coPurchaseLabels(s: SparkSession, dir: String): DataFrame =
-    Ckpt.cached(s, s"graph:lpa:$dir")(lpaLabels(coPurchaseAdj(s, dir)))
+  private def adjRows(h: Ckpt.Stages): Long = h.value("adj-count")(adjacency(h).count())
+
+  /** The LPA label stage `lpa`: feeds communities, modularity and
+    * louvain_move, and is read twice by each (so it is materialized —
+    * unmaterialized, the 3-round LPA subtree re-runs once per consumer).
+    */
+  private def labels(h: Ckpt.Stages): DataFrame = h.stage("lpa")(lpaLabels(adjacency(h)))
 
   /** Catalog entry: communities of the part co-purchase graph. */
   def communitiesCoPurchase(s: SparkSession, dir: String): DataFrame =
-    communitiesOf(coPurchaseLabels(s, dir))
+    communitiesOn(coPurchase(s, dir))
 
   /** Synchronous label-propagation community detection (LPA): every node
     * starts as its own label and, each round, adopts the most frequent
@@ -572,32 +558,16 @@ object Graph {
     * consults arrival order: min(struct(−count, label)) is a total
     * order.
     */
-  def communities(pairList: DataFrame): DataFrame = {
-    val adj    = symAdj(pairList)
-    // Checkpoint the label assignment: it feeds TWO consumers (the size
-    // aggregation and the final join), and without materialization Spark
-    // re-executes the whole 3-round LPA subtree — ~6 shuffles — once per
-    // consumer (observed: 20 exchanges, zero reuse). With the checkpoint
-    // the rounds run exactly once, mirroring modularity()'s discipline.
-    val labels = lpaLabels(adj).transform(Ckpt.apply)
-    Ckpt.free(adj) // labels are materialized; the adjacency is dead
-    communitiesOf(labels)
-  }
+  def communities(pairList: DataFrame): DataFrame =
+    communitiesOn(Ckpt.Stages(pairList.toDF("da", "db")))
 
-  private def communitiesOf(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("community_size"))
-    labels
+  private def communitiesOn(h: Ckpt.Stages): DataFrame = {
+    val lpa   = labels(h)
+    val sizes = lpa.groupBy("lbl").agg(count(lit(1)).as("community_size"))
+    lpa
       .join(sizes, "lbl")
       .select(col("node").as("p_partkey"), col("lbl").as("community"), col("community_size"))
   }
-
-  /** Checkpointed symmetrized adjacency (u, m) from an ordered pair list —
-    * the shared first step of every co-purchase iteration.
-    */
-  private def symAdj(pairList: DataFrame): DataFrame =
-    Ckpt.scoped(pairList.toDF("da", "db")) { p =>
-      p.union(p.select(col("db"), col("da"))).toDF("u", "m").transform(Ckpt.apply)
-    }
 
   /** The LPA rounds of [[communities]], exposed so [[modularity]] can
     * score the same label assignment without re-stating the loop.
@@ -621,8 +591,7 @@ object Graph {
     * graph.
     */
   def modularityCoPurchase(s: SparkSession, dir: String): DataFrame =
-    modularityOf(coPurchaseAdj(s, dir), coPurchaseLabels(s, dir),
-      Some(coPurchaseAdjCount(s, dir)))
+    modularityOn(coPurchase(s, dir))
 
   /** Newman modularity of the [[communities]] label assignment:
     * `Q = Σ_c [ e_c/2m − (D_c/2m)² ]` where `e_c` counts DIRECTED
@@ -641,23 +610,21 @@ object Graph {
     * double expression, quantized onto the decimal(38,12) grid BEFORE the
     * order-free final sum (the catalog rule).
     */
-  def modularity(pairList: DataFrame): DataFrame = {
-    val adj = symAdj(pairList)
-    modularityOf(adj, lpaLabels(adj).transform(Ckpt.apply))
-  }
+  def modularity(pairList: DataFrame): DataFrame =
+    modularityOn(Ckpt.Stages(pairList.toDF("da", "db")))
 
-  private def modularityOf(adj: DataFrame, labels: DataFrame,
-      knownM2: Option[Long] = None): DataFrame = {
-    // directed edges = 2m; one scalar action (memoized on catalog paths)
-    val m2 = knownM2.getOrElse(adj.count()).toDouble
+  private def modularityOn(h: Ckpt.Stages): DataFrame = {
+    val adj = adjacency(h)
+    val lpa = labels(h)
+    val m2  = adjRows(h).toDouble // directed edges = 2m
     val within = adj
-      .join(labels.select(col("node").as("u"), col("lbl").as("lu")), "u")
-      .join(labels.select(col("node").as("m"), col("lbl").as("lm")), "m")
+      .join(lpa.select(col("node").as("u"), col("lbl").as("lu")), "u")
+      .join(lpa.select(col("node").as("m"), col("lbl").as("lm")), "m")
       .filter(col("lu") === col("lm"))
       .groupBy(col("lu").as("lbl"))
       .agg(count(lit(1)).as("e_in"))
     val degSum = adj.groupBy("u").agg(count(lit(1)).as("deg"))
-      .join(labels.select(col("node").as("u"), col("lbl")), "u")
+      .join(lpa.select(col("node").as("u"), col("lbl")), "u")
       .groupBy("lbl")
       .agg(sum(col("deg")).as("d_sum"))
     val share = col("d_sum").cast("double") / lit(m2)
@@ -674,8 +641,10 @@ object Graph {
   /** Catalog entry: one Louvain local-move round over the LPA labels of
     * the co-purchase graph.
     */
-  def louvainMoveCoPurchase(s: SparkSession, dir: String): DataFrame =
-    louvainMoveOf(coPurchaseAdj(s, dir), coPurchaseLabels(s, dir), coPurchaseAdjCount(s, dir))
+  def louvainMoveCoPurchase(s: SparkSession, dir: String): DataFrame = {
+    val h = coPurchase(s, dir)
+    louvainMoveOf(adjacency(h), labels(h), adjRows(h))
+  }
 
   /** One SYNCHRONOUS Louvain local-move round (Blondel et al. 2008) —
     * the refinement step community pipelines run after a cheap seeding
@@ -757,9 +726,9 @@ object Graph {
     * co-purchase graph.
     */
   def bfsCoPurchase(s: SparkSession, dir: String): DataFrame =
-    bfsOverAdj(coPurchaseAdj(s, dir),
+    bfsOn(coPurchase(s, dir),
       Tables.part(s, dir).filter(col("p_brand") === BfsSeedBrand)
-        .select(col("p_partkey")))
+        .select(col("p_partkey")), BfsRounds)
 
   /** Multi-source BFS: minimum hop distance from a seed set, fixed round
     * count. Emits (node, dist) for every node within [[BfsRounds]] hops —
@@ -775,22 +744,11 @@ object Graph {
     * parity needs no quantization; only the final round's distances are
     * checkpointed.
     */
-  def bfs(pairList: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
-    val adj = symAdj(pairList)
-    val res = bfsOverAdj(adj, seeds, rounds)
-    Ckpt.free(adj)
-    res
-  }
+  def bfs(pairList: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame =
+    bfsOn(Ckpt.Stages(pairList.toDF("da", "db")), seeds, rounds)
 
-  /** The BFS rounds over an ALREADY-SYMMETRIZED adjacency — the catalog
-    * path hands in the memoized [[coPurchaseAdj]] directly (r15, guide
-    * §2.4: [[bfs]] used to re-symmetrize + re-checkpoint the identical
-    * adjacency the LPA family already memoizes, one |E|-block copy per
-    * invocation). Never frees its input (the caller owns it); like
-    * [[sssp]], it checkpoints only the final round's distances.
-    */
-  private[ops] def bfsOverAdj(adj: DataFrame, seeds: DataFrame,
-      rounds: Int = BfsRounds): DataFrame = {
+  private def bfsOn(h: Ckpt.Stages, seeds: DataFrame, rounds: Int): DataFrame = {
+    val adj = adjacency(h)
     var dist = adj.select(col("u")).distinct()
       .join(seeds.toDF("u"), Seq("u"), "left_semi")
       .select(col("u").as("node"), lit(0L).as("dist"))
@@ -824,7 +782,7 @@ object Graph {
     * private per-invocation lineitem self-join it used to run is gone —
     * r15, guide §2.4). Memoized itself so repeated gate/bench
     * invocations scan one generation of blocks instead of re-unioning
-    * the pair scan per call (the [[coPurchaseAdj]] discipline).
+    * the pair scan per call (the [[adjacency]] discipline).
     */
   private def coPurchaseWadj(s: SparkSession, dir: String): DataFrame =
     Ckpt.cached(s, s"graph:wadj:$dir") {
@@ -833,7 +791,7 @@ object Graph {
       pc.select(col("da").as("u"), col("db").as("m"), w.as("w"))
         .union(pc.select(col("db").as("u"), col("da").as("m"), w.as("w")))
         // pre-partitioned + sorted on the relaxation join key — see
-        // coPurchaseAdj; each Bellman–Ford round joins shuffle-free on
+        // adjacency; each Bellman–Ford round joins shuffle-free on
         // the adjacency side
         .repartition(col("m"))
         .sortWithinPartitions("m")
@@ -880,13 +838,9 @@ object Graph {
   val KcoreK       = 3
   val KcoreRounds  = 6
 
-  /** Catalog entry: 3-core of the part co-purchase graph — peels over
-    * the memoized [[coPurchaseAdj]] (r15: [[kcore]] used to symmetrize +
-    * checkpoint a private copy of the same adjacency per invocation).
-    */
+  /** Catalog entry: 3-core of the part co-purchase graph. */
   def kcoreCoPurchase(s: SparkSession, dir: String): DataFrame =
-    kcoreOverAdj(coPurchaseAdj(s, dir),
-      knownCount = Some(coPurchaseAdjCount(s, dir)))
+    kcoreOn(coPurchase(s, dir), KcoreK, KcoreRounds)
 
   /** k-core decomposition by iterative peeling: each round drops every
     * node with degree < k in the CURRENT surviving subgraph (plus its
@@ -898,28 +852,23 @@ object Graph {
     *
     * Scale shape: each round is one partial-aggregated degree count plus
     * two hash semi-joins of the edge list against the survivor set — no
-    * all-pairs anything, cost ∝ surviving |E| per round. The edge list
-    * is re-checkpointed per round so the loop holds two generations max
-    * (the PageRank/LPA discipline); peeling only ever SHRINKS the edge
-    * list, so later rounds cost less, not more. Degrees are integers —
-    * no quantization needed for oracle parity.
+    * all-pairs anything, cost ∝ surviving |E| per round. The surviving
+    * edge list is re-checkpointed per round and each superseded
+    * generation freed, so the loop holds two generations max; peeling
+    * only ever SHRINKS the edge list, so later rounds cost less, not
+    * more. Degrees are integers — no quantization needed for oracle
+    * parity.
     */
-  def kcore(pairList: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame = {
-    val adj = symAdj(pairList)
-    val res = kcoreOverAdj(adj, k, rounds)
-    Ckpt.free(adj)
-    res
-  }
+  def kcore(pairList: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame =
+    kcoreOn(Ckpt.Stages(pairList.toDF("da", "db")), k, rounds)
 
-  /** The peel rounds over an ALREADY-SYMMETRIZED adjacency — the catalog
-    * path hands in the memoized [[coPurchaseAdj]] (r15: no more private
-    * per-invocation symmetrize + checkpoint). Never frees its input; the
-    * generations IT creates are freed as they are superseded.
+  /** The peel rounds over the [[adjacency]] stage. Never frees the
+    * stage; the generations the loop creates are freed as they are
+    * superseded.
     */
-  private[ops] def kcoreOverAdj(adjIn: DataFrame, k: Int = KcoreK,
-      rounds: Int = KcoreRounds, knownCount: Option[Long] = None): DataFrame = {
-    var adj      = adjIn
-    var adjOwned = false // round-0 adjacency belongs to the caller
+  private def kcoreOn(h: Ckpt.Stages, k: Int, rounds: Int): DataFrame = {
+    var adj      = adjacency(h)
+    var adjOwned = false // round-0 adjacency is the stage's
     // peeling only removes rows, so an unchanged edge count IS the
     // fixpoint witness: every later round recomputes the identical
     // subgraph. Early exit is value-identical to running the remaining
@@ -927,7 +876,7 @@ object Graph {
     // and saves ~half the sf1 wall time — the fixture and co-purchase
     // graphs converge in 2-3 of the 6 rounds. The count scans already-
     // materialized checkpoint blocks, not the lineage.
-    var edgeCount = knownCount.getOrElse(adj.count())
+    var edgeCount = adjRows(h)
     var r         = 0
     var converged = false
     while (r < rounds && !converged) {

@@ -688,9 +688,9 @@ object TextAnalysis {
     * never the corpus: one corpus shuffle builds (word, count), then
     * each round is pair-explode → partial-aggregated count → a
     * TakeOrderedAndProject top-1 → a 1-row broadcast onto the rewrite.
-    * Generations are localCheckpoint'ed and freed pairwise (the
-    * [[graft.ops.Graph.pagerank]] loop discipline) so round k's plan
-    * never re-derives rounds 1..k−1.
+    * Each round's word table is localCheckpoint'ed and the one it
+    * supersedes freed, so round k's plan never re-derives rounds
+    * 1..k−1 and the loop holds two generations at most.
     */
   def bpeTrain(s: SparkSession, dir: String): DataFrame =
     bpeFitShared(s, dir)._1

@@ -292,10 +292,10 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     assert(Multimodal.decodeFlac(last).contains((48000L, 1L, 8L, 48000L)))
   }
 
-  test("batching covers all rows regardless of partition layout") {
+  test("feature extraction covers all rows regardless of partition layout") {
     val recs = (1L to 100L).map(i => MediaRecord(i, "image", Array.fill(i.toInt)(7.toByte)))
     val ds   = spark.createDataset(recs).repartition(7)
-    val got  = Multimodal.extractFeatures(ds, batchSize = 3).collect()
+    val got  = Multimodal.extractFeatures(ds).collect()
     assert(got.length == 100)
     assert(got.map(_.n_bytes).sorted.toSeq == (1L to 100L).toSeq)
   }
