@@ -170,21 +170,72 @@ object Smoke {
     * the initial plan. Wrapper recursion and subquery recursion are
     * independent — a subquery hanging directly off an AQE wrapper node is
     * still collected (round-12 advice: the old mutually-exclusive match
-    * arms skipped it).
+    * arms skipped it). A reused exchange is collected as one leaf: its
+    * subtree ran once, where it was first planned, and is collected there.
     */
   def finalPlanNodes(p: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     val here = p.collect { case n => n }
     here ++ here.flatMap { n =>
       val wrapped = n match {
         case a: AdaptiveSparkPlanExec => finalPlanNodes(a.executedPlan)
         case q: QueryStageExec        => finalPlanNodes(q.plan)
-        case r: ReusedExchangeExec    => finalPlanNodes(r.child)
         case _                        => Nil
       }
       wrapped ++ n.subqueries.flatMap(finalPlanNodes)
     }
+  }
+
+  /** The as-run shape of one plan: its shuffle exchanges read by
+    * partition, its reused exchanges, its joins by kind
+    * (BHJ/SHJ/SMJ/BNL/CART) and the graft operators that ran. It is the
+    * row PlanAuditSpec pins per query, the nested-loop test of [[audit]]
+    * and ScaleSweep's flip report. Read it after [[Profile.consume]].
+    *
+    * Broadcast exchanges are not counted: when both sides of a join are
+    * small, AQE builds on the side whose stage finished first, which
+    * decides whether a fresh broadcast runs or an earlier one is reused
+    * (graph_pagerank ran one or two across runs of one commit). The
+    * BHJ and BNL counts pin the broadcast choice itself.
+    */
+  final case class Shape(shuffles: Int, reused: Int, joins: Map[String, Int],
+      graft: Map[String, Int]) {
+    def nestedLoop: Boolean = joins.contains("BNL") || joins.contains("CART")
+
+    /** Tab-separated: the exchange counts, then `name=count` lists (`-` when empty). */
+    def tsv: String = (Seq(shuffles, reused) ++ Seq(joins, graft).map(m =>
+      if (m.isEmpty) "-" else m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")))
+      .mkString("\t")
+  }
+
+  def shape(plan: SparkPlan): Shape = {
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins._
+    import graft.plans.{GroupedTopKExec, PartitionPrefixSumExec, SortedGroupReduceExec}
+    val nodes = finalPlanNodes(plan)
+    // a shuffle read only locally is the static plan's leftover under a
+    // join AQE turned into a broadcast hash join; whether it ran depends
+    // on which stage finished first, so it is not counted
+    val localOnly = nodes.collect { case r: AQEShuffleReadExec if r.isLocalRead => r.child }
+      .collect { case q: QueryStageExec => q.plan }
+    def tally(kind: PartialFunction[SparkPlan, String]) =
+      nodes.collect(kind).groupBy(identity).map { case (k, v) => k -> v.size }
+    Shape(
+      nodes.count(n => n.isInstanceOf[ShuffleExchangeLike] && !localOnly.exists(_ eq n)),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]),
+      tally {
+        case _: BroadcastHashJoinExec       => "BHJ"
+        case _: ShuffledHashJoinExec        => "SHJ"
+        case _: SortMergeJoinExec           => "SMJ"
+        case _: BroadcastNestedLoopJoinExec => "BNL"
+        case _: CartesianProductExec        => "CART"
+      },
+      tally {
+        case _: GroupedTopKExec        => "GroupedTopK"
+        case _: PartitionPrefixSumExec => "PartitionPrefixSum"
+        case _: SortedGroupReduceExec  => "SortedGroupReduce"
+      })
   }
 
   /** Attribute names that look like per-entity keys: an aggregate GROUPED
@@ -348,14 +399,14 @@ object Smoke {
     * this smoke gate and PlanAuditSpec's full-catalog sweep run it.
     */
   def audit(name: String, df: DataFrame): Option[String] = {
-    val plan       = df.queryExecution.executedPlan
-    val nestedLoop = Seq("CartesianProduct", "BroadcastNestedLoopJoin").exists(plan.toString.contains)
+    val plan = df.queryExecution.executedPlan
     // the round-7-11 bug class: a result column whose type the DuckDB
     // hash-compare canonicalizes differently (DECIMAL/FLOAT)
     outputTypeViolation(df.schema).map(v => s"SMOKE OUTPUT-TYPE: $name — $v")
       .orElse(unboundedGlobalWindow(plan).filterNot(_ => GlobalWindowAllowed(name))
         .map(w => s"SMOKE GLOBAL-WINDOW: $name — $w"))
-      .orElse(Option.when(nestedLoop && !NestedLoopAllowed(name))(s"SMOKE NESTED-LOOP: $name"))
+      .orElse(Option.when(shape(plan).nestedLoop && !NestedLoopAllowed(name))(
+        s"SMOKE NESTED-LOOP: $name"))
   }
 
   def main(args: Array[String]): Unit = {

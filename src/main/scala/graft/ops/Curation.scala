@@ -538,8 +538,7 @@ object Curation {
     * qs; the grid side is score-range bounded). The hazard is a future
     * stats change silently BROADCASTING the corpus-sized checkpoint
     * side — an executor OOM at 100 TB — so PlanAuditSpec pins "no
-    * broadcast whose build side scans a checkpoint" on this query, and
-    * tools/sf1_profile.tsv pins SMJ=1 at both SFs.
+    * broadcast whose build side scans a checkpoint" on this query.
     */
   def paretoFront(s: SparkSession, dir: String): DataFrame =
     paretoFrontOf(

@@ -6,6 +6,25 @@ import org.scalatest.funsuite.AnyFunSuite
   * these queries scale must survive refactors — filters reaching the
   * parquet scan, dimension joins broadcasting, global top-k compiling to
   * TakeOrderedAndProject rather than a full sort.
+  *
+  * It also holds the as-run plan record,
+  * `src/test/resources/graft/as_run_plans.tsv`: one row per catalog
+  * query, the [[Smoke.shape]] of the plan that ran (shuffle exchanges
+  * read by partition, reused exchanges, join kinds, graft operators),
+  * taken in the one catalog pass the audits share. The record pins the
+  * plans of this suite's session (SparkTestBase: `local[4,2]`, 4 shuffle
+  * partitions, sf0.001), not those of `Sessions.builder`. It holds only
+  * what was byte-identical across runs of one commit. Left out:
+  *  - jobs, stages and tasks: a query runs fewer of them when an earlier
+  *    spec has already built a `Ckpt` entry it reads;
+  *  - shuffles AQE reads only locally, the leftover of a join it turned
+  *    into a broadcast: whether that stage ran depends on which stage
+  *    finished first (dedup_containment_capped ran 7 or 8 shuffles);
+  *  - broadcast exchanges: whether a join builds a fresh broadcast or
+  *    reuses one follows which of its small sides finished first
+  *    (graph_pagerank ran 1 or 2).
+  * On a mismatch the test writes the fresh record to
+  * `target/as_run_plans.tsv` and names the `cp` that adopts it.
   */
 class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
@@ -293,18 +312,22 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     * The three tests below share this pass and each asserts its own
     * violation class; every query error fails all three. Smoke.audit
     * reports a query's first violation only, so a query breaking two
-    * checks fails the test of the one audit reports first.
+    * checks fails the test of the one audit reports first. The same pass
+    * takes each query's as-run record row (Smoke.shape).
     */
-  private lazy val catalogAudit: (Seq[String], Seq[String]) = {
+  private lazy val catalogAudit: (Seq[String], Seq[String], Map[String, String]) = {
     val violations = scala.collection.mutable.Buffer[String]()
-    val rows = Profile.profile(spark, Sf0001, Nil,
-      (name, df) => violations ++= Smoke.audit(name, df))
+    val record     = scala.collection.mutable.Map[String, String]()
+    val rows = Profile.profile(spark, Sf0001, Nil, (name, df) => {
+      violations ++= Smoke.audit(name, df)
+      record(name) = Smoke.shape(df.queryExecution.executedPlan).tsv
+    })
     assert(rows.size == SparkEntry.queries.size)
-    (rows.flatMap(r => r.error.map(e => s"${r.name} FAILED: $e")), violations.toSeq)
+    (rows.flatMap(r => r.error.map(e => s"${r.name} FAILED: $e")), violations.toSeq, record.toMap)
   }
 
   private def assertNoAuditViolation(tag: String): Unit = {
-    val (errors, violations) = catalogAudit
+    val (errors, violations, _) = catalogAudit
     val bad = errors ++ violations.filter(_.startsWith(s"SMOKE $tag:"))
     assert(bad.isEmpty, bad.mkString("\n"))
   }
@@ -360,6 +383,45 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // structurally; everything else needs a boundedness argument in
     // Smoke.GlobalWindowAllowed (same discipline as the nested-loop set).
     assertNoAuditViolation("GLOBAL-WINDOW")
+  }
+
+  private val RecordFile = "src/test/resources/graft/as_run_plans.tsv"
+
+  /** The committed record, query name to its shape fields. */
+  private lazy val committedRecord: Map[String, String] = {
+    val src = scala.io.Source.fromFile(RecordFile, "UTF-8")
+    try src.getLines().filterNot(_.startsWith("#")).map(_.split("\t", 2)).map(f => f(0) -> f(1)).toMap
+    finally src.close()
+  }
+
+  test("as-run plan record: every query's shape matches the committed record") {
+    val (errors, _, record) = catalogAudit
+    assert(errors.isEmpty, errors.mkString("\n"))
+    val differ = (committedRecord.keySet ++ record.keySet).toSeq.sorted
+      .filter(n => committedRecord.get(n) != record.get(n))
+    if (differ.nonEmpty) {
+      val fresh = "target/as_run_plans.tsv"
+      java.nio.file.Files.write(java.nio.file.Paths.get(fresh),
+        ("# query\tshuffles\treused\tjoins\tgraft" +: record.toSeq.sorted.map {
+          case (n, row) => s"$n\t$row" }).mkString("", "\n", "\n").getBytes("UTF-8"))
+      def show(r: Option[String]) = r.getOrElse("(no row)")
+      fail(s"${differ.size} as-run plan row(s) differ from $RecordFile:\n" + differ.map(n =>
+        s"  $n\n    expected ${show(committedRecord.get(n))}\n    got      ${show(record.get(n))}")
+        .mkString("\n") + s"\nto adopt the fresh record: cp $fresh $RecordFile")
+    }
+  }
+
+  test("as-run plan record: window_topk run without WindowToTopKRule differs from its row") {
+    // window_topk's GroupedTopK is the rule's rewrite of its row_number
+    // <= 3 window (not a direct GroupedTopK.topK call): without the rule
+    // the query runs Spark's window, and the record must tell
+    val row = committedRecord("window_topk")
+    assert(row.contains("GroupedTopK=1"), row)
+    withSQLConf("spark.sql.optimizer.excludedRules" -> graft.plans.WindowToTopKRule.ruleName) {
+      val df = SparkEntry.queries("window_topk")(spark, Sf0001)
+      Profile.consume(df)
+      assert(Smoke.shape(df.queryExecution.executedPlan).tsv != row)
+    }
   }
 
   test("the two smoke audits actually fire on their target bug classes") {

@@ -23,23 +23,10 @@ trait SparkTestBase {
 
   val Sf0001 = "/root/testdata/sf0.001"
 
-  /** `collect` through AQE's wrappers (including query-stage wrappers,
-    * which hide their subtree from `collect`) — call after an action to
-    * see the materialized plan.
-    */
-  def collectExec[T](p: org.apache.spark.sql.execution.SparkPlan)(
-      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p match {
-      case a: AdaptiveSparkPlanExec => collectExec(a.executedPlan)(pf)
-      case q: QueryStageExec        => collectExec(q.plan)(pf)
-      case other => pf.lift(other).toSeq ++ other.children.flatMap(collectExec(_)(pf))
-    }
-  }
-
   /** The materialized GroupedTopKExec — call after an action. */
   def topKExec(df: org.apache.spark.sql.DataFrame): graft.plans.GroupedTopKExec =
-    collectExec(df.queryExecution.executedPlan) { case g: graft.plans.GroupedTopKExec => g }.head
+    Smoke.finalPlanNodes(df.queryExecution.executedPlan)
+      .collect { case g: graft.plans.GroupedTopKExec => g }.head
 
   /** The WARN-and-above log lines emitted while `f` runs. */
   def warnings(f: => Unit): Seq[String] = {

@@ -69,9 +69,8 @@ class MapReduceJobSpec extends AnyFunSuite with SparkTestBase {
     // rows, distinct (key, value) pairs per map partition (4 + 3)
     val out = MapReduceJob.run(spark, df, Concat, Some(3))
     out.collect()
-    val combines = collectExec(out.queryExecution.executedPlan) {
-      case h: HashAggregateExec => h
-    }
+    val combines = graft.Smoke.finalPlanNodes(out.queryExecution.executedPlan)
+      .collect { case h: HashAggregateExec => h }
     assert(combines.size == 1, out.queryExecution.executedPlan.toString)
     assert(combines.head.metrics("numOutputRows").value == 7)
   }

@@ -158,17 +158,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
     // to the fixture, and AQE must re-plan the join with the hot
     // partition split (isSkewJoin) while returning exactly one row per
     // fact row
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.ShuffledJoin
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec        => Seq(q.plan)
-        case other                    => other.children
-      }
-      p +: kids.flatMap(walk)
-    }
     val li = Tables.lineitem(spark, "/root/testdata/sf0.1")
     withTempDir("graft-skew") { dir =>
       // materialize both sides as MULTI-FILE parquet first: AQE splits a
@@ -198,7 +188,8 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
         // query and leave this AdaptiveSparkPlan un-finalized)
         assert(j.queryExecution.toRdd.count() == fact.count(),
           "hot-key join lost or duplicated rows")
-        val joins = walk(j.queryExecution.executedPlan).collect { case s: ShuffledJoin => s }
+        val joins = graft.Smoke.finalPlanNodes(j.queryExecution.executedPlan)
+          .collect { case s: ShuffledJoin => s }
         assert(joins.nonEmpty, "expected a shuffled join in the adaptive plan")
         assert(joins.exists(_.isSkewJoin),
           s"AQE did not mark the join skew-split:\n${j.queryExecution.executedPlan}")

@@ -81,16 +81,11 @@ class StorageSpec extends AnyFunSuite with SparkTestBase {
 
     def rowsReadFor(dir: String): (Long, Long) = {
       import org.apache.spark.sql.execution.FileSourceScanExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       val df = spark.read.parquet(dir).filter(col("vb") < 8L) // value-only box side
       val matched = df.collect().length.toLong
-      def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec        => scans(q.plan)
-        case f: FileSourceScanExec    => Seq(f)
-        case other                    => other.children.flatMap(scans)
-      }
-      (matched, scans(df.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum)
+      val scans = graft.Smoke.finalPlanNodes(df.queryExecution.executedPlan)
+        .collect { case f: FileSourceScanExec => f }
+      (matched, scans.map(_.metrics("numOutputRows").value).sum)
     }
 
     val total = pts.count()
@@ -117,19 +112,14 @@ class StorageSpec extends AnyFunSuite with SparkTestBase {
 
     def rowsReadFor(dir: String): (Long, Long) = {
       import org.apache.spark.sql.execution.FileSourceScanExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       // ~bottom 2% of the fixture's value range (values span ~0.03..330)
       val df = spark.read.parquet(dir).filter(col("value") < lit(1.0))
       // collect() (not count()) so the metrics we read below belong to
       // the plan that actually ran — count() builds its own QueryExecution
       val matched = df.collect().length.toLong
-      def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec        => scans(q.plan)
-        case f: FileSourceScanExec    => Seq(f)
-        case other                    => other.children.flatMap(scans)
-      }
-      val read = scans(df.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum
+      val scans = graft.Smoke.finalPlanNodes(df.queryExecution.executedPlan)
+        .collect { case f: FileSourceScanExec => f }
+      val read = scans.map(_.metrics("numOutputRows").value).sum
       (matched, read)
     }
 
