@@ -13,10 +13,13 @@ import graft.plans.{GraftStrategy, WindowToTopKRule}
   *   spark.sql.extensions=graft.GraftExtensions
   *   SELECT graft_dot_f(a.embedding, b.embedding) FROM ...
   *
-  * [[graft.Sessions.builder]] applies it to every session it builds.
-  * Sessions built elsewhere get the same pieces from
-  * [[GraftExtensions.install]], which the operator entry points and
-  * [[graft.SparkEntry.queries]] call.
+  * [[graft.Sessions.builder]] applies it to every session it builds,
+  * and every session the repository builds comes from there: the mains,
+  * the tier-1 test session and `ChaosCluster`. A session built elsewhere
+  * (a caller's own, handed to [[graft.SparkEntry.queries]] or an
+  * operator entry point) gets the same pieces from
+  * [[GraftExtensions.install]], which those entry points call and which
+  * leaves an extension-built session as it is.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   *   - UTC + Locale.ROOT — value parity with the DuckDB oracle
   *     (timestamp rendering, non-ASCII lower()).
   *
-  * Env knobs (honored by every main so A/Bs and the driver's
-  * lower-core scaling run see identical engines):
+  * Env knobs, honored by the mains ([[local]], `MRRunner.main`) so A/Bs
+  * and lower-core scaling runs see identical engines, and never by the
+  * test suite (`SparkTestBase`, also built by [[builder]]):
   *   - `SPARK_GRAFT_CONF="k=v;k=v"` — ad-hoc session-conf overrides for
   *     config A/Bs, e.g. `spark.local.dir=<dir>` for the shuffle and
   *     checkpoint scratch. Unset by default; a setting measured to win
@@ -36,14 +37,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   /** Shared builder: `master` and the shuffle-partition count vary by
-    * main (every main takes its cores from [[envCpus]]); everything
-    * else is the committed engine config.
+    * caller (every main takes its cores from [[envCpus]]); everything
+    * else is the committed engine config. Reads no environment.
     */
   def builder(master: String, partitions: String): SparkSession.Builder = {
     // oracle-parity guard: Spark's non-ASCII lower() follows the JVM
     // default locale, DuckDB's doesn't (tr_TR dotless-i would diverge)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val b = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.adaptive.enabled", "true")
@@ -51,6 +52,10 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
+  }
+
+  /** `b` with the `SPARK_GRAFT_CONF` overrides on top: the mains' path. */
+  def withEnvConf(b: SparkSession.Builder): SparkSession.Builder = {
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -63,7 +68,7 @@ object Sessions {
     * every catalog main uses (`cpus` from [[envCpus]]).
     */
   def local(cpus: String, logLevel: String = "WARN"): SparkSession = {
-    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = withEnvConf(builder(s"local[$cpus]", cpus)).getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }

@@ -56,8 +56,8 @@ object MRRunner {
     // spec can exercise main's validation without a session to stop)
     requireNreduce(nreduce)
     val app = lookup(appName)
-    val spark = Sessions
-      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), nreduce.toString)
+    val spark = Sessions.withEnvConf(
+      Sessions.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), nreduce.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, app, input, outDir, nreduce)

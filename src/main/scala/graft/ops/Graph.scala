@@ -722,6 +722,18 @@ object Graph {
   val BfsSeedBrand = "Brand#11"
   val BfsRounds    = 4
 
+  /** Largest `rounds` [[bfs]] and [[sssp]] accept. `dist` appears twice
+    * per round and is checkpointed only after the last, so the plan
+    * doubles per round: construction plus planning of either loop on the
+    * sf0.001 co-purchase graph (4-core VM, fresh session per value) took
+    * 0.5 s at 4 rounds, 1.2 s at 6, 3.3 s at 8 and 10.3 s at 10, about
+    * 4x per two rounds and independent of the data's size.
+    */
+  val MaxRounds    = 8
+
+  private def requireRounds(rounds: Int): Unit =
+    require(rounds >= 0 && rounds <= MaxRounds, s"rounds must be in [0, $MaxRounds], got $rounds")
+
   /** Catalog entry: hop distance from the Brand#11 parts in the
     * co-purchase graph.
     */
@@ -742,10 +754,13 @@ object Graph {
     * partial-aggregated shuffle per round, the PageRank cost model with
     * min instead of a weighted sum. Distances are integers, so oracle
     * parity needs no quantization; only the final round's distances are
-    * checkpointed.
+    * checkpointed. `rounds` must be in [0, [[MaxRounds]]] (8), checked
+    * before any job runs.
     */
-  def bfs(pairList: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame =
+  def bfs(pairList: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
+    requireRounds(rounds)
     bfsOn(Ckpt.Stages(pairList.toDF("da", "db")), seeds, rounds)
+  }
 
   private def bfsOn(h: Ckpt.Stages, seeds: DataFrame, rounds: Int): DataFrame = {
     val adj = adjacency(h)
@@ -806,8 +821,11 @@ object Graph {
     * per round) and a fixed round count bounds the result to ≤
     * [[SsspRounds]]-edge paths, deterministically in both engines. All
     * arithmetic is long-integer: no float path sums, no quantization.
+    * `rounds` must be in [0, [[MaxRounds]]] (8), checked before any job
+    * runs.
     */
-  def sssp(wadj: DataFrame, seeds: DataFrame, rounds: Int = SsspRounds): DataFrame =
+  def sssp(wadj: DataFrame, seeds: DataFrame, rounds: Int = SsspRounds): DataFrame = {
+    requireRounds(rounds)
     // scoped: the catalog path hands in the MEMOIZED weighted adjacency —
     // already a checkpoint scan, neither copied nor freed here; fixture
     // callers' raw plans are materialized and freed
@@ -828,6 +846,7 @@ object Graph {
           .agg(min(col("dist")).as("dist"))
       Ckpt(dist).select(col("node").as("p_partkey"), col("dist"))
     }
+  }
 
   /** Core order and fixed peel-round count for [[kcore]] (unrolled in
     * the oracle). The fixture graphs reach the peeling fixpoint well

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM chaos harness (round 15, verdict stretch item): the one
   * storage property the single-JVM block-wipe analogue (CkptSpec) cannot
   * fully prove is survival of GENUINE executor loss — a separate executor
@@ -13,42 +11,36 @@ import org.apache.spark.sql.SparkSession
   * asserts the two results are bit-equal.
   *
   * Run: `sbt "Test/runMain graft.ChaosCluster /root/testdata/sf0.01 graph_pagerank"`
+  * with `SPARK_HOME` set to a Spark distribution and
+  * `SPARK_SCALA_VERSION=2.13`, which the workers launch executors from
   * (results recorded in SCALING.md round-15). Kept as a test-scope main
   * rather than a ScalaTest spec: it needs a private SparkContext with a
   * local-cluster master, which cannot coexist with the suite's shared
-  * local[4,2] session in one JVM.
+  * local[4,2] session in one JVM. The session is [[Sessions.builder]]'s
+  * (without `SPARK_GRAFT_CONF`) plus executor settings and reliable
+  * checkpoints.
   */
 object ChaosCluster {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    import scala.jdk.CollectionConverters._
     val dir   = args.headOption.getOrElse("/root/testdata/sf0.01")
     val query = args.drop(1).headOption.getOrElse("graph_pagerank")
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      // executor JVMs need the test classpath (graft classes + spark +
-      // scala) — hand them exactly this JVM's classpath, the standard
-      // Spark-internal-test idiom for local-cluster
+    // executor JVMs get exactly this JVM's classpath (graft classes +
+    // spark + scala), the standard Spark-internal-test idiom for
+    // local-cluster, and its --add-opens list, which build.sbt sets
+    val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens="))
+    val spark = Sessions.builder("local-cluster[2,2,1024]", "8")
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions",
-        "--add-opens=java.base/java.lang=ALL-UNNAMED " +
-          "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED " +
-          "--add-opens=java.base/java.nio=ALL-UNNAMED " +
-          "--add-opens=java.base/java.util=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED " +
-          "--add-opens=java.base/sun.security.action=ALL-UNNAMED")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.executor.extraJavaOptions", addOpens.mkString(" "))
       .config(Ckpt.ReliableKey, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    println(s"[chaos] executor JVM options: ${addOpens.size} --add-opens from this JVM")
 
     def executorPids(): Seq[ProcessHandle] = {
-      import scala.jdk.CollectionConverters._
       // ProcessHandle.commandLine() is EMPTY for the executor JVMs (the
       // local-cluster classpath exceeds the /proc cmdline read limit),
       // so match on the executable: every java descendant of this JVM

@@ -87,28 +87,46 @@ class NativeInstallSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** `f` over a fresh session `b` creates on the shared context, then the
+    * shared session is the active and default one again. A plain
+    * `SparkSession.builder()` gives a session without [[GraftExtensions]],
+    * as a `SparkEntry.queries` caller may build its own; `spark.newSession()`
+    * would inherit the shared session's extensions.
+    */
+  private def withSession[T](b: SparkSession.Builder)(f: SparkSession => T): T =
+    try f(b.create())
+    finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+
   test("install is idempotent and never adds a second strategy to an extension-built session") {
+    // the shared session is extension-built: install leaves it as it is
     GraftExtensions.install(spark)
     GraftExtensions.install(spark)
     assert(spark.sessionState.planner.strategies.count(_ == GraftStrategy) == 1)
-    assert(spark.experimental.extraOptimizations.count(_ == WindowToTopKRule) == 1)
-    val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
-    try {
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    withSession(SparkSession.builder()) { plain =>
+      assert(!plain.sessionState.planner.strategies.contains(GraftStrategy))
+      GraftExtensions.install(plain)
+      GraftExtensions.install(plain)
+      assert(plain.sessionState.planner.strategies.count(_ == GraftStrategy) == 1)
+      assert(plain.experimental.extraOptimizations.count(_ == WindowToTopKRule) == 1)
+    }
+    withSession(SparkSession.builder().withExtensions(new GraftExtensions)) { ext =>
       GraftExtensions.install(ext)
       assert(ext.sessionState.planner.strategies.count(_ == GraftStrategy) == 1)
       assert(ext.experimental.extraOptimizations.isEmpty)
       assert(ext.sql("SELECT graft_dot_l(array(2L), array(3L))").head().getLong(0) == 6L)
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
     }
   }
 
   test("the top-N rewrite is on in a session where no catalog SQL has run") {
-    val fresh = spark.newSession()
-    assert(!fresh.sessionState.planner.strategies.contains(GraftStrategy))
-    val df = SparkEntry.queries("sim_topk")(fresh, Sf0001)
-    val optimized = df.queryExecution.optimizedPlan
-    assert(optimized.collectFirst { case g: GroupedTopK => g }.nonEmpty, optimized.toString)
+    withSession(SparkSession.builder()) { fresh =>
+      assert(!fresh.sessionState.planner.strategies.contains(GraftStrategy))
+      val df = SparkEntry.queries("sim_topk")(fresh, Sf0001)
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.collectFirst { case g: GroupedTopK => g }.nonEmpty, optimized.toString)
+    }
   }
 }

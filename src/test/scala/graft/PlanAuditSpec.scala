@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * query, the [[Smoke.shape]] of the plan that ran (shuffle exchanges
   * read by partition, reused exchanges, join kinds, graft operators),
   * taken in the one catalog pass the audits share. The record pins the
-  * plans of this suite's session (SparkTestBase: `local[4,2]`, 4 shuffle
-  * partitions, sf0.001), not those of `Sessions.builder`. It holds only
+  * plans of this suite's session (SparkTestBase: `Sessions.builder` on
+  * `local[4,2]`, 4 shuffle partitions, sf0.001). It holds only
   * what was byte-identical across runs of one commit. Left out:
   *  - jobs, stages and tasks: a query runs fewer of them when an earlier
   *    spec has already built a `Ckpt` entry it reads;

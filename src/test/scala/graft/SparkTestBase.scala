@@ -2,22 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole test JVM. `local[4,2]` = 4 threads
-  * with maxFailures=2, so the crash-recovery behavioral spec (mirroring
-  * the reference's crash test, `play.sh:268-315`) can exercise task retry.
+/** One shared session for the whole test JVM: the mains' engine config
+  * ([[Sessions.builder]], without `SPARK_GRAFT_CONF`), so plan specs pin
+  * what the mains plan. `local[4,2]` = 4 threads with maxFailures=2, so
+  * the crash-recovery behavioral spec (mirroring the reference's crash
+  * test, `play.sh:268-315`) can exercise task retry.
   */
 trait SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder("local[4,2]", "4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(s)
     s
   }
 

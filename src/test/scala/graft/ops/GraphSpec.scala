@@ -276,6 +276,21 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(got == dist, s"sizes got=${got.size} want=${dist.size}")
   }
 
+  test("bfs/sssp: a rounds value outside [0, MaxRounds] fails before any job runs") {
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    // any job over these inputs fails its task: a SparkException, not the
+    // IllegalArgumentException of the rounds check
+    val ran   = udf((x: Long) => if (x >= 0) throw new IllegalStateException("a job ran") else x)
+    val path  = spark.range(3).select(ran(col("id")).as("da"), (col("id") + 1).as("db"))
+    val wadj  = path.toDF("u", "m").withColumn("w", lit(1L))
+    val seeds = spark.range(1).select(ran(col("id")).as("u"))
+    for (r <- Seq(-1, Graph.MaxRounds + 1); call <- Seq[Int => Unit](
+        r => Graph.bfs(path, seeds, r), r => Graph.sssp(wadj, seeds, r))) {
+      val e = intercept[IllegalArgumentException](call(r))
+      assert(e.getMessage.contains(s"rounds must be in [0, ${Graph.MaxRounds}], got $r"))
+    }
+  }
+
   test("bfs: seeds outside the graph are ignored, inside-seed set nonempty on the fixture") {
     val got = Graph.bfsCoPurchase(spark, Sf0001).as[(Long, Long)].collect()
     assert(got.nonEmpty)

@@ -176,7 +176,6 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
         .write.mode("overwrite").parquet(s"$dir/dim.parquet")
       val dim = spark.read.parquet(s"$dir/dim.parquet")
       withSQLConf(
-        "spark.sql.adaptive.enabled"                                  -> "true",
         "spark.sql.autoBroadcastJoinThreshold"                        -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold"               -> "-1",
         "spark.sql.adaptive.skewJoin.enabled"                         -> "true",
